@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.html.RdfaExtractor
 import graft.rdf.{NTriples, Quad, Repair, Term, Vocab}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's main ETL pipeline (lib/pipeline-import.js:28-117),
@@ -13,12 +13,17 @@ import org.apache.spark.sql.functions._
   *     → HTML-object externalization (G2, column rewrite + side output)
   *     → provenance union (G3/D3, distinct-subjects union)
   *     → validate/repair verdict tagging (P4/D5)
-  *     → N-Triples lines per verdict partition (G4, K1/K9)
+  *     → N-Triples line (G4) → one text directory per partition (K1/K9)
   *
-  * Everything after the flatMap is pure column algebra: at 100 TB the
-  * only shuffle in the whole pipeline is the distinct() for provenance
-  * (and that is per-page-partition-local if pages are partitioned by
-  * url, since subjects rarely span pages).
+  * [[compose]] defines that chain once, for [[run]] and
+  * `runImportPipeline`. Its flatMap output feeds three plan branches
+  * (both sides of the provenance union and the HTML side table):
+  * `runImportPipeline` persists it, so the flatMap runs once per page;
+  * [[run]] does not, so its plan runs it once per union branch.
+  * Everything after the flatMap is pure column algebra: at 100 TB
+  * the only shuffles are the distinct()s for provenance and the HTML side
+  * table (per-page-partition-local if pages are partitioned by url, since
+  * subjects rarely span pages).
   */
 object ExtractPipeline {
 
@@ -107,47 +112,51 @@ object ExtractPipeline {
     taggedQuads.withColumn("ttl", NTriples.toNTriple(
       col("fixed.subject"), col("fixed.predicate"), col("fixed.obj")))
 
-  /** Full pipeline: pages(url, html) → tagged quads with ttl lines. */
-  def run(spark: SparkSession, pages: DataFrame): DataFrame = {
-    val raw = extractQuads(spark, pages)
-    val (externalized, _) = externalizeHtml(raw)
-    withTtlLine(tagged(withProvenance(externalized)))
+  /** G2-G4 over extracted quads: (tagged quads with their `ttl` line,
+    * HTML side table). Pass a persisted `raw` to extract once. */
+  private[pipeline] def compose(raw: DataFrame): (DataFrame, DataFrame) = {
+    val (externalized, htmlFiles) = externalizeHtml(raw)
+    (withTtlLine(tagged(withProvenance(externalized))), htmlFiles)
   }
 
-  /** K1/K9 sinks: one text directory per partition (valid always; invalid/
-    * corrected gated like WRITE_DEBUG_TTLS, constants.js:37-38), with the
-    * reference's exact — overlapping — partition contents
-    * (`correctAndRepairTriples`, lib/pipeline-import.js:220-241):
+  /** Full pipeline: pages(url, html) → tagged quads with ttl lines. */
+  def run(spark: SparkSession, pages: DataFrame): DataFrame =
+    compose(extractQuads(spark, pages))._1
+
+  /** The TTL partitions as (name, membership, line), in the reference's
+    * exact — overlapping — contents (`correctAndRepairTriples`,
+    * lib/pipeline-import.js:220-241). `valid` is always written; the
+    * other three are the debug files gated like WRITE_DEBUG_TTLS
+    * (constants.js:37-38):
     *
     *   - valid: originally-valid triples as-is PLUS the *repaired* form
     *     of every fixable one (`validTriples.push(fixedTriple)`, :236).
+    *   - original (debug): the full extracted serialization,
+    *     pre-validation (:85-91 writes the raw `ttl` array).
     *   - invalid (debug): every validation failure in its ORIGINAL form —
     *     including triples later repaired (they are pushed at :229 and
     *     never removed).
     *   - corrected (debug): the ORIGINAL (unfixed) form of each repaired
     *     triple (`correctedTriples.push(triple)`, :237) — the repaired
     *     form lives in the valid file, not here.
-    */
-  def writeTtl(taggedQuads: DataFrame, outDir: String,
-      writeDebug: Boolean = false): Unit = {
-    val withLines = withTtlLine(taggedQuads)
-    val originalLine = NTriples.toNTriple(
-      col("subject"), col("predicate"), col("obj")).as("ttl")
-    withLines.filter(col("verdict") === "valid" || col("verdict") === "corrected")
-      .select(col("ttl")).write.mode("overwrite").text(s"$outDir/valid")
-    if (writeDebug) {
-      // `-original.ttl`: the full extracted serialization, pre-validation
-      // (lib/pipeline-import.js:85-91 writes the raw `ttl` array)
-      withLines.select(originalLine)
-        .write.mode("overwrite").text(s"$outDir/original")
-      withLines.filter(col("verdict").isin("invalid", "corrected"))
-        .select(originalLine)
-        .write.mode("overwrite").text(s"$outDir/invalid")
-      withLines.filter(col("verdict") === "corrected")
-        .select(originalLine)
-        .write.mode("overwrite").text(s"$outDir/corrected")
-    }
+    * [[writeTtl]] and the file registration both read this table. */
+  private[pipeline] def ttlParts(writeDebug: Boolean): Seq[(String, Column, Column)] = {
+    val original = NTriples.toNTriple(col("subject"), col("predicate"), col("obj"))
+    val valid = ("valid", col("verdict").isin("valid", "corrected"), col("ttl"))
+    if (!writeDebug) Seq(valid)
+    else Seq(valid,
+      ("original", lit(true), original),
+      ("invalid", col("verdict").isin("invalid", "corrected"), original),
+      ("corrected", col("verdict") === "corrected", original))
   }
+
+  /** K1/K9 sinks: `outDir/<part>` per [[ttlParts]] entry, one line per
+    * member quad; reads the `ttl` column [[withTtlLine]] added. */
+  def writeTtl(taggedQuads: DataFrame, outDir: String,
+      writeDebug: Boolean = false): Unit =
+    for ((part, member, line) <- ttlParts(writeDebug))
+      taggedQuads.filter(member).select(line.as("ttl"))
+        .write.mode("overwrite").text(s"$outDir/$part")
 
   /** K1-for-HTML (lib/file-helpers.js:88-101 via rdfa-extractor.js:31-38):
     * write each externalized decision body as its own `<md5>.html` file.

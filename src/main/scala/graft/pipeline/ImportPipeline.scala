@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.sources.PageSource
 import graft.rdf.Vocab
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The end-to-end task orchestrator — the reference's `run(deltaEntry)`
@@ -27,12 +27,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale note on the driver-side manifest: the page list and per-page
   * byte sizes are collected to the driver. That is the task-METADATA
-  * cardinality (one row per page per task — the reference holds the same
-  * set in a JS `Set`, lib/pipeline-import.js:127), not the triple
+  * cardinality (one row per page and partition — the reference holds the
+  * page set in a JS `Set`, lib/pipeline-import.js:127), not the triple
   * cardinality; the extracted quads themselves never leave executors.
-  * The extraction DAG is persisted across the sink actions so the
-  * flatMap runs once, and unpersisted before returning — the returned
-  * quad state has no lineage into it.
+  * The extraction is persisted, so its flatMap runs once although three
+  * plan branches read it, and so are the tagged quads across the sink and
+  * size actions; both are unpersisted before returning — the returned
+  * quad state has no lineage into them.
   */
 object ImportPipeline {
 
@@ -53,28 +54,24 @@ object ImportPipeline {
     if (dot > 0 && base != "..") base.substring(0, dot) else base
   }
 
-  /** Per-page manifest for one verdict partition: file name
-    * `<basename>-<part>.ttl` (reference: `${basename}-valid.ttl` etc.,
-    * lib/pipeline-import.js:75,85,92,99), size = serialized bytes
-    * (reference stats the written file, lib/file-helpers.js:104-105).
-    * One row per page even when a page yields zero lines of that
-    * verdict — the reference writes (and registers) empty files too. */
-  private def manifest(spark: SparkSession, pages: Seq[String],
-      sizes: Map[String, Long], part: String, taskUri: String,
+  /** One row per (page, partition) — also for a page with no line there:
+    * the reference writes (and registers) empty files too. File name
+    * `<basename>-<part>.ttl` (lib/pipeline-import.js:75,85,92,99); size =
+    * Σ (UTF-8 bytes + newline) over the page's member lines, what `stat`
+    * of the written file reports (lib/file-helpers.js:104-105). */
+  private def manifest(tagged: DataFrame, pages: Seq[String],
+      parts: Seq[(String, Column, Column)], taskUri: String,
       graph: String): DataFrame = {
-    import spark.implicits._
-    pages.map { p =>
-      (taskUri, graph, s"${basename(p)}-$part.ttl",
-        sizes.getOrElse(p, 0L), p)
-    }.toDF("task", "graph", "file_name", "size", "derived_from")
+    import tagged.sparkSession.implicits._
+    val sizeCols = parts.map { case (_, member, line) =>
+      sum(when(member, octet_length(line) + 1).otherwise(0)) }
+    val sizes = tagged.groupBy(col("url")).agg(sizeCols.head, sizeCols.tail: _*)
+      .collect().map(r => r.getString(0) -> (1 to parts.size).map(r.getLong)).toMap
+    (for (p <- pages; ((part, _, _), i) <- parts.zipWithIndex)
+      yield (taskUri, graph, s"${basename(p)}-$part.ttl",
+        sizes.get(p).fold(0L)(_(i)), p, part))
+      .toDF("task", "graph", "file_name", "size", "derived_from", "part")
   }
-
-  /** Serialized size per page: Σ per line (UTF-8 bytes + newline) —
-    * what `stat(path).size` of the written text file reports. */
-  private def sizesByPage(lines: DataFrame): Map[String, Long] =
-    lines.groupBy(col("url"))
-      .agg(sum(octet_length(col("line")) + lit(1)).as("size"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** Run the import pipeline for one scheduled task (lib/pipeline-import
     * .js:28-117). `quads` is the current metadata store; `pagesDir` holds
@@ -109,46 +106,26 @@ object ImportPipeline {
       val pageHtml = PageSource.readPages(spark, pagesDir)
         .join(broadcast(pageSet), Seq("url"), "left_semi")
 
-      // G1-G4 + P4/D5: extract, externalize, provenance, verdict-tag
-      val raw = ExtractPipeline.extractQuads(spark, pageHtml)
-      val (externalized, htmlFiles) = ExtractPipeline.externalizeHtml(raw)
-      val tagged = ExtractPipeline.withTtlLine(
-        ExtractPipeline.tagged(ExtractPipeline.withProvenance(externalized)))
-        .persist()
+      // G1-G4 + P4/D5: extract once, then externalize, provenance,
+      // verdict-tag and serialize over the persisted extraction
+      val raw = ExtractPipeline.extractQuads(spark, pageHtml).persist()
+      val (lines, htmlFiles) = ExtractPipeline.compose(raw)
+      val tagged = lines.persist()
       try {
         // K1/K9 sinks
         ExtractPipeline.writeTtl(tagged, s"$outDir/ttl", writeDebug)
         ExtractPipeline.writeHtmlFiles(htmlFiles, s"$outDir/html")
 
-        // K2-K4 registration: valid files into all three containers,
-        // debug files into the file container only
-        // (lib/pipeline-import.js:75-106)
-        val originalLine = graft.rdf.NTriples.toNTriple(
-          col("subject"), col("predicate"), col("obj")).as("line")
-        val validManifest = manifest(spark, pages, sizesByPage(
-          tagged.filter(col("verdict").isin("valid", "corrected"))
-            .select(col("url"), col("ttl").as("line"))),
-          "valid", taskUri, graph)
-        var minted = FileRegistry.fileMetadataQuads(validManifest, nowIso)
-          .unionByName(FileRegistry.containerQuads(validManifest))
-        if (writeDebug) {
-          val debugManifests = Seq(
-            manifest(spark, pages, sizesByPage(
-              tagged.select(col("url"), originalLine)),
-              "original", taskUri, graph),
-            manifest(spark, pages, sizesByPage(
-              tagged.filter(col("verdict").isin("invalid", "corrected"))
-                .select(col("url"), originalLine)),
-              "invalid", taskUri, graph),
-            manifest(spark, pages, sizesByPage(
-              tagged.filter(col("verdict") === "corrected")
-                .select(col("url"), originalLine)),
-              "corrected", taskUri, graph))
-          for (m <- debugManifests)
-            minted = minted
-              .unionByName(FileRegistry.fileMetadataQuads(m, nowIso))
-              .unionByName(FileRegistry.debugContainerQuads(m))
-        }
+        // K2-K4 registration: every written file's metadata; valid files
+        // into all three containers, debug files into the file container
+        // only (lib/pipeline-import.js:75-106)
+        val files = manifest(tagged, pages, ExtractPipeline.ttlParts(writeDebug),
+          taskUri, graph)
+        val minted = FileRegistry.fileMetadataQuads(files, nowIso)
+          .unionByName(FileRegistry.containerQuads(
+            files.filter(col("part") === "valid")))
+          .unionByName(FileRegistry.debugContainerQuads(
+            files.filter(col("part") =!= "valid")))
         // INSERT DATA into a triplestore has set semantics: the container
         // entity re-asserted per append collapses (distinct), and quads
         // already present in the store — a replayed batch, a re-scheduled
@@ -162,7 +139,7 @@ object ImportPipeline {
         val done = TaskStore.transitionStatus(registered, taskUri,
           Vocab.statusSuccess, nowIso, Some(graph))
         ImportResult(done, "success", pages.size.toLong, None)
-      } finally tagged.unpersist()
+      } finally { tagged.unpersist(); raw.unpersist() }
     } catch {
       case scala.util.control.NonFatal(e) =>
         // T5 (lib/pipeline-import.js:110-116): error record + failed

@@ -103,20 +103,21 @@ object ImportService {
       val taskUris = tasks.collect().toSeq.sorted
       if (taskUris.nonEmpty) {
         var state = readState(spark, stateDir)
-        var dirty = false
-        taskUris.foreach { taskUri =>
+        val snapshots = taskUris.flatMap { taskUri =>
           val result = ImportPipeline.runImportPipeline(
             spark, state, taskUri, pagesDir,
             s"$outDir/${taskDirName(taskUri)}", clock(), writeDebug)
-          if (result.status != "not_a_task") {
-            // keep the chained plan shallow: each task's state snapshot
-            // is materialized to executor storage (NOT a durable swap),
-            // so task N+1's actions don't re-evaluate tasks 1..N
-            state = result.quads.localCheckpoint(true)
-            dirty = true
-          }
+          // keep the chained plan shallow: each task's state snapshot is
+          // materialized to executor storage (NOT a durable swap), so
+          // task N+1's actions don't re-evaluate tasks 1..N
+          if (result.status == "not_a_task") None
+          else { state = result.quads.localCheckpoint(true); Some(state) }
         }
-        if (dirty) writeState(state, stateDir)
+        // the swapped table supersedes the snapshots: release them, so a
+        // long-running service holds no state copy per batch
+        if (snapshots.nonEmpty)
+          try writeState(state, stateDir)
+          finally snapshots.foreach(graft.Scaffold.releaseCheckpoint)
       }
     }
   }

@@ -163,12 +163,7 @@ object StreamDrive {
     * accumulate checkpoint blocks in the block manager. */
   private[graft] def clearDrained(): Unit = {
     drainedCache.values.forEach { case (df, _, _) =>
-      df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => () // not a checkpointed frame; nothing persisted to drop
-      }
-    }
+      graft.Scaffold.releaseCheckpoint(df) }
     drainedCache.clear()
   }
 

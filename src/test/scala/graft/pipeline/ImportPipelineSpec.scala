@@ -86,6 +86,20 @@ class ImportPipelineSpec extends SparkSpec {
     assert(sizes("page-1-invalid.ttl") == 0) // all-valid page
     assert(sizes("page-2-invalid.ttl") > 0)  // repairable date, original form
     assert(sizes("page-2-invalid.ttl") == sizes("page-2-corrected.ttl"))
+    // ...and each size is exactly its page's share of the written
+    // partition: Σ (UTF-8 bytes + newline) over the lines whose subject
+    // is that page's besluit (every quad of page n has that subject)
+    for (part <- Seq("valid", "original", "invalid", "corrected")) {
+      val lines = spark.read.text(s"$outDir/ttl/$part").as[String].collect().toSeq
+      val byPage = lines.groupBy(l => Seq(1, 2).find(n =>
+        l.startsWith(s"<http://example.org/besluit/$n>")))
+      assert(!byPage.contains(None), s"$part: line of no page ${byPage.get(None)}")
+      for (n <- Seq(1, 2)) {
+        val bytes = byPage.getOrElse(Some(n), Nil)
+          .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8).length + 1L).sum
+        assert(sizes(s"page-$n-$part.ttl") == bytes, s"page-$n-$part.ttl")
+      }
+    }
 
     // containers: valid files in file container AND import graph;
     // debug files in the file container only
@@ -119,7 +133,31 @@ class ImportPipelineSpec extends SparkSpec {
     // transitions replace status/modified; every minted quad is already
     // present → the left-anti guard appends nothing
     assert(second.quads.count() == n1)
+    // debug output off: only the valid partition is written, and only
+    // the valid files are registered (logical + physical entity each)
+    assert(new java.io.File(s"$out1/ttl").list().toSeq == Seq("valid"))
+    val fileNames = state1.filter(col("predicate") === Vocab.nfoFileName)
+      .select("obj").as[String].collect()
+    assert(fileNames.filter(_.startsWith("page-")).sorted.toSeq ==
+      Seq("page-1-valid.ttl", "page-2-valid.ttl"), fileNames.toSeq)
+    assert(fileNames.length == 4, fileNames.toSeq)
     state1.unpersist()
+  }
+
+  test("one debug-on task reads each page once") {
+    // pages behind the test-only counting filesystem: every open of a
+    // page file is one read of its content
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.cfs.impl", classOf[graft.ops.CountingFileSystem].getName)
+    val pagesDir = writePages()
+    graft.ops.CountingFs.reset()
+    val result = ImportPipeline.runImportPipeline(spark, taskQuads, T,
+      s"cfs:$pagesDir", Files.createTempDirectory("import-out").toString, Now,
+      writeDebug = true)
+    assert(result.status == "success" && result.nPages == 2, result)
+    val reads = graft.ops.CountingFs.openedPaths.filter(_.startsWith(pagesDir)).sorted
+    val files = new java.io.File(pagesDir).listFiles().map(_.getPath).sorted.toSeq
+    assert(reads == files, reads)
   }
 
   test("failure lifecycle: error record + failed status (T5)") {

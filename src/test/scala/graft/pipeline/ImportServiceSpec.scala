@@ -120,4 +120,36 @@ class ImportServiceSpec extends SparkSpec {
         col("obj") === "page-1-valid.ttl").count() == 1)
     } finally q.stop()
   }
+
+  test("service memory stays flat: no batch leaves a state checkpoint") {
+    val root = Files.createTempDirectory("svc-mem").toString
+    val stateDir = s"$root/state"
+    val deltaDir = s"$root/deltas"; Files.createDirectories(Paths.get(deltaDir))
+    val pagesDir = s"$root/pages"; Files.createDirectories(Paths.get(pagesDir))
+    initialState.write.parquet(stateDir)
+    Files.writeString(Paths.get(s"$pagesDir/page-1.html"), page)
+    // RDD ids only grow: count the persisted RDDs this test created, so
+    // a stale frame of another suite released meanwhile cannot interfere
+    val firstId = spark.sparkContext.emptyRDD[Int].id
+    def persisted = spark.sparkContext.getPersistentRDDs.keys.count(_ > firstId)
+
+    val q = ImportService.start(spark, deltaDir, s"$root/ckpt", stateDir,
+      pagesDir, s"$root/out", clock = () => "2026-03-01T00:00:00Z")
+    try {
+      // one single-task batch per delta: T1 (re-)runs each time
+      val after = (1 to 6).map { i =>
+        Files.writeString(Paths.get(s"$deltaDir/d$i.json"), deltaBody(T1))
+        q.processAllAvailable()
+        persisted
+      }
+      // flat from the first batch on, and at zero: the swap releases the
+      // batch's checkpoints at once instead of leaving them to GC (the
+      // ContextCleaner drops unreachable ones eventually, which would
+      // keep the count flat but not bounded by design)
+      assert(after == Seq.fill(6)(0), after)
+      assert(ImportService.readState(spark, stateDir).filter(col("subject") === T1 &&
+        col("predicate") === Vocab.admsStatus).select("obj")
+        .as[String].head() == Vocab.statusSuccess)
+    } finally q.stop()
+  }
 }
