@@ -76,8 +76,8 @@ object ImportPipeline {
   /** Run the import pipeline for one scheduled task (lib/pipeline-import
     * .js:28-117). `quads` is the current metadata store; `pagesDir` holds
     * the harvested HTML (the reference resolves page URIs to /share paths
-    * through S8 — here PageSource reads the directory and the page set is
-    * restricted to the task's input pages by a semi-join); `outDir`
+    * through S8 — here PageSource reads only the files of the directory
+    * whose url is one of the task's input pages); `outDir`
     * receives the TTL partitions and externalized HTML. Returns the new
     * quad-table state; nothing in `quads` is mutated. */
   def runImportPipeline(spark: SparkSession, quads: DataFrame, taskUri: String,
@@ -98,13 +98,9 @@ object ImportPipeline {
       val pages = TaskStore.inputPages(busy, taskUri)
         .as[String](org.apache.spark.sql.Encoders.STRING).collect().toSeq
 
-      // S2/S3 read restricted to this task's pages — broadcast left-semi
-      // join, not an In-list of thousands of string literals (literal
-      // In expressions blow up plan/codegen size with the page count)
-      val pageSet = spark.createDataset(pages)(
-        org.apache.spark.sql.Encoders.STRING).toDF("url")
-      val pageHtml = PageSource.readPages(spark, pagesDir)
-        .join(broadcast(pageSet), Seq("url"), "left_semi")
+      // S2/S3 read of this task's pages only: the url filter prunes the
+      // shared directory's other files at listing, before any is opened
+      val pageHtml = PageSource.readPages(spark, pagesDir, pages)
 
       // G1-G4 + P4/D5: extract once, then externalize, provenance,
       // verdict-tag and serialize over the persisted extraction

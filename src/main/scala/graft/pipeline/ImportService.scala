@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.streaming.DeltaSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The service composition — the reference process's whole lifetime
   * (app.js) as one callable:
@@ -23,8 +24,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object ImportService {
 
+  /** Read the state table with its known schema ([[stateSchema]]), so no
+    * job infers it from the parquet footers. */
   def readState(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(stateDir)
+    spark.read.schema(stateSchema).parquet(stateDir)
 
   /** Crash recovery for the swap protocol: if a crash landed between the
     * two renames (state moved aside, new state not yet in place), the
@@ -45,6 +48,10 @@ object ImportService {
         if (st.getPath.getName.startsWith(prefix)) fs.delete(st.getPath, true)
       }
   }
+
+  /** The state table's columns: one quad per row, four strings. */
+  val stateSchema: StructType = StructType(
+    Seq("subject", "predicate", "obj", "graph").map(StructField(_, StringType)))
 
   /** Replace the state table: write to a sibling temp dir, then swap by
     * two renames. Never overwrite-in-place — Spark plans are lazy, and

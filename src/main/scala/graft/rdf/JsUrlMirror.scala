@@ -17,15 +17,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * parser faithfully (percent-escape set, IPv4 ends-in-number, IPv6
   * brackets, port range — see [[Validation.wktUrlParseRegex]] for the
   * probe-pinned rules and residuals) used to be a ~200-node Column tree
-  * (4 anchored-regex matches plus higher-order array functions), and
-  * [[Repair.verdict]] inlines the validator SIX times per quad — the
-  * r15 rule enrichment made per-query analysis+codegen measurably
-  * slower (a3_verdict_counts 0.50→1.08 s min) without touching per-row
-  * cost. This expression collapses the whole mirror to a single static
-  * call: the plan carries one node per validator copy, the JVM compiles
-  * the mirror once, and the semantics stay byte-for-byte pinned by the
-  * generated node corpus (`scripts/probe-jsurl.js` → ValidationSpec,
-  * including the live differential fuzz).
+  * (4 anchored-regex matches plus higher-order array functions), which
+  * made per-query analysis+codegen measurably slower (a3_verdict_counts
+  * 0.50→1.08 s min) without touching per-row cost. This expression
+  * collapses the whole mirror to a single static call (the term
+  * validator, [[TermKernel]], makes the same call directly), and the
+  * semantics stay byte-for-byte pinned by the generated node corpus
+  * (`scripts/probe-jsurl.js` → ValidationSpec, including the live
+  * differential fuzz).
   *
   * Null-intolerant like the Column tree it replaces: null in → null out
   * (callers wrap in `coalesce(_, false)` exactly as before).

@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -18,50 +17,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * the sink / parse at ingest, so these two codecs are edge operators, not
   * the inner loop.
   *
-  * Serialization is pure `concat`/`regexp_replace` column composition
-  * (whole-stage codegen); parsing is a hand-rolled single-pass scanner in a
-  * Catalyst expression (no regex backtracking, one JVM call per line).
+  * Serialization is one codegen'd [[TermKernelExpr]] node per call (the
+  * rendering and ECHAR escaping live in [[TermKernel.serializeTerm]]);
+  * parsing is a hand-rolled single-pass scanner in a Catalyst expression
+  * (no regex backtracking, one JVM call per line).
   */
 object NTriples {
 
-  /** N-Triples string-literal escaping (ECHAR; mirrors n3.js Writer). */
-  def escape(c: Column): Column = {
-    // Order matters: backslash first.
-    val e1 = regexp_replace(c, "\\\\", "\\\\\\\\")
-    val e2 = regexp_replace(e1, "\"", "\\\\\"")
-    val e3 = regexp_replace(e2, "\n", "\\\\n")
-    val e4 = regexp_replace(e3, "\r", "\\\\r")
-    regexp_replace(e4, "\t", "\\\\t")
-  }
+  /** One RDF term rendered in N-Triples syntax: `<iri>`, `_:label`, or a
+    * quoted literal with its value ECHAR-escaped (backslash, quote, LF,
+    * CR, TAB; mirrors n3.js Writer) and `@lang` when the tag is
+    * non-empty, else `^^<datatype>` unless the datatype is xsd:string.
+    * Null when the term's value is null. */
+  def serializeTerm(term: Column): Column =
+    TermKernelExpr.call(TermKernelExpr.SerializeTerm, term)
 
-  /** One RDF term rendered in N-Triples syntax. */
-  def serializeTerm(term: Column): Column = {
-    val tt = term.getField("termType")
-    val v  = term.getField("value")
-    val dt = term.getField("datatype")
-    val lang = term.getField("lang")
-    when(tt === Term.NamedNode, concat(lit("<"), v, lit(">")))
-      .when(tt === Term.BlankNode, concat(lit("_:"), v))
-      .otherwise { // Literal
-        val quoted = concat(lit("\""), escape(v), lit("\""))
-        when(lang.isNotNull && length(lang) > 0,
-          concat(quoted, lit("@"), lang))
-          .when(dt.isNotNull && dt =!= Vocab.xsdString,
-            concat(quoted, lit("^^<"), dt, lit(">")))
-          .otherwise(quoted)
-      }
-  }
-
-  /** Full N-Triples line `s p o .` from three term structs. Null-propagating
-    * (`concat`, not `concat_ws`): a null/unparseable quad serializes to
-    * null, never to a bare `"."`. */
+  /** Full N-Triples line `s p o .` from three term structs. Null-propagating:
+    * a null/unparseable quad serializes to null, never to a bare `"."`. */
   def toNTriple(subject: Column, predicate: Column, obj: Column): Column =
-    concat(serializeTerm(subject), lit(" "), serializeTerm(predicate),
-      lit(" "), serializeTerm(obj), lit(" ."))
+    TermKernelExpr.call(TermKernelExpr.ToNTriple, subject, predicate, obj)
 
   def toNTriple(quad: Column): Column =
-    toNTriple(quad.getField("subject"), quad.getField("predicate"),
-      quad.getField("obj"))
+    TermKernelExpr.call(TermKernelExpr.ToNTriple, TermKernelExpr.terms(quad): _*)
 
   def parseNTriple(line: Column): Column = toColumn(ParseNTriple(toExpr(line)))
 

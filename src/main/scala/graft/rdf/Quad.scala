@@ -14,10 +14,10 @@ import org.apache.spark.sql.types._
   *                  language-tagged literals carry rdf:langString.
   *   - `lang`     — BCP-47 tag for rdf:langString literals, else `null`.
   *
-  * Kept as a flat struct (4 string columns) so every downstream predicate
-  * — validation, repair, serialization — is a pure Catalyst column
-  * expression over strings (whole-stage-codegen friendly, no opaque JVM
-  * objects in the hot path, prunable/pushable at the Parquet scan).
+  * Kept as a flat struct (4 string columns) so every downstream rule —
+  * validation, repair, serialization ([[TermKernel]]) — reads strings
+  * straight from Catalyst's rows (whole-stage-codegen friendly, no opaque
+  * JVM objects in the hot path, prunable/pushable at the Parquet scan).
   */
 final case class Term(
     termType: String,

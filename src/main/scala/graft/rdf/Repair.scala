@@ -1,10 +1,9 @@
 package graft.rdf
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** Triple repair — the reference's `fixTriple`/`fixTerm` cascade
-  * (lib/fixTriple.js:60-96) as column expressions.
+  * (lib/fixTriple.js:60-96) and the verdict that splits the quads.
   *
   * Semantics preserved exactly:
   *   - a term that already validates is passed through (fixTriple.js:61-62);
@@ -23,146 +22,39 @@ import org.apache.spark.sql.functions._
   *     (fixTriple.js:109) — and non-empty values without a CRS URL are kept
   *     as-is;
   *   - anything else, and any triple containing a blank node, is
-  *     unrepairable (fixTriple.js:19-27, 94) → null.
+  *     unrepairable (fixTriple.js:19-27, 94) → null;
+  *   - the fixer re-parses the serialized line BEFORE any per-term fix
+  *     (fixTriple.js:11-15), so a malformed IRI term, datatype IRI or
+  *     non-empty language tag makes the quad unfixable whatever its
+  *     datatype. The empty tag passes that gate: it serializes tagless,
+  *     re-parses, and is re-typed `xsd:string`.
   *
-  * A repaired term comes back as a term struct; `null` struct = unfixable.
+  * The rules run in [[TermKernel]]; each function here is one
+  * codegen'd [[TermKernelExpr]] node. A repaired term comes back as a
+  * term struct; `null` struct = unfixable.
   */
 object Repair {
-
-  private def termStruct(tt: Column, v: Column, dt: Column, lang: Column): Column =
-    struct(tt.as("termType"), v.as("value"), dt.as("datatype"), lang.as("lang"))
-
-  private def literal(v: Column, dt: String): Column =
-    termStruct(lit(Term.Literal), v, lit(dt), lit(null).cast("string"))
-
-  /** fixTriple.js:130-140. */
-  def fixBoolean(value: Column): Column = {
-    val lowered = lower(value)
-    when(lowered.isin("true", "false"), literal(lowered, Vocab.xsdBoolean))
-      .otherwise(lit(null).cast(Term.schema))
-  }
-
-  /** fixTriple.js:148-162. */
-  def fixDate(value: Column): Column = {
-    val reformatted = JsDateReformat.date(value)
-    when(reformatted.isNotNull, literal(reformatted, Vocab.xsdDate))
-      .otherwise(lit(null).cast(Term.schema))
-  }
-
-  /** fixTriple.js:197-214. */
-  def fixDateTime(value: Column): Column = {
-    val reformatted = JsDateReformat.dateTime(value)
-    when(reformatted.isNotNull, literal(reformatted, Vocab.xsdDateTime))
-      .otherwise(lit(null).cast(Term.schema))
-  }
-
-  /** fixTriple.js:183-189 — re-type as xsd:string, keep the value. */
-  def fixLiteral(value: Column): Column = literal(value, Vocab.xsdString)
-
-  /** fixTriple.js:164-173 — keep lexical form, re-type xsd:integer. */
-  def fixInteger(value: Column): Column =
-    when(Validation.isJsNumber(value), literal(value, Vocab.xsdInteger))
-      .otherwise(lit(null).cast(Term.schema))
-
-  /** fixTriple.js:98-123 — `https`→`http`, first occurrence only (JS
-    * `String.replace` with a string pattern). */
-  def fixWkt(value: Column): Column = {
-    val hasCrs = regexp_extract(value, Validation.wktCrsRegex, 1) =!= ""
-    // JS String.replace with a string pattern replaces only the FIRST
-    // occurrence (fixTriple.js:109); the ^-anchored reluctant pattern can
-    // match at most once, reproducing that.
-    val replaced = regexp_replace(value, lit("(?s)^(.*?)https"), lit("$1http"))
-    when(length(value) > 0,
-      literal(when(hasCrs, replaced).otherwise(value), Vocab.wktLiteral))
-      .otherwise(lit(null).cast(Term.schema))
-  }
+  import TermKernelExpr._
 
   /** The full per-term cascade (fixTriple.js:60-96). Returns the (possibly
     * unchanged) term struct, or null if unrepairable. */
-  def fixTerm(term: Column): Column = {
-    val dt = term.getField("datatype")
-    val v  = term.getField("value")
-    when(Validation.isValidTerm(term), term)
-      .when(dt === Vocab.xsdBoolean, fixBoolean(v))
-      .when(dt === Vocab.xsdDate, fixDate(v))
-      .when(dt === Vocab.xsdDateTime, fixDateTime(v))
-      .when(dt === Vocab.rdfsLiteral, fixLiteral(v))
-      .when(dt === Vocab.rdfLangString || dt === Vocab.rdfXMLLiteral, fixLiteral(v))
-      .when(dt === Vocab.xsdInt, fixInteger(v))
-      .when(dt === Vocab.wktLiteral, fixWkt(v))
-      .otherwise(lit(null).cast(Term.schema))
-  }
-
-  /** n3 parse gate mirrored per term (fixTriple.js:11-15: the fixer
-    * re-parses the serialized line BEFORE any per-term fix, so a line
-    * that does not lex — malformed IRI term, malformed datatype IRI, or
-    * a malformed non-empty language tag — resolves undefined regardless
-    * of what the datatype switch could have fixed). The empty tag passes
-    * here: it serializes tagless, re-parses, and reaches `fixLiteral`. */
-  private def termParseable(t: Column): Column = {
-    val tt = t.getField("termType"); val v = t.getField("value")
-    val dt = t.getField("datatype"); val lang = t.getField("lang")
-    val badIri = tt === Term.NamedNode && !Validation.isParseableIri(v)
-    val badDt = tt === Term.Literal && dt.isNotNull && dt =!= "" &&
-      !Validation.isParseableIri(dt)
-    val badTag = tt === Term.Literal && lang.isNotNull && length(lang) > 0 &&
-      !lang.rlike(Validation.langTagRegex)
-    !(badIri || badDt || badTag)
-  }
+  def fixTerm(term: Column): Column = call(FixTerm, term)
 
   /** Repaired quad struct `(subject, predicate, obj, graph)`, or null if any
     * term is a blank node (fixTriple.js:25-27), the serialized line would
-    * not re-parse ([[termParseable]]), or a term is unrepairable. */
-  def fixQuad(quad: Column): Column = {
-    val s = quad.getField("subject"); val p = quad.getField("predicate")
-    val o = quad.getField("obj")
-    val anyBlank = s.getField("termType") === Term.BlankNode ||
-      p.getField("termType") === Term.BlankNode ||
-      o.getField("termType") === Term.BlankNode
-    val parseError =
-      !(termParseable(s) && termParseable(p) && termParseable(o))
-    val fs = fixTerm(s); val fp = fixTerm(p); val fo = fixTerm(o)
-    when(anyBlank || parseError || fs.isNull || fp.isNull || fo.isNull,
-      lit(null).cast(Quad.schema))
-      .otherwise(struct(fs.as("subject"), fp.as("predicate"), fo.as("obj"),
-        quad.getField("graph").as("graph")))
-  }
+    * not re-parse, or a term is unrepairable. */
+  def fixQuad(quad: Column): Column =
+    call(FixQuad, terms(quad) :+ quad.getField("graph"): _*)
 
-  /** Boolean-only repairability check — same branch structure as
-    * [[fixTerm]] but without constructing result structs, so the verdict
-    * expression tree stays small enough for fast codegen (the struct
-    * cascade inlined twice per term made downstream aggregates pay ~25 s
-    * of planning/codegen at any data size). */
-  def isTermFixable(term: Column): Column = {
-    val dt = term.getField("datatype")
-    val v  = term.getField("value")
-    when(term.getField("termType") === Term.BlankNode, lit(false))
-      .when(Validation.isValidTerm(term), lit(true))
-      .when(dt === Vocab.xsdBoolean, lower(v).isin("true", "false"))
-      .when(dt === Vocab.xsdDate, JsDateReformat.date(v).isNotNull)
-      .when(dt === Vocab.xsdDateTime, JsDateReformat.dateTime(v).isNotNull)
-      .when(dt === Vocab.rdfsLiteral || dt === Vocab.rdfLangString ||
-        dt === Vocab.rdfXMLLiteral, lit(true))
-      .when(dt === Vocab.xsdInt, Validation.isJsNumber(v))
-      .when(dt === Vocab.wktLiteral, length(v) > 0)
-      .otherwise(lit(false))
-  }
+  /** Whether [[fixTerm]] yields a term, without building it. */
+  def isTermFixable(term: Column): Column = call(IsTermFixable, term)
 
-  /** Quad repairability: no blank nodes (fixTriple.js:25-27) and every
-    * term individually fixable. */
-  def isQuadFixable(quad: Column): Column =
-    termParseable(quad.getField("subject")) &&
-      termParseable(quad.getField("predicate")) &&
-      termParseable(quad.getField("obj")) &&
-      isTermFixable(quad.getField("subject")) &&
-      isTermFixable(quad.getField("predicate")) &&
-      isTermFixable(quad.getField("obj"))
+  /** Quad repairability: every term re-parses and is individually
+    * fixable (a blank node is not). */
+  def isQuadFixable(quad: Column): Column = call(IsQuadFixable, terms(quad): _*)
 
   /** Tag-and-split verdict (SURVEY §2.5 D5; reference
     * lib/pipeline-import.js:220-241): `valid` | `corrected` | `invalid`.
     * One pass, no shuffle — downstream sinks filter on this column. */
-  def verdict(quad: Column): Column =
-    when(Validation.isValidQuad(quad), "valid")
-      .when(isQuadFixable(quad), "corrected")
-      .otherwise("invalid")
+  def verdict(quad: Column): Column = call(Verdict, terms(quad): _*)
 }

@@ -3,7 +3,7 @@ package graft.rdf
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Per-datatype triple validation, as pure Catalyst column expressions.
+/** Per-datatype triple validation.
   *
   * Replicates the reference's closed-world validator
   * (lib/validateTriple.js:33-139) branch by branch, including its quirks —
@@ -19,13 +19,11 @@ import org.apache.spark.sql.functions._
   *   - `geosparql:wktLiteral` only requires an embedded `<http…>` CRS URL,
   *     if present, to use the `http:` scheme (validateTriple.js:71-90).
   *
-  * Everything here composes from built-ins (`when`/`rlike`/`isin`) or
-  * native codegen'd expressions with no UDF boundary, which matters
-  * when this runs over 100 TB of extracted triples. The whole validator
-  * — URL mirror included, via the single-node [[JsUrlParseable]]
-  * expression — stays inside whole-stage codegen; the mirror's
-  * fast-accept regex still short-circuits the WHATWG machinery away
-  * for every real-world CRS row ([[JsUrlMirror.isParseable]]).
+  * The rules run as plain JVM code in [[TermKernel]] (one codegen'd
+  * node per call, see [[TermKernelExpr]]); this object holds their
+  * regexes and the Column entry points. The URL mirror is
+  * [[JsUrlMirror.isParseable]], whose fast-accept regex short-circuits
+  * the WHATWG machinery away for every real-world CRS row.
   */
 object Validation {
 
@@ -107,30 +105,14 @@ object Validation {
 
   /** True iff JS `new URL(url)` would NOT throw, for the http(s) URLs
     * the WKT CRS extraction can produce (see [[wktUrlParseRegex]] for
-    * the probe-pinned rules and residuals). One codegen'd expression
-    * node — [[JsUrlParseable]] — instead of the former 4-regex +
-    * array-logic Column tree: [[Repair.verdict]] inlines the validator
-    * six times per quad, and at that multiplicity the tree's size was
-    * pure per-query analysis/codegen tax (the per-row semantics,
-    * including the fast-accept shortcut, live unchanged in
-    * [[JsUrlMirror.isParseable]]). */
+    * the probe-pinned rules and residuals), as the single codegen'd
+    * [[JsUrlParseable]] node. The term validator calls the same mirror,
+    * [[JsUrlMirror.isParseable]], directly from [[TermKernel]]. */
   def isJsParseableUrl(url: Column): Column = JsUrlMirror(url)
 
   /** JS-`Number`-coercible check (see [[jsNumberRegex]]). Null-safe: null → false. */
   def isJsNumber(value: Column): Column =
     coalesce(value.rlike(jsNumberRegex), lit(false))
-
-  /** WKT literal validity (validateTriple.js:71-90): non-empty, and if a
-    * `<scheme://…>` CRS URL is embedded, it must parse under JS `new
-    * URL` semantics ([[wktUrlParseRegex]] — a throw is the catch branch,
-    * invalid) AND use exactly the `http` scheme. `regexp_extract` returns
-    * "" when the pattern does not match, which maps to the reference's
-    * "no CRS ⇒ assume ok" branch. */
-  def isValidWkt(value: Column): Column = {
-    val crs = regexp_extract(value, wktCrsRegex, 1)
-    (length(value) > 0) &&
-      (crs === "" || (isJsParseableUrl(crs) && crs.startsWith("http://")))
-  }
 
   /** Characters the N-Triples/Turtle IRIREF production forbids inside
     * `<...>` (n3's lexer enforces exactly this set for unescaped IRIs):
@@ -143,10 +125,6 @@ object Validation {
     * ECHAR-escapes them). */
   val iriRefBadCharRegex: String = "[\\x00-\\x20<>\"{}|^`\\\\]"
 
-  /** True iff the IRI would survive `<...>` serialization + n3 re-parse. */
-  def isParseableIri(value: Column): Column =
-    coalesce(!value.rlike(iriRefBadCharRegex), lit(false))
-
   /** n3's LANGTAG production: `@[a-zA-Z]+(-[a-zA-Z0-9]+)*`. A literal
     * with a malformed NON-EMPTY tag ("en us", "123") serializes to a
     * line neither the validate nor the fix parse accepts → invalid and
@@ -156,42 +134,12 @@ object Validation {
   val langTagRegex: String = "^[a-zA-Z]+(-[a-zA-Z0-9]+)*$"
 
   /** Validity of a single term struct column — the §1.2 truth table
-    * (validateTriple.js:33-69) plus the n3 re-parse gate above. `term`
-    * must be a struct `(termType, value, datatype, lang)`. */
-  def isValidTerm(term: Column): Column = {
-    val tt = term.getField("termType")
-    val v  = term.getField("value")
-    val dt = term.getField("datatype")
-    val lang = term.getField("lang")
-    when(tt === Term.BlankNode, lit(false))
-      // n3 re-parse gate: a malformed IRI term or datatype IRI is a
-      // parse error before any datatype rule runs
-      .when(tt === Term.NamedNode && !isParseableIri(v), lit(false))
-      .when(tt === Term.Literal && dt.isNotNull && dt =!= "" &&
-        !isParseableIri(dt), lit(false))
-      // "no datatype ⇒ valid on virtuoso" (validateTriple.js:36-38)
-      .when(dt.isNull || dt === "", lit(true))
-      .when(dt === Vocab.rdfsLiteral, lit(false))
-      .when(dt === Vocab.rdfLangString,
-        coalesce(lang.rlike(langTagRegex), lit(false)))
-      .when(dt === Vocab.xsdString, lit(true))
-      .when(dt === Vocab.rdfHTML, lit(true))
-      .when(dt === Vocab.rdfXMLLiteral, lit(false))
-      .when(dt === Vocab.xsdBoolean, v.isin("true", "false"))
-      .when(dt === Vocab.xsdDate, coalesce(v.rlike(dateRegex), lit(false)))
-      .when(dt === Vocab.xsdDateTime, coalesce(v.rlike(dateTimeRegex), lit(false)))
-      .when(dt === Vocab.xsdInteger, isJsNumber(v))
-      .when(dt === Vocab.wktLiteral, coalesce(isValidWkt(v), lit(false)))
-      .otherwise(lit(false))
-  }
-
-  /** Validity of a whole triple: subject ∧ predicate ∧ object
-    * (validateTriple.js:17-21). Columns are the three term structs. */
-  def isValidTriple(subject: Column, predicate: Column, obj: Column): Column =
-    isValidTerm(subject) && isValidTerm(predicate) && isValidTerm(obj)
-
-  /** Convenience over a quad-shaped row. */
-  def isValidQuad(quad: Column): Column =
-    isValidTriple(quad.getField("subject"), quad.getField("predicate"),
-      quad.getField("obj"))
+    * (validateTriple.js:33-69) plus the n3 re-parse gate above, and the
+    * WKT rule (validateTriple.js:71-90): non-empty, and an embedded CRS
+    * URL (first match of [[wktCrsRegex]]; none ⇒ the reference's "assume
+    * ok" branch) must parse under JS `new URL` ([[isJsParseableUrl]]) and
+    * use exactly the `http` scheme. `term` must be a struct
+    * `(termType, value, datatype, lang)` of strings. */
+  def isValidTerm(term: Column): Column =
+    TermKernelExpr.call(TermKernelExpr.IsValidTerm, term)
 }

@@ -150,14 +150,52 @@ class ImportPipelineSpec extends SparkSpec {
     spark.sparkContext.hadoopConfiguration
       .set("fs.cfs.impl", classOf[graft.ops.CountingFileSystem].getName)
     val pagesDir = writePages()
+    val files = new java.io.File(pagesDir).listFiles().map(_.getPath).sorted.toSeq
+    // other tasks' pages share the directory: more than the 32 root paths
+    // above which Spark lists files with a job
+    for (n <- 3 to 42)
+      Files.writeString(Paths.get(s"$pagesDir/page-$n.html"), pageHtml(n, "2023-05-04"))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
     graft.ops.CountingFs.reset()
-    val result = ImportPipeline.runImportPipeline(spark, taskQuads, T,
+    spark.sparkContext.addSparkListener(listener)
+    val result = try ImportPipeline.runImportPipeline(spark, taskQuads, T,
       s"cfs:$pagesDir", Files.createTempDirectory("import-out").toString, Now,
       writeDebug = true)
+    finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
     assert(result.status == "success" && result.nPages == 2, result)
     val reads = graft.ops.CountingFs.openedPaths.filter(_.startsWith(pagesDir)).sorted
-    val files = new java.io.File(pagesDir).listFiles().map(_.getPath).sorted.toSeq
     assert(reads == files, reads)
+    import scala.jdk.CollectionConverters._
+    assert(!jobs.asScala.exists(_.startsWith("Listing leaf files")), jobs)
+  }
+
+  test("the import stage compiles whole-stage: no codegen fallback") {
+    // fallback=false turns a failed whole-stage compile (e.g. a method
+    // beyond the JVM's 64 KB) into an error instead of a silent
+    // interpreted stage; CODEGEN_ONLY does the same for expressions
+    val keys = Seq("spark.sql.codegen.fallback", "spark.sql.codegen.factoryMode")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    try {
+      val pagesDir = writePages()
+      val pages = graft.sources.PageSource.readPages(spark, pagesDir)
+      val lines = ExtractPipeline.run(spark, pages.select("url", "html"))
+      val out = Files.createTempDirectory("import-out").toString
+      ExtractPipeline.writeTtl(lines, s"$out/ttl", writeDebug = true)
+      val valid = spark.read.text(s"$out/ttl/valid").as[String].collect()
+      assert(valid.exists(_.contains("\"2023-05-4\"")), valid.toSeq)
+      assert(spark.read.text(s"$out/ttl/corrected").count() == 1)
+    } finally prev.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("failure lifecycle: error record + failed status (T5)") {

@@ -60,6 +60,21 @@ class ImportServiceSpec extends SparkSpec {
     assert(ImportService.readState(spark, stateDir).count() == n)
   }
 
+  test("readState with the quad schema reads what schema inference reads") {
+    val stateDir = Files.createTempDirectory("svc-schema").toString + "/state"
+    // written in another column order: the schema binds columns by name
+    ImportService.writeState(initialState.select("graph", "obj", "subject", "predicate"),
+      stateDir)
+    val withSchema = ImportService.readState(spark, stateDir)
+    val inferred = spark.read.parquet(stateDir)
+    assert(withSchema.schema == ImportService.stateSchema)
+    val cols = ImportService.stateSchema.fieldNames.map(col).toSeq
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols: _*).collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0000"))
+    assert(rows(withSchema) == rows(inferred))
+    assert(rows(withSchema).size == initialState.count())
+  }
+
   test("service loop: recovery, delta dispatch, pipeline, state swap") {
     val root = Files.createTempDirectory("svc").toString
     val stateDir = s"$root/state"

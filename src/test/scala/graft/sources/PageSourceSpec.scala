@@ -34,4 +34,30 @@ class PageSourceSpec extends SparkSpec {
       .count() == 2)
     pages.unpersist()
   }
+
+  test("urls from the file-metadata path equal the input_file_name() urls") {
+    val dir = Files.createTempDirectory("pages").toString
+    val names = Seq("a b.html", "a+b.html", "%41.html", "%zz.html", "c.html.gz",
+      "d.gz", "e", "f.HTML")
+    for (n <- names) {
+      if (n.endsWith(".gz")) {
+        val gz = new GZIPOutputStream(new FileOutputStream(s"$dir/$n"))
+        gz.write(html.getBytes("UTF-8")); gz.close()
+      } else Files.writeString(java.nio.file.Paths.get(s"$dir/$n"), html)
+    }
+    val urls = PageSource.readPages(spark, dir).select("url").as[String].collect().sorted
+    // the url the former input_file_name() derivation gave each file
+    val before = spark.read.option("wholetext", "true").text(s"$dir/*")
+      .select(PageSource.pathToUrl(input_file_name())).as[String].collect().sorted
+    assert(urls.toSeq == before.toSeq)
+    assert(urls.toSet == Set("share://a b.html", "share://a+b.html",
+      "share://%41.html", "share://%zz.html", "share://c.html", "share://d.html",
+      "share://e.html", "share://f.HTML.html"), urls.toSeq)
+    // a task's read keeps exactly the named pages, odd names included
+    val some = Seq("share://a b.html", "share://%zz.html", "share://c.html", "share://nope.html")
+    val picked = PageSource.readPages(spark, dir, some).select("url", "html")
+      .as[(String, String)].collect()
+    assert(picked.map(_._1).sorted.toSeq == some.init.sorted)
+    assert(picked.forall(_._2 == html))
+  }
 }
