@@ -188,6 +188,9 @@ object HtmlParser {
     * exactly as jsdom builds it. */
   private val rcdataElements = Set("title", "textarea")
 
+  /** Elements whose content the WHATWG "text" insertion mode builds. */
+  private val textModeElements = rawTextElements ++ rcdataElements
+
   /** Insertion points where character data and non-table elements cannot
     * legally live — WHATWG foster-parents them BEFORE the table. `caption`
     * and the cells are excluded: they hold flow content normally. */
@@ -1048,7 +1051,13 @@ object HtmlParser {
           }
           if (t.nonEmpty) {
             if (foreignMode(None)) appendTo(stack.top, TextNode(t))
-            else if (stack.top.ns == "html" && fosterContext(stack.top.tag)) {
+            else if (stack.top.ns == "html" && textModeElements(stack.top.tag)) {
+              // RAWTEXT/RCDATA content: the WHATWG "text" insertion mode
+              // inserts characters as-is — no formatting reconstruction
+              // (a clone opened inside a title would not survive a
+              // render → reparse round trip)
+              appendTo(stack.top, TextNode(t))
+            } else if (stack.top.ns == "html" && fosterContext(stack.top.tag)) {
               // batch into the in-table-text run; whether it stays in
               // the table (all-whitespace) or fosters wholly is decided
               // at the next non-character token (flushTableText)

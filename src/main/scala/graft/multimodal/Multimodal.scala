@@ -2,7 +2,6 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing (north-star extension): media travel as
   * opaque `binary` columns with a typed metadata struct alongside; decode /
@@ -21,11 +20,6 @@ object Multimodal {
   /** Typed metadata produced by decode. */
   case class MediaMeta(
       doc_id: Long, n_bytes: Long, width: Int, height: Int, n_frames: Int)
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = true)))
 
   /** documents → (doc_id, media_type, payload) binary rows: the ingest
     * shape for any media table. Payload = utf-8 bytes of the text stands

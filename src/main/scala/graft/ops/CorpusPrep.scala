@@ -107,25 +107,23 @@ object CorpusPrep {
   def writeDeconIndex(s: SparkSession, d: String, outDir: String,
       n: Int = 4, nBuckets: Int = 16): Unit = {
     import s.implicits._
-    Tables.clusterForPartitionedWrite(
-        docGrams(s, d, n).filter(col("doc_id") % 97 === 0)
-          .withColumnRenamed("doc_id", "eval_id")
-          .withColumn("bucket", pmod(hash(col("gram")), lit(nBuckets))),
-        nBuckets, col("bucket"), col("gram"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$outDir/grams")
+    StoredIndex.writePartitioned(
+      docGrams(s, d, n).filter(col("doc_id") % 97 === 0)
+        .withColumnRenamed("doc_id", "eval_id")
+        .withColumn("bucket", pmod(hash(col("gram")), lit(nBuckets))),
+      nBuckets, "bucket", col("gram"), s"$outDir/grams")
     Seq(n).toDF("n").coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/meta")
   }
 
   /** The at-rest decontamination pipeline as ONE driver-checkable query:
     * write the eval-gram index (cached per JVM via
-    * [[Similarity.cachedStore]]), then probe the training corpus against
+    * [[StoredIndex.cached]]), then probe the training corpus against
     * it. Output is identical to [[decontaminate]] by the shared
     * gram/join construction, so the same hash-checked oracle pins the
     * write→probe path end to end. */
   def deconStoredQuery(s: SparkSession, d: String): DataFrame = {
-    val out = Similarity.cachedStore("decon", d, s"$d/documents.parquet")(
+    val out = StoredIndex.cached("decon", d, s"$d/documents.parquet")(
       writeDeconIndex(s, d, _))
     deconProbeStored(s, d, out)
   }

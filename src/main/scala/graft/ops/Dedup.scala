@@ -71,9 +71,8 @@ object Dedup {
     val postings = hashPostings(Tables.documents(s, d))
       .localCheckpoint(eager = false)
     val sizes = postings.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = postings.as("a").join(postings.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+    val inter = pairs(postings, "doc_id", Seq("h"))
+      .groupBy(col("a_id"), col("b_id"))
       .agg(count(lit(1)).as("inter"))
     inter
       .join(sizes.toDF("a_id", "na"), "a_id")
@@ -135,10 +134,7 @@ object Dedup {
       // read the per-doc array table
       .localCheckpoint(eager = false)
     val prefix = base.select(col("doc_id"), explode(col("pref")).as("h"))
-    val cands = prefix.as("a").join(prefix.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
+    val cands = pairs(prefix, "doc_id", Seq("h")).distinct()
     val arr = base.select(col("doc_id"), col("hsorted"))
     cands
       .join(arr.toDF("a_id", "hs_a"), "a_id")
@@ -357,10 +353,35 @@ object Dedup {
     -1L >>> (64 - bits)
   }
 
+  /** The `nBands` low `bits`-bit slices of the 64-bit `word`, as a
+    * `posexplode` generator: one (band, band_val) row per slice, band 0
+    * holding the lowest bits. */
+  private[ops] def bitBands(word: Column, nBands: Int, bits: Int): Column = {
+    val mask = bandMask(bits)
+    posexplode(array((0 until nBands).map(b =>
+      shiftrightunsigned(word, b * bits).bitwiseAND(lit(mask))): _*))
+  }
+
+  /** The candidate-pair kernel of the keyed dedup operators: the
+    * self-join of `rows` on equality of every `keys` column, each
+    * unordered pair once per matching row combination (`a.id < b.id`,
+    * so no self pairs; a pair sharing m key rows — m bands — appears m
+    * times; a null key never pairs). Output: `a_id`, `b_id` and
+    * `a_<c>`/`b_<c>` per `carry` column. Callers keep their own
+    * verify / distinct / aggregate tail. */
+  private[ops] def pairs(rows: DataFrame, id: String, keys: Seq[String],
+      carry: Seq[String] = Nil): DataFrame =
+    rows.as("a").join(rows.as("b"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+          col(s"a.$id") < col(s"b.$id"))
+      .select(col(s"a.$id").as("a_id") +: col(s"b.$id").as("b_id") +:
+        carry.flatMap(c =>
+          Seq(col(s"a.$c").as(s"a_$c"), col(s"b.$c").as(s"b_$c"))): _*)
+
   private[ops] def semanticClustersLshOf(s: SparkSession, emb: DataFrame,
       threshold: Double, bands: Int, bitsPerBand: Int): DataFrame = {
     val vecs0 = emb.select(col("vec_id"), col("embedding"))
-    val mask = bandMask(bitsPerBand)
+    bandMask(bitsPerBand) // validates the width before it divides 64
     // bands slice 64-bit signature words — only (vec_id, band, band_val)
     // enter the candidate self-join; embeddings stay out of the explode.
     // Bandings wider than one word (bands × bitsPerBand > 64) compose
@@ -374,19 +395,12 @@ object Dedup {
       val cnt = math.min(bandsPerWord, bands - first)
       Similarity.signedEmbeddings(vecs0, cnt * bitsPerBand,
           planeOffset = first * bitsPerBand)
-        .select(col("vec_id"), posexplode(array(
-          (0 until cnt).map(b =>
-            shiftrightunsigned(col("sig"), b * bitsPerBand)
-              .bitwiseAND(lit(mask))): _*)))
+        .select(col("vec_id"), bitBands(col("sig"), cnt, bitsPerBand))
         .toDF("vec_id", "band", "band_val")
         .select(col("vec_id"), (col("band") + lit(first)).as("band"),
           col("band_val"))
     }.reduce(_ unionByName _)
-    val cands = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
+    val cands = pairs(banded, "vec_id", Seq("band", "band_val"))
     val vecs = emb.select(col("vec_id"), col("embedding"))
     // verify BEFORE deduplicating: a pair matching in m bands is scored m
     // times (m ≤ bands, typically 1-2), but the threshold filter is far
@@ -394,14 +408,14 @@ object Dedup {
     // edges instead of exchanging the full candidate stream — drops an
     // entire shuffle of |candidates| (long, long) rows for a bounded
     // amount of duplicate map-side cosine work
-    val pairs = cands
+    val verified = cands
       .join(vecs.toDF("a_id", "ea"), "a_id")
       .join(vecs.toDF("b_id", "eb"), "b_id")
       .filter(round(graft.functions.CosineSimilarity(col("ea"), col("eb")), 4)
         >= threshold)
       .select(col("a_id"), col("b_id"))
       .distinct()
-    clustersFromPairs(s, emb, pairs)
+    clustersFromPairs(s, emb, verified)
   }
 
   /** SemDeDup *guarantee* under the DuckDB oracle, the [[minhashDupPairs]]
@@ -503,10 +517,9 @@ object Dedup {
       // (doc_id, sig, shset, key) table — tiny beside the text it distills
       .localCheckpoint(eager = false)
     val sigOnly = base.select(col("doc_id"), col("sig"), col("key"))
-    val cands = sigOnly.as("a").join(sigOnly.as("b"),
-        col("a.key") === col("b.key") && col("a.doc_id") < col("b.doc_id"))
-      .filter(col("a.sig") === col("b.sig"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+    val cands = pairs(sigOnly, "doc_id", Seq("key"), Seq("sig"))
+      .filter(col("a_sig") === col("b_sig"))
+      .select(col("a_id"), col("b_id"))
     cands
       .join(base.select(col("doc_id").as("a_id"), col("shset").as("sh_a")), "a_id")
       .join(base.select(col("doc_id").as("b_id"), col("shset").as("sh_b")), "b_id")
@@ -553,12 +566,7 @@ object Dedup {
     val banded = sig.select(col("doc_id"), posexplode(array(
       (0 until bands).map(packedBand): _*)))
       .toDF("doc_id", "band", "band_key")
-    val cands = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
+    val cands = pairs(banded, "doc_id", Seq("band", "band_key")).distinct()
     val withSigs = cands
       .join(sig.withColumnRenamed("doc_id", "a_id").withColumnRenamed("sig", "sig_a"), "a_id")
       .join(sig.withColumnRenamed("doc_id", "b_id").withColumnRenamed("sig", "sig_b"), "b_id")
@@ -593,10 +601,9 @@ object Dedup {
         explode(array(lit(0L), lit(offset))).as("off"))
       .select((col("doc_id") + col("off")).as("doc_id"),
         col("fp"), col("digest"))
-    fp.as("a").join(fp.as("b"),
-        col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-      .filter(col("a.digest") === col("b.digest"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+    pairs(fp, "doc_id", Seq("fp"), Seq("digest"))
+      .filter(col("a_digest") === col("b_digest"))
+      .select(col("a_id"), col("b_id"))
       .orderBy(col("a_id"), col("b_id"))
   }
 
@@ -622,6 +629,14 @@ object Dedup {
       .orderBy(col("sim").desc, col("a_id"), col("b_id"))
       .limit(topN)
   }
+
+  /** THE corpus text fingerprint — one definition for the in-memory
+    * prior-side derivation, the stored-index writer, and the probe side
+    * ([[incrementalDedupOf]]): a salted or normalized variant edited in
+    * one site but not the others would equality-join probe hashes
+    * against stale index hashes and silently miss every duplicate (the
+    * exact verify only prevents FALSE pairs, not false negatives). */
+  private def textFp = xxhash64(col("text"))
 
   /** Incremental-ingestion exact dedup: match a NEW batch against the
     * PRIOR corpus without joining the prior corpus per batch. The prior
@@ -650,14 +665,6 @@ object Dedup {
     * (new, prior) pair with equal text — the verbatim re-arrivals PLUS
     * cross-pairs through pre-existing duplicate texts in the prior
     * corpus (sf0.1 has such groups) — and is SQL-expressible. */
-  /** THE corpus text fingerprint — one definition for the in-memory
-    * prior-side derivation, the stored-index writer, and the probe side
-    * ([[incrementalDedupOf]]): a salted or normalized variant edited in
-    * one site but not the others would equality-join probe hashes
-    * against stale index hashes and silently miss every duplicate (the
-    * exact verify only prevents FALSE pairs, not false negatives). */
-  private def textFp = xxhash64(col("text"))
-
   def incrementalDedup(s: SparkSession, d: String,
       offset: Long = 200000L, fpp: Double = 0.03,
       expectedItems: Long = 1L << 20): DataFrame = {
@@ -717,13 +724,11 @@ object Dedup {
       nBuckets: Int = 32): Unit = {
     import s.implicits._
     import graft.functions.BloomSupport
-    Tables.clusterForPartitionedWrite(
-        Tables.documents(s, d)
-          .select(col("doc_id"), textFp.as("fp"))
-          .withColumn("bucket", pmod(hash(col("fp")), lit(nBuckets))),
-        nBuckets, col("bucket"), col("doc_id"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$outDir/fp")
+    StoredIndex.writePartitioned(
+      Tables.documents(s, d)
+        .select(col("doc_id"), textFp.as("fp"))
+        .withColumn("bucket", pmod(hash(col("fp")), lit(nBuckets))),
+      nBuckets, "bucket", col("doc_id"), s"$outDir/fp")
     // train the bloom from the index JUST WRITTEN, not from a re-derived
     // text plan: the corpus is scanned+hashed exactly once (the "hashed
     // ONCE" contract above), and the filter can never diverge from the
@@ -744,13 +749,13 @@ object Dedup {
 
   /** The at-rest incremental-dedup pipeline as ONE driver-checkable
     * query: write the fingerprint+bloom index (cached per JVM via
-    * [[Similarity.cachedStore]]), then probe the synthesized new batch
+    * [[StoredIndex.cached]]), then probe the synthesized new batch
     * against it. Output is identical to [[incrementalDedup]] by the
     * shared probe tail, so the same hash-checked oracle pins the
     * write→probe path end to end. */
   def incrDedupStoredQuery(s: SparkSession, d: String,
       offset: Long = 200000L): DataFrame = {
-    val out = Similarity.cachedStore("dedupincr", d, s"$d/documents.parquet")(
+    val out = StoredIndex.cached("dedupincr", d, s"$d/documents.parquet")(
       writeIncrIndex(s, d, _))
     // explicit schema: inference costs a footer-read job per probe for a
     // layout this module itself wrote (bm25ProbeStored precedent)
@@ -765,16 +770,11 @@ object Dedup {
     val fp = Tables.parallelizeSmallScan(
         Tables.documents(s, d).select(col("doc_id"), col("text")))
       .select(col("doc_id"), SimHash64(col("text")).as("fp"))
-    val banded = fp.select(col("doc_id"), col("fp"), posexplode(array(
-      (0 until 4).map(b =>
-        shiftrightunsigned(col("fp"), b * 16).bitwiseAND(lit(0xffffL))): _*)))
+    val banded = fp.select(col("doc_id"), col("fp"), bitBands(col("fp"), 4, 16))
       .toDF("doc_id", "fp", "band", "band_val")
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).as("hamming"))
+    pairs(banded, "doc_id", Seq("band", "band_val"), Seq("fp"))
+      .select(col("a_id"), col("b_id"),
+        bit_count(col("a_fp").bitwiseXOR(col("b_fp"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
       .orderBy(col("a_id"), col("b_id"))

@@ -153,25 +153,23 @@ object Retrieval {
     val ix = buildIndex(s, d)
     // source-bytes hint: the frame sits above the postings checkpoint,
     // so inputFiles can't see the corpus — pass the corpus size directly
-    Tables.clusterForPartitionedWrite(
-        ix.corpus.join(ix.df, "term").join(ix.dl, "doc_id")
-          .withColumn("bucket", pmod(hash(col("term")), lit(nBuckets))),
-        nBuckets, col("bucket"), col("doc_id"),
-        sourceBytesHint = Tables.pathBytes(s, s"$d/documents.parquet"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$outDir/postings")
+    StoredIndex.writePartitioned(
+      ix.corpus.join(ix.df, "term").join(ix.dl, "doc_id")
+        .withColumn("bucket", pmod(hash(col("term")), lit(nBuckets))),
+      nBuckets, "bucket", col("doc_id"), s"$outDir/postings",
+      sourceBytesHint = Tables.pathBytes(s, s"$d/documents.parquet"))
     ix.qterms.write.mode("overwrite").parquet(s"$outDir/qterms")
     ix.totals.withColumn("n_buckets", lit(nBuckets))
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/totals")
   }
 
   /** The at-rest BM25 pipeline as ONE driver-checkable query: write the
-    * term-bucketed index (cached per JVM via [[Similarity.cachedStore]]),
+    * term-bucketed index (cached per JVM via [[StoredIndex.cached]]),
     * then probe it. Output is identical to [[bm25TopK]] by the shared
     * build/weight/rank construction, so the same hash-checked oracle
     * pins write→prune→probe end to end. */
   def bm25StoredQuery(s: SparkSession, d: String): DataFrame = {
-    val out = Similarity.cachedStore("bm25", d, s"$d/documents.parquet")(
+    val out = StoredIndex.cached("bm25", d, s"$d/documents.parquet")(
       writeBm25Index(s, d, _))
     bm25ProbeStored(s, out)
   }

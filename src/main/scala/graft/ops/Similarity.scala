@@ -1,9 +1,10 @@
 package graft.ops
 
-import graft.functions.CosineSimilarity
+import graft.functions.{CosineSimilarity, SignSignature}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,13 +42,6 @@ object Similarity {
       .orderBy(col("qid"), col("rn"))
   }
 
-  /** Sign-signature frame shared by the LSH paths: signature bit p =
-    * sign(<embedding, plane_{p+planeOffset}>) via the native codegen'd
-    * [[graft.functions.SignSignature]] expression (deterministic seeded
-    * hyperplanes, weight tables cached per executor). One word holds at
-    * most 64 planes — `1L << p` wraps mod 64, so wider signatures
-    * compose from multiple words over DISJOINT plane families selected
-    * by `planeOffset`, as the SemDeDup banding does. */
   /** The index dimensionality every LSH/SemDeDup path is configured for:
     * [[graft.functions.SignSignature]] nulls the signature of any row
     * with a different embedding length, so stragglers on a mixed-dim
@@ -72,18 +66,32 @@ object Similarity {
       StructField("cell", IntegerType)))
   }
 
+  /** Sign-signature frame shared by the LSH paths: signature bit p =
+    * sign(<embedding, plane_{p+planeOffset}>) via the native codegen'd
+    * [[graft.functions.SignSignature]] expression (deterministic seeded
+    * hyperplanes, weight tables cached per executor). One word holds at
+    * most 64 planes — `1L << p` wraps mod 64, so wider signatures
+    * compose from multiple words over DISJOINT plane families selected
+    * by `planeOffset`, as the SemDeDup banding does. */
   private[ops] def signedEmbeddings(emb: DataFrame, nPlanes: Int,
       planeOffset: Int = 0): DataFrame =
     emb.select(col("vec_id"), col("embedding"),
-      graft.functions.SignSignature.of(col("embedding"), nPlanes, planeOffset,
+      SignSignature.of(col("embedding"), nPlanes, planeOffset,
         expectedDims = IndexDims).as("sig"))
 
-  /** Same-bucket candidates exactly re-scored, per-query top-k. */
-  private def bucketTopK(signed: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val queries = signed.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("sig"))
-    val cands = signed
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"), col("sig"))
+  /** [[bucketTopK]] over one signed frame: its `vec_id < nQueries` rows
+    * query every row. */
+  private def bucketTopK(signed: DataFrame, nQueries: Int, k: Int): DataFrame =
+    bucketTopK(
+      signed.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("sig")),
+      signed.select(col("vec_id").as("cid"), col("embedding").as("ce"), col("sig")),
+      k)
+
+  /** Same-bucket candidates exactly re-scored, per-query top-k: queries
+    * carry `(qid, qe, sig)`, candidates `(cid, ce, sig)`. */
+  private def bucketTopK(queries: DataFrame, cands: DataFrame,
+      k: Int): DataFrame = {
     val scored = cands.join(broadcast(queries), Seq("sig"))
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
@@ -111,26 +119,24 @@ object Similarity {
   def writeLshPartitioned(s: SparkSession, d: String, outDir: String,
       nPlanes: Int = 8): Unit =
     // hash-cluster by (sig, salt) before the partitioned write
-    // (Tables.clusterForPartitionedWrite): bounded files per signature
+    // (StoredIndex.clustered): bounded files per signature
     // directory AND write parallelism ≥ the cluster's cores — a bare
     // repartition(sig) capped it at one task per signature value.
     // Nominal value count = 2^nPlanes signature buckets (capped: wide
     // signatures exceed any realistic core count anyway).
-    Tables.clusterForPartitionedWrite(
-        signedEmbeddings(
-          Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-          nPlanes),
-        1 << math.min(nPlanes, 24), col("sig"), col("vec_id"))
-      .write.mode("overwrite").partitionBy("sig").parquet(s"$outDir/corpus")
+    StoredIndex.writePartitioned(
+      signedEmbeddings(
+        Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
+        nPlanes),
+      1 << math.min(nPlanes, 24), "sig", col("vec_id"), s"$outDir/corpus")
 
   /** Probe the stored LSH index: query signatures are computed ON THE
-    * DRIVER from the same deterministic plane weights the native
-    * expression multiplies (same sequential fused multiply-add, so the
-    * bits agree by construction), then only the probed signature
-    * directories are read — partition pruning cuts the file listing to
-    * the queries' buckets. Same serving contract as [[ivfProbeStored]]:
-    * query cardinality ≪ corpus (vectors are collected to route them);
-    * bulk query sets go through [[lshTopK]]. */
+    * DRIVER by the native expression's own kernel ([[SignSignature.compute]],
+    * same planes and index width, so the bits agree by construction), then
+    * only the probed signature directories are read — partition pruning
+    * cuts the file listing to the queries' buckets. Same serving contract
+    * as [[ivfProbeStored]]: query cardinality ≪ corpus (vectors are
+    * collected to route them); bulk query sets go through [[lshTopK]]. */
   def lshProbeStored(s: SparkSession, d: String, outDir: String,
       nQueries: Int = 8, k: Int = 5, nPlanes: Int = 8,
       maxDriverQueries: Int = 4096): DataFrame = {
@@ -138,33 +144,16 @@ object Similarity {
     require(nQueries <= maxDriverQueries,
       s"lshProbeStored routes queries on the driver (nQueries=$nQueries > " +
         s"max $maxDriverQueries); use lshTopK for bulk query sets")
-    val planes = graft.functions.SignSignature.planeWeights(nPlanes, 0, IndexDims)
     val qVecs = Tables.embeddings(s, d)
       .filter(col("vec_id") < nQueries)
       .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
       .collect()
     val queryRows = qVecs.flatMap { case (qid, e) =>
-      // the index width contract (signedEmbeddings pins expectedDims):
-      // a mismatched-width query has a null signature — no bucket
-      if (e.length != IndexDims) None
-      else {
-        var sig = 0L
-        var p = 0
-        while (p < nPlanes) {
-          var dot = 0.0
-          var h = 0
-          while (h < IndexDims) { dot += e(h).toDouble * planes(p)(h); h += 1 }
-          if (dot >= 0) sig |= 1L << p
-          p += 1
-        }
-        // mirror the native expression's sentinel remap (a real 64-plane
-        // signature equal to the null sentinel is flipped on plane 0) —
-        // without it a driver-routed query at nPlanes=64 could probe a
-        // signature directory the store never wrote
-        if (sig == graft.functions.SignSignature.NullSentinel)
-          sig = graft.functions.SignSignature.NullSentinel + 1
-        Some((qid, e, sig))
-      }
+      // the index width contract (signedEmbeddings pins expectedDims): a
+      // mismatched-width query has a null signature — no bucket
+      val sig = SignSignature.compute(ArrayData.toArrayData(e), nPlanes, 0,
+        isDouble = false, expectedDims = IndexDims)
+      if (sig == SignSignature.NullSentinel) None else Some((qid, e, sig))
     }.toSeq
     val queries = queryRows.toDF("qid", "qe", "sig")
     val probedSigs = queryRows.map(_._3).distinct.sorted
@@ -177,15 +166,7 @@ object Similarity {
         probedSigs, LshStoreSchema)
       .filter(col("sig").isin(probedSigs.map(java.lang.Long.valueOf): _*))
       .select(col("vec_id").as("cid"), col("embedding").as("ce"), col("sig"))
-    val scored = cands.join(broadcast(queries), Seq("sig"))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(CosineSimilarity(col("qe"), col("ce")), 4).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("cid"), col("sim"), col("rn"))
-      .orderBy(col("qid"), col("rn"))
+    bucketTopK(queries, cands, k)
   }
 
   /** LSH retrieval *guarantee* under the DuckDB oracle: an identical
@@ -384,16 +365,9 @@ object Similarity {
       .join(broadcast(probes), "query_cell")
     val cands = assigned.select(col("vec_id").as("cid"),
       col("embedding").as("ce"), col("cell").as("probe_cell"))
-    // each candidate has one cell and probe pairs are unique → (qid, cid)
-    // appears at most once, no dedup needed (same argument as ivfTopKOf)
-    val ann = cands.join(broadcast(queries), Seq("probe_cell"))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(CosineSimilarity(col("qe"), col("ce")), 4).as("sim"))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("sim").desc, col("cid"))))
-      .filter(col("rn") <= k)
-    recallOverlap(bruteForceTopK(s, d, nQueries, k), ann)
+    // the overlap join drops probedTopK's final sort (EliminateSorts)
+    recallOverlap(bruteForceTopK(s, d, nQueries, k),
+      probedTopK(queries, cands, k))
   }
 
   /** Seeded k-means training over any `(vec_id, embedding)` frame,
@@ -512,20 +486,6 @@ object Similarity {
     s
   }
 
-  /** Driver-side mirror of `round(CosineSimilarity(a, b), 4)`: the same
-    * sequential double accumulation as [[CosineSimilarity.compute]] and
-    * the same `BigDecimal.valueOf`/HALF_UP rounding Spark's `round`
-    * compiles to — so driver-routed queries land in exactly the cell the
-    * distributed assignment would pick. */
-  private def roundedCosine(a: Array[Double], b: Array[Double]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < a.length) {
-      dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-    }
-    java.math.BigDecimal.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
-  }
-
   /** nProbe nearest cells per cell, from the (tiny) centroid set —
     * computed on the driver, the same place the centroids live. */
   private[ops] def probeMapOf(centroids: Array[Array[Double]],
@@ -559,7 +519,7 @@ object Similarity {
     * localCheckpointed for the same reason [[ivfRecallAtK]]'s is: queries
     * and candidates both read it, and as a lazy subtree each side would
     * re-pay the corpus×centroid assignment. */
-  private def ivfTopKOf(s: SparkSession, embIn: DataFrame,
+  private[ops] def ivfTopKOf(s: SparkSession, embIn: DataFrame,
       centroids: Array[Array[Double]], nQueries: Int, k: Int,
       nProbe: Int): DataFrame = {
     val assigned =
@@ -632,42 +592,24 @@ object Similarity {
     * before any I/O happens, so a query touches ~nProbe/nCells of the
     * bytes at rest instead of filtering after a full scan. */
   def writeIvfPartitioned(s: SparkSession, d: String, outDir: String,
-      nCells: Int = 16, maxTrainRows: Long = 100000L): Unit = {
-    val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val centroids = trainedCentroids(s, d, nCells, maxTrainRows)
+      nCells: Int = 16, maxTrainRows: Long = 100000L): Unit =
+    writeIvfStore(s,
+      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
+      trainedCentroids(s, d, nCells, maxTrainRows), outDir)
+
+  /** The IVF store of `emb` under the given centroids. */
+  private[ops] def writeIvfStore(s: SparkSession, emb: DataFrame,
+      centroids: Array[Array[Double]], outDir: String): Unit = {
     val assigned = voronoiAssign(emb, centroidFrame(s, centroids))
     // hash-cluster by (cell, salt) before the partitioned write (see
     // writeLshPartitioned): bounded files per cell directory without
     // serializing each cell onto one task
-    Tables.clusterForPartitionedWrite(assigned, nCells, col("cell"),
-        col("vec_id"))
-      .write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$outDir/corpus")
+    StoredIndex.writePartitioned(assigned, centroids.length, "cell",
+      col("vec_id"), s"$outDir/corpus")
     s.createDataFrame(centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
       .toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/centroids")
   }
-
-  /** Per-JVM at-rest index cache for the *_stored correctness queries:
-    * one write per (source dir, content fingerprint), probes re-run per
-    * invocation — so the driver's hash gate exercises the full
-    * write→prune→probe path without paying the write per bench pass.
-    * Keyed like [[centroidCache]]: an in-place corpus rewrite re-writes
-    * the index. */
-  private val storeCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), String]
-
-  private[ops] def cachedStore(kind: String, d: String, src: String)(
-      write: String => Unit): String =
-    storeCache.getOrElseUpdate((kind, d, graft.Scaffold.fingerprint(src)), {
-      // registered for exit cleanup BEFORE the cache insert: TrieMap may
-      // evaluate racing thunks more than once, and a losing thread's dir
-      // must still be removed (Scaffold tracks dirs, not cache winners)
-      val dir = graft.Scaffold.cleanupOnExit(java.nio.file.Files
-        .createTempDirectory(s"graft-$kind-store").toString)
-      write(dir)
-      dir
-    })
 
   /** The at-rest IVF pipeline as ONE driver-checkable query: write the
     * cell-partitioned index (cached per JVM), then probe it. Output is
@@ -676,7 +618,7 @@ object Similarity {
     * at-rest serving graduates from spec-pinned parity to a green
     * CORRECTNESS row of its own. */
   def ivfStoredQuery(s: SparkSession, d: String): DataFrame = {
-    val out = cachedStore("ivf", d, s"$d/embeddings.parquet")(
+    val out = StoredIndex.cached("ivf", d, s"$d/embeddings.parquet")(
       writeIvfPartitioned(s, d, _))
     ivfProbeStored(s, d, out)
   }
@@ -684,7 +626,7 @@ object Similarity {
   /** [[ivfStoredQuery]]'s twin for the LSH layout: same signature, same
     * buckets, same oracle as [[lshTopK]]. */
   def lshStoredQuery(s: SparkSession, d: String): DataFrame = {
-    val out = cachedStore("lsh", d, s"$d/embeddings.parquet")(
+    val out = StoredIndex.cached("lsh", d, s"$d/embeddings.parquet")(
       writeLshPartitioned(s, d, _))
     lshProbeStored(s, d, out)
   }
@@ -724,21 +666,23 @@ object Similarity {
     // ties) — one shared rule, so stored-vs-in-memory parity holds by
     // construction, not by luck on near-equidistant queries. A query the
     // distributed rule cannot score (width mismatch vs the index's
-    // centroids, zero norm → null cosine) is unroutable and dropped,
-    // mirroring how such rows fall out of every signature path — not an
-    // ArrayIndexOutOfBounds / NaN crash on the driver.
-    val dims = centroids.headOption.map(_.length).getOrElse(0)
+    // centroids, zero norm → null cosine) is unroutable and dropped, and
+    // a cell it cannot score against (a zero-norm centroid) is skipped —
+    // exactly the rows voronoiAssign's null-cosine filter drops. Scores
+    // come from the native expression's kernel, rounded HALF_UP to 4
+    // places like Spark's `round`.
+    val cents = centroids.map(c => ArrayData.toArrayData(c))
     val queryRows = qVecs.flatMap { case (qid, e) =>
-      if (e.length != dims) Nil
-      else {
-        val ed = e.map(_.toDouble)
-        if (ed.forall(_ == 0.0)) Nil
-        else {
-          val cell = centroids.indices
-            .maxBy(c => (roundedCosine(ed, centroids(c)), -c))
-          probeMap(cell).map(p => (qid, e, p))
+      val q = ArrayData.toArrayData(e)
+      cents.indices
+        .flatMap { c =>
+          val cos = CosineSimilarity.compute(q, cents(c), false, true, false, false)
+          if (cos.isNaN) None
+          else Some(c -> java.math.BigDecimal.valueOf(cos)
+            .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue)
         }
-      }
+        .maxByOption { case (c, sim) => (sim, -c) }
+        .toSeq.flatMap { case (cell, _) => probeMap(cell).map(p => (qid, e, p)) }
     }.toSeq
     val queries = queryRows.toDF("qid", "qe", "probe_cell")
     val probedCells = queryRows.map(_._3).distinct.sorted

@@ -84,63 +84,14 @@ object Tables {
     }
   }
 
-  /** Cluster rows ahead of a `partitionBy(partCol)` store write. The r21
-    * form — a bare `repartition(col(partCol))` — made every partition
-    * directory exactly one file, but serialized each directory onto ONE
-    * task: at most |distinct partCol| write tasks whatever the data
-    * volume, i.e. skew by construction at scale (64 buckets of a 100 TB
-    * postings store => one task materializes ~1.5 TB; guide §2.5). The
-    * clustering key here is (partCol, bounded deterministic salt): the
-    * salt splits each partition value into `splits` write tasks of
-    * ~`TargetStoreFileBytes` each, so per-task volume is bounded by DATA
-    * SIZE, not by the partition-value cardinality, while files per
-    * directory stay bounded by `splits` (not by upstream partition
-    * count — the many-small-files failure the clustering exists to
-    * prevent; guide §6 distribution-mode hash / file sizing).
-    *
-    * `splits` derives from the SOURCE bytes under the frame
-    * (`df.inputFiles` metadata — exact, driver-side, no job; the same
-    * mechanism parallelizeSmallScan uses) times a fixed derivation
-    * headroom, never from Catalyst size estimates (join estimates can be
-    * off by orders of magnitude) and never from the core count (a
-    * constant tuned to local mode; guide §2 scale-adaptive partitioning).
-    * At bench scale splits = 1 and the salt is the constant 0 — the
-    * exchange degenerates to the plain keyed clustering (one file per
-    * directory), which the r22 interleaved A/B measured as equal-or-
-    * better to any salted/unclustered variant at sf0.1; at 100 TB the
-    * same call yields thousands of bounded write tasks per store.
-    * The salt is pmod(hash(saltFrom)) of a row id — deterministic under
-    * task retries (guide §2.5: never rand()-derived). */
-  private[graft] val TargetStoreFileBytes: Long = 512L * 1024 * 1024
-
   /** Total bytes under a path (driver metadata, no job) — the source-
-    * size hint for [[clusterForPartitionedWrite]] callers whose frame
+    * size hint for [[StoredIndex.clustered]] callers whose frame
     * sits above a checkpoint (inputFiles is empty there). */
   private[graft] def pathBytes(s: SparkSession, path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sessionState.newHadoopConf())
     if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
   }
-
-  private[graft] def clusterForPartitionedWrite(df: DataFrame,
-      nominalValues: Int, partCol: Column, saltFrom: Column,
-      sourceBytesHint: Long = -1L): DataFrame = {
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    val sourceBytes =
-      if (sourceBytesHint >= 0L) sourceBytesHint
-      else df.inputFiles.map { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(conf).getFileStatus(p).getLen
-      }.sum
-    // 4x headroom: the written frame is a derivation of the source
-    // (postings/grams expand text; signatures shrink it) — at 512 MB
-    // file granularity the factor only matters within ~2x anyway
-    val perValueBytes = 4.0 * sourceBytes / math.max(1, nominalValues)
-    val splits = math.max(1,
-      math.ceil(perValueBytes / TargetStoreFileBytes).toInt)
-    df.repartition(partCol, pmod(hash(saltFrom), lit(splits)))
-  }
-
 
   /** Schema-adaptive column projection shared by the [[documents]] /
     * [[events]] loaders (same ownership stance as [[embeddings]] /

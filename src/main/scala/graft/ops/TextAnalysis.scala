@@ -195,10 +195,9 @@ object TextAnalysis {
         explode(array(lit(0L), lit(offset))).as("off"))
       .select((col("doc_id") + col("off")).as("doc_id"),
         col("fp"), col("key"))
-    fps.as("a").join(fps.as("b"),
-        col("a.key") === col("b.key") && col("a.doc_id") < col("b.doc_id"))
-      .filter(col("a.fp") === col("b.fp"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+    Dedup.pairs(fps, "doc_id", Seq("key"), Seq("fp"))
+      .filter(col("a_fp") === col("b_fp"))
+      .select(col("a_id"), col("b_id"))
       .orderBy(col("a_id"), col("b_id"))
   }
 }

@@ -56,14 +56,6 @@ object TaskStore {
     loadTasks(quads.filter(col("subject") === taskUri))
       .filter(col("operation").isin(Vocab.opExtracting, Vocab.opImporting))
 
-  /** S5-S7 link scans (lib/task.js:110-155): multi-valued links for one
-    * task, one row per (link kind, target). */
-  def taskLinks(quads: DataFrame, taskUri: String): DataFrame =
-    quads.filter(col("subject") === taskUri &&
-      col("predicate").isin(Vocab.cogsDependsOn, Vocab.taskInputContainer,
-        Vocab.taskResultsContainer))
-      .select(col("predicate").as("link"), col("obj").as("target"))
-
   /** S9 `nie:url` metadata lookup (lib/file-helpers.js:40-63,
     * `getFileMetadata`): DISTINCT ?url for a bound remote-file subject
     * across all graphs (`GRAPH ?g` in the reference). Zero rows ⇔ the

@@ -516,7 +516,7 @@ class ScaleDesignSpec extends SparkSpec {
     // prior fingerprints from the at-rest index — never re-hash the
     // prior corpus — and may touch corpus text only for (a) the
     // synthesized new batch and (b) the post-candidate exact verify.
-    // the query manages its own per-JVM cached index dir (cachedStore),
+    // the query manages its own per-JVM cached index dir (StoredIndex.cached),
     // exactly as the bench runs it — probe that, not a side copy
     val probed = graft.ops.Dedup.incrDedupStoredQuery(spark, sf)
     val scans = probed.queryExecution.sparkPlan.collect {

@@ -889,6 +889,23 @@ class HtmlParserSpec extends AnyFunSuite {
     assert(flat("<plaintext>a<b") == "<plaintext>a<b</plaintext>")
   }
 
+  test("RCDATA/RAWTEXT text never reconstructs formatting (WHATWG text mode)") {
+    // the HtmlFuzzSpec fixpoint counterexample: on reparse, <ul> closes
+    // the p (and the s inside it) while s stays in the active formatting
+    // list; the title's text must not clone s INSIDE the title, which no
+    // serialization can express
+    val once = flat("<p><s><table><ul><title>>")
+    assert(once == "<p><s><ul><title>&gt;</title></ul><table></table></s></p>")
+    val twice = flat(once)
+    assert(twice ==
+      "<p><s></s></p><ul><title>&gt;</title></ul><table></table><p></p>")
+    assert(flat(twice) == twice)
+    // RAWTEXT keeps its text, RCDATA gets no clone; body text still
+    // reconstructs
+    assert(flat("<p><s></p><style>x</style><textarea>y</textarea>z") ==
+      "<p><s></s></p><style>x</style><textarea>y</textarea><s>z</s>")
+  }
+
   test("<body>/<html> below document level merge-and-ignore (jsdom never nests a body)") {
     // the r19 fixpoint hunt's counterexample: a <body> built inside an
     // SVG integration point never re-converged (</body> is no-pop, the

@@ -606,4 +606,57 @@ class ExtensionsSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getAs[Long]("n")).toMap
     assert(got == Map(0L -> 1L, 1800000000L -> 1L), got.toString)
   }
+
+  test("pairs: a_id < b_id, one row per shared key row, null keys never pair") {
+    val rows = Seq[(Long, java.lang.Long, Long, String)](
+      (1L, 7L, 1L, "x"), (2L, 7L, 1L, "y"), // (1, 2) share (7, 1) ...
+      (1L, 8L, 2L, "x"), (2L, 8L, 2L, "y"), // ... and (8, 2): two rows
+      (3L, 7L, 1L, "z"),                    // pairs with 1 and 2 on (7, 1)
+      (4L, null, 1L, "n"), (5L, null, 1L, "n"), // null key: never pairs
+      (6L, 9L, 3L, "s"), (6L, 9L, 3L, "t"))     // one id twice: no self pair
+      .toDF("id", "band", "val", "c")
+    val p = Dedup.pairs(rows, "id", Seq("band", "val"), Seq("c"))
+    assert(p.columns.toSeq == Seq("a_id", "b_id", "a_c", "b_c"))
+    val got = p.as[(Long, Long, String, String)].collect().sorted.toSeq
+    assert(got == Seq((1L, 2L, "x", "y"), (1L, 2L, "x", "y"),
+      (1L, 3L, "x", "z"), (2L, 3L, "y", "z")))
+    assert(got.forall { case (a, b, _, _) => a < b })
+    // no carried columns: just the id pair
+    val bare = Dedup.pairs(rows, "id", Seq("band"))
+    assert(bare.columns.toSeq == Seq("a_id", "b_id"))
+    assert(bare.as[(Long, Long)].collect().sorted.toSeq ==
+      Seq((1L, 2L), (1L, 2L), (1L, 3L), (2L, 3L)))
+  }
+
+  test("bitBands slices a word into low-first bands of the given width") {
+    val got = Seq(0x4321L, -1L).toDF("w")
+      .select(col("w"), Dedup.bitBands(col("w"), 4, 4))
+      .as[(Long, Int, Long)].collect().sorted.toSeq
+    assert(got == Seq((-1L, 0, 15L), (-1L, 1, 15L), (-1L, 2, 15L),
+      (-1L, 3, 15L), (0x4321L, 0, 1L), (0x4321L, 1, 2L), (0x4321L, 2, 3L),
+      (0x4321L, 3, 4L)))
+    // full-width band: the wrap-safe mask keeps every bit
+    assert(Seq(-1L).toDF("w").select(Dedup.bitBands(col("w"), 1, 64))
+      .as[(Int, Long)].head() == ((0, -1L)))
+  }
+
+  test("IVF stored probe skips a zero-norm centroid exactly like the distributed assignment") {
+    // the driver-side routing scored every centroid with a BigDecimal round
+    // of 0/0 on a zero centroid (NumberFormatException); voronoiAssign
+    // drops the cell through its null-cosine filter, so must the probe
+    val emb = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
+    val trained = Similarity.trainedCentroids(spark, sf, 16, 100000L)
+    val cents = trained.updated(3, Array.fill(trained(3).length)(0.0))
+    val out = graft.Scaffold.cleanupOnExit(java.nio.file.Files
+      .createTempDirectory("graft-ivf-zero-centroid").toString)
+    Similarity.writeIvfStore(spark, emb, cents, out)
+    assert(!new java.io.File(s"$out/corpus/cell=3").exists,
+      "the distributed assignment must leave the zero cell empty")
+    val stored = Similarity.ivfProbeStored(spark, sf, out)
+      .collect().map(_.toSeq).toSeq
+    val mem = Similarity.ivfTopKOf(spark, emb, cents, 8, 5, 4)
+      .collect().map(_.toSeq).toSeq
+    assert(stored.size == 40, s"expected 8×5 results, got ${stored.size}")
+    assert(stored == mem, "stored probe diverges from the distributed assignment")
+  }
 }

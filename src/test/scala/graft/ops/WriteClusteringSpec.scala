@@ -3,7 +3,7 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Pins [[Tables.clusterForPartitionedWrite]] — the r22 store-writer
+/** Pins [[StoredIndex.clustered]] — the r22 store-writer
   * clustering (VERDICT r21 item 1): the clustering key must be
   * (partition column, bounded deterministic salt) with `splits` derived
   * from SOURCE BYTES at the 512 MB/task target, so per-task write volume
@@ -32,7 +32,7 @@ class WriteClusteringSpec extends SparkSpec {
   test("small sources degenerate to a constant salt (splits = 1)") {
     val in = spark.read.parquet(srcDir)
       .withColumn("bucket", pmod(hash(col("id")), lit(64)))
-    val out = Tables.clusterForPartitionedWrite(in, 64, col("bucket"), col("id"))
+    val out = StoredIndex.clustered(in, 64, "bucket", col("id"))
     assert(saltDivisor(out) === 1L)
   }
 
@@ -40,8 +40,8 @@ class WriteClusteringSpec extends SparkSpec {
     val in = spark.read.parquet(srcDir)
       .withColumn("bucket", pmod(hash(col("id")), lit(64)))
     // 1 TiB source, 64 buckets: ceil(4 * 2^40 / 64 / 2^29) = 128 splits
-    val out = Tables.clusterForPartitionedWrite(in, 64, col("bucket"),
-      col("id"), sourceBytesHint = 1L << 40)
+    val out = StoredIndex.clustered(in, 64, "bucket", col("id"),
+      sourceBytesHint = 1L << 40)
     assert(saltDivisor(out) === 128L)
     // and the salt source is the row id — deterministic under retries
     assert(out.queryExecution.analyzed.toString.contains("pmod(hash(id"))
@@ -53,8 +53,7 @@ class WriteClusteringSpec extends SparkSpec {
     graft.Scaffold.cleanupOnExit(dir)
     val in = spark.read.parquet(srcDir)
       .withColumn("bucket", pmod(hash(col("id")), lit(16)))
-    Tables.clusterForPartitionedWrite(in, 16, col("bucket"), col("id"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/store")
+    StoredIndex.writePartitioned(in, 16, "bucket", col("id"), s"$dir/store")
     val buckets = new java.io.File(s"$dir/store").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
     assert(buckets.length === 16)
