@@ -335,8 +335,8 @@ object Bench {
     // after the regular passes re-drives them so the rejection/min logic
     // has a better-anchored sample to pick (see the retry block below).
     //
-    // Drive cost attribution (profiled uncontended at sf0.1 via
-    // SPARK_GRAFT_DRIVE_PROFILE): each micro-batch carries ~0.3-0.5 s of
+    // Drive cost attribution (profiled uncontended at sf0.1 from each
+    // batch's progress durations): each micro-batch carries ~0.3-0.5 s of
     // FIXED overhead — query planning, offset log, WAL commit, state
     // store commit — regardless of batch size (a 1-row sentinel batch
     // costs ~0.3 s, a 34k-row corpus batch ~0.4 s). So x_stream_late

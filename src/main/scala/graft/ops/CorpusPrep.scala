@@ -116,6 +116,10 @@ object CorpusPrep {
       .write.mode("overwrite").parquet(s"$outDir/meta")
   }
 
+  /** Layout contracts of `grams/` (partition column last) and `meta/`: the
+    * probe reads with them, so no footer-read job infers a schema. */
+  private[ops] val DeconGramsSchema = "eval_id BIGINT, gram STRING, bucket INT"
+  private[ops] val DeconMetaSchema = "n INT"
   /** The at-rest decontamination pipeline as ONE driver-checkable query:
     * write the eval-gram index (cached per JVM via
     * [[StoredIndex.cached]]), then probe the training corpus against
@@ -139,11 +143,10 @@ object CorpusPrep {
     * in-memory twin returns empty. */
   def deconProbeStored(s: SparkSession, d: String, outDir: String,
       minShared: Int = 2): DataFrame = {
-    // explicit schema (bm25ProbeStored precedent): no inference job
-    val n = s.read.schema("n INT").parquet(s"$outDir/meta").head().getInt(0)
+    val n = s.read.schema(DeconMetaSchema).parquet(s"$outDir/meta").head().getInt(0)
     deconJoin(
       docGrams(s, d, n).filter(col("doc_id") % 97 =!= 0),
-      s.read.schema("eval_id BIGINT, gram STRING, bucket INT")
+      s.read.schema(DeconGramsSchema)
         .parquet(s"$outDir/grams").select(col("eval_id"), col("gram")),
       minShared)
   }

@@ -744,8 +744,11 @@ object Dedup {
     * an empty corpus has no data files, and schema inference over it
     * would throw where the in-memory twin returns empty. */
   private def readFpIndex(s: SparkSession, outDir: String): DataFrame =
-    s.read.schema("doc_id BIGINT, fp BIGINT, bucket INT")
-      .parquet(s"$outDir/fp")
+    s.read.schema(FpIndexSchema).parquet(s"$outDir/fp")
+  /** Layout contracts of `fp/` (partition column last) and `bloom/`: the
+    * probe reads with them, so no footer-read job infers a schema. */
+  private[ops] val FpIndexSchema = "doc_id BIGINT, fp BIGINT, bucket INT"
+  private[ops] val BloomSchema = "bloom BINARY"
 
   /** The at-rest incremental-dedup pipeline as ONE driver-checkable
     * query: write the fingerprint+bloom index (cached per JVM via
@@ -757,9 +760,7 @@ object Dedup {
       offset: Long = 200000L): DataFrame = {
     val out = StoredIndex.cached("dedupincr", d, s"$d/documents.parquet")(
       writeIncrIndex(s, d, _))
-    // explicit schema: inference costs a footer-read job per probe for a
-    // layout this module itself wrote (bm25ProbeStored precedent)
-    val bytes = s.read.schema("bloom BINARY").parquet(s"$out/bloom")
+    val bytes = s.read.schema(BloomSchema).parquet(s"$out/bloom")
       .head().getAs[Array[Byte]](0)
     incrementalDedupOf(s, d, readFpIndex(s, out), bytes, offset)
   }

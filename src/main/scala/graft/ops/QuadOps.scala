@@ -161,15 +161,17 @@ object QuadOps {
   /** The orchestrator's pure-relational lifecycle on one task
     * (lib/pipeline-import.js:28-117 minus extraction): scheduled → busy →
     * register per-page valid files + containers → success. Every step is
-    * the production operator ([[graft.pipeline.TaskStore]] /
-    * [[graft.pipeline.FileRegistry]]); manifest sizes are a deterministic
-    * stand-in (page-URI byte length) since no HTML is read here.
+    * the production operator ([[graft.pipeline.TaskStore]] and
+    * [[graft.pipeline.ImportPipeline.registerSuccess]], the orchestrator's
+    * own registration tail); manifest sizes are a deterministic stand-in
+    * (page-URI byte length) since no HTML is read here, and the in-plan
+    * file-name regex agrees with `basename` on these `share://page-…` URIs.
     *
     * Bench note: cold wall-time here is one-time janino codegen of the
     * metadata explodes (measured 7.8 s cold vs 1.4 s warm on 275 rows at
     * sf0.1) — data-independent, amortized at scale. */
   def lifecycleFinalState(s: SparkSession, d: String): DataFrame = {
-    import graft.pipeline.{FileRegistry, TaskStore}
+    import graft.pipeline.{ImportPipeline, TaskStore}
     val q0 = lifecycleTaskQuads(s, d)
     val busy = TaskStore.transitionStatus(q0, LcTask, Vocab.statusBusy, LcT1, Some(LcGraph))
     val manifest = TaskStore.inputPages(busy, LcTask).select(
@@ -178,11 +180,9 @@ object QuadOps {
       concat(regexp_replace(element_at(split(col("page"), "/"), -1),
         "\\.[^.]*$", ""), lit("-valid.ttl")).as("file_name"),
       octet_length(col("page")).cast("long").as("size"),
-      col("page").as("derived_from"))
-    val registered = busy
-      .unionByName(FileRegistry.fileMetadataQuads(manifest, LcT1))
-      .unionByName(FileRegistry.containerQuads(manifest))
-    TaskStore.transitionStatus(registered, LcTask, Vocab.statusSuccess, LcT2, Some(LcGraph))
+      col("page").as("derived_from"),
+      lit("valid").as("part"))
+    ImportPipeline.registerSuccess(busy, manifest, LcTask, LcGraph, LcT2)
   }
 
   /** Lifecycle oracle query 1 — the entity rows: after the full

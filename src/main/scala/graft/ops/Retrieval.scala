@@ -77,7 +77,7 @@ object Retrieval {
       .agg(count(lit(1)).as("tf"))
     val par = s.sparkContext.defaultParallelism
     val small = Tables.pathBytes(s, s"$d/documents.parquet") <
-      math.min(par.toLong * 4L * 1024 * 1024, 1024L * 1024 * 1024)
+      Tables.smallScanBytes(par)
     val postings = (if (small && par > 1) raw.repartition(par, col("doc_id"))
       else raw).localCheckpoint()
     val qterms = postings.filter(col("doc_id") % 97 === 0)
@@ -131,6 +131,10 @@ object Retrieval {
       StructField("df", LongType), StructField("dl", LongType),
       StructField("bucket", IntegerType)))
   }
+
+  /** Layout contracts of the `qterms/` and `totals/` side tables. */
+  private[ops] val QtermsSchema = "query_id BIGINT, term STRING"
+  private[ops] val TotalsSchema = "n_docs DOUBLE, avgdl DOUBLE, n_buckets INT"
 
   /** BM25 index AT REST — at 100 TB an index you rebuild per query set
     * isn't an index (r8 finding). One tokenization pass writes:
@@ -187,10 +191,9 @@ object Retrieval {
       queryIds: Option[Seq[Long]] = None): DataFrame = {
     // ONE read of the 1-row totals: n_buckets routes the probe on the
     // driver; (n_docs, avgdl) re-enter the plan as a literal-built frame.
-    // Explicit schemas here and on qterms (the writer's layout contract,
-    // PostingsSchema precedent): schema inference costs a footer-read job
-    // per probe for columns whose types this module itself wrote.
-    val t = s.read.schema("n_docs DOUBLE, avgdl DOUBLE, n_buckets INT")
+    // Explicit schemas (the writer's layout contracts): inference costs a
+    // footer-read job per probe.
+    val t = s.read.schema(TotalsSchema)
       .parquet(s"$outDir/totals")
       .select(col("n_docs"), col("avgdl"), col("n_buckets")).head()
     if (t.isNullAt(1)) {
@@ -208,7 +211,7 @@ object Retrieval {
           org.apache.spark.sql.types.DoubleType),
         org.apache.spark.sql.types.StructField("avgdl",
           org.apache.spark.sql.types.DoubleType)))))
-    val qtAll = s.read.schema("query_id BIGINT, term STRING")
+    val qtAll = s.read.schema(QtermsSchema)
       .parquet(s"$outDir/qterms")
     val qt = queryIds.fold(qtAll)(ids =>
       qtAll.filter(col("query_id").isin(ids.map(Long.box): _*)))

@@ -65,6 +65,8 @@ object Similarity {
       StructField("embedding", ArrayType(FloatType)),
       StructField("cell", IntegerType)))
   }
+  /** Layout contract of the IVF store's `centroids/` side table. */
+  private[ops] val CentroidsSchema = "cell INT, centroid ARRAY<DOUBLE>"
 
   /** Sign-signature frame shared by the LSH paths: signature bit p =
     * sign(<embedding, plane_{p+planeOffset}>) via the native codegen'd
@@ -652,7 +654,7 @@ object Similarity {
       s"ivfProbeStored routes queries on the driver (nQueries=$nQueries > " +
         s"max $maxDriverQueries); use ivfTopK for bulk query sets")
     val centroids: Array[Array[Double]] =
-      s.read.schema("cell INT, centroid ARRAY<DOUBLE>")
+      s.read.schema(CentroidsSchema)
         .parquet(s"$outDir/centroids")
         .select(col("cell"), col("centroid")).as[(Int, Seq[Double])]
         .collect().sortBy(_._1).map(_._2.toArray)

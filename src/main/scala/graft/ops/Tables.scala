@@ -73,16 +73,16 @@ object Tables {
         val p = new org.apache.hadoop.fs.Path(f)
         p.getFileSystem(conf).getFileStatus(p).getLen
       }.sum
-      // per-core bound AND an absolute ceiling (ADVICE r21): the per-core
-      // threshold alone scales linearly with cluster cores, so a 1000-core
-      // cluster would authorize a ~4 GB corpus-text shuffle — capping at
-      // 1 GB keeps the documented "corpus bytes never gain a shuffle"
-      // posture independent of cluster size
-      if (totalBytes < math.min(par.toLong * 4L * 1024 * 1024,
-          1024L * 1024 * 1024)) df.repartition(par)
-      else df
+      if (totalBytes < smallScanBytes(par)) df.repartition(par) else df
     }
   }
+
+  /** The "provably small" bound of [[parallelizeSmallScan]] and the BM25
+    * postings spread: 4 MB per core, capped at 1 GB (ADVICE r21) so a
+    * 1000-core cluster cannot authorize a ~4 GB corpus-text shuffle — the
+    * "corpus bytes never gain a shuffle" posture, whatever the core count. */
+  private[graft] def smallScanBytes(par: Int): Long =
+    math.min(par.toLong * 4L * 1024 * 1024, 1024L * 1024 * 1024)
 
   /** Total bytes under a path (driver metadata, no job) — the source-
     * size hint for [[StoredIndex.clustered]] callers whose frame

@@ -44,17 +44,12 @@ object FileRegistry {
     * consumers key on is preserved; only uniqueness-per-entity collapses
     * (deterministic + idempotent under re-runs, same deviation as G2). */
   def fileMetadataQuads(manifest: DataFrame, nowIso: String): DataFrame = {
-    val id = fileId
-    val logical = concat(lit(logicalPrefix), id)
-    val physical = concat(lit(sharePrefix), id, lit("."), col("ext"))
+    val physical = concat(lit(sharePrefix), fileId, lit("."), col("ext"))
     val m = manifest
       .withColumn("ext", element_at(split(col("file_name"), "\\."), -1))
-      .withColumn("id", id)
-      .withColumn("logical", logical)
+      .withColumn("id", fileId)
+      .withColumn("logical", logicalFileUri)
       .withColumn("physical", physical)
-
-    def q(s: Column, p: String, o: Column): Column =
-      struct(s.as("subject"), lit(p).as("predicate"), o.cast("string").as("obj"))
 
     val entityQuads = array(
       // logical entity
@@ -110,6 +105,15 @@ object FileRegistry {
       .select(col("q.subject"), col("q.predicate"), col("q.obj"), col("graph"))
       .distinct()
 
+  /** A task's result container (`kind` = "files" / "graphs"): its
+    * content-derived id, and the URI that embeds it. */
+  private def containerId(kind: String): Column =
+    sha1(concat(col("task"), lit(s"/$kind")))
+  private def containerUri(id: Column): Column =
+    concat(lit("http://redpencil.data.gift/id/dataContainers/"), id)
+  private def fileContainerId: Column = containerId("files")
+  private def fileContainerUri: Column = containerUri(fileContainerId)
+
   /** One `appendTaskResultFile` unit (lib/pipeline-import.js:180-198): the
     * container entity (`a nfo:DataContainer` + `mu:uuid`), `task:hasFile`
     * to the manifest row's logical file, and the task's
@@ -135,14 +139,10 @@ object FileRegistry {
     * way, lib/pipeline-import.js:37-43) and are linked from the task via
     * `task:resultsContainer` (lib/pipeline-import.js:180-218). */
   def containerQuads(manifest: DataFrame): DataFrame = {
-    val fileContainerId = sha1(concat(col("task"), lit("/files")))
-    val graphContainerId = sha1(concat(col("task"), lit("/graphs")))
-    val fileContainer = concat(
-      lit("http://redpencil.data.gift/id/dataContainers/"), fileContainerId)
-    val graphContainer = concat(
-      lit("http://redpencil.data.gift/id/dataContainers/"), graphContainerId)
+    val graphContainerId = containerId("graphs")
+    val graphContainer = containerUri(graphContainerId)
     val links = concat(
-      fileContainerUnit(fileContainer, fileContainerId),
+      fileContainerUnit(fileContainerUri, fileContainerId),
       fileContainerUnit(importGraphUri, importGraphIdCol),
       array(
         q(graphContainer, Vocab.rdfType, lit(Vocab.nfoDataContainer)),
@@ -156,10 +156,7 @@ object FileRegistry {
     * are linked into the FILE container only
     * (lib/pipeline-import.js:84-106 — no importGraph/graphContainer
     * appends for them). */
-  def debugContainerQuads(debugManifest: DataFrame): DataFrame = {
-    val fileContainerId = sha1(concat(col("task"), lit("/files")))
-    val fileContainer = concat(
-      lit("http://redpencil.data.gift/id/dataContainers/"), fileContainerId)
-    explodeQuads(debugManifest, fileContainerUnit(fileContainer, fileContainerId))
-  }
+  def debugContainerQuads(debugManifest: DataFrame): DataFrame =
+    explodeQuads(debugManifest,
+      fileContainerUnit(fileContainerUri, fileContainerId))
 }

@@ -73,13 +73,29 @@ object ImportPipeline {
       .toDF("task", "graph", "file_name", "size", "derived_from", "part")
   }
 
+  /** K2-K4 registration of a [[manifest]]-shaped frame, then success
+    * (lib/pipeline-import.js:75-106): every file's metadata; valid files
+    * into all three containers, debug files into the file container only.
+    * The minted quads join `busy` as one set union ([[TaskStore.insertData]]). */
+  private[graft] def registerSuccess(busy: DataFrame, files: DataFrame,
+      taskUri: String, graph: String, nowIso: String): DataFrame = {
+    val minted = FileRegistry.fileMetadataQuads(files, nowIso)
+      .unionByName(FileRegistry.containerQuads(
+        files.filter(col("part") === "valid")))
+      .unionByName(FileRegistry.debugContainerQuads(
+        files.filter(col("part") =!= "valid")))
+    TaskStore.transitionStatus(TaskStore.insertData(busy, minted), taskUri,
+      Vocab.statusSuccess, nowIso, Some(graph))
+  }
+
   /** Run the import pipeline for one scheduled task (lib/pipeline-import
     * .js:28-117). `quads` is the current metadata store; `pagesDir` holds
     * the harvested HTML (the reference resolves page URIs to /share paths
     * through S8 — here PageSource reads only the files of the directory
     * whose url is one of the task's input pages); `outDir`
     * receives the TTL partitions and externalized HTML. Returns the new
-    * quad-table state; nothing in `quads` is mutated. */
+    * quad-table state as a plan over `quads` (DataFrames are immutable;
+    * the caller writes it). */
   def runImportPipeline(spark: SparkSession, quads: DataFrame, taskUri: String,
       pagesDir: String, outDir: String, nowIso: String,
       writeDebug: Boolean = false): ImportResult = {
@@ -111,30 +127,11 @@ object ImportPipeline {
         // K1/K9 sinks
         ExtractPipeline.writeTtl(tagged, s"$outDir/ttl", writeDebug)
         ExtractPipeline.writeHtmlFiles(htmlFiles, s"$outDir/html")
-
-        // K2-K4 registration: every written file's metadata; valid files
-        // into all three containers, debug files into the file container
-        // only (lib/pipeline-import.js:75-106)
+        // K2-K4 registration of every written file, then success
         val files = manifest(tagged, pages, ExtractPipeline.ttlParts(writeDebug),
           taskUri, graph)
-        val minted = FileRegistry.fileMetadataQuads(files, nowIso)
-          .unionByName(FileRegistry.containerQuads(
-            files.filter(col("part") === "valid")))
-          .unionByName(FileRegistry.debugContainerQuads(
-            files.filter(col("part") =!= "valid")))
-        // INSERT DATA into a triplestore has set semantics: the container
-        // entity re-asserted per append collapses (distinct), and quads
-        // already present in the store — a replayed batch, a re-scheduled
-        // task re-minting the same content-addressed entities — must not
-        // append again (left-anti vs the current state). Metadata-sized
-        // join; the pre-existing store's own contents are untouched.
-        val registered = busy.unionByName(
-          minted.distinct().join(busy,
-            Seq("subject", "predicate", "obj", "graph"), "left_anti"))
-
-        val done = TaskStore.transitionStatus(registered, taskUri,
-          Vocab.statusSuccess, nowIso, Some(graph))
-        ImportResult(done, "success", pages.size.toLong, None)
+        ImportResult(registerSuccess(busy, files, taskUri, graph, nowIso),
+          "success", pages.size.toLong, None)
       } finally { tagged.unpersist(); raw.unpersist() }
     } catch {
       case scala.util.control.NonFatal(e) =>

@@ -15,10 +15,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   * Task/metadata state lives as a parquet quad table at `stateDir`,
   * read-modify-replaced per task via a temp-dir + rename swap (the moral
-  * equivalent of the reference's DELETE/INSERT round-trips to Virtuoso).
-  * This is the task-STATE table — metadata-sized, one swap per task; the
-  * bulk extracted triples go through the TTL sinks and (at scale) the
-  * graph-partitioned [[graft.sources.QuadStore]], never through here.
+  * equivalent of the reference's DELETE/INSERT round-trips to Virtuoso):
+  * one swap per task, so no state copy outlives the task that made it.
+  * This is the task-STATE table — metadata-sized; the bulk extracted
+  * triples go through the TTL sinks and (at scale) the graph-partitioned
+  * [[graft.sources.QuadStore]], never through here.
   * Tasks within a batch run sequentially like the reference's event
   * loop; each task's pages extract in parallel inside the pipeline.
   */
@@ -103,28 +104,16 @@ object ImportService {
     DeltaSource.run(spark, deltaDir, checkpointDir) { tasks =>
       // per-batch task list is delta-sized (the reference holds it in an
       // array, app.js:30); tasks run sequentially like its event loop,
-      // chaining on the in-memory state, with ONE swap per micro-batch
-      // instead of one per task. Crash mid-batch replays the whole batch
-      // (checkpointed foreachBatch) against the last swapped state — the
-      // orchestrator's left-anti idempotency guard makes that safe.
-      val taskUris = tasks.collect().toSeq.sorted
-      if (taskUris.nonEmpty) {
-        var state = readState(spark, stateDir)
-        val snapshots = taskUris.flatMap { taskUri =>
-          val result = ImportPipeline.runImportPipeline(
-            spark, state, taskUri, pagesDir,
-            s"$outDir/${taskDirName(taskUri)}", clock(), writeDebug)
-          // keep the chained plan shallow: each task's state snapshot is
-          // materialized to executor storage (NOT a durable swap), so
-          // task N+1's actions don't re-evaluate tasks 1..N
-          if (result.status == "not_a_task") None
-          else { state = result.quads.localCheckpoint(true); Some(state) }
-        }
-        // the swapped table supersedes the snapshots: release them, so a
-        // long-running service holds no state copy per batch
-        if (snapshots.nonEmpty)
-          try writeState(state, stateDir)
-          finally snapshots.foreach(graft.Scaffold.releaseCheckpoint)
+      // each one read → pipeline → swap, so every task starts from the
+      // swapped state of the one before. A crash after task k's swap
+      // replays the whole batch (checkpointed foreachBatch), re-running
+      // tasks 1..k against state that already holds their results: each
+      // registers as a set union, so under a fixed clock it appends nothing.
+      tasks.collect().toSeq.sorted.foreach { taskUri =>
+        val result = ImportPipeline.runImportPipeline(
+          spark, readState(spark, stateDir), taskUri, pagesDir,
+          s"$outDir/${taskDirName(taskUri)}", clock(), writeDebug)
+        if (result.status != "not_a_task") writeState(result.quads, stateDir)
       }
     }
   }

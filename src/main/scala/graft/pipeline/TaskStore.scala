@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import graft.rdf.{Term, Vocab}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.rdf.Vocab
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Task lifecycle over a quad table — the reference's SPARQL task layer
@@ -19,10 +19,6 @@ import org.apache.spark.sql.functions._
   * (partition overwrite, or a MERGE on a table format that supports it).
   */
 object TaskStore {
-
-  /** Schema helper: build a quad row. */
-  private def quad(s: Column, p: String, o: Column): Column =
-    struct(s.as("subject"), lit(p).as("predicate"), o.as("obj"))
 
   /** S4/J2 star lookup (lib/task.js:80-108): one row per task with its
     * properties pivoted into columns; OPTIONAL error → nullable column
@@ -151,6 +147,13 @@ object TaskStore {
           col("e").as("obj")))).as("q"))
       .select(col("q.subject"), col("q.predicate"), col("q.obj"),
         col("g").as("graph"))
-    quads.unionByName(rows)
+    insertData(quads, rows)
   }
+
+  /** INSERT DATA (lib/pipeline-import.js:180-218) into a triplestore has
+    * set semantics: `rows` join `quads` as one set union, so a quad already
+    * present (a replay, a re-run re-minting the same content-addressed
+    * entity or error) is not appended again, and duplicates collapse. */
+  private[pipeline] def insertData(quads: DataFrame, rows: DataFrame): DataFrame =
+    quads.unionByName(rows).distinct()
 }

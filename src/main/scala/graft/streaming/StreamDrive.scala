@@ -244,16 +244,6 @@ object StreamDrive {
       lastTriggerLocal.set(triggers)
       lastDriveBatches = counts
       lastDriveTriggerMs = triggers
-      // Dev-only drive profile (set SPARK_GRAFT_DRIVE_PROFILE): per-batch
-      // duration breakdown from the progress events, for attributing
-      // drive cost to planning vs state commit vs addBatch.
-      if (sys.env.contains("SPARK_GRAFT_DRIVE_PROFILE"))
-        q.recentProgress.foreach { p =>
-          val st = p.stateOperators.toSeq.map(o =>
-            s"rows=${o.numRowsTotal} commitMs=${o.commitTimeMs}").mkString(";")
-          System.err.println(s"DRIVEPROF $name batch=${p.batchId} " +
-            s"in=${p.numInputRows} dur=${p.durationMs} state[$st]")
-        }
       q.stop()
     }
     s.table(name)

@@ -4,7 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.types.StructType
 
 /** The at-rest store layout constants (PostingsSchema, LshStoreSchema,
-  * IvfStoreSchema) are hand-stated contracts that the serving-path probe
+  * IvfStoreSchema, and the side tables' DDL: QtermsSchema, TotalsSchema,
+  * CentroidsSchema, FpIndexSchema, BloomSchema, DeconGramsSchema,
+  * DeconMetaSchema) are hand-stated contracts that the serving-path probe
   * trusts INSTEAD of schema inference — so a writer change (renamed
   * column, widened tf) would not fail the probe's read; it would return
   * all-null columns for the renamed field and silently corrupt scores.
@@ -12,7 +14,8 @@ import org.apache.spark.sql.types.StructType
   * output equals its contract: the data files must carry exactly the
   * contract's non-partition columns (name and type), and the partition
   * directories must be keyed on the contract's LAST column, which is the
-  * partition column by convention (stated at each constant). */
+  * partition column by convention (stated at each constant). An
+  * unpartitioned side table must carry exactly its DDL's columns. */
 class StoreSchemaContractSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -45,24 +48,61 @@ class StoreSchemaContractSpec extends SparkSpec {
         "explicit-schema read would return all-null for the divergent field")
   }
 
+  /** An unpartitioned side table's data columns equal its stated DDL. */
+  private def assertDdl(table: String, ddl: String): Unit = {
+    val observed = contractPairs(spark.read.parquet(table).schema)
+    assert(observed == contractPairs(StructType.fromDDL(ddl)),
+      s"writer output columns $observed at $table diverge from the stated " +
+        s"contract '$ddl' — the explicit-schema read would return all-null " +
+        "for the divergent field")
+  }
+
+  private def tempStore(kind: String): String = graft.Scaffold.cleanupOnExit(
+    java.nio.file.Files.createTempDirectory(s"graft-contract-$kind").toString)
+
+  private lazy val bm25Store = {
+    val out = tempStore("bm25")
+    Retrieval.writeBm25Index(spark, sfDir, out, nBuckets = 4); out
+  }
+  private lazy val ivfStore = {
+    val out = tempStore("ivf")
+    Similarity.writeIvfPartitioned(spark, sfDir, out, nCells = 4); out
+  }
+
   test("writeBm25Index postings match PostingsSchema") {
-    val out = graft.Scaffold.cleanupOnExit(java.nio.file.Files
-      .createTempDirectory("graft-contract-bm25").toString)
-    Retrieval.writeBm25Index(spark, sfDir, out, nBuckets = 4)
-    assertContract(s"$out/postings", Retrieval.PostingsSchema)
+    assertContract(s"$bm25Store/postings", Retrieval.PostingsSchema)
+  }
+
+  test("writeBm25Index qterms and totals match QtermsSchema and TotalsSchema") {
+    assertDdl(s"$bm25Store/qterms", Retrieval.QtermsSchema)
+    assertDdl(s"$bm25Store/totals", Retrieval.TotalsSchema)
   }
 
   test("writeLshPartitioned corpus matches LshStoreSchema") {
-    val out = graft.Scaffold.cleanupOnExit(java.nio.file.Files
-      .createTempDirectory("graft-contract-lsh").toString)
+    val out = tempStore("lsh")
     Similarity.writeLshPartitioned(spark, sfDir, out)
     assertContract(s"$out/corpus", Similarity.LshStoreSchema)
   }
 
   test("writeIvfPartitioned corpus matches IvfStoreSchema") {
-    val out = graft.Scaffold.cleanupOnExit(java.nio.file.Files
-      .createTempDirectory("graft-contract-ivf").toString)
-    Similarity.writeIvfPartitioned(spark, sfDir, out, nCells = 4)
-    assertContract(s"$out/corpus", Similarity.IvfStoreSchema)
+    assertContract(s"$ivfStore/corpus", Similarity.IvfStoreSchema)
+  }
+
+  test("writeIvfPartitioned centroids match CentroidsSchema") {
+    assertDdl(s"$ivfStore/centroids", Similarity.CentroidsSchema)
+  }
+
+  test("writeIncrIndex fp and bloom match FpIndexSchema and BloomSchema") {
+    val out = tempStore("incr")
+    Dedup.writeIncrIndex(spark, sfDir, out)
+    assertContract(s"$out/fp", StructType.fromDDL(Dedup.FpIndexSchema))
+    assertDdl(s"$out/bloom", Dedup.BloomSchema)
+  }
+
+  test("writeDeconIndex grams and meta match DeconGramsSchema and DeconMetaSchema") {
+    val out = tempStore("decon")
+    CorpusPrep.writeDeconIndex(spark, sfDir, out)
+    assertContract(s"$out/grams", StructType.fromDDL(CorpusPrep.DeconGramsSchema))
+    assertDdl(s"$out/meta", CorpusPrep.DeconMetaSchema)
   }
 }

@@ -131,7 +131,7 @@ class ImportPipelineSpec extends SparkSpec {
       pagesDir, Files.createTempDirectory("import-out2").toString, Now)
     assert(second.status == "success")
     // transitions replace status/modified; every minted quad is already
-    // present → the left-anti guard appends nothing
+    // present → the set union appends nothing
     assert(second.quads.count() == n1)
     // debug output off: only the valid partition is written, and only
     // the valid files are registered (logical + physical entity each)
@@ -210,6 +210,25 @@ class ImportPipelineSpec extends SparkSpec {
     assert(state.filter(col("predicate") === Vocab.oslcMessage).count() == 1)
     assert(state.filter(col("subject") === T &&
       col("predicate") === Vocab.taskError).count() == 1)
+  }
+
+  test("a task failing twice with the same message keeps one error record") {
+    def fail(state: org.apache.spark.sql.DataFrame) =
+      ImportPipeline.runImportPipeline(spark, state, T, "/nonexistent/pages/dir",
+        Files.createTempDirectory("import-out").toString, Now)
+    val first = fail(taskQuads)
+    val state1 = first.quads.cache(); state1.count()
+    val second = fail(state1)
+    assert(second.status == "failed" && second.error == first.error, second)
+    val state = second.quads.cache()
+    val errors = state.filter(col("predicate") === Vocab.taskError)
+      .select("obj").as[String].collect()
+    assert(errors.length == 1, errors.toSeq)
+    // one error entity: its type, its message and the task's link to it
+    assert(state.filter(col("subject") === errors.head ||
+      col("obj") === errors.head).count() == 3)
+    assert(state.distinct().count() == state.count())
+    state.unpersist(); state1.unpersist()
   }
 
   test("non-task subject: state untouched (pipeline-import.js:29-30)") {

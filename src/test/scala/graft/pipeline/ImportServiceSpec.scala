@@ -34,11 +34,13 @@ class ImportServiceSpec extends SparkSpec {
     .toDF("subject", "predicate", "obj")
     .withColumn("graph", lit("http://g/tasks"))
 
-  private def deltaBody(task: String) =
-    s"""[{"inserts":[{"subject":{"type":"uri","value":"$task"},
+  /** One delta body scheduling `tasks` — one micro-batch of them. */
+  private def deltaBody(tasks: String*) = tasks.map(task =>
+    s"""{"subject":{"type":"uri","value":"$task"},
        |"predicate":{"type":"uri","value":"http://www.w3.org/ns/adms#status"},
-       |"object":{"type":"uri","value":"http://redpencil.data.gift/id/concept/JobStatus/scheduled"}}],
-       |"deletes":[]}]""".stripMargin.replace("\n", "")
+       |"object":{"type":"uri","value":"http://redpencil.data.gift/id/concept/JobStatus/scheduled"}}"""
+      .stripMargin.replace("\n", ""))
+    .mkString("""[{"inserts":[""", ",", """],"deletes":[]}]""")
 
   test("recoverState restores a mid-swap crash and sweeps stranded temps") {
     val root = Files.createTempDirectory("svc-rec").toString
@@ -113,17 +115,9 @@ class ImportServiceSpec extends SparkSpec {
       q.processAllAvailable()
       assert(ImportService.readState(spark, stateDir).count() == before)
 
-      // two tasks in ONE batch chain on the in-memory state (one swap):
-      // T1 re-runs idempotently, T2 (no input container) succeeds empty
-      Files.writeString(Paths.get(s"$deltaDir/d3.json"),
-        s"""[{"inserts":[
-           |{"subject":{"type":"uri","value":"$T1"},
-           | "predicate":{"type":"uri","value":"http://www.w3.org/ns/adms#status"},
-           | "object":{"type":"uri","value":"http://redpencil.data.gift/id/concept/JobStatus/scheduled"}},
-           |{"subject":{"type":"uri","value":"$T2"},
-           | "predicate":{"type":"uri","value":"http://www.w3.org/ns/adms#status"},
-           | "object":{"type":"uri","value":"http://redpencil.data.gift/id/concept/JobStatus/scheduled"}}],
-           |"deletes":[]}]""".stripMargin.replace("\n", ""))
+      // two tasks in ONE batch run one after the other, each with its own
+      // swap: T1 re-runs idempotently, T2 (no input container) succeeds empty
+      Files.writeString(Paths.get(s"$deltaDir/d3.json"), deltaBody(T1, T2))
       q.processAllAvailable()
       val after = ImportService.readState(spark, stateDir)
       val statuses = after.filter(col("predicate") === Vocab.admsStatus)
@@ -157,14 +151,44 @@ class ImportServiceSpec extends SparkSpec {
         q.processAllAvailable()
         persisted
       }
-      // flat from the first batch on, and at zero: the swap releases the
-      // batch's checkpoints at once instead of leaving them to GC (the
-      // ContextCleaner drops unreachable ones eventually, which would
-      // keep the count flat but not bounded by design)
+      // flat from the first batch on, and at zero: a task's new state goes
+      // from its plan straight into the swap, with no persisted snapshot
+      // left for GC to drop (the ContextCleaner drops unreachable ones
+      // eventually, which would keep the count flat but not bounded by
+      // design)
       assert(after == Seq.fill(6)(0), after)
       assert(ImportService.readState(spark, stateDir).filter(col("subject") === T1 &&
         col("predicate") === Vocab.admsStatus).select("obj")
         .as[String].head() == Vocab.statusSuccess)
     } finally q.stop()
+  }
+
+  test("a two-task micro-batch leaves the state two one-task batches leave") {
+    // RDD ids only grow: count the persisted RDDs created from here on
+    val firstId = spark.sparkContext.emptyRDD[Int].id
+    def persisted = spark.sparkContext.getPersistentRDDs.keys.count(_ > firstId)
+    /** Serve one micro-batch per entry of `batches`; the sorted state rows. */
+    def serve(batches: Seq[String]*): Seq[String] = {
+      val root = Files.createTempDirectory("svc-batch").toString
+      val stateDir = s"$root/state"
+      val deltaDir = s"$root/deltas"; Files.createDirectories(Paths.get(deltaDir))
+      val pagesDir = s"$root/pages"; Files.createDirectories(Paths.get(pagesDir))
+      initialState.write.parquet(stateDir)
+      Files.writeString(Paths.get(s"$pagesDir/page-1.html"), page)
+      val q = ImportService.start(spark, deltaDir, s"$root/ckpt", stateDir,
+        pagesDir, s"$root/out", clock = () => "2026-03-01T00:00:00Z")
+      try batches.zipWithIndex.foreach { case (tasks, i) =>
+        Files.writeString(Paths.get(s"$deltaDir/d$i.json"), deltaBody(tasks: _*))
+        q.processAllAvailable()
+      } finally q.stop()
+      ImportService.readState(spark, stateDir).collect()
+        .map(_.mkString("\u0001")).toSeq.sorted
+    }
+    val together = serve(Seq(T1, T2))
+    val apart = serve(Seq(T1), Seq(T2))
+    assert(together == apart)
+    assert(together.distinct == together)
+    assert(together.count(_.startsWith(T2 + "\u0001" + Vocab.admsStatus)) == 1)
+    assert(persisted == 0)
   }
 }
