@@ -17,6 +17,14 @@ object Bench {
       .filter(p => calSamples(p - 1) > 1.5 * bestRegularCal).toSet
   }
 
+  /** The per-round detail copy `bench_detail_r<N>.json` holds a FULL
+    * run only: a subset run (`SPARK_GRAFT_BENCH_ONLY`) writes just
+    * `bench_detail.json`, so it cannot overwrite the committed round's
+    * copy with partial data. */
+  private[graft] def roundDetailFile(only: Option[Set[String]],
+      nextRound: Int): Option[String] =
+    if (only.isEmpty) Some(f"bench_detail_r$nextRound%02d.json") else None
+
   /** Per-query noise floor (sec) for the CROSS-ROUND regression rule.
     * Sub-500 ms queries sit at the measurement floor: cal anchors
     * themselves spread 0.15-0.30 s run-to-run, so a 30-100 ms min-to-min
@@ -1001,10 +1009,12 @@ object Bench {
       // previously depended on the prior verdict quoting numbers. The
       // round index is inferred as 1 + the highest committed BENCH_r*.json
       // (this bench run produces that next round's numbers, computed once
-      // above for the adjudication's prior-detail lookup); dev reruns
-      // within a round just overwrite the same file.
-      val wr = new java.io.PrintWriter(f"bench_detail_r$nextRound%02d.json")
-      try wr.println(detail) finally wr.close()
+      // above for the adjudication's prior-detail lookup); full reruns
+      // within a round just overwrite the same file, subset runs skip it.
+      for (name <- roundDetailFile(onlyEnv, nextRound)) {
+        val wr = new java.io.PrintWriter(name)
+        try wr.println(detail) finally wr.close()
+      }
     } catch { case scala.util.control.NonFatal(_) => () } // detail is best-effort
     // Compact final line: medians rounded to ms, slowest queries first,
     // greedily added under a hard byte budget (the dropped tail is the

@@ -116,11 +116,11 @@ object RdfaExtractor {
     val root = HtmlParser.parse(cleaned)
     val out = mutable.ArrayBuffer[Quad]()
     // Blank labels must be DETERMINISTIC per page: Spark re-executes the
-    // extraction subtree wherever it appears twice in a plan (e.g. the
-    // provenance-distinct branch of ExtractPipeline), and labels from a
-    // global counter would differ between executions, silently detaching
-    // provenance/type triples from their nodes. Per-page counter + a
-    // base-URI discriminator keeps labels stable and cross-page unique.
+    // extraction on a task retry or a speculative attempt, and labels
+    // from a global counter would differ between attempts, so output
+    // written by different attempts would name different nodes. Per-page
+    // counter + a base-URI discriminator keeps labels stable and
+    // cross-page unique.
     val counter = new Counter(sha1Hex(baseUri))
     // HTML+RDFa §3.1: a <base href> element sets the in-scope base for
     // IRI resolution (including about="" → the base itself). First base

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.html.RdfaExtractor
-import graft.rdf.{NTriples, Quad, Repair, Term, Vocab}
+import graft.rdf.{NTriples, Repair, Term, Vocab}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,25 +10,25 @@ import org.apache.spark.sql.functions._
   *
   *   pages(url, html)
   *     → rdfa_extract (G1, flatMap)
-  *     → HTML-object externalization (G2, column rewrite + side output)
-  *     → provenance union (G3/D3, distinct-subjects union)
+  *     → HTML-object externalization (G2, column rewrite)
+  *     → provenance (G3/D3, one extra row per page subject)
   *     → validate/repair verdict tagging (P4/D5)
   *     → N-Triples line (G4) → one text directory per partition (K1/K9)
   *
-  * [[compose]] defines that chain once, for [[run]] and
-  * `runImportPipeline`. Its flatMap output feeds three plan branches
-  * (both sides of the provenance union and the HTML side table):
-  * `runImportPipeline` persists it, so the flatMap runs once per page;
-  * [[run]] does not, so its plan runs it once per union branch.
-  * Everything after the flatMap is pure column algebra: at 100 TB
-  * the only shuffles are the distinct()s for provenance and the HTML side
-  * table (per-page-partition-local if pages are partitioned by url, since
-  * subjects rarely span pages).
+  * Like the reference's extractor (lib/rdfa-extractor.js:26-54), every
+  * step is page-local: the flatMap sees a whole page, marks the first row
+  * of each of its subjects, and every later step is row-local column
+  * algebra. [[run]] is therefore one narrow pass per page, with no
+  * shuffle, and it runs the flatMap once. The HTML side table is a filter
+  * of the same rows ([[htmlFiles]]), so the file sink can read the
+  * pipeline's output instead of a second branch of the plan.
   */
 object ExtractPipeline {
 
+  /** `firstOfSubject` marks the page's first row of each subject: the
+    * row [[withProvenance]] adds that subject's provenance quad to. */
   final case class PageQuad(url: String, subject: Term, predicate: Term,
-      obj: Term, graph: String)
+      obj: Term, graph: String, firstOfSubject: Boolean)
 
   /** G1: one row per extracted RDFa triple. Runs the parser+walker per
     * page inside `flatMap` — parser instances are per-record-cheap (no
@@ -43,9 +43,13 @@ object ExtractPipeline {
       .flatMap { case (url, html) =>
         // T4 per-file isolation — including StackOverflowError from
         // pathologically deep element nesting in the recursive walk
-        try RdfaExtractor.extract(html, url)
-          .map(q => PageQuad(url, q.subject, q.predicate, q.obj, url))
-        catch {
+        try {
+          // extract returns the page's quads de-duplicated, so each
+          // subject is flagged once per page
+          val seen = scala.collection.mutable.HashSet[Term]()
+          RdfaExtractor.extract(html, url).map(q =>
+            PageQuad(url, q.subject, q.predicate, q.obj, url, seen.add(q.subject)))
+        } catch {
           case scala.util.control.NonFatal(_) => Seq.empty
           case _: StackOverflowError => Seq.empty
         }
@@ -58,42 +62,45 @@ object ExtractPipeline {
     * content-addressed file URI (the reference mints a uuid; content
     * hashing keeps golden tests stable and makes re-runs idempotent; md5
     * rather than sha1 so the rdfa_externalize DuckDB oracle can recompute
-    * the URI — DuckDB has no sha1), and the HTML bodies become a side
-    * table for the file sink. */
-  private def isExternalizable = col("predicate.value") === Vocab.extractedDecisionContent &&
-    col("obj.datatype") === Vocab.rdfHTML
-
+    * the URI — DuckDB has no sha1), and the HTML body moves to the row's
+    * nullable `content` column. Returns the rewritten rows and their HTML
+    * side table ([[htmlFiles]]). */
   def externalizeHtml(quads: DataFrame): (DataFrame, DataFrame) = {
-    val fileUri = concat(lit("http://data.lblod.info/id/files/"),
-      md5(col("obj.value")))
-    val rewritten = quads.withColumn("obj",
-      when(isExternalizable,
-        struct(lit(Term.NamedNode).as("termType"), fileUri.as("value"),
-          lit(null).cast("string").as("datatype"),
-          lit(null).cast("string").as("lang")))
+    val rewritten = quads
+      .withColumn("content", when(col("predicate.value") === Vocab.extractedDecisionContent &&
+        col("obj.datatype") === Vocab.rdfHTML, col("obj.value")))
+      .withColumn("obj", when(col("content").isNotNull, namedNode(
+        concat(lit("http://data.lblod.info/id/files/"), md5(col("content")))))
         .otherwise(col("obj")))
-    val htmlFiles = quads.filter(isExternalizable)
-      .select(fileUri.as("file_uri"), col("obj.value").as("content"),
-        col("url").as("derived_from"))
-      .distinct()
-    (rewritten, htmlFiles)
+    (rewritten, htmlFiles(rewritten))
   }
 
+  /** The HTML side table of externalized rows, one row per externalized
+    * quad: (file_uri, content, derived_from), for [[writeHtmlFiles]]. */
+  private[pipeline] def htmlFiles(rows: DataFrame): DataFrame =
+    rows.filter(col("content").isNotNull)
+      .select(col("obj.value").as("file_uri"), col("content"),
+        col("url").as("derived_from"))
+
+  private def namedNode(value: Column): Column =
+    struct(lit(Term.NamedNode).as("termType"), value.as("value"),
+      lit(null).cast("string").as("datatype"), lit(null).cast("string").as("lang"))
+
   /** G3/D3 (lib/rdfa-extractor.js:45-54): `prov:wasDerivedFrom` once per
-    * (page, subject), as a distinct+union plan step. */
+    * (page, subject). Row-local: the row flagged `firstOfSubject` becomes
+    * itself plus its subject's provenance quad, which carries no HTML
+    * `content`. The flag column is dropped. */
   def withProvenance(quads: DataFrame): DataFrame = {
-    val prov = quads
-      .select(col("url"), col("subject"), col("graph")).distinct()
-      .select(col("url"), col("subject"),
-        struct(lit(Term.NamedNode).as("termType"),
-          lit(Vocab.provWasDerivedFrom).as("value"),
-          lit(null).cast("string").as("datatype"),
-          lit(null).cast("string").as("lang")).as("predicate"),
-        struct(lit(Term.NamedNode).as("termType"), col("url").as("value"),
-          lit(null).cast("string").as("datatype"),
-          lit(null).cast("string").as("lang")).as("obj"),
-        col("graph"))
-    quads.unionByName(prov)
+    val cols = quads.columns.toSeq.filterNot(_ == "firstOfSubject")
+    def row(set: Map[String, Column]) =
+      struct(cols.map(c => set.getOrElse(c, col(c)).as(c)): _*)
+    val prov = row(Map(
+      "predicate" -> namedNode(lit(Vocab.provWasDerivedFrom)),
+      "obj" -> namedNode(col("url")),
+      "content" -> lit(null).cast("string")))
+    val self = row(Map.empty)
+    quads.select(explode(when(col("firstOfSubject"), array(self, prov))
+      .otherwise(array(self))).as("q")).select(col("q.*"))
   }
 
   /** P4/D5 verdict tagging (lib/pipeline-import.js:220-241) + repaired
@@ -112,16 +119,10 @@ object ExtractPipeline {
     taggedQuads.withColumn("ttl", NTriples.toNTriple(
       col("fixed.subject"), col("fixed.predicate"), col("fixed.obj")))
 
-  /** G2-G4 over extracted quads: (tagged quads with their `ttl` line,
-    * HTML side table). Pass a persisted `raw` to extract once. */
-  private[pipeline] def compose(raw: DataFrame): (DataFrame, DataFrame) = {
-    val (externalized, htmlFiles) = externalizeHtml(raw)
-    (withTtlLine(tagged(withProvenance(externalized))), htmlFiles)
-  }
-
-  /** Full pipeline: pages(url, html) → tagged quads with ttl lines. */
+  /** Full pipeline: pages(url, html) → tagged quads with ttl lines and
+    * the externalized HTML `content` ([[htmlFiles]] reads it). */
   def run(spark: SparkSession, pages: DataFrame): DataFrame =
-    compose(extractQuads(spark, pages))._1
+    withTtlLine(tagged(withProvenance(externalizeHtml(extractQuads(spark, pages))._1)))
 
   /** The TTL partitions as (name, membership, line), in the reference's
     * exact — overlapping — contents (`correctAndRepairTriples`,
@@ -161,8 +162,9 @@ object ExtractPipeline {
   /** K1-for-HTML (lib/file-helpers.js:88-101 via rdfa-extractor.js:31-38):
     * write each externalized decision body as its own `<md5>.html` file.
     * One file per row by contract (the reference writes one content.html
-    * per extracted object), so this is a `foreachPartition` writer — the
-    * only imperative sink in the pipeline, and per-partition parallel. */
+    * per extracted object; rows with one body share one name), so this is
+    * a `foreachPartition` writer — the only imperative sink in the
+    * pipeline, and per-partition parallel. */
   def writeHtmlFiles(htmlFiles: DataFrame, outDir: String): Unit = {
     // Hadoop FileSystem, resolved inside the partition: executors write to
     // the SHARED sink (file:/hdfs:/s3a: by scheme), not executor-local
@@ -244,25 +246,14 @@ object ExtractPipeline {
   /** Driver-contract query for the G2 rewrite itself (rdfa_externalize):
     * every %3 synthetic page carries a `prov:value` div typed `rdf:HTML`
     * that the extractor rewires to `extractedDecisionContent` and
-    * [[externalizeHtml]] externalizes. The row joins BOTH sides of the
-    * split — the rewritten quad's NamedNode object (now the
-    * content-addressed file URI) and the side table's payload, matched on
-    * (file_uri, url) so identical payloads on different pages (sf0.1 has
-    * duplicate-text groups) cannot fan out. The oracle recomputes
+    * [[externalizeHtml]] externalizes. One row per externalized quad,
+    * projected from the side table: the page, the rewritten object (the
+    * content-addressed file URI) and the payload. The oracle recomputes
     * `md5('<p>' || substring(text,1,20) || '</p>')` relationally, so a
     * regression in the RDFa walk, the specialHtmlPredicates rewiring, the
     * innerHtml serialization, OR the URI minting breaks the hash gate. */
-  def externalizeSummary(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = extractQuads(spark, syntheticPages(spark, sfDir))
-    val (rewritten, htmlFiles) = externalizeHtml(raw)
-    val rewired = rewritten
-      .filter(col("predicate.value") === Vocab.extractedDecisionContent &&
-        col("obj.termType") === Term.NamedNode)
-      .select(col("url"), col("obj.value").as("file_uri"))
-    rewired
-      .join(htmlFiles.withColumnRenamed("derived_from", "url"),
-        Seq("file_uri", "url"))
-      .select(col("url"), col("file_uri"), col("content"))
+  def externalizeSummary(spark: SparkSession, sfDir: String): DataFrame =
+    externalizeHtml(extractQuads(spark, syntheticPages(spark, sfDir)))._2
+      .select(col("derived_from").as("url"), col("file_uri"), col("content"))
       .orderBy(col("url"))
-  }
 }

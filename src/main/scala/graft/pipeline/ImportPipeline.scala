@@ -30,10 +30,11 @@ import org.apache.spark.sql.functions._
   * cardinality (one row per page and partition — the reference holds the
   * page set in a JS `Set`, lib/pipeline-import.js:127), not the triple
   * cardinality; the extracted quads themselves never leave executors.
-  * The extraction is persisted, so its flatMap runs once although three
-  * plan branches read it, and so are the tagged quads across the sink and
-  * size actions; both are unpersisted before returning — the returned
-  * quad state has no lineage into them.
+  * The tagged quads are the one persisted frame: the TTL sink, the HTML
+  * sink and the size collect all read it, and the extraction before it is
+  * one narrow pass per page ([[ExtractPipeline.run]]), so each page is
+  * opened and extracted once. It is unpersisted before returning — the
+  * returned quad state has no lineage into it.
   */
 object ImportPipeline {
 
@@ -118,27 +119,24 @@ object ImportPipeline {
       // shared directory's other files at listing, before any is opened
       val pageHtml = PageSource.readPages(spark, pagesDir, pages)
 
-      // G1-G4 + P4/D5: extract once, then externalize, provenance,
-      // verdict-tag and serialize over the persisted extraction
-      val raw = ExtractPipeline.extractQuads(spark, pageHtml).persist()
-      val (lines, htmlFiles) = ExtractPipeline.compose(raw)
-      val tagged = lines.persist()
+      // G1-G4 + P4/D5: one pass per page, read by every sink below
+      val tagged = ExtractPipeline.run(spark, pageHtml).persist()
       try {
         // K1/K9 sinks
         ExtractPipeline.writeTtl(tagged, s"$outDir/ttl", writeDebug)
-        ExtractPipeline.writeHtmlFiles(htmlFiles, s"$outDir/html")
+        ExtractPipeline.writeHtmlFiles(ExtractPipeline.htmlFiles(tagged), s"$outDir/html")
         // K2-K4 registration of every written file, then success
         val files = manifest(tagged, pages, ExtractPipeline.ttlParts(writeDebug),
           taskUri, graph)
         ImportResult(registerSuccess(busy, files, taskUri, graph, nowIso),
           "success", pages.size.toLong, None)
-      } finally { tagged.unpersist(); raw.unpersist() }
+      } finally tagged.unpersist()
     } catch {
       case scala.util.control.NonFatal(e) =>
         // T5 (lib/pipeline-import.js:110-116): error record + failed
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         val failed = TaskStore.transitionStatus(
-          TaskStore.appendError(busy, taskUri, msg),
+          TaskStore.appendError(busy, taskUri, msg, graph),
           taskUri, Vocab.statusFailed, nowIso, Some(graph))
         ImportResult(failed, "failed", 0L, Some(msg))
     }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * The store is a flat quad DataFrame `(subject, predicate, obj, graph)`
   * with string columns (object IRIs and literal lexical forms share `obj`;
   * task-layer values are all IRIs/strings/timestamps, lib/utils.js:15-21).
-  * At scale this table is partitioned by `graph` (per-job named graphs),
-  * so every per-task operation below prunes to one partition.
+  * Every task shares one graph, so no partitioning of the table prunes a
+  * per-task operation: each one below filters the whole table.
   *
   * Updates follow the reference's DELETE+INSERT WHERE shape (K6,
   * lib/task.js:158-187) as read-rewrite transformations: the returned
@@ -129,25 +129,18 @@ object TaskStore {
     kept.unionByName(inserted)
   }
 
-  /** K5 error record (lib/task.js:189-206): mint an oslc:Error + link.
-    * The error URI is content-addressed (reference mints a uuid — same
-    * determinism deviation as the file sink). */
-  def appendError(quads: DataFrame, taskUri: String, message: String): DataFrame = {
-    val errorUri = concat(lit("http://redpencil.data.gift/id/jobs/error/"),
-      sha1(concat(lit(taskUri), lit(" "), lit(message))))
-    val rows = quads.filter(col("subject") === taskUri)
-      .select(col("graph")).limit(1)
-      .select(errorUri.as("e"), col("graph").as("g"))
-      .select(col("g"), explode(array(
-        struct(col("e").as("subject"), lit(Vocab.rdfType).as("predicate"),
-          lit(Vocab.oslcError).as("obj")),
-        struct(col("e").as("subject"), lit(Vocab.oslcMessage).as("predicate"),
-          lit(message).as("obj")),
-        struct(lit(taskUri).as("subject"), lit(Vocab.taskError).as("predicate"),
-          col("e").as("obj")))).as("q"))
-      .select(col("q.subject"), col("q.predicate"), col("q.obj"),
-        col("g").as("graph"))
-    insertData(quads, rows)
+  /** K5 error record (lib/task.js:189-206): mint an oslc:Error + link in
+    * the task's `graph`. The error URI is content-addressed (reference
+    * mints a uuid — same determinism deviation as the file sink). */
+  def appendError(quads: DataFrame, taskUri: String, message: String,
+      graph: String): DataFrame = {
+    import quads.sparkSession.implicits._
+    val e = "http://redpencil.data.gift/id/jobs/error/" +
+      graft.rdf.sha1Hex(s"$taskUri $message")
+    insertData(quads, Seq(
+      (e, Vocab.rdfType, Vocab.oslcError, graph),
+      (e, Vocab.oslcMessage, message, graph),
+      (taskUri, Vocab.taskError, e, graph)).toDF("subject", "predicate", "obj", "graph"))
   }
 
   /** INSERT DATA (lib/pipeline-import.js:180-218) into a triplestore has

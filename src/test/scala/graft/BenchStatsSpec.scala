@@ -54,6 +54,13 @@ class BenchStatsSpec extends AnyFunSuite {
     assert(math.abs(floor - 0.17) < 1e-9, s"floor was $floor")
   }
 
+  test("only a full run writes the per-round detail copy") {
+    assert(Bench.roundDetailFile(None, 23) == Some("bench_detail_r23.json"))
+    assert(Bench.roundDetailFile(Some(Set("rdfa_pipeline")), 23).isEmpty)
+    // an ONLY variable that names nothing still marks a subset run
+    assert(Bench.roundDetailFile(Some(Set.empty), 23).isEmpty)
+  }
+
   test("single-sample query floors at the cal spread") {
     assert(Bench.noiseFloorSec(Vector(2.5), 0.07) == 0.07)
     assert(Bench.noiseFloorSec(Vector.empty, 0.07) == 0.07)

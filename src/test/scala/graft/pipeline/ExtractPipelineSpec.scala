@@ -120,6 +120,94 @@ class ExtractPipelineSpec extends SparkSpec {
     assert(content == "<p>full body</p>")
   }
 
+  test("run reads each page once and plans no shuffle") {
+    // pages behind the test-only counting filesystem: every open of a
+    // page file is one read of its content
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.cfs.impl", classOf[graft.ops.CountingFileSystem].getName)
+    val dir = java.nio.file.Files.createTempDirectory("pages").toString
+    for (n <- 1 to 4) java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/page-$n.html"),
+      page.replace("besluit/B1", s"besluit/B$n"))
+    val files = new java.io.File(dir).listFiles().map(_.getPath).sorted.toSeq
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    graft.ops.CountingFs.reset()
+    spark.listenerManager.register(listener)
+    try ExtractPipeline.run(spark, graft.sources.PageSource.readPages(spark, s"cfs:$dir")
+        .select("url", "html"))
+      .write.format("noop").mode("overwrite").save()
+    finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    val reads = graft.ops.CountingFs.openedPaths.filter(_.startsWith(dir)).sorted
+    assert(reads == files, reads)
+    // the final adaptive plan, query stages included
+    object Shuffles extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import scala.jdk.CollectionConverters._
+    assert(plans.size == 1, plans)
+    val exchanges = Shuffles.collect(plans.asScala.head) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
+    assert(exchanges.isEmpty, plans.asScala.head.treeString)
+  }
+
+  test("per page: one provenance quad per subject, one file per shared HTML body") {
+    val body = "<p>shared body</p>"
+    def besluit(id: String) =
+      s"""<div about="https://example.org/besluit/$id" typeof="besluit:Besluit">
+         |<span property="eli:title">Besluit $id</span>
+         |<div property="prov:value" datatype="rdf:HTML">$body</div></div>""".stripMargin
+    val shared = Seq(("https://example.org/zitting/2",
+      s"""<html prefix="besluit: http://data.vlaanderen.be/ns/besluit# prov: http://www.w3.org/ns/prov#
+         | eli: http://data.europa.eu/eli/ontology#"><body>${besluit("A")}
+         |${besluit("B")}</body></html>""".stripMargin)).toDF("url", "html")
+    val out = ExtractPipeline.run(spark, shared).cache()
+    val rows = out.select($"subject.value", $"predicate.value", $"obj.value")
+      .as[(String, String, String)].collect().toSeq
+    val subjects = rows.map(_._1).distinct
+    assert(subjects.sorted == Seq("https://example.org/besluit/A",
+      "https://example.org/besluit/B"), subjects)
+    val prov = rows.filter(_._2 == Vocab.provWasDerivedFrom)
+    assert(prov.map(_._1).sorted == subjects.sorted, prov)
+    assert(prov.forall(_._3 == "https://example.org/zitting/2"), prov)
+    // two externalized quads, one content-addressed file URI
+    val ext = rows.filter(_._2 == Vocab.extractedDecisionContent)
+    val uri = s"http://data.lblod.info/id/files/${md5hex(body)}"
+    assert(ext.map(_._3) == Seq(uri, uri), ext)
+    // the side table holds one row per externalized quad...
+    val files = ExtractPipeline.htmlFiles(out).as[(String, String, String)].collect()
+    assert(files.toSeq == Seq.fill(2)((uri, body, "https://example.org/zitting/2")),
+      files.toSeq)
+    // ...and the sink writes their one <md5>.html
+    val outDir = java.nio.file.Files.createTempDirectory("html-sink").toString
+    ExtractPipeline.writeHtmlFiles(ExtractPipeline.htmlFiles(out), outDir)
+    val written = new java.io.File(outDir).listFiles().toSeq
+      .filterNot(_.getName.startsWith("."))
+    assert(written.map(_.getName) == Seq(s"${md5hex(body)}.html"), written)
+    assert(java.nio.file.Files.readString(written.head.toPath) == body)
+    out.unpersist()
+  }
+
+  test("rdfa_externalize gives one row per externalized quad") {
+    val sf = "/root/testdata/sf0.001"
+    val externalized = ExtractPipeline.run(spark, ExtractPipeline.syntheticPages(spark, sf))
+      .filter($"predicate.value" === Vocab.extractedDecisionContent)
+      .select($"url", $"obj.value")
+    val summary = ExtractPipeline.externalizeSummary(spark, sf)
+    assert(summary.columns.toSeq == Seq("url", "file_uri", "content"))
+    val rows = summary.select($"url", $"file_uri").as[(String, String)].collect()
+    assert(rows.length > 0)
+    assert(rows.sorted.toSeq ==
+      externalized.as[(String, String)].collect().sorted.toSeq)
+  }
+
   test("binding projection coerces integer/dateTime columns (P2, utils.js:7-25)") {
     val bindings = Seq(("42", "2023-05-04T10:11:12", "keep"))
       .toDF("count", "modified", "label")

@@ -35,6 +35,26 @@ class PageSourceSpec extends SparkSpec {
     pages.unpersist()
   }
 
+  test("x.html and x.html.gz share one url: each is its own page") {
+    // both files map to share://x.html; extraction is page-local, so each
+    // row yields its own quads and its own provenance quad
+    val dir = Files.createTempDirectory("pages").toString
+    Files.writeString(java.nio.file.Paths.get(s"$dir/x.html"), html)
+    val gz = new GZIPOutputStream(new FileOutputStream(s"$dir/x.html.gz"))
+    gz.write(html.getBytes("UTF-8")); gz.close()
+    val pages = PageSource.readPages(spark, dir, Seq("share://x.html"))
+    assert(pages.select("url").as[String].collect().toSeq ==
+      Seq("share://x.html", "share://x.html"))
+    val out = Files.createTempDirectory("ttl").toString
+    ExtractPipeline.writeTtl(ExtractPipeline.run(spark, pages.select("url", "html")), out)
+    val valid = spark.read.text(s"$out/valid").as[String].collect().toSeq
+    val counts = valid.groupBy(identity).map { case (l, ls) => l -> ls.size }
+    assert(counts.size == 2 && counts.contains("<https://example.org/b/1> " +
+      "<http://www.w3.org/ns/prov#wasDerivedFrom> <share://x.html> ."), counts)
+    // every line twice, the provenance quad included
+    assert(counts.values.toSet == Set(2), counts)
+  }
+
   test("urls from the file-metadata path equal the input_file_name() urls") {
     val dir = Files.createTempDirectory("pages").toString
     val names = Seq("a b.html", "a+b.html", "%41.html", "%zz.html", "c.html.gz",

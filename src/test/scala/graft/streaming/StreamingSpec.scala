@@ -256,7 +256,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("error record minting (K5)") {
-    val withErr = TaskStore.appendError(taskQuads, "http://t/1", "boom")
+    val withErr = TaskStore.appendError(taskQuads, "http://t/1", "boom", null)
     val err = withErr.filter(col("predicate") === Vocab.oslcMessage).collect()
     assert(err.length == 1 && err.head.getAs[String]("obj") == "boom")
     val link = withErr.filter(col("subject") === "http://t/1" &&
