@@ -123,7 +123,6 @@ object QuadOps {
   // ----------------------------------------------------- task lifecycle
 
   private val LcT0 = "2026-01-01T00:00:00Z"
-  private val LcT1 = "2026-01-15T00:00:00Z"
   private val LcT2 = "2026-02-01T00:00:00Z"
   private val LcTask = "urn:task:1"
   private val LcGraph = "urn:graph:tasks"
@@ -159,34 +158,31 @@ object QuadOps {
   }
 
   /** The orchestrator's pure-relational lifecycle on one task
-    * (lib/pipeline-import.js:28-117 minus extraction): scheduled → busy →
-    * register per-page valid files + containers → success. Every step is
-    * the production operator ([[graft.pipeline.TaskStore]] and
-    * [[graft.pipeline.ImportPipeline.registerSuccess]], the orchestrator's
-    * own registration tail); manifest sizes are a deterministic stand-in
-    * (page-URI byte length) since no HTML is read here, and the in-plan
-    * file-name regex agrees with `basename` on these `share://page-…` URIs.
-    *
-    * Bench note: cold wall-time here is one-time janino codegen of the
-    * metadata explodes (measured 7.8 s cold vs 1.4 s warm on 275 rows at
-    * sf0.1) — data-independent, amortized at scale. */
+    * (lib/pipeline-import.js:28-117 minus extraction): scheduled →
+    * register per-page valid files + containers → success, as one set
+    * union and one status transition. The step is the production
+    * operator ([[graft.pipeline.ImportPipeline.registerSuccess]], the
+    * orchestrator's own registration tail) over
+    * [[graft.pipeline.TaskStore.inputPages]]; manifest sizes are a
+    * deterministic stand-in (page-URI byte length) since no HTML is read
+    * here, and the in-plan file-name regex agrees with `basename` on
+    * these `share://page-…` URIs. */
   def lifecycleFinalState(s: SparkSession, d: String): DataFrame = {
     import graft.pipeline.{ImportPipeline, TaskStore}
     val q0 = lifecycleTaskQuads(s, d)
-    val busy = TaskStore.transitionStatus(q0, LcTask, Vocab.statusBusy, LcT1, Some(LcGraph))
-    val manifest = TaskStore.inputPages(busy, LcTask).select(
+    val manifest = TaskStore.inputPages(q0, LcTask).select(
       lit(LcTask).as("task"),
       lit(LcGraph).as("graph"),
       concat(regexp_replace(element_at(split(col("page"), "/"), -1),
         "\\.[^.]*$", ""), lit("-valid.ttl")).as("file_name"),
       octet_length(col("page")).cast("long").as("size"),
       col("page").as("derived_from"),
-      lit("valid").as("part"))
-    ImportPipeline.registerSuccess(busy, manifest, LcTask, LcGraph, LcT2)
+      lit(true).as("valid"))
+    ImportPipeline.registerSuccess(q0, manifest, LcTask, LcGraph, LcT2)
   }
 
-  /** Lifecycle oracle query 1 — the entity rows: after the full
-    * transition chain, the task's status/modified must be exactly
+  /** Lifecycle oracle query 1 — the entity rows: after the task's
+    * transition, its status/modified must be exactly
     * (success, T2) and every other base quad untouched. Projects the
     * deterministic (non-sha1-minted) subjects so DuckDB can reconstruct
     * the expected state relationally. */

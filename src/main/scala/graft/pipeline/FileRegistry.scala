@@ -1,34 +1,49 @@
 package graft.pipeline
 
-import graft.rdf.Vocab
+import graft.rdf.{Vocab, sha1Hex}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** File/container metadata registration — the INSERT DATA sinks K2-K4
-  * (lib/file-helpers.js:103-147, lib/pipeline-import.js:180-218) as quad
-  * generators over the written-TTL manifest.
+  * (lib/file-helpers.js:103-147, lib/pipeline-import.js:180-218). As in
+  * the reference, one template per written result file: [[metadata]] and
+  * [[containers]] are plain functions of one manifest row, and
+  * [[registration]] applies both to every row of the manifest in one
+  * typed `flatMap`.
   *
   * Input: a manifest DataFrame with one row per written result file
-  * (`task`, `graph`, `file_name`, `size`, `derived_from`). Output: the
-  * metadata quads to append to the store. URIs are content-derived
+  * (`task`, `graph`, `file_name`, `size`, `derived_from`, and for
+  * [[registration]] a boolean `valid`), none of them null. Output: the
+  * metadata quads to insert into the store. URIs are content-derived
   * (sha1 of task+file name) rather than uuid-minted — deterministic and
   * idempotent under re-runs (same deviation as ExtractPipeline G2).
   */
 object FileRegistry {
 
+  /** One written result file: a manifest row. */
+  final case class ResultFile(task: String, graph: String, file_name: String,
+      size: Long, derived_from: String)
+
+  /** (subject, predicate, obj, graph) */
+  type Quad = (String, String, String, String)
+
   private val sharePrefix = "share://"
   private val logicalPrefix = "http://data.lblod.info/id/files/"
-
-  /** F4 share-URI ⇄ filesystem path rewrite (lib/file-helpers.js:35,91). */
-  def shareUriToPath(uri: Column): Column =
-    regexp_replace(uri, "^share://", "/share/")
-  def pathToShareUri(path: Column): Column =
-    regexp_replace(path, "^/share/", sharePrefix)
+  private val containerPrefix = "http://redpencil.data.gift/id/dataContainers/"
+  private val importGraphPrefix = "http://mu.semte.ch/graphs/harvesting/tasks/import/"
 
   /** The reference registers files as
     * `dct:creator <http://lblod.data.gift/services/harvesting-import-service>`
     * (lib/file-helpers.js:121,129 region). */
   val CreatorUri = "http://lblod.data.gift/services/harvesting-import-service"
+
+  /** Content-derived file id. Includes the source page URI
+    * (`derived_from`), not just the basename-derived file name — two
+    * input pages sharing a basename (`share://a/doc.html`,
+    * `share://b/doc.html` both yield `doc-valid.ttl`) must mint distinct
+    * file entities, as the reference's per-file uuids do. */
+  private def fileId(f: ResultFile): String =
+    sha1Hex(s"${f.task}/${f.derived_from}/${f.file_name}")
 
   /** K2: physical (`share://…`) + logical file entities, 10 properties
     * each (`a`, `mu:uuid`, `nfo:fileName`, `dct:creator`, `dct:created`,
@@ -43,120 +58,86 @@ object FileRegistry {
     * id as `mu:uuid` — the uuid == URI-basename invariant downstream
     * consumers key on is preserved; only uniqueness-per-entity collapses
     * (deterministic + idempotent under re-runs, same deviation as G2). */
-  def fileMetadataQuads(manifest: DataFrame, nowIso: String): DataFrame = {
-    val physical = concat(lit(sharePrefix), fileId, lit("."), col("ext"))
-    val m = manifest
-      .withColumn("ext", element_at(split(col("file_name"), "\\."), -1))
-      .withColumn("id", fileId)
-      .withColumn("logical", logicalFileUri)
-      .withColumn("physical", physical)
-
-    val entityQuads = array(
-      // logical entity
-      q(col("logical"), Vocab.rdfType, lit(Vocab.nfoFileDataObject)),
-      q(col("logical"), Vocab.muUuid, col("id")),
-      q(col("logical"), Vocab.nfoFileName, col("file_name")),
-      q(col("logical"), Vocab.dctCreator, lit(CreatorUri)),
-      q(col("logical"), Vocab.dctFormat, lit("text/turtle")),
-      q(col("logical"), Vocab.nfoFileSize, col("size")),
-      q(col("logical"), Vocab.dbpediaFileExtension, col("ext")),
-      q(col("logical"), Vocab.dctCreated, lit(nowIso)),
-      q(col("logical"), Vocab.dctModified, lit(nowIso)),
-      q(col("logical"), Vocab.provWasDerivedFrom, col("derived_from")),
-      // physical entity mirrors + dataSource link
-      q(col("physical"), Vocab.rdfType, lit(Vocab.nfoFileDataObject)),
-      q(col("physical"), Vocab.nieDataSource, col("logical")),
-      q(col("physical"), Vocab.muUuid, col("id")),
-      // physical fileName = the share:// URI's basename (same content id)
-      q(col("physical"), Vocab.nfoFileName,
-        regexp_replace(col("physical"), lit("^share://"), lit(""))),
-      q(col("physical"), Vocab.dctCreator, lit(CreatorUri)),
-      q(col("physical"), Vocab.dctFormat, lit("text/turtle")),
-      q(col("physical"), Vocab.nfoFileSize, col("size")),
-      q(col("physical"), Vocab.dbpediaFileExtension, col("ext")),
-      q(col("physical"), Vocab.dctCreated, lit(nowIso)),
-      q(col("physical"), Vocab.dctModified, lit(nowIso)))
-    m.select(col("graph"), explode(entityQuads).as("q"))
-      .select(col("q.subject"), col("q.predicate"), col("q.obj"), col("graph"))
+  def metadata(f: ResultFile, nowIso: String): Seq[Quad] = {
+    val id = fileId(f)
+    val ext = f.file_name.split("\\.", -1).last
+    val logical = logicalPrefix + id
+    // physical fileName = the share:// URI's basename (same content id)
+    val physicalName = s"$id.$ext"
+    val physical = sharePrefix + physicalName
+    def entity(s: String, name: String) = Seq(
+      Vocab.rdfType -> Vocab.nfoFileDataObject, Vocab.muUuid -> id,
+      Vocab.nfoFileName -> name, Vocab.dctCreator -> CreatorUri,
+      Vocab.dctFormat -> "text/turtle", Vocab.nfoFileSize -> f.size.toString,
+      Vocab.dbpediaFileExtension -> ext, Vocab.dctCreated -> nowIso,
+      Vocab.dctModified -> nowIso).map { case (p, o) => (s, p, o, f.graph) }
+    entity(logical, f.file_name) ++ entity(physical, physicalName) ++ Seq(
+      (logical, Vocab.provWasDerivedFrom, f.derived_from, f.graph),
+      (physical, Vocab.nieDataSource, logical, f.graph))
   }
 
-  private def importGraphIdCol: Column = sha1(col("task"))
-  /** The per-task import graph URI (reference embeds `task.id`,
-    * lib/pipeline-import.js:40 — content-derived here, same deviation). */
-  def importGraphUri: Column = concat(
-    lit("http://mu.semte.ch/graphs/harvesting/tasks/import/"), importGraphIdCol)
-
-  /** Content-derived file id. Includes the source page URI
-    * (`derived_from`), not just the basename-derived file name — two
-    * input pages sharing a basename (`share://a/doc.html`,
-    * `share://b/doc.html` both yield `doc-valid.ttl`) must mint distinct
-    * file entities, as the reference's per-file uuids do. */
-  private def fileId: Column =
-    sha1(concat(col("task"), lit("/"), col("derived_from"),
-      lit("/"), col("file_name")))
-
-  private def logicalFileUri: Column = concat(lit(logicalPrefix), fileId)
-
-  private def q(s: Column, p: String, o: Column): Column =
-    struct(s.as("subject"), lit(p).as("predicate"), o.cast("string").as("obj"))
-
-  private def explodeQuads(manifest: DataFrame, quads: Column): DataFrame =
-    manifest.select(col("graph"), explode(quads).as("q"))
-      .select(col("q.subject"), col("q.predicate"), col("q.obj"), col("graph"))
-      .distinct()
-
-  /** A task's result container (`kind` = "files" / "graphs"): its
-    * content-derived id, and the URI that embeds it. */
-  private def containerId(kind: String): Column =
-    sha1(concat(col("task"), lit(s"/$kind")))
-  private def containerUri(id: Column): Column =
-    concat(lit("http://redpencil.data.gift/id/dataContainers/"), id)
-  private def fileContainerId: Column = containerId("files")
-  private def fileContainerUri: Column = containerUri(fileContainerId)
-
-  /** One `appendTaskResultFile` unit (lib/pipeline-import.js:180-198): the
-    * container entity (`a nfo:DataContainer` + `mu:uuid`), `task:hasFile`
-    * to the manifest row's logical file, and the task's
-    * `task:resultsContainer` back-link. Duplicate inserts across files
-    * collapse via distinct — same set semantics as repeated INSERT DATA. */
-  private def fileContainerUnit(containerUri: Column, containerId: Column): Column =
-    array(
-      q(containerUri, Vocab.rdfType, lit(Vocab.nfoDataContainer)),
-      q(containerUri, Vocab.muUuid, containerId),
-      q(containerUri, Vocab.taskHasFile, logicalFileUri),
-      q(col("task"), Vocab.taskResultsContainer, containerUri))
-
-  /** K3/K4: result containers for the *valid* files, matching the
-    * reference's three `append…` calls per page
-    * (lib/pipeline-import.js:75-83):
-    *   - file container: `task:hasFile` per valid file;
-    *   - import-graph container: the import graph ALSO acts as a
-    *     container holding `task:hasFile` per valid file
-    *     (`appendTaskResultFile(task, importGraph, validFile)`, :81);
-    *   - graph container: `task:hasGraph` → the import graph.
-    * All carry `mu:uuid` (= URI basename, content-derived sha1 — the
-    * reference mints `container.id` and embeds it in the URI the same
-    * way, lib/pipeline-import.js:37-43) and are linked from the task via
-    * `task:resultsContainer` (lib/pipeline-import.js:180-218). */
-  def containerQuads(manifest: DataFrame): DataFrame = {
-    val graphContainerId = containerId("graphs")
-    val graphContainer = containerUri(graphContainerId)
-    val links = concat(
-      fileContainerUnit(fileContainerUri, fileContainerId),
-      fileContainerUnit(importGraphUri, importGraphIdCol),
-      array(
-        q(graphContainer, Vocab.rdfType, lit(Vocab.nfoDataContainer)),
-        q(graphContainer, Vocab.muUuid, graphContainerId),
-        q(graphContainer, Vocab.taskHasGraph, importGraphUri),
-        q(col("task"), Vocab.taskResultsContainer, graphContainer)))
-    explodeQuads(manifest, links)
+  /** K3/K4/K9: the result containers a file is appended to, matching the
+    * reference's `append…` calls per page (lib/pipeline-import.js:75-106).
+    * Every file goes into the task's file container (`task:hasFile`). A
+    * valid file also goes into the import graph, which ALSO acts as a
+    * container (`appendTaskResultFile(task, importGraph, validFile)`,
+    * :81), and the graph container gets `task:hasGraph` → the import
+    * graph; debug files get neither. Each unit is the container entity
+    * (`a nfo:DataContainer` + `mu:uuid` = URI basename, content-derived
+    * sha1 — the reference mints `container.id` and embeds it in the URI
+    * the same way, :37-43) and the task's `task:resultsContainer`
+    * back-link (:180-218). Units repeat across a task's files; the
+    * store's set union collapses them, as repeated INSERT DATA does. The
+    * import graph's id is sha1 of the task (the reference embeds
+    * `task.id`, :40 — content-derived here, same deviation). */
+  def containers(f: ResultFile, valid: Boolean): Seq[Quad] = {
+    def unit(id: String, uri: String, p: String, o: String) = Seq(
+      (uri, Vocab.rdfType, Vocab.nfoDataContainer, f.graph),
+      (uri, Vocab.muUuid, id, f.graph),
+      (uri, p, o, f.graph),
+      (f.task, Vocab.taskResultsContainer, uri, f.graph))
+    def container(kind: String, p: String, o: String) = {
+      val id = sha1Hex(s"${f.task}/$kind")
+      unit(id, containerPrefix + id, p, o)
+    }
+    val logical = logicalPrefix + fileId(f)
+    val files = container("files", Vocab.taskHasFile, logical)
+    if (!valid) files
+    else {
+      val graphId = sha1Hex(f.task)
+      val importGraph = importGraphPrefix + graphId
+      files ++ unit(graphId, importGraph, Vocab.taskHasFile, logical) ++
+        container("graphs", Vocab.taskHasGraph, importGraph)
+    }
   }
 
-  /** K9 registration: debug files (`-original/-invalid/-corrected.ttl`)
-    * are linked into the FILE container only
-    * (lib/pipeline-import.js:84-106 — no importGraph/graphContainer
-    * appends for them). */
+  /** Every file's [[metadata]] and [[containers]]: the quads one
+    * finished task inserts. Not de-duplicated — the store's set union
+    * ([[TaskStore.insertData]]) is the one `distinct`. */
+  def registration(files: DataFrame, nowIso: String): DataFrame =
+    mint(files, col("valid"))((f, v) => metadata(f, nowIso) ++ containers(f, v))
+
+  /** [[metadata]] of every row of a five-column manifest. */
+  def fileMetadataQuads(manifest: DataFrame, nowIso: String): DataFrame =
+    mint(manifest, lit(true))((f, _) => metadata(f, nowIso))
+
+  /** [[containers]] of every row of a five-column manifest of valid files,
+    * as a set. */
+  def containerQuads(manifest: DataFrame): DataFrame =
+    mint(manifest, lit(true))((f, v) => containers(f, v)).distinct()
+
+  /** [[containers]] of every row of a five-column manifest of debug files
+    * (`-original/-invalid/-corrected.ttl`), as a set. */
   def debugContainerQuads(debugManifest: DataFrame): DataFrame =
-    explodeQuads(debugManifest,
-      fileContainerUnit(fileContainerUri, fileContainerId))
+    mint(debugManifest, lit(false))((f, v) => containers(f, v)).distinct()
+
+  private def mint(files: DataFrame, valid: Column)(
+      fn: (ResultFile, Boolean) => Seq[Quad]): DataFrame = {
+    import files.sparkSession.implicits._
+    files.select(struct(col("task"), col("graph"), col("file_name"), col("size"),
+        col("derived_from")), valid)
+      .as[(ResultFile, Boolean)]
+      .flatMap { case (f, v) => fn(f, v) }
+      .toDF("subject", "predicate", "obj", "graph")
+  }
 }

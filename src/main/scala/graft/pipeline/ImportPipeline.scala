@@ -8,10 +8,16 @@ import org.apache.spark.sql.functions._
 /** The end-to-end task orchestrator — the reference's `run(deltaEntry)`
   * (lib/pipeline-import.js:28-117) composed from the layer operators:
   *
-  *   loadExtractionTask → busy → inputPages → extract/validate/repair →
+  *   loadExtractionTask → inputPages → extract/validate/repair →
   *   write TTL (+ debug TTLs) + externalized HTML → register file
   *   metadata + containers → success; any failure after task load →
   *   error record + failed (T5).
+  *
+  * The reference marks the task busy first (T3, lib/pipeline-import.js:33).
+  * Here the state is swapped once per task, so a busy status would never
+  * be written: a task's whole change is one delete pattern (its status
+  * and modified rows) plus one insert set. A crash mid-task leaves the
+  * task `scheduled`, and the replay re-runs it.
   *
   * Differences from the reference, by design (each one documented at the
   * operator that owns it):
@@ -59,7 +65,8 @@ object ImportPipeline {
     * the reference writes (and registers) empty files too. File name
     * `<basename>-<part>.ttl` (lib/pipeline-import.js:75,85,92,99); size =
     * Σ (UTF-8 bytes + newline) over the page's member lines, what `stat`
-    * of the written file reports (lib/file-helpers.js:104-105). */
+    * of the written file reports (lib/file-helpers.js:104-105); `valid`
+    * marks the valid partition's files, the rest are debug files. */
   private def manifest(tagged: DataFrame, pages: Seq[String],
       parts: Seq[(String, Column, Column)], taskUri: String,
       graph: String): DataFrame = {
@@ -70,24 +77,19 @@ object ImportPipeline {
       .collect().map(r => r.getString(0) -> (1 to parts.size).map(r.getLong)).toMap
     (for (p <- pages; ((part, _, _), i) <- parts.zipWithIndex)
       yield (taskUri, graph, s"${basename(p)}-$part.ttl",
-        sizes.get(p).fold(0L)(_(i)), p, part))
-      .toDF("task", "graph", "file_name", "size", "derived_from", "part")
+        sizes.get(p).fold(0L)(_(i)), p, part == "valid"))
+      .toDF("task", "graph", "file_name", "size", "derived_from", "valid")
   }
 
-  /** K2-K4 registration of a [[manifest]]-shaped frame, then success
-    * (lib/pipeline-import.js:75-106): every file's metadata; valid files
-    * into all three containers, debug files into the file container only.
-    * The minted quads join `busy` as one set union ([[TaskStore.insertData]]). */
-  private[graft] def registerSuccess(busy: DataFrame, files: DataFrame,
-      taskUri: String, graph: String, nowIso: String): DataFrame = {
-    val minted = FileRegistry.fileMetadataQuads(files, nowIso)
-      .unionByName(FileRegistry.containerQuads(
-        files.filter(col("part") === "valid")))
-      .unionByName(FileRegistry.debugContainerQuads(
-        files.filter(col("part") =!= "valid")))
-    TaskStore.transitionStatus(TaskStore.insertData(busy, minted), taskUri,
-      Vocab.statusSuccess, nowIso, Some(graph))
-  }
+  /** A finished task's state change (lib/pipeline-import.js:75-109):
+    * its files' registration ([[FileRegistry.registration]]) joins
+    * `quads` as one set union ([[TaskStore.insertData]]), then the status
+    * becomes success. */
+  private[graft] def registerSuccess(quads: DataFrame, files: DataFrame,
+      taskUri: String, graph: String, nowIso: String): DataFrame =
+    TaskStore.transitionStatus(TaskStore.insertData(quads,
+      FileRegistry.registration(files, nowIso)), taskUri, Vocab.statusSuccess,
+      nowIso, Some(graph))
 
   /** Run the import pipeline for one scheduled task (lib/pipeline-import
     * .js:28-117). `quads` is the current metadata store; `pagesDir` holds
@@ -107,12 +109,10 @@ object ImportPipeline {
     val graph = Option(task.head.getAs[String]("task_graph"))
       .getOrElse("http://mu.semte.ch/graphs/harvesting")
 
-    val busy = TaskStore.transitionStatus(quads, taskUri,
-      Vocab.statusBusy, nowIso, Some(graph))
     try {
       // J1/D1 page enumeration (count-then-paginate is obsolete under
       // Spark, SURVEY O1 — the task's page set is metadata-sized)
-      val pages = TaskStore.inputPages(busy, taskUri)
+      val pages = TaskStore.inputPages(quads, taskUri)
         .as[String](org.apache.spark.sql.Encoders.STRING).collect().toSeq
 
       // S2/S3 read of this task's pages only: the url filter prunes the
@@ -128,7 +128,7 @@ object ImportPipeline {
         // K2-K4 registration of every written file, then success
         val files = manifest(tagged, pages, ExtractPipeline.ttlParts(writeDebug),
           taskUri, graph)
-        ImportResult(registerSuccess(busy, files, taskUri, graph, nowIso),
+        ImportResult(registerSuccess(quads, files, taskUri, graph, nowIso),
           "success", pages.size.toLong, None)
       } finally tagged.unpersist()
     } catch {
@@ -136,7 +136,7 @@ object ImportPipeline {
         // T5 (lib/pipeline-import.js:110-116): error record + failed
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         val failed = TaskStore.transitionStatus(
-          TaskStore.appendError(busy, taskUri, msg, graph),
+          TaskStore.appendError(quads, taskUri, msg, graph),
           taskUri, Vocab.statusFailed, nowIso, Some(graph))
         ImportResult(failed, "failed", 0L, Some(msg))
     }

@@ -17,9 +17,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * read-modify-replaced per task via a temp-dir + rename swap (the moral
   * equivalent of the reference's DELETE/INSERT round-trips to Virtuoso):
   * one swap per task, so no state copy outlives the task that made it.
-  * This is the task-STATE table — metadata-sized; the bulk extracted
-  * triples go through the TTL sinks and (at scale) the graph-partitioned
-  * [[graft.sources.QuadStore]], never through here.
+  * This is the task-STATE table — metadata-sized; the extracted triples
+  * go to the TTL sinks, never through here.
   * Tasks within a batch run sequentially like the reference's event
   * loop; each task's pages extract in parallel inside the pipeline.
   */

@@ -55,8 +55,8 @@ object TaskStore {
   /** S9 `nie:url` metadata lookup (lib/file-helpers.js:40-63,
     * `getFileMetadata`): DISTINCT ?url for a bound remote-file subject
     * across all graphs (`GRAPH ?g` in the reference). Zero rows ⇔ the
-    * reference's `null` return. Point filter on the bucketed quad table —
-    * no shuffle beyond the distinct over a handful of rows. */
+    * reference's `null` return. The state is not bucketed, so the filter
+    * scans it whole; the distinct runs over the handful of matching rows. */
   def fileUrl(quads: DataFrame, remoteUri: String): DataFrame =
     quads.filter(col("subject") === remoteUri &&
       col("predicate") === Vocab.nieUrl)
@@ -76,11 +76,6 @@ object TaskStore {
     files.join(broadcast(containers), "container")
       .select(col("page")).distinct()
   }
-
-  /** A1 (lib/pipeline-import.js:158-178): exact count for the oracle;
-    * swap `approx_count_distinct` at 100 TB. */
-  def countPages(quads: DataFrame, taskUri: String): DataFrame =
-    inputPages(quads, taskUri).agg(count(lit(1)).as("count"))
 
   /** K6 status transition (lib/task.js:158-187): DELETE the task's
     * status+modified triples, INSERT the new ones. Pure rewrite — returns

@@ -112,14 +112,6 @@ class FileRegistrySpec extends SparkSpec {
       .select("obj").distinct().count() == 2)
   }
 
-  test("F4: share URI ⇄ path rewrite (file-helpers.js:35,91)") {
-    val df = Seq("share://a/b.ttl").toDF("u")
-      .select(FileRegistry.shareUriToPath(col("u")).as("p"))
-    assert(df.as[String].head() == "/share/a/b.ttl")
-    val back = df.select(FileRegistry.pathToShareUri(col("p"))).as[String].head()
-    assert(back == "share://a/b.ttl")
-  }
-
   test("idempotency: same manifest → same URIs (deterministic minting)") {
     val a = FileRegistry.fileMetadataQuads(manifest, "2026-01-01T00:00:00Z")
       .select("subject").distinct().as[String].collect().toSet

@@ -42,7 +42,7 @@ class ImportPipelineSpec extends SparkSpec {
     .toDF("subject", "predicate", "obj")
     .withColumn("graph", lit("http://g/tasks"))
 
-  test("success lifecycle: busy → extract → write → register → success") {
+  test("success lifecycle: extract → write → register → success") {
     val pagesDir = writePages()
     val outDir = Files.createTempDirectory("import-out").toString
     val result = ImportPipeline.runImportPipeline(spark, taskQuads, T,
@@ -118,6 +118,28 @@ class ImportPipelineSpec extends SparkSpec {
     // no error record
     assert(state.filter(col("predicate") === Vocab.taskError).count() == 0)
     state.unpersist()
+  }
+
+  test("a success state is one set union and one status transition") {
+    // the state's change is one insert set (the registration, through one
+    // distinct: a partial + a final HashAggregate) and one status
+    // transition (its two new rows: the one Generate), whatever the debug
+    // setting
+    val pagesDir = writePages()
+    val shapes = Seq(false, true).map { debug =>
+      val result = ImportPipeline.runImportPipeline(spark, taskQuads, T, pagesDir,
+        Files.createTempDirectory("import-out").toString, Now, writeDebug = debug)
+      assert(result.status == "success", result)
+      val plan = result.quads.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      def count(name: String) = plan.collect { case n if n.nodeName == name => n }.size
+      assert(count("HashAggregate") == 2 && count("Generate") == 1,
+        s"writeDebug=$debug:\n$plan")
+      plan.collect { case n => n.nodeName }
+    }
+    assert(shapes(0) == shapes(1), shapes)
   }
 
   test("re-running a task is idempotent: no duplicated metadata quads") {
