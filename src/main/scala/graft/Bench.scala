@@ -34,7 +34,7 @@ object Bench {
     *   - the accepted-anchor spread (what the machine's own fixed CPU
     *     workload varied by within this run — nothing smaller is
     *     resolvable), and
-    *   - the query's own uncontended sample spread (accepted genuine
+    *   - the query's own uncontended sample spread (accepted
     *     samples within 2x of its min; beyond-2x samples are intra-pass
     *     contention the spread/min machinery already handles and would
     *     inflate the floor into meaninglessness).
@@ -83,13 +83,14 @@ object Bench {
   /** (per-query min over "runs", per-query "noise_floor_sec") of a
     * bench_detail JSON document. json4s ships with Spark.
     *
-    * The min mirrors the headline's `genuine` rule: samples the detail
-    * flags as cached-checkpoint reads ("cached_read", cross-referenced
-    * through "sample_passes") are EXCLUDED — a cached read understates
-    * a drive's cost, and taking the raw min over it would manufacture a
-    * false breach (prior min artificially low) or launder a real one
-    * (this round's fresh re-time reading a cache). If every sample of a
-    * query is cached they are kept, exactly as the headline keeps them. */
+    * Details written while StreamDrive still cached drained drive results
+    * may flag samples as cached-checkpoint reads ("cached_read",
+    * cross-referenced through "sample_passes"); those samples are
+    * EXCLUDED — a cached read understates a drive's cost, and taking the
+    * raw min over it would manufacture a false breach (prior min
+    * artificially low). If every sample of a query is cached they are
+    * kept, as that round's headline kept them. Newer details carry no
+    * "cached_read" and parse to the plain per-query minima. */
   private[graft] def parseDetailMins(
       json: String): (Map[String, Double], Map[String, Double]) = {
     import org.json4s._
@@ -327,21 +328,20 @@ object Bench {
     val errs = scala.collection.mutable.Map[String, Throwable]()
     var calSamples = Vector.empty[Double]
     // Streaming-drive methodology (single sample in pass 1, plus a
-    // contention-triggered retry pass): a timed sample must execute the
-    // real multi-batch streaming drive — never a drained-cache read,
-    // which would measure a checkpoint scan instead of streaming
-    // execution. But a full drive costs tens of seconds
-    // (x_stream_sessionize ≈32 s/pass at sf0.1), so re-driving all five
-    // per pass would more than double the 3-pass bench for queries whose
-    // cost is drive-dominated and low-variance. So: known drive-backed
-    // queries run once UNTIMED at sfDir first — that pays the one-time
-    // staging write (repartitionByRange sort + sentinel aggregates),
-    // which StreamDrive's own contract calls scaffolding, not the
-    // operator — then the drained cache is cleared once and pass 1 times
-    // each drive staging-free against the real replay. Later passes skip
-    // them; when the pass-1 cal anchor flags contention, one retry pass
-    // after the regular passes re-drives them so the rejection/min logic
-    // has a better-anchored sample to pick (see the retry block below).
+    // contention-triggered retry pass): every call of a drive-backed
+    // query (`x_stream_*`) runs its multi-batch streaming drive —
+    // StreamDrive keeps no result between calls. But a full drive costs
+    // tens of seconds (x_stream_sessionize ≈32 s/pass at sf0.1), so
+    // re-driving all five per pass would more than double the 3-pass
+    // bench for queries whose cost is drive-dominated and low-variance.
+    // So: drive-backed queries run once UNTIMED at sfDir first — that
+    // pays the one-time staging write (repartitionByRange sort + sentinel
+    // aggregates), which StreamDrive's own contract calls scaffolding,
+    // not the operator — then pass 1 times each drive staging-free
+    // against the real replay. Later passes skip them; when the pass-1
+    // cal anchor flags contention, one retry pass after the regular
+    // passes re-drives them so the rejection/min logic has a
+    // better-anchored sample to pick (see the retry block below).
     //
     // Drive cost attribution (profiled uncontended at sf0.1 from each
     // batch's progress durations): each micro-batch carries ~0.3-0.5 s of
@@ -373,8 +373,8 @@ object Bench {
     // stored-index/shuffle-read-heavy text queries (see the r15→r16
     // A/B below) — carry a MACHINE component the cal anchor cannot
     // see. CONSEQUENCE (r17): drive-backed queries now also report a
-    // steady-state per-micro-batch triggerExecution median per genuine
-    // drive ("drive_trigger_ms" in bench_detail.json) — compare THAT
+    // steady-state per-micro-batch triggerExecution median per drive
+    // sample ("drive_trigger_ms" in bench_detail.json) — compare THAT
     // across rounds, not the drive wall time; triggerExecution isolates
     // per-batch execution from the checkpoint/WAL-commit latency that
     // moves with neighbor IO. The r13→r14 movement (five
@@ -559,32 +559,14 @@ object Bench {
     // queries' subset-bench minima came back at or below their r14
     // values (a3 0.33, rdfa_pipeline 1.02, k9 0.19, p4 0.20).
     //
-    // Drive-backedness is DETECTED, not only enumerated: a query whose
-    // run-1 execution TOUCHED StreamDrive's drained cache (hit or miss —
-    // StreamDrive.drainTouches, not cache size, so even a query sharing
-    // a cache key with an earlier drive is caught) is drive-backed, so a
-    // drive added or renamed after this seed list was written is still
-    // skipped on later passes instead of silently timing a cached
-    // checkpoint scan. If a touch happened WITHOUT a real drive running
-    // (StreamDrive.driveRuns flat), the timed sample measured a cached
-    // read — reported loudly on stderr, never shipped silently. The seed
-    // list only decides which queries get the untimed staging warm-up.
-    val seedDriveBacked = Set("x_stream_hourly", "x_stream_sliding",
-      "x_stream_sessionize", "x_stream_dedup", "x_stream_late")
-    for (name <- names if seedDriveBacked(name))
+    // Drive-backed queries are the `x_stream_` ones, the same name rule
+    // PlanGuardSpec and ScaleDesignSpec use.
+    val driveBacked = names.filter(_.startsWith("x_stream_")).toSet
+    for (name <- names if driveBacked(name))
       try SparkEntry.queries(name)(spark, sfDir).count()
       catch { case scala.util.control.NonFatal(_) => () } // resurfaces timed
-    val driveBacked = scala.collection.mutable.Set[String]()
-    // (name, pass) samples that measured a drained-cache read instead of a
-    // real streaming drive — surfaced in bench_detail.json ("cached_read")
-    // and, for the headline, the affected query's cached samples are
-    // DISCARDED when it also has >=1 genuine drive sample (a cached scan
-    // can only understate streaming cost; if every sample is cached the
-    // query keeps them — a too-fast number with a loud marker beats a
-    // silently missing query, which would shrink the total).
-    val cachedReads = scala.collection.mutable.Set[(String, Int)]()
     // Steady-state triggerExecution per drive-backed query, one value per
-    // GENUINE drive execution (median of the drive's non-empty micro-
+    // successful drive sample (median of the drive's non-empty micro-
     // batches, first batch dropped — it carries source listing and plan
     // compile). This, not wall time, is the cross-round comparison metric
     // for drive-backed queries: wall time is dominated by checkpoint/WAL/
@@ -593,35 +575,23 @@ object Bench {
     // bench_detail.json as "drive_trigger_ms".
     val driveTriggerMs = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
-    graft.streaming.StreamDrive.clearDrained()
+    def median(xs: Vector[Double]): Double = {
+      val s = xs.sorted
+      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+    }
     def timeQuery(name: String, pass: Int): Unit = {
       val fn = SparkEntry.queries(name)
-      val touchesBefore = graft.streaming.StreamDrive.drainTouches
-      val runsBefore = graft.streaming.StreamDrive.driveRuns
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); times(name) :+= (pass, (System.nanoTime() - t0) / 1e9) }
-      catch { case t: Throwable => errs(name) = t }
-      val touched = graft.streaming.StreamDrive.drainTouches > touchesBefore
-      if (touched) {
-        driveBacked += name
-        if (graft.streaming.StreamDrive.driveRuns == runsBefore) {
-          cachedReads += ((name, pass))
-          System.err.println(s"BENCH WARN $name touched the drained-drive " +
-            "cache without running a drive in pass " + pass + " — its sample " +
-            "is a cached checkpoint read, not streaming execution (two bench " +
-            "queries likely share one drive cache key)")
-        } else {
+      try {
+        fn(spark, sfDir).count()
+        times(name) :+= (pass, (System.nanoTime() - t0) / 1e9)
+        if (driveBacked(name)) {
           val trig = graft.streaming.StreamDrive.lastDriveTriggerMs
           val steady = if (trig.size >= 3) trig.drop(1) else trig
-          if (steady.nonEmpty) {
-            val sorted = steady.sorted.map(_.toDouble)
-            val med =
-              if (sorted.size % 2 == 1) sorted(sorted.size / 2)
-              else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2
-            driveTriggerMs(name) :+= med
-          }
+          if (steady.nonEmpty)
+            driveTriggerMs(name) :+= median(steady.map(_.toDouble).toVector)
         }
-      }
+      } catch { case t: Throwable => errs(name) = t }
     }
     // Replacement passes: two consecutive rounds (r14 rejected passes
     // {1,3}, r15 rejected {1,2}) ran with <2 cal-accepted regular
@@ -666,25 +636,16 @@ object Bench {
     // anchor but lands in the trailing one — so either side of the
     // bracket exceeding 1.25x triggers the retry. Residual window: a
     // burst fully contained WITHIN pass 1 (starts after the leading
-    // anchor, ends before pass 1 does) still evades both anchors; a
-    // cached-read retry (below) and the cross-round min watch are the
-    // backstops. Uncontended benches skip the retry and keep the single
-    // pass-1 sample. A query whose only sample measured a cached read
-    // (cachedReads) is also retried, so the headline gets >=1 genuine
-    // drive sample even when the anchors were clean.
+    // anchor, ends before pass 1 does) still evades both anchors; the
+    // cross-round min watch is the backstop. Uncontended benches skip the
+    // retry and keep the single pass-1 sample.
     val retryPass = regularPasses + 1
     val pass1Bracket = calSamples.take(2)
     if (driveBacked.nonEmpty && calSamples.nonEmpty &&
-        (pass1Bracket.max > 1.25 * calSamples.min ||
-         driveBacked.exists(n => cachedReads((n, 1))))) {
-      graft.streaming.StreamDrive.clearDrained()
+        pass1Bracket.max > 1.25 * calSamples.min) {
       calSamples :+= calOnce()
       for (name <- names if driveBacked(name) && !errs.contains(name))
         timeQuery(name, retryPass)
-    }
-    def median(xs: Vector[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
     // Contention-aware pass rejection: sandbox contention is one-sided
     // (it only ADDS time) and pass-wide (the anchor and the queries of a
@@ -714,18 +675,8 @@ object Bench {
       System.err.println(s"BENCH FAIL $name: ${t.getClass.getName}: ${t.getMessage}")
       name
     }
-    // Cached-read samples (a drive query that read another query's
-    // drained checkpoint instead of streaming) are dropped from the
-    // headline whenever the query also has a genuine sample — a cached
-    // scan can only UNDERSTATE streaming cost. If every sample is cached
-    // the samples are kept (marked in "cached_read"): a loud too-fast
-    // number beats silently shrinking the total by omitting the query.
-    def genuine(n: String): Vector[(Int, Double)] = {
-      val g = times(n).filterNot { case (p, _) => cachedReads((n, p)) }
-      if (g.nonEmpty) g else times(n)
-    }
     // Drive-backed queries report their MINIMUM, not the median: they
-    // get exactly one genuine execution per pass (pass 1 + the optional
+    // get exactly one drive execution per pass (pass 1 + the optional
     // retry), so a 2-sample "median" is the mean and keeps half of any
     // pass-1 contention the retry pass exists to discard (measured: one
     // contended pass-1 sessionize sample of 13.6 s vs a 2.8 s retry —
@@ -752,7 +703,7 @@ object Bench {
     // noise with no defense (measured r14: passes 1 and 3 rejected,
     // x_bm25_topk headline 6.0 s vs min 4.0). The same one-sided-noise
     // argument applies, so with <2 accepted regular passes every query
-    // reports its minimum over ALL genuine samples ("min_fallback" in
+    // reports its minimum over ALL its samples ("min_fallback" in
     // bench_detail.json). On a clean bench (>=2 accepted passes) the
     // branch is inert and "value" tracks "min" to normal variance.
     // With replacement passes (above) this should fire only when even
@@ -771,7 +722,7 @@ object Bench {
     // sample each, with its own cal anchor; drives are excluded (they
     // already report min over pass 1 + the retry pass).
     def spreadOf(n: String): Boolean = {
-      val acc = accepted(genuine(n))
+      val acc = accepted(times(n))
       acc.size >= 2 && acc.max > 2.0 * acc.min
     }
     val spreadCandidates =
@@ -785,9 +736,9 @@ object Bench {
     val calSec = median(calSamples)
     val spreadMin = scala.collection.mutable.ArrayBuffer[String]()
     def headline(n: String): Double =
-      if (driveBacked(n) || minFallback) genuine(n).map(_._2).min
+      if (driveBacked(n) || minFallback) times(n).map(_._2).min
       else {
-        val acc = accepted(genuine(n))
+        val acc = accepted(times(n))
         if (acc.size >= 2 && acc.max > 2.0 * acc.min) {
           val med = median(acc)
           // with >=3 samples the median outvotes a single contended
@@ -809,7 +760,7 @@ object Bench {
     // median (now over cal-accepted passes only) stays as "value" for
     // continuity; "min" is the contention-robust headline.
     val totalMin = names.collect {
-      case n if !errs.contains(n) => genuine(n).map(_._2).min }.sum
+      case n if !errs.contains(n) => times(n).map(_._2).min }.sum
     // Per-query noise floor for the cross-round regression watch (see
     // noiseFloorSec's scaladoc for the derivation): the consumer compares
     //   min_r > 1.3 * min_prev + noise_floor_sec(q)
@@ -824,7 +775,7 @@ object Bench {
     }
     val noiseFloors: Seq[(String, Double)] = names.collect {
       case n if !errs.contains(n) =>
-        n -> noiseFloorSec(accepted(genuine(n)), acceptedCalNoise)
+        n -> noiseFloorSec(accepted(times(n)), acceptedCalNoise)
     }
     // ---- mechanized cross-round adjudication ----
     // The breach rule (floorBreach) fires on full-run minima, but the
@@ -858,7 +809,7 @@ object Bench {
     // "adjudications" array is only meaningful alongside a non-zero
     // checked count (zero breaches vs comparison-never-ran)
     var adjChecked = 0
-    def minOf(n: String): Double = genuine(n).map(_._2).min
+    def minOf(n: String): Double = times(n).map(_._2).min
     val adjRecords: Seq[String] =
       if (!adjEnabled) Nil
       else if (!prevDetailFile.isFile) {
@@ -962,7 +913,7 @@ object Bench {
     // "regular_passes" > nRuns means replacement passes fired), and
     // "rejected_passes" the
     // passes the cal anchor disqualified from medians, and
-    // "single_sample" the queries whose median==min==one genuine
+    // "single_sample" the queries whose median==min==one
     // execution — so the consumer knows exactly which numbers carry
     // which statistical weight.
     val runsJson = names.map { n =>
@@ -978,16 +929,11 @@ object Bench {
     // sample was taken INSIDE each timed pass, so a consumer can detect
     // which passes were contended and normalize (or drop) exactly those.
     val calJson = calSamples.mkString("[", ",", "]")
-    // "cached_read": (query, pass) samples that measured a drained-cache
-    // checkpoint read instead of a streaming drive (discarded from the
-    // headline when a genuine sample exists — see `genuine` above).
     // "spread_min": multi-sample queries whose accepted samples spread
     // >2x, reported by their minimum instead of the median.
-    val cachedJson = cachedReads.toSeq.sorted
-      .map { case (n, p) => s"""["$n",$p]""" }.mkString("[", ",", "]")
     val spreadJson = spreadMin.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     // "drive_trigger_ms": per drive-backed query, one steady-state
-    // triggerExecution median (ms) per GENUINE drive execution — the
+    // triggerExecution median (ms) per successful drive sample — the
     // cross-round comparison metric for drive-backed queries (wall time
     // is machine-band-bound; see the drive methodology notes above).
     val driveTrigJson = driveTriggerMs.toSeq.sortBy(_._1).map { case (n, vs) =>
@@ -999,7 +945,7 @@ object Bench {
       "\"" + n + "\":" +
         BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
     }.mkString("{", ",", "}")
-    val detail = s"""{"metric":"total","value":$total,"min":$totalMin,"unit":"sec","cal_sec":$calSec,"cal_samples":$calJson,"regular_passes":$regularPasses,"rejected_passes":$rejectedJson,"min_fallback":$minFallback,"single_sample":$singleJson,"cached_read":$cachedJson,"spread_min":$spreadJson,"drive_trigger_ms":$driveTrigJson,"noise_floor_sec":$noiseJson,"adjudications":$adjJson,"adjudication_checked":$adjChecked,"adjudication_note":$adjNoteJson,"runs":$runsJson,"sample_passes":$passesJson,"failed":$failedJson,"sf":"$sfDir"}"""
+    val detail = s"""{"metric":"total","value":$total,"min":$totalMin,"unit":"sec","cal_sec":$calSec,"cal_samples":$calJson,"regular_passes":$regularPasses,"rejected_passes":$rejectedJson,"min_fallback":$minFallback,"single_sample":$singleJson,"spread_min":$spreadJson,"drive_trigger_ms":$driveTrigJson,"noise_floor_sec":$noiseJson,"adjudications":$adjJson,"adjudication_checked":$adjChecked,"adjudication_note":$adjNoteJson,"runs":$runsJson,"sample_passes":$passesJson,"failed":$failedJson,"sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter("bench_detail.json")
       try w.println(detail) finally w.close()

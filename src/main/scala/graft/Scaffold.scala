@@ -1,9 +1,9 @@
 package graft
 
 /** Shared scaffolding for per-JVM derived stores (staged stream splits,
-  * at-rest index copies, checkpoints): source content fingerprints for
-  * cache keys, an exit-time cleanup registry and checkpoint release. One
-  * implementation each, so no two callers' rules drift apart. */
+  * at-rest index copies): source content fingerprints for cache keys and
+  * an exit-time cleanup registry. One implementation each, so no two
+  * callers' rules drift apart. */
 private[graft] object Scaffold {
 
   /** Content fingerprint of a parquet file or directory: file count plus
@@ -59,14 +59,4 @@ private[graft] object Scaffold {
     val kids = f.listFiles(); if (kids != null) kids.foreach(deleteRecursively)
     f.delete(); ()
   }
-
-  /** Drop the blocks behind a `localCheckpoint`ed frame now, not at
-    * some later GC: the frame is unrecomputable afterwards. A frame that
-    * is not a checkpoint has nothing to drop. */
-  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
 }

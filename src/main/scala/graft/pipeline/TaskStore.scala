@@ -81,26 +81,23 @@ object TaskStore {
     * status+modified triples, INSERT the new ones. Pure rewrite — returns
     * the updated table. The inserted triples inherit the task's named
     * graph (`GRAPH ?g` in the reference update), so graph-partitioned
-    * stores stay partition-pure. Callers that already hold the task's
-    * graph (the orchestrator loads it with the task) pass `knownGraph`
-    * to skip the lookup subtree — chained transitions otherwise stack a
-    * scan-limit-explode per call, which is pure plan/codegen weight. */
+    * stores stay partition-pure. The two new rows are a local frame, as
+    * [[appendError]] builds its record. Callers that already hold the
+    * task's graph (the orchestrator loads it with the task) pass
+    * `knownGraph`; otherwise one driver-side point read looks it up, and
+    * a task with no rows in `quads` gets no new rows. */
   def transitionStatus(quads: DataFrame, taskUri: String, newStatus: String,
       nowIso: String, knownGraph: Option[String] = None): DataFrame = {
+    import quads.sparkSession.implicits._
     val kept = quads.filter(!(col("subject") === taskUri &&
       col("predicate").isin(Vocab.admsStatus, Vocab.dctModified)))
-    val taskGraph = knownGraph match {
-      case Some(g) =>
-        quads.sparkSession.range(1).select(lit(g).as("graph"))
-      case None => quads.filter(col("subject") === taskUri)
-        .select(col("graph")).limit(1)
-    }
-    val inserted = taskGraph.select(explode(array(
-      struct(lit(taskUri).as("subject"), lit(Vocab.admsStatus).as("predicate"),
-        lit(newStatus).as("obj")),
-      struct(lit(taskUri).as("subject"), lit(Vocab.dctModified).as("predicate"),
-        lit(nowIso).as("obj")))).as("q"), col("graph"))
-      .select(col("q.subject"), col("q.predicate"), col("q.obj"), col("graph"))
+    val graph = knownGraph.orElse(quads.filter(col("subject") === taskUri)
+      .select(col("graph")).as[String].head(1).headOption)
+    val inserted = graph.toSeq.flatMap(g => Seq(
+      (taskUri, Vocab.admsStatus, newStatus, g),
+      (taskUri, Vocab.dctModified, nowIso, g)))
+      .toDF("subject", "predicate", "obj", "graph")
+      .coalesce(1) // the two rows add one file, not two, to a written state
     kept.unionByName(inserted)
   }
 

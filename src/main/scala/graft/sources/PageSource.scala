@@ -52,20 +52,18 @@ object PageSource {
     files.select(pathToUrl(filePath).as("url"), col("value").as("html"),
       filePath.as("path"))
 
-  /** file:/…/name(.html)(.gz) → share://name.html URI (F4 analogue).
-    * The file path is a percent-encoded URI → decoded back to the
-    * filesystem name; bare `<name>.gz` files (the reference unzips any
-    * .gz regardless of inner extension) still get `.html`. */
+  /** file:/…/name → share://name URI, the share:// prefix plus the
+    * file's name (F4, lib/file-helpers.js:35): `x.html.gz` is
+    * `share://x.html.gz`, so two files are always two urls. The file
+    * path is a percent-encoded URI → decoded back to the filesystem
+    * name. */
   def pathToUrl(path: Column): Column = {
     val raw = element_at(split(path, "/"), -1)
     // url_decode is form-decoding: a literal '+' (legal, unencoded in URI
     // paths) would become a space — shield it as %2B first. A stray '%'
     // in a filename makes decoding fail → try_url_decode + fall back to
     // the raw name rather than aborting the scan.
-    val decoded = coalesce(
-      try_url_decode(regexp_replace(raw, "\\+", "%2B")), raw)
-    val base = regexp_replace(decoded, "\\.gz$", "")
     concat(lit("share://"),
-      when(base.endsWith(".html"), base).otherwise(concat(base, lit(".html"))))
+      coalesce(try_url_decode(regexp_replace(raw, "\\+", "%2B")), raw))
   }
 }

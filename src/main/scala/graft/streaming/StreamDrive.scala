@@ -13,6 +13,10 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle that checks `Sessionize.hourlyWindows` / `.sessions`
   * also pins the streaming path.
   *
+  * Every call runs its drive: no result is kept between calls. The
+  * returned frame is a pinned (`localCheckpoint`) copy of that call's
+  * drained rows. Only the staged input splits are reused.
+  *
   * Every drive replays its input as MULTIPLE micro-batches
   * (`maxFilesPerTrigger=1` over ≥3 staged files in event-time order), so
   * the state-store merge path — the thing that distinguishes streaming
@@ -87,120 +91,22 @@ object StreamDrive {
       })
 
   /** Per-batch input-row counts (non-empty micro-batches only) of the
-    * most recent drive — the spec hook proving the drives really cross
-    * batch boundaries (StreamingSpec asserts ≥3). */
+    * most recent drive, set by every drive call — the spec hook proving
+    * the drives really cross batch boundaries (StreamingSpec asserts
+    * ≥3). */
   @volatile var lastDriveBatches: Seq[Long] = Nil
 
   /** Per-batch `triggerExecution` durations (ms, non-empty micro-batches
-    * only, batch order) of the most recent drive. [[graft.Bench]] reads
-    * this after each GENUINE drive execution and reports the steady-state
-    * median (first batch dropped — it carries source listing + plan
-    * compile) in bench_detail as `drive_trigger_ms`: the wall time of a
-    * drive is dominated by checkpoint/WAL/state-commit latency, which
-    * tracks the MACHINE's IO band rather than the code (two cross-round
-    * A/Bs, see Bench.scala), so per-batch triggerExecution is the
-    * cross-round comparison metric for drive-backed queries. */
+    * only, batch order) of the most recent drive, set by every drive
+    * call. [[graft.Bench]] reads this after each drive sample and reports
+    * the steady-state median (first batch dropped — it carries source
+    * listing + plan compile) in bench_detail as `drive_trigger_ms`: the
+    * wall time of a drive is dominated by checkpoint/WAL/state-commit
+    * latency, which tracks the MACHINE's IO band rather than the code
+    * (two cross-round A/Bs, see Bench.scala), so per-batch
+    * triggerExecution is the cross-round comparison metric for
+    * drive-backed queries. */
   @volatile var lastDriveTriggerMs: Seq[Long] = Nil
-
-  /** Drained results, one full replay per (session, source content,
-    * drive) — for REPEAT callers only: a spec or notebook invoking the
-    * same drive twice on the same corpus reads the drained sink instead
-    * of replaying. Anything that TIMES drives must not hit this cache —
-    * [[graft.Bench]] calls [[clearDrained]] before its timed drive
-    * passes and detects drive-backed queries via the [[drainTouches]] /
-    * [[driveRuns]] counters so later passes skip them entirely (a cached
-    * read would measure a localCheckpoint scan, not streaming
-    * execution). Staging
-    * ([[stagedCache]]) stays shared across passes: it is drive
-    * scaffolding (one sorted write of the input), not the operator.
-    * Keyed on the source fingerprint so a regenerated corpus re-drives,
-    * and on a per-session UUID (identity hashes can collide or be reused
-    * after GC) so cross-session reuse — a memory-sink table is
-    * session-scoped — is impossible. Each entry carries the drive's
-    * non-empty micro-batch counts so a cache hit restores
-    * [[lastDriveBatches]] to that drive's real progress instead of
-    * leaving another drive's counts in place. */
-  private val drainedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Seq[Long], Seq[Long])]()
-
-  private val sessionIds =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.util.UUID]())
-
-  private val drainTouchCounter = new java.util.concurrent.atomic.AtomicLong(0)
-  private val driveRunCounter = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Count of [[drainCached]] entries — every drive invocation, cache hit
-    * or miss. [[graft.Bench]] samples this around each timed run-1 query:
-    * a query whose execution touched the drained cache is drive-backed
-    * and must be skipped on later passes. Touch-based (not cache-size
-    * based) detection closes the blind spot where two bench queries share
-    * one cache key: the second query's run-1 is a cache HIT, the cache
-    * does not grow, and size-based detection would let later passes time
-    * a localCheckpoint scan as if it were streaming execution. */
-  def drainTouches: Long = drainTouchCounter.get
-
-  /** Count of REAL drive executions (the compute lambda ran — a full
-    * multi-batch streaming replay, not a cache hit). Bench compares its
-    * growth with [[drainTouches]] growth: a timed sample whose execution
-    * touched the cache without running a drive measured a cached read,
-    * which Bench reports loudly instead of shipping silently. */
-  def driveRuns: Long = driveRunCounter.get
-
-  /** Drop all drained drive results (staging is kept). Bench calls this
-    * before each timed drive pass so that pass replays the real drives.
-    *
-    * INVALIDATION CONTRACT: the drained frames are localCheckpoint'd, so
-    * their lineage is truncated — after this call, any drained DataFrame
-    * a repeat caller still holds from before is permanently
-    * unrecomputable (an action on it fails), not merely uncached. That
-    * is why this is `private[graft]`: only [[graft.Bench]] may clear,
-    * and the cache's stated audience (specs, notebooks) always re-enters
-    * through the drive entry points, which re-drive on a cleared cache.
-    * The localCheckpoint'd result blocks are unpersisted EXPLICITLY —
-    * dropping the strong refs alone leaves the persisted RDD blocks to
-    * lazy GC + ContextCleaner, so repeated bench passes would briefly
-    * accumulate checkpoint blocks in the block manager. */
-  private[graft] def clearDrained(): Unit = {
-    drainedCache.values.forEach { case (df, _, _) =>
-      graft.Scaffold.releaseCheckpoint(df) }
-    drainedCache.clear()
-  }
-
-  /** Batch counts of the drive most recently drained ON THIS THREAD —
-    * read by [[drainCached]] inside its compute lambda. The shared
-    * [[lastDriveBatches]] global cannot be read there: two drives running
-    * concurrently (parallel specs) could capture each other's counts into
-    * the wrong cache entry. */
-  private val lastBatchesLocal = new ThreadLocal[Seq[Long]] {
-    override def initialValue: Seq[Long] = Nil
-  }
-
-  /** Trigger durations of the drive most recently drained ON THIS THREAD
-    * — same role as [[lastBatchesLocal]], for [[lastDriveTriggerMs]]. */
-  private val lastTriggerLocal = new ThreadLocal[Seq[Long]] {
-    override def initialValue: Seq[Long] = Nil
-  }
-
-  private def drainCached(s: SparkSession, srcPath: String, name: String)(
-      body: => DataFrame): DataFrame = {
-    drainTouchCounter.incrementAndGet()
-    val sid = sessionIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID())
-    val (df, batches, triggers) = drainedCache.computeIfAbsent(
-      s"$sid#$srcPath#${graft.Scaffold.fingerprint(srcPath)}#$name",
-      // localCheckpoint pins the rows: the memory-sink view behind the
-      // result is re-registered under the same queryName when a DIFFERENT
-      // corpus drives the same shape — a lazily-cached frame would
-      // silently re-read the new sink. The drive is already eager, so
-      // this adds one tiny local job over the drained result table.
-      // `body` runs on THIS thread, so the thread-locals are its own.
-      _ => { driveRunCounter.incrementAndGet()
-        val out = body.localCheckpoint()
-        (out, lastBatchesLocal.get, lastTriggerLocal.get) })
-    lastDriveBatches = batches
-    lastDriveTriggerMs = triggers
-    df
-  }
 
   /** `ts` arrives as long nanoseconds OR a timestamp column (the source
     * owns its schema — [[graft.ops.Tables.timestampOf]]); the streaming
@@ -217,8 +123,11 @@ object StreamDrive {
         col("user_id"), col("event_type"), col("value"))
   }
 
+  /** Run `df` into a memory sink until the staged input is drained,
+    * record the drive's progress, and return `shape` of the drained rows
+    * as a pinned copy. */
   private def drain(s: SparkSession, df: DataFrame, name: String,
-      mode: String): DataFrame = {
+      mode: String)(shape: DataFrame => DataFrame): DataFrame = {
     // a previous drive in this session may have registered the sink view
     s.catalog.dropTempView(name)
     // Drive-internal shuffle/state partitioning: the session default
@@ -240,13 +149,15 @@ object StreamDrive {
       val counts = nonEmpty.map(_.numInputRows)
       val triggers = nonEmpty.flatMap(p =>
         Option(p.durationMs.get("triggerExecution")).map(_.toLong))
-      lastBatchesLocal.set(counts)
-      lastTriggerLocal.set(triggers)
       lastDriveBatches = counts
       lastDriveTriggerMs = triggers
       q.stop()
     }
-    s.table(name)
+    // localCheckpoint pins the shaped rows: the reshaping runs once, in
+    // one small eager job, and the returned frame is a scan of its own
+    // copy with no lineage back to the streaming query. ContextCleaner
+    // frees the blocks once the caller drops the frame.
+    shape(s.table(name)).localCheckpoint()
   }
 
   /** Streaming [[EventStream.hourlyCounts]] over the events parquet,
@@ -258,10 +169,9 @@ object StreamDrive {
     * makes the oracle pin the state-store merge: most windows receive
     * rows from more than one micro-batch. */
   def hourlyFromFiles(s: SparkSession, d: String): DataFrame =
-    drainCached(s, s"$d/events.parquet", "hourly") {
-      drain(s, EventStream.hourlyCounts(eventStream(s, d)),
-        "graft_stream_hourly", "complete")
-        .select(expr("unix_micros(window_start) div 3600000000").as("hour_bucket"),
+    drain(s, EventStream.hourlyCounts(eventStream(s, d)),
+        "graft_stream_hourly", "complete") {
+      _.select(expr("unix_micros(window_start) div 3600000000").as("hour_bucket"),
           col("event_type"), col("n"), round(col("sum_value"), 2).as("sum_value"))
         .orderBy(col("hour_bucket"), col("event_type"))
     }
@@ -274,10 +184,9 @@ object StreamDrive {
     * the first slide after the epoch, which the batch formulation (and
     * the oracle) exclude. */
   def slidingFromFiles(s: SparkSession, d: String): DataFrame =
-    drainCached(s, s"$d/events.parquet", "sliding") {
-      drain(s, EventStream.slidingCounts(eventStream(s, d)),
-        "graft_stream_sliding", "complete")
-        .select(expr("unix_micros(window_start)").as("window_start_us"),
+    drain(s, EventStream.slidingCounts(eventStream(s, d)),
+        "graft_stream_sliding", "complete") {
+      _.select(expr("unix_micros(window_start)").as("window_start_us"),
           col("event_type"), col("n"), round(col("sum_value"), 2).as("sum_value"))
         .filter(col("window_start_us") >= 0)
         .orderBy(col("window_start_us"), col("event_type"))
@@ -310,13 +219,7 @@ object StreamDrive {
     * identical to the batch running-sum numbering, which is also
     * 1-based in time order. */
   def sessionsFromFiles(s: SparkSession, d: String,
-      gapMinutes: Int = 30): DataFrame =
-    drainCached(s, s"$d/events.parquet", s"sessions-$gapMinutes") {
-      sessionsFromFilesUncached(s, d, gapMinutes)
-    }
-
-  private def sessionsFromFilesUncached(s: SparkSession, d: String,
-      gapMinutes: Int): DataFrame = {
+      gapMinutes: Int = 30): DataFrame = {
     import s.implicits._
     val gapUs = gapMinutes.toLong * 60L * 1000000L
     val raw = graft.ops.Tables.table(s, d, "events") // schema-cached
@@ -341,12 +244,13 @@ object StreamDrive {
       .as[SessionStateOps.Ev]
     val sessions = SessionStateOps.sessionize(s, evs, isStreaming = true)
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("start_us"))
-    drain(s, sessions.toDF(), "graft_stream_sessions", "append")
-      .withColumn("sess_id", row_number().over(byUser).cast("long"))
-      .select(col("user_id"), col("sess_id"), col("n_events"),
-        col("start_us"), col("end_us"),
-        (col("end_us") - col("start_us")).as("duration_us"))
-      .orderBy(col("user_id"), col("sess_id"))
+    drain(s, sessions.toDF(), "graft_stream_sessions", "append") {
+      _.withColumn("sess_id", row_number().over(byUser).cast("long"))
+        .select(col("user_id"), col("sess_id"), col("n_events"),
+          col("start_us"), col("end_us"),
+          (col("end_us") - col("start_us")).as("duration_us"))
+        .orderBy(col("user_id"), col("sess_id"))
+    }
   }
 
   /** Watermark EVICTION drive — the one streaming-semantics corner the
@@ -382,12 +286,7 @@ object StreamDrive {
     * Lateness filters compare in MICROSECONDS on both sides (the
     * operators' own resolution — a nanosecond-remainder edge row would
     * otherwise sit on different sides of the cut). */
-  def hourlyLateFromFiles(s: SparkSession, d: String): DataFrame =
-    drainCached(s, s"$d/events.parquet", "late") {
-      hourlyLateFromFilesUncached(s, d)
-    }
-
-  private def hourlyLateFromFilesUncached(s: SparkSession, d: String): DataFrame = {
+  def hourlyLateFromFiles(s: SparkSession, d: String): DataFrame = {
     val src = s"$d/events.parquet"
     val evTable = graft.ops.Tables.table(s, d, "events") // schema-cached
     val schema = evTable.schema
@@ -443,11 +342,12 @@ object StreamDrive {
       .parquet(staged)
       .select(graft.ops.Tables.timestampOf(s, schema("ts").dataType).as("ts"),
         col("user_id"), col("event_type"), col("value"))
-    drain(s, EventStream.hourlyCounts(events), "graft_stream_hourly_late", "append")
-      .filter(col("event_type") =!= "graft_sentinel")
-      .select(expr("unix_micros(window_start) div 3600000000").as("hour_bucket"),
-        col("event_type"), col("n"), round(col("sum_value"), 2).as("sum_value"))
-      .orderBy(col("hour_bucket"), col("event_type"))
+    drain(s, EventStream.hourlyCounts(events), "graft_stream_hourly_late", "append") {
+      _.filter(col("event_type") =!= "graft_sentinel")
+        .select(expr("unix_micros(window_start) div 3600000000").as("hour_bucket"),
+          col("event_type"), col("n"), round(col("sum_value"), 2).as("sum_value"))
+        .orderBy(col("hour_bucket"), col("event_type"))
+    }
   }
 
   /** Streaming exact dedup over the documents parquet: the corpus-side
@@ -462,18 +362,16 @@ object StreamDrive {
     * property rather than an argued one: duplicate groups spanning files
     * must merge in the state store. Only the digest shuffles; text never
     * leaves the stateless pre-projection. */
-  def dedupFromFiles(s: SparkSession, d: String): DataFrame =
-    drainCached(s, s"$d/documents.parquet", "dedup") {
-      val docsRaw = graft.ops.Tables.table(s, d, "documents") // schema-cached
-      val schema = docsRaw.schema
-      val staged = stageSplit(s"$d/documents.parquet", "docs",
-        docsRaw, "doc_id")
-      val docs = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-        .select(md5(col("text")).as("digest"), col("doc_id"))
-      drain(s, docs.groupBy(col("digest"))
-          .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies")),
-        "graft_stream_dedup", "complete")
-        .orderBy(col("digest"))
-    }
+  def dedupFromFiles(s: SparkSession, d: String): DataFrame = {
+    val docsRaw = graft.ops.Tables.table(s, d, "documents") // schema-cached
+    val schema = docsRaw.schema
+    val staged = stageSplit(s"$d/documents.parquet", "docs",
+      docsRaw, "doc_id")
+    val docs = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(staged)
+      .select(md5(col("text")).as("digest"), col("doc_id"))
+    drain(s, docs.groupBy(col("digest"))
+        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies")),
+      "graft_stream_dedup", "complete")(_.orderBy(col("digest")))
+  }
 }

@@ -136,6 +136,17 @@ class BenchStatsSpec extends AnyFunSuite {
     assert(allCached("drv") == 0.5)
   }
 
+  test("parseDetailMins reads a detail without cached_read like one with it empty") {
+    // details written since drives stopped caching carry no cached_read
+    val body = """"runs":{"drv":[3.1,2.8],"plain":[1.0,1.1]},
+                  "sample_passes":{"drv":[1,4],"plain":[1,2]},
+                  "noise_floor_sec":{"drv":0.2,"plain":0.05}"""
+    val without = Bench.parseDetailMins(s"{$body}")
+    assert(without == Bench.parseDetailMins(s"""{$body,"cached_read":[]}"""))
+    assert(without == (Map("drv" -> 2.8, "plain" -> 1.0),
+      Map("drv" -> 0.2, "plain" -> 0.05)))
+  }
+
   test("drive-backed breachers adjudicate on trigger medians, not wall re-times") {
     // wall min moved with the IO band but per-batch execution is flat
     assert(Bench.driveAdjudicationVerdict(Some(300.0), Some(290.0)) == "band")

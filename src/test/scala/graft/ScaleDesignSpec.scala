@@ -378,7 +378,7 @@ class ScaleDesignSpec extends SparkSpec {
     val sfSmall = "/root/testdata/sf0.001"
     val offenders = SparkEntry.queries.toSeq
       .filterNot { case (name, _) =>
-        name.startsWith("x_stream_") ||  // drives run at construction; result is a memory-sink scan
+        name.startsWith("x_stream_") ||  // drives run at construction; result: pinned copy of drained rows
         allPairsByDesign(name) || boundedBnlj(name)
       }
       .flatMap { case (name, fn) =>

@@ -269,7 +269,7 @@ class StreamingSpec extends SparkSpec {
     // the non-empty batches AFTER dropping the first. A drive collapsing
     // to <2 non-empty micro-batches would silently thin that metric to
     // nothing — pin >=2 positive trigger durations for each of the five
-    // bench drives, on fresh (non-drained-cache) executions.
+    // bench drives.
     val sf = "/root/testdata/sf0.001"
     val drives: Seq[(String, () => Unit)] = Seq(
       "x_stream_hourly" -> (() => StreamDrive.hourlyFromFiles(spark, sf).count()),
@@ -277,17 +277,50 @@ class StreamingSpec extends SparkSpec {
       "x_stream_sessionize" -> (() => StreamDrive.sessionsFromFiles(spark, sf).count()),
       "x_stream_dedup" -> (() => StreamDrive.dedupFromFiles(spark, sf).count()),
       "x_stream_late" -> (() => StreamDrive.hourlyLateFromFiles(spark, sf).count()))
-    StreamDrive.clearDrained()
     for ((name, run) <- drives) {
-      val runsBefore = StreamDrive.driveRuns
       run()
-      assert(StreamDrive.driveRuns > runsBefore,
-        s"$name did not execute a genuine drive (drained cache not cleared?)")
       val trig = StreamDrive.lastDriveTriggerMs
       assert(trig.length >= 2,
         s"$name recorded ${trig.length} trigger durations ($trig) — the " +
           "steady-state median (first batch dropped) would be empty/thin")
       assert(trig.forall(_ > 0), s"$name trigger vector $trig has non-positive entries")
     }
+  }
+
+  test("calling a drive twice on one corpus runs two streaming queries") {
+    // no drive result is kept between calls: each call replays the stream
+    val sf = "/root/testdata/sf0.001"
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (e.name == "graft_stream_dedup") started.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    val (first, second) =
+      try (StreamDrive.dedupFromFiles(spark, sf).collect().toSeq,
+        StreamDrive.dedupFromFiles(spark, sf).collect().toSeq)
+      finally {
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        spark.streams.removeListener(listener)
+      }
+    assert(started.get == 2, s"${started.get} drive queries started for two calls")
+    assert(first.nonEmpty && first == second)
+  }
+
+  test("a held drive result keeps its rows after the drive runs on another corpus") {
+    // the drive re-registers its memory-sink view for every corpus; a
+    // frame returned earlier keeps its own rows, as a pinned copy
+    val small = "/root/testdata/sf0.001"
+    val held = StreamDrive.hourlyFromFiles(spark, small)
+    assert(held.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD], held.queryExecution)
+    val larger = StreamDrive.hourlyFromFiles(spark, "/root/testdata/sf0.01")
+      .collect().toSeq
+    val rows = held.collect().toSeq
+    assert(rows == graft.ops.Sessionize.hourlyWindows(spark, small).collect().toSeq)
+    assert(rows.size < larger.size, s"${rows.size} vs ${larger.size} windows")
   }
 }
