@@ -151,98 +151,48 @@ object Dedup {
     * pair graph — the step that turns pairwise similarity into "keep one
     * survivor per duplicate cluster". Every document gets a `cluster_id`
     * = the smallest doc_id reachable through pairs with J ≥ threshold
-    * (singletons cluster to themselves).
-    *
-    * Implementation is iterative min-label propagation to a fixpoint:
-    * labels(v) ← min(labels(v), min over neighbours). The pair graph is
-    * sparse (near-dup pairs, not the corpus), so each round is one small
-    * equi-join + aggregate; chains converge in diameter rounds. At
-    * 100 TB the same loop runs with the alternating large-star/small-star
-    * optimization (Kiveris et al.) — the per-round shuffle key stays
-    * (node, label) either way, and document bodies never enter the loop. */
-  def nearDupClusters(s: SparkSession, d: String, threshold: Double = 0.5,
-      maxDriverEdges: Long = 1000000L): DataFrame = {
+    * (singletons cluster to themselves). The components come from
+    * [[componentLabels]]; document bodies never enter it. */
+  def nearDupClusters(s: SparkSession, d: String,
+      threshold: Double = 0.5): DataFrame = {
     val pairs = ngramJaccard(s, d, threshold).select(col("a_id"), col("b_id"))
     Tables.documents(s, d).select(col("doc_id"))
-      .join(componentLabels(s, pairs, maxDriverEdges), Seq("doc_id"), "left_outer")
+      .join(componentLabels(s, pairs), Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
         coalesce(col("label"), col("doc_id")).as("cluster_id"))
       .orderBy(col("doc_id"))
   }
 
   /** Connected-component labels over an undirected pair graph: returns
-    * (doc_id, label) for every node that appears in `pairs`, label = the
-    * smallest reachable id. Nodes absent from the edge list are absent
-    * from the result (callers coalesce singletons to themselves).
+    * (doc_id, label) for every non-root node that appears in `pairs`,
+    * label = the smallest reachable id. Roots and nodes absent from the
+    * edge list are absent from the result (callers coalesce them to
+    * themselves).
+    *
+    * A driver union-find over the collected pair list, in one job. The
+    * pairs are near-dup hits, not the corpus, so the list fits the driver.
     *
     * Shared solver behind [[nearDupClusters]] (text near-dup graph) and
     * [[semanticClusters]] (embedding cosine graph). */
-  private[ops] def componentLabels(s: SparkSession, rawPairs: DataFrame,
-      maxDriverEdges: Long = 1000000L): DataFrame = {
+  private[ops] def componentLabels(s: SparkSession,
+      pairs: DataFrame): DataFrame = {
     import s.implicits._
-    val pairs = rawPairs.toDF("a_id", "b_id").cache()
-    // Only the edge-induced subgraph needs label propagation: near-dup
-    // PAIRS are a tiny fraction of the corpus even at 100 TB (they are
-    // the dedup hits, not the documents). Below the gate the component
-    // computation is a driver union-find over the collected pair list —
-    // one collect of (long, long) rows, zero iterative jobs (gate 1M
-    // edges ≈ tens of MB with the unboxed-key LongMap); above it, the
-    // distributed min-label loop, which never materializes labels on
-    // the driver. Singletons join in once at the end either way.
-    val nPairs = pairs.count()
-    val labeled: DataFrame =
-      if (nPairs <= maxDriverEdges) {
-        val parent = scala.collection.mutable.LongMap[Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-          }
-          r
-        }
-        pairs.as[(Long, Long)].collect().foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { val (lo, hi) = (math.min(ra, rb), math.max(ra, rb))
-            parent(hi) = lo }
-        }
-        // only non-root nodes carry entries; roots label themselves via
-        // the coalesce fallback below (cluster_id = own id)
-        pairs.unpersist()
-        parent.keys.toSeq.map(k => k -> find(k)).toDF("doc_id", "label")
-      } else {
-        val edges = pairs.unionAll(
-          pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-          .toDF("src", "dst").cache()
-        var labels = edges.select(col("src").as("doc_id")).distinct()
-          .withColumn("cluster_id", col("doc_id")).cache()
-        var changed = 1L
-        while (changed > 0) {
-          val neighborMin = edges.join(labels, edges("dst") === labels("doc_id"))
-            .groupBy(col("src").as("doc_id"))
-            .agg(min(col("cluster_id")).as("n_min"))
-          val next = labels.join(neighborMin, Seq("doc_id"), "left_outer")
-            .select(col("doc_id"),
-              least(col("cluster_id"), coalesce(col("n_min"), col("cluster_id")))
-                .as("cluster_id"))
-            .cache()
-          changed = next.join(labels.withColumnRenamed("cluster_id", "old"), "doc_id")
-            .filter(col("cluster_id") =!= col("old")).count()
-          labels.unpersist()
-          labels = next
-        }
-        edges.unpersist()
-        pairs.unpersist()
-        // truncate the loop lineage without pulling labels to the driver
-        // (this branch exists because the subgraph is too big for that);
-        // the checkpointed blocks are the one retained resource, bounded
-        // by the edge-node count
-        val ck = labels.localCheckpoint(true)
-        labels.unpersist()
-        ck
+    val parent = scala.collection.mutable.LongMap[Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) {
+        val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
       }
-    labeled.toDF("doc_id", "label")
+      r
+    }
+    pairs.toDF("a_id", "b_id").as[(Long, Long)].collect().foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { val (lo, hi) = (math.min(ra, rb), math.max(ra, rb))
+        parent(hi) = lo }
+    }
+    parent.keys.toSeq.map(k => k -> find(k)).toDF("doc_id", "label")
   }
 
   /** Semantic deduplication (SemDeDup, Abbas et al. 2023): duplicate

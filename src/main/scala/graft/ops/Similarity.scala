@@ -281,9 +281,9 @@ object Similarity {
     * nProbe/nCells of the data — the centroid table itself is tiny and
     * lives on the driver. Deterministic via the k-means seed. */
   def ivfTopK(s: SparkSession, d: String, nQueries: Int = 8, k: Int = 5,
-      nCells: Int = 16, nProbe: Int = 4, maxTrainRows: Long = 100000L): DataFrame =
+      nCells: Int = 16, nProbe: Int = 4): DataFrame =
     ivfTopKOf(s, Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-      trainedCentroids(s, d, nCells, maxTrainRows), nQueries, k, nProbe)
+      trainedCentroids(s, d, nCells), nQueries, k, nProbe)
 
   /** IVF retrieval *guarantee* under the DuckDB oracle — the exact trick
     * [[lshDupRetrieval]] uses: an identical vector has distance 0 to the
@@ -304,10 +304,8 @@ object Similarity {
         explode(array(lit(0L), lit(offset))).as("off"))
       .select((col("vec_id") + col("off")).as("vec_id"), col("embedding"))
     // quantizer trained on the doubled corpus (uncached — guarantee-twin
-    // corpus, not the serving index); the guarantee argument is rule-free:
-    // IDENTICAL vectors get the same assignment under ANY deterministic rule
-    ivfTopKOf(s, emb, kmeansCentroids(emb, nCells, maxTrainRows = 100000L),
-      nQueries, k = 1, nProbe)
+    // corpus, not the serving index)
+    ivfTopKOf(s, emb, kmeansCentroids(emb, nCells), nQueries, k = 1, nProbe)
   }
 
   /** Measured recall@k of an IVF-structured search under the DuckDB
@@ -380,54 +378,11 @@ object Similarity {
     * no SQL oracle can replay — so every consumer assigns with the one
     * explicitly-defined rule [[voronoiAssign]] instead, and the trained
     * centroids become plain literals both engines score identically. */
-  private[ops] def kmeansCentroids(embIn: DataFrame, nCells: Int,
-      maxTrainRows: Long): Array[Array[Double]] = {
+  private[ops] def kmeansCentroids(embIn: DataFrame,
+      nCells: Int): Array[Array[Double]] = {
     val emb = embIn.withColumn("features", array_to_vector(col("embedding")))
-    // The coarse quantizer trains on a bounded sample: centroids don't
-    // need the full corpus, and a full-corpus fit is 10 passes over
-    // 100 TB. Seeded sample → deterministic centroids; below the cap the
-    // sample IS the corpus, so small-scale results are unchanged. The
-    // size probe is `limit(cap+1).count()` — it early-exits after cap+1
-    // rows instead of scanning the whole corpus like a bare count().
-    // Caps beyond Int.MaxValue can't be probed via limit — take the
-    // sampling branch (its fraction clamps to 1.0 on small corpora, so
-    // nothing is lost; silently treating the corpus as small would
-    // disable the cap entirely).
-    val smallCorpus = maxTrainRows < Int.MaxValue &&
-      emb.limit((maxTrainRows + 1).toInt).count() <= maxTrainRows
-    val train =
-      if (smallCorpus) emb
-      else {
-        // The branch exists BECAUSE the corpus is huge, so it must never
-        // pay a full pass just to size the sample. Row count comes from
-        // plan statistics (parquet footers / CBO), which cost no job; when
-        // the optimizer only knows sizeInBytes, rows are estimated with
-        // the schema's defaultSize as the bytes-per-row divisor. That
-        // divisor undercounts real rows (arrays are costed at one
-        // element), so the row estimate errs HIGH and the fraction errs
-        // LOW. Neither direction can break the trainer:
-        //   - overshoot is bounded by the trailing hard limit;
-        //   - undershoot is bounded by the fraction FLOOR: the limit
-        //     probe above proved the corpus exceeds maxTrainRows, so a
-        //     fraction of at least floorRows/maxTrainRows yields an
-        //     expected sample of at least floorRows (~50 points per
-        //     centroid) no matter how wrong the byte-based estimate is.
-        val stats = emb.queryExecution.optimizedPlan.stats
-        val rowEst = stats.rowCount.map(_.toDouble).getOrElse {
-          val bytesPerRow =
-            math.max(1, emb.schema.map(_.dataType.defaultSize).sum)
-          stats.sizeInBytes.toDouble / bytesPerRow
-        }
-        val floorRows = 50.0 * nCells
-        // 1.3× headroom: Bernoulli sampling undershoots the expectation
-        val frac = math.min(1.0,
-          math.max(maxTrainRows * 1.3 / math.max(rowEst, 1.0),
-            floorRows / maxTrainRows))
-        emb.sample(withReplacement = false, frac, seed = 42L)
-          .limit(math.min(maxTrainRows, Int.MaxValue.toLong - 1).toInt)
-      }
     val kmeans = new KMeans().setK(nCells).setSeed(42L).setMaxIter(10)
-    kmeans.fit(train).clusterCenters.map(_.toArray)
+    kmeans.fit(emb).clusterCenters.map(_.toArray)
   }
 
   /** Trained-centroid cache keyed by (data dir, content fingerprint,
@@ -440,16 +395,15 @@ object Similarity {
     * centroids of the old data. */
   private val centroidCache =
     scala.collection.concurrent.TrieMap
-      .empty[(String, String, Int, Long), Array[Array[Double]]]
+      .empty[(String, String, Int), Array[Array[Double]]]
 
   private[ops] def trainedCentroids(s: SparkSession, d: String,
-      nCells: Int, maxTrainRows: Long): Array[Array[Double]] =
+      nCells: Int): Array[Array[Double]] =
     centroidCache.getOrElseUpdate(
-      (d, graft.Scaffold.fingerprint(s"$d/embeddings.parquet"),
-        nCells, maxTrainRows),
+      (d, graft.Scaffold.fingerprint(s"$d/embeddings.parquet"), nCells),
       kmeansCentroids(
         Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-        nCells, maxTrainRows))
+        nCells))
 
   /** Centroids as a tiny (cell, cent_e) frame, 0-based cell ids. */
   private def centroidFrame(s: SparkSession,
@@ -551,8 +505,8 @@ object Similarity {
     * deterministic seeded driver-resident structure is SQL once
     * serialized. */
   def ivfOracleSql(s: SparkSession, d: String, nQueries: Int = 8, k: Int = 5,
-      nCells: Int = 16, nProbe: Int = 4, maxTrainRows: Long = 100000L): String = {
-    val centroids = trainedCentroids(s, d, nCells, maxTrainRows)
+      nCells: Int = 16, nProbe: Int = 4): String = {
+    val centroids = trainedCentroids(s, d, nCells)
     val probeMap = probeMapOf(centroids, nProbe)
     val centVals = centroids.zipWithIndex.map { case (c, i) =>
       s"($i, ${c.mkString("[", ", ", "]")}::DOUBLE[])"
@@ -594,10 +548,10 @@ object Similarity {
     * before any I/O happens, so a query touches ~nProbe/nCells of the
     * bytes at rest instead of filtering after a full scan. */
   def writeIvfPartitioned(s: SparkSession, d: String, outDir: String,
-      nCells: Int = 16, maxTrainRows: Long = 100000L): Unit =
+      nCells: Int = 16): Unit =
     writeIvfStore(s,
       Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-      trainedCentroids(s, d, nCells, maxTrainRows), outDir)
+      trainedCentroids(s, d, nCells), outDir)
 
   /** The IVF store of `emb` under the given centroids. */
   private[ops] def writeIvfStore(s: SparkSession, emb: DataFrame,

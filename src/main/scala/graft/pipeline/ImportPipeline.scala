@@ -71,10 +71,23 @@ object ImportPipeline {
       parts: Seq[(String, Column, Column)], taskUri: String,
       graph: String): DataFrame = {
     import tagged.sparkSession.implicits._
-    val sizeCols = parts.map { case (_, member, line) =>
-      sum(when(member, octet_length(line) + 1).otherwise(0)) }
-    val sizes = tagged.groupBy(col("url")).agg(sizeCols.head, sizeCols.tail: _*)
-      .collect().map(r => r.getString(0) -> (1 to parts.size).map(r.getLong)).toMap
+    val lineSizes = parts.map { case (_, member, line) =>
+      when(member, octet_length(line) + 1).otherwise(0).cast("long") }
+    // A page's rows sit in one partition of `tagged` (the extraction is
+    // page-local), so a per-partition fold needs no exchange; the driver
+    // merge only guards a page that spans partitions.
+    val sizes = tagged.select(col("url"), array(lineSizes: _*))
+      .as[(String, Array[Long])]
+      .mapPartitions { rows =>
+        val acc = scala.collection.mutable.HashMap[String, Array[Long]]()
+        rows.foreach { case (url, row) =>
+          val a = acc.getOrElseUpdate(url, new Array[Long](row.length))
+          for (i <- row.indices) a(i) += row(i)
+        }
+        acc.iterator
+      }
+      .collect()
+      .groupMapReduce(_._1)(_._2)((a, b) => a.zip(b).map(p => p._1 + p._2))
     (for (p <- pages; ((part, _, _), i) <- parts.zipWithIndex)
       yield (taskUri, graph, s"${basename(p)}-$part.ttl",
         sizes.get(p).fold(0L)(_(i)), p, part == "valid"))

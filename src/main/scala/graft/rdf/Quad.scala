@@ -106,7 +106,6 @@ object Vocab {
   val taskResultsContainer = "http://redpencil.data.gift/vocabularies/tasks/resultsContainer"
   val taskHasFile       = "http://redpencil.data.gift/vocabularies/tasks/hasFile"
   val taskHasGraph      = "http://redpencil.data.gift/vocabularies/tasks/hasGraph"
-  val cogsDependsOn     = "http://www.w3.org/2002/07/cogs#dependsOn"
   val admsStatus        = "http://www.w3.org/ns/adms#status"
   val dctIsPartOf       = "http://purl.org/dc/terms/isPartOf"
   val dctCreated        = "http://purl.org/dc/terms/created"

@@ -1,37 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Persistent layout for the quad table at scale.
-  *
-  * The reference's Virtuoso plays two roles we split: bulk triple storage
-  * (this) and the small mutable task-state partition (TaskStore rewrites).
-  * For the bulk table the layout IS the query plan:
-  *
-  *   - **partition by graph**: per-task/per-job named graphs become
-  *     partition directories, so every `GRAPH <uri>` pattern is partition
-  *     pruning, and task-state rewrites touch one partition;
-  *   - **bucket by subject**: the star join (all properties of a subject,
-  *     J2) and the s→o chain join both key on subject — bucketing
-  *     pre-shuffles once at write time, so groupBy(subject) pivots and
-  *     self-joins between co-bucketed tables run with NO exchange. At
-  *     1000 executors that deletes the dominant shuffle of the workload.
-  */
+/** The TTL ingest: quads read back from the sink directories the import
+  * pipeline writes. */
 object QuadStore {
-
-  /** Write a quad DataFrame as a bucketed, graph-partitioned table. */
-  def writeBucketed(quads: DataFrame, table: String, buckets: Int = 32,
-      partitionByGraph: Boolean = true): Unit = {
-    val w = quads.write.mode(SaveMode.Overwrite)
-      .format("parquet")
-      .bucketBy(buckets, "subject")
-      .sortBy("subject")
-    (if (partitionByGraph) w.partitionBy("graph") else w)
-      .saveAsTable(table)
-  }
-
-  def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
 
   /** TTL/N-Triples ingest — the read-back face of `ExtractPipeline
     * .writeTtl`'s sink directories (what a downstream consumer of the

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.rdf.Vocab
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -33,9 +34,6 @@ object DeltaSource {
   /** A delta body is an array of changesets. */
   val deltaSchema: ArrayType = ArrayType(changesetSchema)
 
-  val ScheduledStatus = "http://redpencil.data.gift/id/concept/JobStatus/scheduled"
-  val AdmsStatus = "http://www.w3.org/ns/adms#status"
-
   /** P8 content-type guard (app.js:18-22): the reference only JSON-parses
     * a request whose content-type matches `^application/json`. Batches
     * that carry a `content_type` column get the same regex filter before
@@ -52,8 +50,8 @@ object DeltaSource {
     * column: explode changesets → explode inserts → filter predicate/
     * object → project subject values. */
   def scheduledTasks(deltas: DataFrame,
-      predicate: String = AdmsStatus,
-      obj: String = ScheduledStatus): DataFrame =
+      predicate: String = Vocab.admsStatus,
+      obj: String = Vocab.statusScheduled): DataFrame =
     contentTypeGuard(deltas)
       .select(explode(from_json(col("body"), deltaSchema)).as("cs"))
       .select(explode(col("cs.inserts")).as("t"))

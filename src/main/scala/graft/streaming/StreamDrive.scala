@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * also pins the streaming path.
   *
   * Every call runs its drive: no result is kept between calls. The
-  * returned frame is a pinned (`localCheckpoint`) copy of that call's
-  * drained rows. Only the staged input splits are reused.
+  * returned frame reads that call's own memory sink, so it keeps its rows
+  * after a later drive re-registers the sink view. Only the staged input
+  * splits are reused.
   *
   * Every drive replays its input as MULTIPLE micro-batches
   * (`maxFilesPerTrigger=1` over ≥3 staged files in event-time order), so
@@ -124,8 +125,7 @@ object StreamDrive {
   }
 
   /** Run `df` into a memory sink until the staged input is drained,
-    * record the drive's progress, and return `shape` of the drained rows
-    * as a pinned copy. */
+    * record the drive's progress, and return `shape` of the drained rows. */
   private def drain(s: SparkSession, df: DataFrame, name: String,
       mode: String)(shape: DataFrame => DataFrame): DataFrame = {
     // a previous drive in this session may have registered the sink view
@@ -153,11 +153,7 @@ object StreamDrive {
       lastDriveTriggerMs = triggers
       q.stop()
     }
-    // localCheckpoint pins the shaped rows: the reshaping runs once, in
-    // one small eager job, and the returned frame is a scan of its own
-    // copy with no lineage back to the streaming query. ContextCleaner
-    // frees the blocks once the caller drops the frame.
-    shape(s.table(name)).localCheckpoint()
+    shape(s.table(name))
   }
 
   /** Streaming [[EventStream.hourlyCounts]] over the events parquet,

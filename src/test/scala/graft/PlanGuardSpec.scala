@@ -11,8 +11,8 @@ package graft
   *     corpus, which scales with the corpus like any scan — that is the
   *     documented serving shape, not a scale bug.
   *   - Streaming drives (`x_stream_*`) EXECUTE on invocation (wall-time
-  *     drives writing checkpoints/sinks) and return a pinned copy of
-  *     their drained rows — there is no production plan to audit on the
+  *     drives writing checkpoints/sinks) and return a scan of their own
+  *     sink output — there is no production plan to audit on the
   *     returned frame, and StreamingSpec pins their trigger behavior.
   *   - A query with a DELIBERATE cartesian would be exempt-listed in
   *     `allowCartesian` with its justification; the list is EMPTY — even

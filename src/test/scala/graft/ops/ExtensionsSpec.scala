@@ -150,11 +150,30 @@ class ExtensionsSpec extends SparkSpec {
     val paired = pairs.flatMap(p => Seq(p._1, p._2)).toSet
     clusters.filterNot { case (id, _) => paired(id) }
       .foreach { case (id, label) => assert(id == label) }
-    // the distributed label-propagation path (forced by a zero driver
-    // gate) must agree with the driver union-find exactly
-    val distributed = Dedup.nearDupClusters(spark, sf, 0.5, maxDriverEdges = 0L)
-      .as[(Long, Long)].collect().toMap
-    assert(distributed == clusters)
+  }
+
+  test("componentLabels reads its pair list in one job and persists nothing") {
+    val dir = graft.Scaffold.cleanupOnExit(
+      java.nio.file.Files.createTempDirectory("graft-pairs").toString)
+    Seq((3L, 1L), (5L, 3L), (7L, 8L)).toDF("a_id", "b_id")
+      .write.mode("overwrite").parquet(dir)
+    val pairs = spark.read.parquet(dir)
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val labels = try Dedup.componentLabels(spark, pairs)
+    finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get == 1, s"${jobs.get} jobs")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore)
+    // roots label themselves through the callers' coalesce
+    assert(labels.as[(Long, Long)].collect().toMap == Map(3L -> 1L, 5L -> 1L, 8L -> 7L))
   }
 
   test("semanticClusters equals brute-force components over the cosine graph") {
@@ -645,7 +664,7 @@ class ExtensionsSpec extends SparkSpec {
     // of 0/0 on a zero centroid (NumberFormatException); voronoiAssign
     // drops the cell through its null-cosine filter, so must the probe
     val emb = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
-    val trained = Similarity.trainedCentroids(spark, sf, 16, 100000L)
+    val trained = Similarity.trainedCentroids(spark, sf, 16)
     val cents = trained.updated(3, Array.fill(trained(3).length)(0.0))
     val out = graft.Scaffold.cleanupOnExit(java.nio.file.Files
       .createTempDirectory("graft-ivf-zero-centroid").toString)

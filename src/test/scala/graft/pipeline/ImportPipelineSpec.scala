@@ -199,6 +199,38 @@ class ImportPipelineSpec extends SparkSpec {
     assert(!jobs.asScala.exists(_.startsWith("Listing leaf files")), jobs)
   }
 
+  test("no plan over the persisted extraction shuffles: sinks and manifest") {
+    // a page's rows sit in one partition of the persisted frame, so the
+    // sinks and the manifest's per-page size fold read it without an exchange
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val result = try ImportPipeline.runImportPipeline(spark, taskQuads, T,
+      writePages(), Files.createTempDirectory("import-out").toString, Now,
+      writeDebug = true)
+    finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    assert(result.status == "success", result)
+    val helper = new AdaptiveSparkPlanHelper {}
+    import scala.jdk.CollectionConverters._
+    val overTagged = plans.asScala.toSeq.filter(p =>
+      helper.collect(p) { case s: InMemoryTableScanExec => s }.nonEmpty)
+    // four TTL partitions and the manifest, at least
+    assert(overTagged.size >= 5, plans.asScala.mkString("\n\n"))
+    overTagged.foreach { p =>
+      assert(helper.collect(p) { case e: ShuffleExchangeExec => e }.isEmpty, p) }
+  }
+
   test("the import stage compiles whole-stage: no codegen fallback") {
     // fallback=false turns a failed whole-stage compile (e.g. a method
     // beyond the JVM's 64 KB) into an error instead of a silent
