@@ -91,34 +91,30 @@ object CorpusPrep {
     * while corpus snapshots arrive continuously, so the eval slice's
     * distinct n-gram postings are tokenized and written ONCE and every
     * subsequent training snapshot probes the stored postings without
-    * ever re-reading the eval documents. Postings are bucketed by gram
-    * hash purely for parallel, bounded-size write tasks (grams of any
-    * one benchmark scatter uniformly across buckets — updating a suite
-    * rewrites the index); unlike the LSH/IVF/BM25 stored probes a
-    * corpus-sized probe key set touches every bucket, so partition
-    * pruning deliberately does NOT apply here — the index is
-    * benchmark-sized and the probe reads it whole (and broadcasts it,
-    * [[deconJoin]]). The gram width `n` is a join-compatibility
+    * ever re-reading the eval documents. Unlike the LSH/IVF/BM25 stored
+    * probes, a corpus-sized probe key set touches every gram, so
+    * partition pruning deliberately does NOT apply here: the postings
+    * are plain parquet, the index is benchmark-sized and the probe reads
+    * it whole (and broadcasts it, [[deconJoin]]); updating a suite
+    * rewrites the index. The gram width `n` is a join-compatibility
     * parameter: a probe tokenizing at a different n would equality-join
     * disjoint string sets and silently report no contamination, so it is
     * recorded in `meta/` and the probe DERIVES it from the index rather
     * than accepting it as an argument (the bm25 n_buckets precedent: no
     * out-of-band config). */
   def writeDeconIndex(s: SparkSession, d: String, outDir: String,
-      n: Int = 4, nBuckets: Int = 16): Unit = {
+      n: Int = 4): Unit = {
     import s.implicits._
-    StoredIndex.writePartitioned(
-      docGrams(s, d, n).filter(col("doc_id") % 97 === 0)
-        .withColumnRenamed("doc_id", "eval_id")
-        .withColumn("bucket", pmod(hash(col("gram")), lit(nBuckets))),
-      nBuckets, "bucket", col("gram"), s"$outDir/grams")
+    docGrams(s, d, n).filter(col("doc_id") % 97 === 0)
+      .withColumnRenamed("doc_id", "eval_id")
+      .write.mode("overwrite").parquet(s"$outDir/grams")
     Seq(n).toDF("n").coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/meta")
   }
 
-  /** Layout contracts of `grams/` (partition column last) and `meta/`: the
-    * probe reads with them, so no footer-read job infers a schema. */
-  private[ops] val DeconGramsSchema = "eval_id BIGINT, gram STRING, bucket INT"
+  /** Layout contracts of `grams/` and `meta/`: the probe reads with them,
+    * so no footer-read job infers a schema. */
+  private[ops] val DeconGramsSchema = "eval_id BIGINT, gram STRING"
   private[ops] val DeconMetaSchema = "n INT"
   /** The at-rest decontamination pipeline as ONE driver-checkable query:
     * write the eval-gram index (cached per JVM via
@@ -138,16 +134,15 @@ object CorpusPrep {
     * silently join disjoint gram sets); the eval side comes from the
     * index — the probe plan re-tokenizes ONLY the training corpus (one
     * `documents` scan), never the eval slice. The grams read carries an
-    * explicit schema: an empty eval slice writes a data-file-less
-    * partitioned dir, and schema INFERENCE over it would throw where the
-    * in-memory twin returns empty. */
+    * explicit schema: an empty eval slice may write a dir with no data
+    * files, and schema INFERENCE over it would throw where the in-memory
+    * twin returns empty. */
   def deconProbeStored(s: SparkSession, d: String, outDir: String,
       minShared: Int = 2): DataFrame = {
     val n = s.read.schema(DeconMetaSchema).parquet(s"$outDir/meta").head().getInt(0)
     deconJoin(
       docGrams(s, d, n).filter(col("doc_id") % 97 =!= 0),
-      s.read.schema(DeconGramsSchema)
-        .parquet(s"$outDir/grams").select(col("eval_id"), col("gram")),
+      s.read.schema(DeconGramsSchema).parquet(s"$outDir/grams"),
       minShared)
   }
 

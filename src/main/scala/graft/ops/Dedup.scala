@@ -662,23 +662,18 @@ object Dedup {
     * its trained bloom filter, and every arriving batch probes the index
     * — 100 TB of prior text is never re-read, let alone re-hashed, per
     * batch; only candidate ids' bodies are fetched for the exact verify.
-    * Fingerprints are bucketed by fp hash for write parallelism and
-    * incremental index growth (append a new batch's fingerprints to its
-    * buckets); a batch's probe keys are hash-uniform so partition
-    * pruning deliberately does not apply — the index is 16 bytes/doc
-    * against the corpus's full text, which is the scale win. The bloom
-    * bytes ride along as a 1-row table, so probes need no out-of-band
-    * state. */
+    * A batch's probe keys are hash-uniform, so the probe reads the whole
+    * index and the fingerprints are stored as plain parquet, with no
+    * partition column for a probe to prune on — the index is 16
+    * bytes/doc against the corpus's full text, which is the scale win.
+    * The bloom bytes ride along as a 1-row table, so probes need no
+    * out-of-band state. */
   def writeIncrIndex(s: SparkSession, d: String, outDir: String,
-      fpp: Double = 0.03, expectedItems: Long = 1L << 20,
-      nBuckets: Int = 32): Unit = {
+      fpp: Double = 0.03, expectedItems: Long = 1L << 20): Unit = {
     import s.implicits._
     import graft.functions.BloomSupport
-    StoredIndex.writePartitioned(
-      Tables.documents(s, d)
-        .select(col("doc_id"), textFp.as("fp"))
-        .withColumn("bucket", pmod(hash(col("fp")), lit(nBuckets))),
-      nBuckets, "bucket", col("doc_id"), s"$outDir/fp")
+    Tables.documents(s, d).select(col("doc_id"), textFp.as("fp"))
+      .write.mode("overwrite").parquet(s"$outDir/fp")
     // train the bloom from the index JUST WRITTEN, not from a re-derived
     // text plan: the corpus is scanned+hashed exactly once (the "hashed
     // ONCE" contract above), and the filter can never diverge from the
@@ -695,9 +690,9 @@ object Dedup {
     * would throw where the in-memory twin returns empty. */
   private def readFpIndex(s: SparkSession, outDir: String): DataFrame =
     s.read.schema(FpIndexSchema).parquet(s"$outDir/fp")
-  /** Layout contracts of `fp/` (partition column last) and `bloom/`: the
-    * probe reads with them, so no footer-read job infers a schema. */
-  private[ops] val FpIndexSchema = "doc_id BIGINT, fp BIGINT, bucket INT"
+  /** Layout contracts of `fp/` and `bloom/`: the probe reads with them,
+    * so no footer-read job infers a schema. */
+  private[ops] val FpIndexSchema = "doc_id BIGINT, fp BIGINT"
   private[ops] val BloomSchema = "bloom BINARY"
 
   /** The at-rest incremental-dedup pipeline as ONE driver-checkable

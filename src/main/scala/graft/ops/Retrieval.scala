@@ -155,13 +155,10 @@ object Retrieval {
   def writeBm25Index(s: SparkSession, d: String, outDir: String,
       nBuckets: Int = 64): Unit = {
     val ix = buildIndex(s, d)
-    // source-bytes hint: the frame sits above the postings checkpoint,
-    // so inputFiles can't see the corpus — pass the corpus size directly
     StoredIndex.writePartitioned(
       ix.corpus.join(ix.df, "term").join(ix.dl, "doc_id")
         .withColumn("bucket", pmod(hash(col("term")), lit(nBuckets))),
-      nBuckets, "bucket", col("doc_id"), s"$outDir/postings",
-      sourceBytesHint = Tables.pathBytes(s, s"$d/documents.parquet"))
+      "bucket", s"$outDir/postings")
     ix.qterms.write.mode("overwrite").parquet(s"$outDir/qterms")
     ix.totals.withColumn("n_buckets", lit(nBuckets))
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/totals")

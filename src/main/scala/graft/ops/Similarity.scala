@@ -49,6 +49,9 @@ object Similarity {
     * plane table is this wide) instead of silently staying on one side. */
   private[ops] val IndexDims = 64
 
+  /** Most queries a stored probe routes on the driver. */
+  private val MaxDriverQueries = 4096
+
   /** Layout contracts of the at-rest stores ([[writeLshPartitioned]] /
     * [[writeIvfPartitioned]] write exactly these columns; the partition
     * column is last) — stated once so the serving-path probes can read
@@ -120,17 +123,11 @@ object Similarity {
     * regenerates them bit-identically. */
   def writeLshPartitioned(s: SparkSession, d: String, outDir: String,
       nPlanes: Int = 8): Unit =
-    // hash-cluster by (sig, salt) before the partitioned write
-    // (StoredIndex.clustered): bounded files per signature
-    // directory AND write parallelism ≥ the cluster's cores — a bare
-    // repartition(sig) capped it at one task per signature value.
-    // Nominal value count = 2^nPlanes signature buckets (capped: wide
-    // signatures exceed any realistic core count anyway).
     StoredIndex.writePartitioned(
       signedEmbeddings(
         Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
         nPlanes),
-      1 << math.min(nPlanes, 24), "sig", col("vec_id"), s"$outDir/corpus")
+      "sig", s"$outDir/corpus")
 
   /** Probe the stored LSH index: query signatures are computed ON THE
     * DRIVER by the native expression's own kernel ([[SignSignature.compute]],
@@ -140,12 +137,11 @@ object Similarity {
     * as [[ivfProbeStored]]: query cardinality ≪ corpus (vectors are
     * collected to route them); bulk query sets go through [[lshTopK]]. */
   def lshProbeStored(s: SparkSession, d: String, outDir: String,
-      nQueries: Int = 8, k: Int = 5, nPlanes: Int = 8,
-      maxDriverQueries: Int = 4096): DataFrame = {
+      nQueries: Int = 8, k: Int = 5, nPlanes: Int = 8): DataFrame = {
     import s.implicits._
-    require(nQueries <= maxDriverQueries,
+    require(nQueries <= MaxDriverQueries,
       s"lshProbeStored routes queries on the driver (nQueries=$nQueries > " +
-        s"max $maxDriverQueries); use lshTopK for bulk query sets")
+        s"max $MaxDriverQueries); use lshTopK for bulk query sets")
     val qVecs = Tables.embeddings(s, d)
       .filter(col("vec_id") < nQueries)
       .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
@@ -556,12 +552,8 @@ object Similarity {
   /** The IVF store of `emb` under the given centroids. */
   private[ops] def writeIvfStore(s: SparkSession, emb: DataFrame,
       centroids: Array[Array[Double]], outDir: String): Unit = {
-    val assigned = voronoiAssign(emb, centroidFrame(s, centroids))
-    // hash-cluster by (cell, salt) before the partitioned write (see
-    // writeLshPartitioned): bounded files per cell directory without
-    // serializing each cell onto one task
-    StoredIndex.writePartitioned(assigned, centroids.length, "cell",
-      col("vec_id"), s"$outDir/corpus")
+    StoredIndex.writePartitioned(
+      voronoiAssign(emb, centroidFrame(s, centroids)), "cell", s"$outDir/corpus")
     s.createDataFrame(centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
       .toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/centroids")
@@ -598,15 +590,14 @@ object Similarity {
     * for query-set cardinality ≪ corpus — point lookups routed without a
     * Spark job. Bulk query sets (a corpus self-join, an eval sweep) go
     * through [[ivfTopK]], which keeps queries distributed; the
-    * `maxDriverQueries` guard makes the boundary explicit instead of
+    * [[MaxDriverQueries]] guard makes the boundary explicit instead of
     * letting a caller discover it as a driver OOM. */
   def ivfProbeStored(s: SparkSession, d: String, outDir: String,
-      nQueries: Int = 8, k: Int = 5, nProbe: Int = 4,
-      maxDriverQueries: Int = 4096): DataFrame = {
+      nQueries: Int = 8, k: Int = 5, nProbe: Int = 4): DataFrame = {
     import s.implicits._
-    require(nQueries <= maxDriverQueries,
+    require(nQueries <= MaxDriverQueries,
       s"ivfProbeStored routes queries on the driver (nQueries=$nQueries > " +
-        s"max $maxDriverQueries); use ivfTopK for bulk query sets")
+        s"max $MaxDriverQueries); use ivfTopK for bulk query sets")
     val centroids: Array[Array[Double]] =
       s.read.schema(CentroidsSchema)
         .parquet(s"$outDir/centroids")

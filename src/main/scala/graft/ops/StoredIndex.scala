@@ -1,28 +1,26 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** The at-rest lifecycle of the partitioned stored indexes (LSH/IVF
-  * signature stores, BM25 term-bucket postings, incremental-dedup
-  * fingerprints, decontamination grams): one per-JVM store per source
-  * ([[cached]]), one salted partitioned write ([[writePartitioned]]),
-  * and the serving-path read of the probed buckets ([[readProbed]]).
+/** The at-rest lifecycle of the partitioned stored indexes (LSH signature,
+  * IVF cell and BM25 term-bucket stores, each partitioned by the key its
+  * probe prunes on): one per-JVM store per source ([[cached]]), one keyed
+  * partitioned write ([[writePartitioned]]), and the serving-path read of
+  * the probed directories ([[readProbed]]).
   *
   * A probe that opens the store with `read.parquet(base)` pays a full
   * partition DISCOVERY before the partition filter prunes anything: the
-  * driver lists every `col=value` directory under the store — ~0.6 s at
-  * 256 directories on local disk, and an unbounded object-store listing
-  * at the 100 TB layout's 10k-1M buckets — on EVERY probe, for work
-  * whose data volume is O(probed buckets). The serving-path read instead
-  * enumerates exactly the probed directories (the probe already knows
-  * its bucket values — that is what routing computed) and hands Spark
-  * those paths with the store's `basePath`, so the partition column
-  * still materializes from the directory names and the scan's I/O and
-  * listing are both O(probed). Probed values the store never wrote
-  * (empty buckets) are dropped by a per-value existence check — one
-  * point metadata call each, not a listing.
+  * driver lists every `col=value` directory under the store (~0.6 s at
+  * 256 directories on local disk) on EVERY probe, for work whose data
+  * volume is O(probed buckets). The serving-path read instead lists the
+  * store root ONCE, non-recursively (directory names only — no leaf is
+  * opened), keeps the probed directories that exist, and hands Spark only
+  * those paths with the store's `basePath`: the partition column still
+  * materializes from the directory names, and only the probed directories
+  * are scanned. Probed values the store never wrote (empty buckets) drop
+  * out of the same listing.
   *
   * The explicit `dataSchema` is the store's layout contract (stated at
   * each writer); passing it skips footer-based schema inference and
@@ -51,73 +49,13 @@ private[graft] object StoredIndex {
       dir
     })
 
-  /** Target bytes per store file, i.e. per write task of [[clustered]]. */
-  private val TargetStoreFileBytes: Long = 512L * 1024 * 1024
-
-  /** Cluster rows ahead of a `partitionBy(partCol)` store write
-    * ([[writePartitioned]]; exposed for plan dumps and specs). The r21
-    * form — a bare `repartition(col(partCol))` — made every partition
-    * directory exactly one file, but serialized each directory onto ONE
-    * task: at most |distinct partCol| write tasks whatever the data
-    * volume, i.e. skew by construction at scale (64 buckets of a 100 TB
-    * postings store => one task materializes ~1.5 TB; guide §2.5). The
-    * clustering key here is (partCol, bounded deterministic salt): the
-    * salt splits each partition value into `splits` write tasks of
-    * ~`TargetStoreFileBytes` each, so per-task volume is bounded by DATA
-    * SIZE, not by the partition-value cardinality, while files per
-    * directory stay bounded by `splits` (not by upstream partition
-    * count — the many-small-files failure the clustering exists to
-    * prevent; guide §6 distribution-mode hash / file sizing).
-    *
-    * `splits` derives from the SOURCE bytes under the frame
-    * (`df.inputFiles` metadata — exact, driver-side, no job; the same
-    * mechanism parallelizeSmallScan uses) times a fixed derivation
-    * headroom, never from Catalyst size estimates (join estimates can be
-    * off by orders of magnitude) and never from the core count (a
-    * constant tuned to local mode; guide §2 scale-adaptive partitioning).
-    * At bench scale splits = 1 and the salt is the constant 0 — the
-    * exchange degenerates to the plain keyed clustering (one file per
-    * directory), which the r22 interleaved A/B measured as equal-or-
-    * better to any salted/unclustered variant at sf0.1; at 100 TB the
-    * same call yields thousands of bounded write tasks per store.
-    * The salt is pmod(hash(saltFrom)) of a row id — deterministic under
-    * task retries (guide §2.5: never rand()-derived). */
-  private[graft] def clustered(df: DataFrame, nominalValues: Int,
-      partCol: String, saltFrom: Column,
-      sourceBytesHint: Long = -1L): DataFrame = {
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    val sourceBytes =
-      if (sourceBytesHint >= 0L) sourceBytesHint
-      else df.inputFiles.map { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(conf).getFileStatus(p).getLen
-      }.sum
-    // 4x headroom: the written frame is a derivation of the source
-    // (postings/grams expand text; signatures shrink it) — at 512 MB
-    // file granularity the factor only matters within ~2x anyway
-    val perValueBytes = 4.0 * sourceBytes / math.max(1, nominalValues)
-    val splits = math.max(1,
-      math.ceil(perValueBytes / TargetStoreFileBytes).toInt)
-    df.repartition(col(partCol), pmod(hash(saltFrom), lit(splits)))
-  }
-
   /** Write `df` as a store at `path`, one `partCol=v` directory per
-    * bucket, clustered by ([[clustered]]) `partCol` and a salt of
-    * `saltFrom`; `nominalValues` is the expected bucket count. */
-  def writePartitioned(df: DataFrame, nominalValues: Int, partCol: String,
-      saltFrom: Column, path: String, sourceBytesHint: Long = -1L): Unit =
-    clustered(df, nominalValues, partCol, saltFrom, sourceBytesHint)
+    * value. The keyed exchange puts every row of a value in one write
+    * task, so each directory holds one file, however many partitions
+    * `df` arrives in. */
+  def writePartitioned(df: DataFrame, partCol: String, path: String): Unit =
+    df.repartition(col(partCol))
       .write.mode("overwrite").partitionBy(partCol).parquet(path)
-
-  /** Past this many probed values, ONE store listing beats per-value
-    * existence checks: each `fs.exists` is a driver metadata round trip
-    * (~20 ms against an object store), so a wide probe — the 512/1024-
-    * query parity sweeps route to nearly every bucket — would pay
-    * thousands of serial round trips where a single LIST (paged, but
-    * one logical call) answers them all. Narrow probes (the serving
-    * shape: a handful of buckets out of up to millions) stay on point
-    * checks, never paying an O(all buckets) listing. */
-  private val ListingThreshold = 32
 
   /** Probed values must be integral (Int/Long and their boxed forms):
     * the directory name is built by plain interpolation, and integral
@@ -137,116 +75,54 @@ private[graft] object StoredIndex {
         "rendering for Int/Long (store on numeric buckets)")
   }
 
-  /** Bounded concurrency for narrow-probe existence checks: each
-    * `fs.exists` is a driver metadata round trip (~20 ms against an
-    * object store), so running up to [[ListingThreshold]] of them
-    * serially costs ~640 ms of serving-path latency where eight in
-    * flight cost ~80. Eight is small enough never to look like a
-    * listing storm to an object store's request limiter. The pool is
-    * shared (probes are latency-critical; constructing a pool per probe
-    * is avoidable work) and its threads are daemons, so an in-flight
-    * check can never hold the JVM open. */
-  private val ExistsParallelism = 8
-
-  private lazy val existsPool = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    java.util.concurrent.Executors.newFixedThreadPool(ExistsParallelism,
-      (r: Runnable) => {
-        val t = new Thread(r, s"stored-index-exists-${counter.incrementAndGet()}")
-        t.setDaemon(true)
-        t
-      })
-  }
-
   /** Read only the `partCol=v` directories of `base` for the probed
     * `values` (deduplicated — a repeated value must not scan its
     * directory twice), as a DataFrame with `dataSchema` (which INCLUDES
-    * the partition column). Probed-but-unwritten buckets drop silently
-    * (an empty bucket is a normal serving outcome); a missing store
-    * root or a `partCol` that matches NO directory of a non-empty store
-    * throws — those are caller errors that the old whole-store read
-    * also surfaced, and an empty frame would disguise them as "no
-    * candidates". No listing/existence result is cached: `base` may be
-    * a caller-managed store rewritten in place (the content-keyed temp
-    * dirs of [[cached]] are immutable, but the probe API cannot
-    * assume its input is one of them). */
+    * the partition column). One non-recursive listing of the root
+    * answers every existence question: probed-but-unwritten buckets drop
+    * silently (an empty bucket is a normal serving outcome), while a
+    * missing root, a root keyed on another column and an unpartitioned
+    * root throw — caller errors that the whole-store read also
+    * surfaced, and that an empty frame would disguise as "no
+    * candidates". An empty probe reads nothing and touches no metadata.
+    * No listing is cached: `base` may be a caller-managed store
+    * rewritten in place (the content-keyed temp dirs of [[cached]] are
+    * immutable, but the probe API cannot assume its input is one). */
   def readProbed(s: SparkSession, base: String, partCol: String,
       values: Seq[Any], dataSchema: StructType): DataFrame = {
     val probed = values.distinct
     probed.foreach(requireIntegral)
-    val hconf = s.sessionState.newHadoopConf()
+    lazy val empty = s.createDataFrame(s.sparkContext.emptyRDD[Row], dataSchema)
+    if (probed.isEmpty) return empty
     val basePath = new org.apache.hadoop.fs.Path(base)
-    val fs = basePath.getFileSystem(hconf)
-    if (!fs.exists(basePath))
-      throw new IllegalArgumentException(
-        s"stored-index root does not exist: $base (probe before write?)")
-    // a query routed to no buckets reads nothing — and must not pay the
-    // listing below (nothing to sanity-check either: no probed value
-    // could have matched any layout)
-    if (probed.isEmpty)
-      return s.createDataFrame(s.sparkContext.emptyRDD[Row], dataSchema)
-    // one store listing answers every existence question at once past
-    // the threshold; below it, per-value point checks (bounded-parallel:
-    // each is an independent metadata round trip, so up to
-    // ExistsParallelism run in flight) — and the listing, when taken, is
-    // REUSED for the layout sanity check so the empty outcome never pays
-    // a second one
-    val listed: Option[Array[org.apache.hadoop.fs.FileStatus]] =
-      if (probed.size > ListingThreshold) Some(fs.listStatus(basePath))
-      else None
-    val existing: Seq[String] = listed match {
-      case Some(statuses) =>
-        val dirs = statuses.filter(_.isDirectory).map(_.getPath.getName).toSet
-        probed.map(v => s"$partCol=$v").filter(dirs)
-          .map(n => new org.apache.hadoop.fs.Path(basePath, n).toString)
-      case None =>
-        val paths = probed.map(v =>
-          new org.apache.hadoop.fs.Path(basePath, s"$partCol=$v"))
-        if (paths.size <= 1) paths.filter(fs.exists).map(_.toString)
-        else {
-          val checks = paths.map(p =>
-            p -> existsPool.submit(new java.util.concurrent.Callable[Boolean] {
-              def call(): Boolean = fs.exists(p)
-            }))
-          try checks.collect { case (p, hit) if hit.get() => p.toString }
-          catch {
-            // a failing metadata call must surface as itself (the
-            // IOException the serial path threw), not wrapped in the
-            // pool's ExecutionException — and the remaining checks are
-            // cancelled rather than left hammering a store that is
-            // already erroring
-            case e: java.util.concurrent.ExecutionException =>
-              checks.foreach(_._2.cancel(true))
-              throw e.getCause
-          }
-        }
-    }
-    if (existing.isEmpty) {
-      // all probed buckets missing: legitimate only if the store's
-      // layout is at least KEYED on partCol — a wrong column name can
-      // never match, and a store whose data files sit at the root (an
-      // unpartitioned write) has no bucket directories to match either;
-      // both are caller errors the old whole-store read surfaced as an
-      // AnalysisException and must not masquerade as an empty result.
-      // Hidden entries (_SUCCESS, .crc) don't make a root "unpartitioned"
-      // — a partitioned write of an empty frame leaves only those.
-      // Narrow probes pay the one listing only on this failure path.
-      val statuses = listed.getOrElse(fs.listStatus(basePath))
-      val dirs = statuses.filter(_.isDirectory).map(_.getPath.getName)
+    val fs = basePath.getFileSystem(s.sessionState.newHadoopConf())
+    val statuses =
+      try fs.listStatus(basePath)
+      catch {
+        case _: java.io.FileNotFoundException =>
+          throw new IllegalArgumentException(
+            s"stored-index root does not exist: $base (probe before write?)")
+      }
+    val dirs = statuses.filter(_.isDirectory).map(_.getPath.getName).toSet
+    if (!dirs.exists(_.startsWith(partCol + "="))) {
+      // hidden entries (_SUCCESS, .crc) don't make a root "unpartitioned":
+      // a partitioned write of an empty frame leaves only those
       val dataFiles = statuses.filter(st => !st.isDirectory &&
         !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
-      if (dataFiles.nonEmpty && !dirs.exists(_.startsWith(partCol + "=")))
+      if (dataFiles.nonEmpty)
         throw new IllegalArgumentException(
           s"store at $base is not partitioned at all (data files at the " +
             s"root, e.g. ${dataFiles.head.getPath.getName}); readProbed " +
             s"needs a store written with partitionBy('$partCol')")
-      if (dirs.nonEmpty && !dirs.exists(_.startsWith(partCol + "=")))
+      if (dirs.nonEmpty)
         throw new IllegalArgumentException(
           s"store at $base is not partitioned by '$partCol' " +
             s"(found: ${dirs.take(3).mkString(", ")}…)")
-      s.createDataFrame(s.sparkContext.emptyRDD[Row], dataSchema)
-    } else
-      s.read.schema(dataSchema).option("basePath", base).parquet(existing: _*)
+    }
+    val existing = probed.map(v => s"$partCol=$v").filter(dirs)
+      .map(n => new org.apache.hadoop.fs.Path(basePath, n).toString)
+    if (existing.isEmpty) empty
+    else s.read.schema(dataSchema).option("basePath", base).parquet(existing: _*)
   }
 }

@@ -84,9 +84,7 @@ object Tables {
   private[graft] def smallScanBytes(par: Int): Long =
     math.min(par.toLong * 4L * 1024 * 1024, 1024L * 1024 * 1024)
 
-  /** Total bytes under a path (driver metadata, no job) — the source-
-    * size hint for [[StoredIndex.clustered]] callers whose frame
-    * sits above a checkpoint (inputFiles is empty there). */
+  /** Total bytes under a path (driver metadata, no job). */
   private[graft] def pathBytes(s: SparkSession, path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sessionState.newHadoopConf())

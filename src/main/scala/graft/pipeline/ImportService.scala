@@ -33,7 +33,9 @@ object ImportService {
     * two renames (state moved aside, new state not yet in place), the
     * backup IS the state — restore it. Also sweeps temp dirs stranded by
     * writes that crashed mid-write. Called by `start` before anything
-    * reads the state. */
+    * reads the state. Like [[writeState]], it assumes an atomic
+    * directory rename (`file:`, `hdfs:`); object stores such as `s3a:`
+    * are not supported as `stateDir`. */
   def recoverState(spark: SparkSession, stateDir: String): Unit = {
     val target = new org.apache.hadoop.fs.Path(stateDir)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -61,7 +63,13 @@ object ImportService {
     * before the new one takes its place, never deleted while it is the
     * only copy, and [[recoverState]] (run by `start`) restores the
     * backup if a crash landed between the renames and sweeps stranded
-    * temp dirs. */
+    * temp dirs.
+    *
+    * The protocol needs an atomic directory rename, which `file:` and
+    * `hdfs:` provide. Object stores such as `s3a:` rename a directory by
+    * copying and deleting its files one by one, so a crash mid-rename
+    * can leave a partial table under either name: they are not supported
+    * as `stateDir`. */
   def writeState(newState: DataFrame, stateDir: String): Unit = {
     val spark = newState.sparkSession
     val fs = new org.apache.hadoop.fs.Path(stateDir)

@@ -8,8 +8,9 @@ import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
   * local filesystem while recording every `listStatus`/`exists` path.
   *
   * StoredIndex exists to BOUND driver metadata calls (its scaladoc:
-  * O(probed) point checks on narrow probes, exactly one listing on wide
-  * probes, zero store calls on the empty probe) — but result-correctness
+  * exactly one root listing per probe, no call on a bucket directory
+  * the probe did not select, zero store calls on the empty probe) — but
+  * result-correctness
   * specs can't see a regression that re-introduces store-wide discovery:
   * the r15-r18 full-store-listing bug returned correct rows for four
   * rounds and only surfaced as cross-round bench drift. These counters

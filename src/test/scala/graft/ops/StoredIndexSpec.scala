@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The serving-path store read in isolation: only the probed partition
-  * directories enter the scan, probed-but-unwritten buckets drop via the
-  * existence check, and the all-missing edge returns an EMPTY frame with
+  * directories enter the scan, probed-but-unwritten buckets drop out of
+  * the one root listing, and the all-missing edge returns an EMPTY frame with
   * the contract schema instead of throwing (the integration sweeps in
   * ScaleDesignSpec always probe at least one written bucket, so the
   * empty branch is pinned only here). */
@@ -45,22 +45,15 @@ class StoredIndexSpec extends SparkSpec {
     }.flatten
     assert(scanPaths.sorted == Seq("bucket=10", "bucket=30"),
       s"scan listed more than the probed dirs: $scanPaths")
-  }
-
-  test("wide probes take the single-listing branch and agree with point checks") {
-    val dir = writeStore()
-    // > ListingThreshold values forces the one-listing path; result must
-    // be identical to what the narrow (per-value exists) path returns
-    val wide = (0L until 40L).map(_ * 10L) // includes 10, 20, 30 + 37 misses
-    val viaListing = StoredIndex.readProbed(spark, dir, "bucket", wide, schema)
-      .select(col("id"), col("bucket"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val viaPoints = StoredIndex.readProbed(spark, dir, "bucket",
-        Seq(10L, 20L, 30L), schema)
-      .select(col("id"), col("bucket"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(viaListing == viaPoints)
-    assert(viaListing == Seq((1L, 10L), (2L, 10L), (3L, 20L), (4L, 30L)))
+    // a wide probe (every written bucket plus 37 misses) reads every row
+    // once, the same rows a probe of exactly the written buckets reads
+    def ids(values: Seq[Long]) =
+      StoredIndex.readProbed(spark, dir, "bucket", values, schema)
+        .select(col("id"), col("bucket"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val wide = ids((0L until 40L).map(_ * 10L))
+    assert(wide == ids(Seq(10L, 20L, 30L)))
+    assert(wide == Seq((1L, 10L), (2L, 10L), (3L, 20L), (4L, 30L)))
   }
 
   test("caller errors fail fast instead of masquerading as empty results") {
@@ -153,46 +146,42 @@ class StoredIndexSpec extends SparkSpec {
 
   private def rootLists(root: String): Seq[String] =
     CountingFs.listedPaths.filter(_ == root)
+  private def bucketLists(root: String): Seq[String] =
+    CountingFs.listedPaths.filter(_.startsWith(root + "/bucket="))
   private def bucketExists(root: String): Seq[String] =
     CountingFs.existedPaths.filter(_.startsWith(root + "/bucket="))
 
-  test("narrow probe: zero store listings, metadata touches only probed dirs") {
+  /** Probe `values` through the counting fs; the store calls must be ONE
+    * root listing, then calls only on probed directories the store
+    * holds: a listing of an unprobed directory is store-wide discovery,
+    * and an `exists` on a missing one is a point check the root listing
+    * already answered. Spark's own scan setup re-checks each SELECTED
+    * leaf, so the bound is per-path O(1), not a raw total. */
+  private def assertProbeCalls(values: Seq[Long], rows: Long): Unit = {
     val (base, local) = countingStore()
     CountingFs.reset()
-    val n = StoredIndex.readProbed(spark, base, "bucket",
-      Seq(10L, 30L, 99L), schema).count()
-    assert(n == 3)
-    assert(rootLists(local).isEmpty,
-      s"narrow probe paid a store listing: ${CountingFs.listedPaths}")
-    // Spark's own scan setup re-checks each SELECTED leaf once, so the
-    // bound is per-path O(1), not a raw total: every exists call lands
-    // on a probed directory (never store-wide), and the MISSING bucket —
-    // which only our point check can touch — is checked exactly once.
+    assert(StoredIndex.readProbed(spark, base, "bucket", values, schema)
+      .count() == rows)
+    assert(rootLists(local).size == 1,
+      s"a probe lists the store root exactly once: ${rootLists(local)}")
+    val selected = values.toSet.intersect(Set(10L, 20L, 30L))
+      .map(v => s"$local/bucket=$v")
+    val lists = bucketLists(local)
+    assert(lists.forall(selected),
+      s"listing outside the probed, written dirs: $lists")
     val exists = bucketExists(local)
-    val allowed = Set(10L, 30L, 99L).map(v => s"$local/bucket=$v")
-    assert(exists.forall(allowed), s"metadata call outside the probe: $exists")
-    assert(exists.count(_.endsWith("bucket=99")) == 1,
-      s"a probed-but-missing bucket is point-checked once: $exists")
-    assert(exists.size <= 2 * 3, s"per-path checks must stay O(1): $exists")
+    assert(exists.forall(selected),
+      s"exists call on an unprobed or missing dir: $exists")
+    assert(exists.size <= 2 * selected.size,
+      s"per-path checks must stay O(1): $exists")
+  }
+
+  test("narrow probe: one store listing, metadata touches only probed dirs") {
+    assertProbeCalls(Seq(10L, 30L, 99L), rows = 3)
   }
 
   test("wide probe: exactly one store listing, zero per-value point checks") {
-    val (base, local) = countingStore()
-    CountingFs.reset()
-    val wide = (0L until 40L).map(_ * 10L)
-    val n = StoredIndex.readProbed(spark, base, "bucket", wide, schema).count()
-    assert(n == 4)
-    assert(rootLists(local).size == 1,
-      s"wide probe must pay exactly one store listing: ${rootLists(local)}")
-    // the listing answers every existence question: no exists call may
-    // land on a probed-but-missing bucket (the point-check branch would
-    // have checked all 37 of them); Spark's scan setup still re-checks
-    // the SELECTED leaves, which is per-selected-path O(1)
-    val selected = Set(10L, 20L, 30L).map(v => s"$local/bucket=$v")
-    val exists = bucketExists(local)
-    assert(exists.forall(selected),
-      s"wide probe must not point-check missing buckets: $exists")
-    assert(exists.size <= 2 * 3, s"per-path checks must stay O(1): $exists")
+    assertProbeCalls((0L until 40L).map(_ * 10L), rows = 4)
   }
 
   test("empty probe: zero listings and zero point checks against the store") {
@@ -200,18 +189,13 @@ class StoredIndexSpec extends SparkSpec {
     CountingFs.reset()
     assert(StoredIndex.readProbed(spark, base, "bucket", Nil, schema)
       .count() == 0)
-    assert(rootLists(local).isEmpty && bucketExists(local).isEmpty,
-      "the empty probe reads nothing and must pay no store metadata " +
-        s"calls (got lists=${rootLists(local)} exists=${bucketExists(local)})")
+    assert(CountingFs.listedPaths.forall(!_.startsWith(local)) &&
+        CountingFs.existedPaths.forall(!_.startsWith(local)),
+      "the empty probe reads nothing and must pay no store metadata calls " +
+        s"(got lists=${CountingFs.listedPaths} exists=${CountingFs.existedPaths})")
   }
 
   test("all-missing narrow probe pays the sanity listing exactly once") {
-    val (base, local) = countingStore()
-    CountingFs.reset()
-    assert(StoredIndex.readProbed(spark, base, "bucket",
-      Seq(98L, 99L), schema).count() == 0)
-    assert(rootLists(local).size == 1,
-      "the wrong-partCol/unpartitioned sanity check runs on the all-" +
-        s"missing path and costs one listing: ${rootLists(local)}")
+    assertProbeCalls(Seq(98L, 99L), rows = 0)
   }
 }

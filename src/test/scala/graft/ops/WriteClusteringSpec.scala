@@ -3,13 +3,11 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Pins [[StoredIndex.clustered]] — the r22 store-writer
-  * clustering (VERDICT r21 item 1): the clustering key must be
-  * (partition column, bounded deterministic salt) with `splits` derived
-  * from SOURCE BYTES at the 512 MB/task target, so per-task write volume
-  * is bounded by data size (not by partition-value cardinality — the
-  * one-task-per-bucket scale stall), while small stores degenerate to
-  * the plain keyed clustering (constant salt, one file per directory). */
+/** Pins the store-writer clustering of [[StoredIndex.writePartitioned]]:
+  * the keyed exchange on the partition column puts every row of a value
+  * in one write task, so each partition directory holds exactly one file
+  * however many partitions the input arrives in (the many-small-files
+  * failure the clustering exists to prevent). */
 class WriteClusteringSpec extends SparkSpec {
 
   private lazy val srcDir: String = {
@@ -22,38 +20,15 @@ class WriteClusteringSpec extends SparkSpec {
     s"$dir/src"
   }
 
-  private def saltDivisor(df: org.apache.spark.sql.DataFrame): Long = {
-    val s = df.queryExecution.analyzed.toString
-    val m = """pmod\(hash\([^)]*\), (\d+)\)""".r.findFirstMatchIn(s)
-    assert(m.isDefined, s"no pmod(hash(...), n) salt in plan:\n$s")
-    m.get.group(1).toLong
-  }
-
-  test("small sources degenerate to a constant salt (splits = 1)") {
-    val in = spark.read.parquet(srcDir)
-      .withColumn("bucket", pmod(hash(col("id")), lit(64)))
-    val out = StoredIndex.clustered(in, 64, "bucket", col("id"))
-    assert(saltDivisor(out) === 1L)
-  }
-
-  test("splits derive from source bytes at the 512 MB/task target") {
-    val in = spark.read.parquet(srcDir)
-      .withColumn("bucket", pmod(hash(col("id")), lit(64)))
-    // 1 TiB source, 64 buckets: ceil(4 * 2^40 / 64 / 2^29) = 128 splits
-    val out = StoredIndex.clustered(in, 64, "bucket", col("id"),
-      sourceBytesHint = 1L << 40)
-    assert(saltDivisor(out) === 128L)
-    // and the salt source is the row id — deterministic under retries
-    assert(out.queryExecution.analyzed.toString.contains("pmod(hash(id"))
-  }
-
   test("clustered small-scale write yields one file per partition directory") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-writeclustering-out").toString
     graft.Scaffold.cleanupOnExit(dir)
-    val in = spark.read.parquet(srcDir)
+    // spread over 8 input partitions: without the keyed exchange each
+    // directory would receive up to 8 files
+    val in = spark.read.parquet(srcDir).repartition(8)
       .withColumn("bucket", pmod(hash(col("id")), lit(16)))
-    StoredIndex.writePartitioned(in, 16, "bucket", col("id"), s"$dir/store")
+    StoredIndex.writePartitioned(in, "bucket", s"$dir/store")
     val buckets = new java.io.File(s"$dir/store").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
     assert(buckets.length === 16)
