@@ -45,8 +45,13 @@ class StoredIndexSpec extends SparkSpec {
     }.flatten
     assert(scanPaths.sorted == Seq("bucket=10", "bucket=30"),
       s"scan listed more than the probed dirs: $scanPaths")
+  }
+
+  test("wide probes take the single-listing branch and agree with point checks") {
+    val dir = writeStore()
     // a wide probe (every written bucket plus 37 misses) reads every row
-    // once, the same rows a probe of exactly the written buckets reads
+    // once, the same rows a probe of exactly the written buckets reads;
+    // both answer existence from the one root listing
     def ids(values: Seq[Long]) =
       StoredIndex.readProbed(spark, dir, "bucket", values, schema)
         .select(col("id"), col("bucket"))
