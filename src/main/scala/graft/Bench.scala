@@ -238,9 +238,11 @@ object Bench {
     // t_lifecycle_state 11.2 s cold vs 2.1 s warm on identical data) —
     // one-time janino/catalyst/JIT cost that a long-running 100 TB job
     // amortizes to zero. Warmup runs the same plan shapes on sf0.001 so
-    // the codegen cache serves the timed runs; timed numbers then
-    // reflect per-query steady-state cost. Standard bench methodology;
-    // disable by pointing SPARK_GRAFT_WARMUP_DIR at a missing path.
+    // the codegen cache serves the timed runs (the cache sized in
+    // Sessions holds all 922 classes the warmup compiles); timed numbers
+    // then reflect per-query steady-state cost. Standard bench
+    // methodology; disable by pointing SPARK_GRAFT_WARMUP_DIR at a
+    // missing path.
     val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR",
       "/root/testdata/sf0.001")
     // (subset filter declared early so warmup and timing agree on scope)

@@ -34,4 +34,15 @@ object Sessions {
       // 1.0-1.2 vs 1.4-1.6): the extra tiny post-shuffle tasks are pure
       // overhead once scans parallelize. Dropped — fewer tuned constants.
       .config("spark.ui.enabled", "false")
+      // Spark keeps generated classes in one JVM-wide LRU (a static conf,
+      // so the first session of a JVM fixes it). At the default of 100 a
+      // working set larger than the cache is recompiled on every pass: the
+      // 11 corpus operators at sf0.001 compile 294 classes cold and
+      // 183-189 again on every steady pass (3.1-3.6 s a pass; 2.4-2.7 s
+      // when nothing is recompiled). The largest pass any entry point
+      // makes, Bench's warm-up of all 102 driver queries at sf0.001,
+      // compiles 922 distinct classes (counted with an unbounded cache);
+      // 2,000 holds that with room for the timed runs' own plans. With it
+      // a steady corpus pass compiles nothing (CorpusPassCodegenSpec).
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
 }

@@ -25,6 +25,8 @@ import org.apache.spark.sql.functions._
   */
 object ExtractPipeline {
 
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.pipeline.ExtractPipeline")
+
   /** `firstOfSubject` marks the page's first row of each subject: the
     * row [[withProvenance]] adds that subject's provenance quad to. */
   final case class PageQuad(url: String, subject: Term, predicate: Term,
@@ -35,7 +37,8 @@ object ExtractPipeline {
     * jsdom-style teardown cost, cf. reference T6 heap backoff,
     * lib/pipeline-import.js:48-62, which this design deletes). Extraction
     * failures are isolated per page (T4, lib/pipeline-import.js:64-70):
-    * a failing page yields zero quads instead of aborting the task. */
+    * a failing page yields zero quads instead of aborting the task, and
+    * logs one WARN line with its url and the exception class. */
   def extractQuads(spark: SparkSession, pages: DataFrame): DataFrame = {
     import spark.implicits._
     pages.select(col("url").cast("string"), col("html").cast("string"))
@@ -50,8 +53,9 @@ object ExtractPipeline {
           RdfaExtractor.extract(html, url).map(q =>
             PageQuad(url, q.subject, q.predicate, q.obj, url, seen.add(q.subject)))
         } catch {
-          case scala.util.control.NonFatal(_) => Seq.empty
-          case _: StackOverflowError => Seq.empty
+          case e @ (scala.util.control.NonFatal(_) | _: StackOverflowError) =>
+            log.warn(s"extraction failed for $url: ${e.getClass.getName}")
+            Seq.empty
         }
       }
       .toDF()

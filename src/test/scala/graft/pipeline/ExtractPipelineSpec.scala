@@ -245,12 +245,35 @@ class ExtractPipelineSpec extends SparkSpec {
   }
 
   test("malformed page is isolated, not fatal (T4)") {
-    val mixed = Seq(
-      ("https://example.org/ok", page),
+    // each failing page logs one WARN line with its url and exception
+    // class; nesting this deep overflows the recursive RDFa walk
+    val deep = "<html><body>" + "<span>" * 100000 + "x</body></html>"
+    val okUrl = "https://example.org/ok"
+    val mixed = Seq((okUrl, page), ("https://example.org/deep", deep),
       ("https://example.org/broken", null: String)).toDF("url", "html")
-    val out = ExtractPipeline.run(spark, mixed)
-    assert(out.filter($"url" === "https://example.org/ok").count() > 0)
-    assert(out.filter($"url" === "https://example.org/broken").count() == 0)
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "extract-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        events.add(s"${e.getLevel} ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger("graft.pipeline.ExtractPipeline")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    logger.addAppender(appender)
+    def lines(df: org.apache.spark.sql.DataFrame) =
+      df.select($"ttl").as[String].collect().sorted.toSeq
+    val got = try lines(ExtractPipeline.run(spark, mixed))
+      finally { logger.removeAppender(appender); appender.stop() }
+    import scala.jdk.CollectionConverters._
+    assert(events.asScala.toSeq.sorted == Seq(
+      "WARN extraction failed for https://example.org/broken: java.lang.NullPointerException",
+      "WARN extraction failed for https://example.org/deep: java.lang.StackOverflowError"))
+    // the failing pages add nothing; the good page's output is unchanged
+    assert(got.nonEmpty)
+    assert(got == lines(ExtractPipeline.run(spark, Seq((okUrl, page)).toDF("url", "html"))))
   }
 
   test("synthesized driver harness populates all three verdict partitions") {

@@ -16,9 +16,7 @@ import org.apache.spark.sql.functions._
 object JsNumberSoupSweep {
   def main(args: Array[String]): Unit = {
     val nSeeds = if (args.nonEmpty) args(0).toInt else 10
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.localBuilder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val (bad, n) = sweep(1 to nSeeds, spark)
     println(s"$bad mismatches across $nSeeds seeds ($n inputs)")
