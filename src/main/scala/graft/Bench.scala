@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Pass-acceptance rule, extracted pure so BenchStatsSpec can pin it on
@@ -80,6 +79,19 @@ object Bench {
     case None => "error"
   }
 
+  /** A bench_detail JSON number as a Double, whichever json4s node
+    * (JDouble, JDecimal, JInt, JLong) the parser chose for it. */
+  private def num(v: org.json4s.JValue): Option[Double] = {
+    import org.json4s._
+    v match {
+      case JDouble(d) => Some(d)
+      case JDecimal(d) => Some(d.toDouble)
+      case JInt(i) => Some(i.toDouble)
+      case JLong(l) => Some(l.toDouble)
+      case _ => None
+    }
+  }
+
   /** (per-query min over "runs", per-query "noise_floor_sec") of a
     * bench_detail JSON document. json4s ships with Spark.
     *
@@ -95,13 +107,6 @@ object Bench {
       json: String): (Map[String, Double], Map[String, Double]) = {
     import org.json4s._
     val jv = org.json4s.jackson.JsonMethods.parse(json)
-    def num(v: JValue): Option[Double] = v match {
-      case JDouble(d) => Some(d)
-      case JDecimal(d) => Some(d.toDouble)
-      case JInt(i) => Some(i.toDouble)
-      case JLong(l) => Some(l.toDouble)
-      case _ => None
-    }
     val cached: Set[(String, Int)] = jv \ "cached_read" match {
       case JArray(entries) => entries.flatMap {
         case JArray(List(JString(n), p)) => num(p).map(d => (n, d.toInt))
@@ -148,13 +153,6 @@ object Bench {
   private[graft] def parseDriveTriggerMins(json: String): Map[String, Double] = {
     import org.json4s._
     val jv = org.json4s.jackson.JsonMethods.parse(json)
-    def num(v: JValue): Option[Double] = v match {
-      case JDouble(d) => Some(d)
-      case JDecimal(d) => Some(d.toDouble)
-      case JInt(i) => Some(i.toDouble)
-      case JLong(l) => Some(l.toDouble)
-      case _ => None
-    }
     jv \ "drive_trigger_ms" match {
       case JObject(fields) => fields.flatMap {
         case (n, JArray(vs)) =>

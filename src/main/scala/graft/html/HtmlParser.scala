@@ -1298,8 +1298,7 @@ object HtmlParser {
   /** Pop until the builder at stack index `idx` (inclusive) is closed.
     * `pop` is the caller's finish (it also clears formatting-list
     * markers when a cell/caption/template closes). */
-  private def popThrough(stack: mutable.Stack[Builder], idx: Int,
-      pop: () => Unit): Unit = {
+  private def popThrough(idx: Int, pop: () => Unit): Unit = {
     var i = idx
     while (i >= 0) { pop(); i -= 1 }
   }
@@ -1314,7 +1313,7 @@ object HtmlParser {
       pop: () => Unit): Unit = {
     val idx = stack.indexWhere(b => b.tag == "p" ||
       buttonScopeBarrier(b.tag) || foreignScopeBarrier(b))
-    if (idx >= 0 && stack(idx).tag == "p") popThrough(stack, idx, pop)
+    if (idx >= 0 && stack(idx).tag == "p") popThrough(idx, pop)
   }
 
   /** The li (and dd/dt) sibling walk: from the stack top, close an open
@@ -1324,7 +1323,7 @@ object HtmlParser {
       targets: Set[String], pop: () => Unit): Unit = {
     val idx = stack.indexWhere(b => targets(b.tag) ||
       liWalkBarrier(b.tag) || foreignScopeBarrier(b))
-    if (idx >= 0 && targets(stack(idx).tag)) popThrough(stack, idx, pop)
+    if (idx >= 0 && targets(stack(idx).tag)) popThrough(idx, pop)
   }
 
   private def impliedEndTags(stack: mutable.Stack[Builder], tag: String,
@@ -1347,7 +1346,7 @@ object HtmlParser {
         val idx = stack.indexWhere(b => b.tag == "table" || b.tag == "td" ||
           b.tag == "th" || b.tag == "caption" || b.tag == "template" ||
           b.tag == "#root")
-        if (idx >= 0 && stack(idx).tag == "table") popThrough(stack, idx, pop)
+        if (idx >= 0 && stack(idx).tag == "table") popThrough(idx, pop)
       case "h1" | "h2" | "h3" | "h4" | "h5" | "h6" =>
         closePInButtonScope(stack, pop)
         // in-body heading start: a CURRENT h1-h6 node is popped (parse
@@ -1390,7 +1389,7 @@ object HtmlParser {
         // first — buttons never nest
         val idx = stack.indexWhere(b => b.tag == "button" ||
           buttonScopeBarrier(b.tag) || foreignScopeBarrier(b))
-        if (idx >= 0 && stack(idx).tag == "button") popThrough(stack, idx, pop)
+        if (idx >= 0 && stack(idx).tag == "button") popThrough(idx, pop)
       case _ => ()
     }
   }

@@ -213,18 +213,24 @@ object Dedup {
   def semanticClusters(s: SparkSession, d: String,
       threshold: Double = 0.4): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    // parallelize the STREAMED side of the all-pairs nested-loop join
-    // (Tables.parallelizeSmallScan): the n² cosine evaluations fuse into
-    // the streamed scan's stage, which is one task on a one-file corpus —
-    // measured 4.0 s of 4.3 s single-threaded at sf0.1 on 32 cores
+    clustersFromPairs(s, emb, cosinePairs(emb)
+      .filter(col("sim") >= threshold).select(col("a_id"), col("b_id")))
+  }
+
+  /** The exact all-pairs cosine frame `(a_id, b_id, sim)`: every
+    * unordered vector pair once (`a_id < b_id`), `sim` the native
+    * [[graft.functions.CosineSimilarity]] rounded to 4 decimals. The
+    * STREAMED side of the nested-loop join is spread by
+    * [[Tables.parallelizeSmallScan]]: the n² cosine evaluations fuse into
+    * its stage, which is one task on a one-file corpus — measured 4.0 s
+    * of 4.3 s single-threaded at sf0.1 on 32 cores. */
+  private def cosinePairs(emb: DataFrame): DataFrame = {
     val a = Tables.parallelizeSmallScan(
       emb.select(col("vec_id").as("a_id"), col("embedding").as("ea")))
     val b = emb.select(col("vec_id").as("b_id"), col("embedding").as("eb"))
-    val pairs = a.join(b, col("a_id") < col("b_id"))
-      .filter(round(graft.functions.CosineSimilarity(col("ea"), col("eb")), 4)
-        >= threshold)
-      .select(col("a_id"), col("b_id"))
-    clustersFromPairs(s, emb, pairs)
+    a.join(b, col("a_id") < col("b_id"))
+      .select(col("a_id"), col("b_id"),
+        round(graft.functions.CosineSimilarity(col("ea"), col("eb")), 4).as("sim"))
   }
 
   /** Shared verify-then-label tail: cosine-verified pairs → connected
@@ -328,6 +334,20 @@ object Dedup {
         carry.flatMap(c =>
           Seq(col(s"a.$c").as(s"a_$c"), col(s"b.$c").as(s"b_$c"))): _*)
 
+  /** Planted exact copies in one scan, for the duplicate-guarantee
+    * operators: every row of `rows` twice, as is and with `id` shifted
+    * by `offset` — the rows of the frame unioned with its shifted copy,
+    * in one pass over it. `id` comes first, the other columns keep their
+    * order. A copy carries its original's content, so work that is a
+    * pure function of the content (signatures, fingerprints, digests) is
+    * best computed before this step: identical rows at half the work. */
+  private[ops] def planted(rows: DataFrame, id: String,
+      offset: Long): DataFrame =
+    rows.select(rows.columns.toSeq.map(col) :+
+        explode(array(lit(0L), lit(offset))).as("off"): _*)
+      .select((col(id) + col("off")).as(id) +:
+        rows.columns.toSeq.filter(_ != id).map(col): _*)
+
   private[ops] def semanticClustersLshOf(s: SparkSession, emb: DataFrame,
       threshold: Double, bands: Int, bitsPerBand: Int): DataFrame = {
     val vecs0 = emb.select(col("vec_id"), col("embedding"))
@@ -380,12 +400,9 @@ object Dedup {
     * rather than hardcoded arithmetic. */
   def semanticDupClusters(s: SparkSession, d: String, threshold: Double = 0.9,
       offset: Long = 100000L): DataFrame = {
-    // one scan: planted copies are generated in-stream by explode-shifting
-    // the ids (same rows as the two-scan union, half the passes)
-    val emb = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"),
-        explode(array(lit(0L), lit(offset))).as("off"))
-      .select((col("vec_id") + col("off")).as("vec_id"), col("embedding"))
+    val emb = planted(
+      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
+      "vec_id", offset)
     // high-threshold regime → pruning banding (8×8): wide bands pass only
     // ~5% of background pairs; planted copies match every band regardless
     semanticClustersLshOf(s, emb, threshold, bands = 8, bitsPerBand = 8)
@@ -444,22 +461,16 @@ object Dedup {
     // both verification sides) sits above the same Exchange, so the
     // shingle pipeline runs once (separate signature/set subtrees
     // re-ran it per branch: 12 s vs 3 s at sf0.1). The aggregate runs
-    // over the BASE corpus only — signatures and shingle sets are pure
-    // functions of the text, and the planted copy at doc_id + offset has
-    // the same text, so the copies are generated by explode-shifting the
-    // aggregated rows: identical rows at half the shingle/agg work.
+    // over the BASE corpus only and the copies are planted after it.
     val posts = hashPostings(Tables.documents(s, d))
     val mins = (0 until k).map(i => min(hash(col("h"), lit(i))).as(s"m$i"))
-    val base = posts.groupBy(col("doc_id"))
+    val perDoc = posts.groupBy(col("doc_id"))
       .agg(mins.head, (mins.tail :+
         sort_array(collect_set(col("h"))).as("shset")): _*)
       .select(col("doc_id"),
         array((0 until k).map(i => col(s"m$i")): _*).as("sig"), col("shset"))
       .withColumn("key", hash(col("sig")))
-      .select(col("doc_id"), col("sig"), col("shset"), col("key"),
-        explode(array(lit(0L), lit(offset))).as("off"))
-      .select((col("doc_id") + col("off")).as("doc_id"),
-        col("sig"), col("shset"), col("key"))
+    val base = planted(perDoc, "doc_id", offset)
       // LAZY checkpoint (the minhashLsh sig pattern): the four downstream
       // references prune different column sets, so as plan subtrees they
       // split into TWO differently-pruned aggregates and the shingle
@@ -538,19 +549,13 @@ object Dedup {
     * the equal-text pairs: on this corpus the (d, d+offset) copies. */
   def simhashDupPairs(s: SparkSession, d: String,
       offset: Long = 100000L): DataFrame = {
-    // fingerprint + digest are pure functions of the text, and the
-    // planted copy at doc_id + offset carries the SAME text — so compute
-    // them once per base document and explode-shift the ids afterwards:
-    // identical rows to fingerprinting the doubled corpus, at half the
-    // SimHash/md5 work (the expensive part of this query)
-    val fp = Tables.parallelizeSmallScan(
+    // fingerprint + digest once per base document, then the copies: the
+    // SimHash/md5 work is the expensive part of this query
+    val fp = planted(Tables.parallelizeSmallScan(
         Tables.documents(s, d).select(col("doc_id"), col("text")))
       .select(col("doc_id"),
-        SimHash64(col("text")).as("fp"), md5(col("text")).as("digest"))
-      .select(col("doc_id"), col("fp"), col("digest"),
-        explode(array(lit(0L), lit(offset))).as("off"))
-      .select((col("doc_id") + col("off")).as("doc_id"),
-        col("fp"), col("digest"))
+        SimHash64(col("text")).as("fp"), md5(col("text")).as("digest")),
+      "doc_id", offset)
     pairs(fp, "doc_id", Seq("fp"), Seq("digest"))
       .filter(col("a_digest") === col("b_digest"))
       .select(col("a_id"), col("b_id"))
@@ -566,19 +571,10 @@ object Dedup {
     * at 100 TB the candidate set comes from the LSH signature buckets of
     * [[Similarity.lshTopK]] instead of all pairs — this exact form is the
     * recall oracle for that path. */
-  def embedCosinePairs(s: SparkSession, d: String, topN: Int = 20): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    // parallelize the streamed side of the all-pairs join (see
-    // semanticClusters — same single-task n² cosine stage otherwise)
-    val a = Tables.parallelizeSmallScan(
-      emb.select(col("vec_id").as("a_id"), col("embedding").as("ea")))
-    val b = emb.select(col("vec_id").as("b_id"), col("embedding").as("eb"))
-    a.join(b, col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        round(graft.functions.CosineSimilarity(col("ea"), col("eb")), 4).as("sim"))
+  def embedCosinePairs(s: SparkSession, d: String, topN: Int = 20): DataFrame =
+    cosinePairs(Tables.embeddings(s, d))
       .orderBy(col("sim").desc, col("a_id"), col("b_id"))
       .limit(topN)
-  }
 
   /** THE corpus text fingerprint — one definition for the in-memory
     * prior-side derivation, the stored-index writer, and the probe side

@@ -216,14 +216,12 @@ object Retrieval {
       .select(pmod(hash(col("term")), lit(nBuckets)).as("bucket"))
       .distinct().collect().map(_.getInt(0)).sorted
     // serving-path read of only the probed term-bucket directories
-    // (StoredIndex scaladoc — a full-store open lists all n_buckets
-    // per probe); the isin stays as the plan's explicit partition filter
-    // w_milli per stored posting BEFORE the query-term join (the bm25TopK
-    // hoist: it is query-independent, and the stored rows already carry
-    // df/dl denormalized) — identical milli values, far fewer evaluations
+    // (StoredIndex scaladoc); w_milli per stored posting BEFORE the
+    // query-term join (the bm25TopK hoist: it is query-independent, and
+    // the stored rows already carry df/dl denormalized) — identical milli
+    // values, far fewer evaluations
     StoredIndex.readProbed(s, s"$outDir/postings", "bucket",
         buckets.toSeq, PostingsSchema)
-      .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
       .crossJoin(totals)
       .select(col("term"), col("doc_id"), wMilli(k1, b))
       .join(qt, "term")

@@ -11,28 +11,41 @@ import org.apache.spark.sql.functions._
 /** Approximate-nearest-neighbour search over the `embeddings` table
   * (`embedding: array<float>`, 64-dim).
   *
-  * Two paths, per the north star:
-  *   - brute-force top-k: the correctness baseline. The (small) query set
-  *     is broadcast against the candidate corpus, scored with the native
-  *     [[CosineSimilarity]] expression, ranked per query with a window.
-  *     Cost is |Q|·|C| scores but zero shuffle of the corpus — at 100 TB
-  *     the corpus stays partition-local and only per-query top-k heaps
-  *     (via the partial window aggregation) move.
-  *   - LSH-bucketed: random-hyperplane signatures (sign of dot product
-  *     with fixed seeded projections) → candidates share a signature
-  *     bucket → exact re-score of candidates only. The scale path: the
-  *     cross product never materializes.
+  * One exact-refinement stage, [[topK]], fed by different candidate
+  * generators: the (small) query set is broadcast against the candidates
+  * it may match, each pair is scored with the native [[CosineSimilarity]]
+  * expression, and each query is ranked with a window. The candidates
+  * stay partition-local; only per-query top-k rows (the window's partial
+  * group limit) move. The generators:
+  *   - all pairs (brute force): the correctness baseline, |Q|·|C| scores.
+  *   - sign bucket (LSH): random-hyperplane signatures (sign of the dot
+  *     product with fixed seeded projections); a query's candidates share
+  *     its signature bucket, so the cross product never materializes.
+  *   - IVF cell: a k-means coarse quantizer; a query's candidates lie in
+  *     its `nProbe` nearest cells.
+  * The LSH and IVF stores at rest are probed the same way: the queries
+  * are routed on the driver and only the probed directories are read.
   */
 object Similarity {
 
   /** Brute-force cosine top-k for query vectors `vec_id < nQueries`. */
   def bruteForceTopK(s: SparkSession, d: String,
-      nQueries: Int = 8, k: Int = 5): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val cands = emb.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-    val scored = cands.join(broadcast(queries), col("qid") =!= col("cid"))
+      nQueries: Int = 8, k: Int = 5): DataFrame =
+    frameTopK(Tables.embeddings(s, d), Nil, nQueries, k)
+
+  /** The exact-refinement stage every candidate generator feeds: the
+    * broadcast queries `(qid, qe, on…)` join the candidates
+    * `(cid, ce, on…)` on `on` (empty: every candidate), self matches
+    * drop, each pair is scored by the native [[CosineSimilarity]] rounded
+    * to 4 decimals (`sim`), and each query keeps its `k` best by `sim`
+    * descending, lowest `cid` on ties, numbered by `row_number` (`rn`,
+    * INT) and sorted by (qid, rn). Each candidate carries one `on` key
+    * and the query rows' keys are unique per query, so a (qid, cid) pair
+    * is scored at most once. */
+  private[ops] def topK(queries: DataFrame, cands: DataFrame, on: Seq[String],
+      k: Int): DataFrame = {
+    val scored = cands.join(broadcast(queries), on)
+      .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         round(CosineSimilarity(col("qe"), col("ce")), 4).as("sim"))
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
@@ -40,6 +53,16 @@ object Similarity {
       .filter(col("rn") <= k)
       .select(col("qid"), col("cid"), col("sim"), col("rn"))
       .orderBy(col("qid"), col("rn"))
+  }
+
+  /** [[topK]] over one `(vec_id, embedding, on…)` frame: its
+    * `vec_id < nQueries` rows query every row. */
+  private def frameTopK(emb: DataFrame, on: Seq[String], nQueries: Int,
+      k: Int): DataFrame = {
+    def side(id: String, e: String) =
+      col("vec_id").as(id) +: col("embedding").as(e) +: on.map(col)
+    topK(emb.filter(col("vec_id") < nQueries).select(side("qid", "qe"): _*),
+      emb.select(side("cid", "ce"): _*), on, k)
   }
 
   /** The index dimensionality every LSH/SemDeDup path is configured for:
@@ -84,36 +107,13 @@ object Similarity {
       SignSignature.of(col("embedding"), nPlanes, planeOffset,
         expectedDims = IndexDims).as("sig"))
 
-  /** [[bucketTopK]] over one signed frame: its `vec_id < nQueries` rows
-    * query every row. */
-  private def bucketTopK(signed: DataFrame, nQueries: Int, k: Int): DataFrame =
-    bucketTopK(
-      signed.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("sig")),
-      signed.select(col("vec_id").as("cid"), col("embedding").as("ce"), col("sig")),
-      k)
-
-  /** Same-bucket candidates exactly re-scored, per-query top-k: queries
-    * carry `(qid, qe, sig)`, candidates `(cid, ce, sig)`. */
-  private def bucketTopK(queries: DataFrame, cands: DataFrame,
-      k: Int): DataFrame = {
-    val scored = cands.join(broadcast(queries), Seq("sig"))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(CosineSimilarity(col("qe"), col("ce")), 4).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("cid"), col("sim"), col("rn"))
-      .orderBy(col("qid"), col("rn"))
-  }
-
   /** Random-hyperplane LSH bucketing + exact re-score: candidates for a
     * query are exactly the corpus rows with the same `nPlanes`-bit sign
     * signature. Returns per-query top-k within its bucket. */
   def lshTopK(s: SparkSession, d: String, nQueries: Int = 8, k: Int = 5,
       nPlanes: Int = 8): DataFrame =
-    bucketTopK(signedEmbeddings(Tables.embeddings(s, d), nPlanes), nQueries, k)
+    frameTopK(signedEmbeddings(Tables.embeddings(s, d), nPlanes), Seq("sig"),
+      nQueries, k)
 
   /** LSH index at rest — the sign-signature twin of the IVF serving
     * layout: the signed corpus is written `partitionBy("sig")`, one
@@ -139,13 +139,7 @@ object Similarity {
   def lshProbeStored(s: SparkSession, d: String, outDir: String,
       nQueries: Int = 8, k: Int = 5, nPlanes: Int = 8): DataFrame = {
     import s.implicits._
-    require(nQueries <= MaxDriverQueries,
-      s"lshProbeStored routes queries on the driver (nQueries=$nQueries > " +
-        s"max $MaxDriverQueries); use lshTopK for bulk query sets")
-    val qVecs = Tables.embeddings(s, d)
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .collect()
+    val qVecs = driverQueries(s, d, nQueries, "lshProbeStored", "lshTopK")
     val queryRows = qVecs.flatMap { case (qid, e) =>
       // the index width contract (signedEmbeddings pins expectedDims): a
       // mismatched-width query has a null signature — no bucket
@@ -154,17 +148,25 @@ object Similarity {
       if (sig == SignSignature.NullSentinel) None else Some((qid, e, sig))
     }.toSeq
     val queries = queryRows.toDF("qid", "qe", "sig")
-    val probedSigs = queryRows.map(_._3).distinct.sorted
-    // serving-path read: only the probed signature directories are
-    // enumerated (StoredIndex scaladoc — a full-store open pays an
-    // O(all buckets) listing per probe); the isin stays as a partition
-    // filter over the already-restricted paths, keeping the plan's
-    // prune explicit (ScaleDesignSpec pins both halves)
     val cands = StoredIndex.readProbed(s, s"$outDir/corpus", "sig",
-        probedSigs, LshStoreSchema)
-      .filter(col("sig").isin(probedSigs.map(java.lang.Long.valueOf): _*))
+        queryRows.map(_._3).distinct.sorted, LshStoreSchema)
       .select(col("vec_id").as("cid"), col("embedding").as("ce"), col("sig"))
-    bucketTopK(queries, cands, k)
+    topK(queries, cands, Seq("sig"), k)
+  }
+
+  /** The query vectors (`vec_id < nQueries`) a stored probe routes on the
+    * driver, collected under the [[MaxDriverQueries]] guard; `probe`
+    * names the caller and `bulk` the distributed path for larger sets. */
+  private def driverQueries(s: SparkSession, d: String, nQueries: Int,
+      probe: String, bulk: String): Array[(Long, Array[Float])] = {
+    import s.implicits._
+    require(nQueries <= MaxDriverQueries,
+      s"$probe routes queries on the driver (nQueries=$nQueries > " +
+        s"max $MaxDriverQueries); use $bulk for bulk query sets")
+    Tables.embeddings(s, d)
+      .filter(col("vec_id") < nQueries)
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      .collect()
   }
 
   /** LSH retrieval *guarantee* under the DuckDB oracle: an identical
@@ -175,15 +177,12 @@ object Similarity {
     * (q, q+offset, 1.0, 1) per query. */
   def lshDupRetrieval(s: SparkSession, d: String, nQueries: Int = 8,
       nPlanes: Int = 8, offset: Long = 100000L): DataFrame = {
-    // one scan: planted copies are generated in-stream by explode-shifting
-    // the ids (same rows as the two-scan union, half the passes)
-    val emb = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"),
-        explode(array(lit(0L), lit(offset))).as("off"))
-      .select((col("vec_id") + col("off")).as("vec_id"), col("embedding"))
+    val emb = Dedup.planted(
+      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
+      "vec_id", offset)
     // the PRODUCTION signature/bucket/score pipeline, k = 1: shared code
     // guarantees the oracle exercises exactly what lshTopK runs
-    bucketTopK(signedEmbeddings(emb, nPlanes), nQueries, k = 1)
+    frameTopK(signedEmbeddings(emb, nPlanes), Seq("sig"), nQueries, k = 1)
   }
 
   /** Measured recall@k of the production LSH path ([[lshTopK]]) against
@@ -293,12 +292,9 @@ object Similarity {
     * output is SQL-expressible: (q, q's min identical partner, 1.0, 1). */
   def ivfDupRetrieval(s: SparkSession, d: String, nQueries: Int = 8,
       nCells: Int = 16, nProbe: Int = 4, offset: Long = 100000L): DataFrame = {
-    // one scan: planted copies are generated in-stream by explode-shifting
-    // the ids (same rows as the two-scan union, half the passes)
-    val emb = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"),
-        explode(array(lit(0L), lit(offset))).as("off"))
-      .select((col("vec_id") + col("off")).as("vec_id"), col("embedding"))
+    val emb = Dedup.planted(
+      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
+      "vec_id", offset)
     // quantizer trained on the doubled corpus (uncached — guarantee-twin
     // corpus, not the serving index)
     ivfTopKOf(s, emb, kmeansCentroids(emb, nCells), nQueries, k = 1, nProbe)
@@ -361,9 +357,9 @@ object Similarity {
       .join(broadcast(probes), "query_cell")
     val cands = assigned.select(col("vec_id").as("cid"),
       col("embedding").as("ce"), col("cell").as("probe_cell"))
-    // the overlap join drops probedTopK's final sort (EliminateSorts)
+    // the overlap join drops topK's final sort (EliminateSorts)
     recallOverlap(bruteForceTopK(s, d, nQueries, k),
-      probedTopK(queries, cands, k))
+      topK(queries, cands, Seq("probe_cell"), k))
   }
 
   /** Seeded k-means training over any `(vec_id, embedding)` frame,
@@ -447,24 +443,6 @@ object Similarity {
         .take(nProbe).toSeq
     }.toMap
 
-  /** Exact re-score of probed candidates, per-query top-k: queries carry
-    * `(qid, qe, probe_cell)` (one row per probed cell), candidates
-    * `(cid, ce, probe_cell)` (one row per corpus vector — its own cell).
-    * Each candidate has exactly one cell and probe pairs are unique, so
-    * (qid, cid) appears at most once — no dedup needed. */
-  private def probedTopK(queries: DataFrame, cands: DataFrame,
-      k: Int): DataFrame = {
-    val scored = cands.join(broadcast(queries), Seq("probe_cell"))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(CosineSimilarity(col("qe"), col("ce")), 4).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("cid"), col("sim"), col("rn"))
-      .orderBy(col("qid"), col("rn"))
-  }
-
   /** The production IVF pipeline over any `(vec_id, embedding)` frame —
     * shared by [[ivfTopK]] and the [[ivfDupRetrieval]] guarantee oracle so
     * the oracle exercises exactly what production runs. `assigned` is
@@ -487,7 +465,7 @@ object Similarity {
     val cands = assigned
       .select(col("vec_id").as("cid"), col("embedding").as("ce"),
         col("cell").as("probe_cell"))
-    probedTopK(queries, cands, k)
+    topK(queries, cands, Seq("probe_cell"), k)
   }
 
   /** The `x_sim_ivf` DuckDB oracle, built at dump time: the trained
@@ -554,8 +532,7 @@ object Similarity {
       centroids: Array[Array[Double]], outDir: String): Unit = {
     StoredIndex.writePartitioned(
       voronoiAssign(emb, centroidFrame(s, centroids)), "cell", s"$outDir/corpus")
-    s.createDataFrame(centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
-      .toDF("cell", "centroid")
+    centroidFrame(s, centroids).toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/centroids")
   }
 
@@ -595,19 +572,13 @@ object Similarity {
   def ivfProbeStored(s: SparkSession, d: String, outDir: String,
       nQueries: Int = 8, k: Int = 5, nProbe: Int = 4): DataFrame = {
     import s.implicits._
-    require(nQueries <= MaxDriverQueries,
-      s"ivfProbeStored routes queries on the driver (nQueries=$nQueries > " +
-        s"max $MaxDriverQueries); use ivfTopK for bulk query sets")
+    val qVecs = driverQueries(s, d, nQueries, "ivfProbeStored", "ivfTopK")
     val centroids: Array[Array[Double]] =
       s.read.schema(CentroidsSchema)
         .parquet(s"$outDir/centroids")
         .select(col("cell"), col("centroid")).as[(Int, Seq[Double])]
         .collect().sortBy(_._1).map(_._2.toArray)
     val probeMap = probeMapOf(centroids, nProbe)
-    val qVecs = Tables.embeddings(s, d)
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .collect()
     // driver-side quantization with the SAME rule the stored corpus was
     // assigned under (voronoiAssign: rounded cosine desc, lowest cell on
     // ties) — one shared rule, so stored-vs-in-memory parity holds by
@@ -632,14 +603,10 @@ object Similarity {
         .toSeq.flatMap { case (cell, _) => probeMap(cell).map(p => (qid, e, p)) }
     }.toSeq
     val queries = queryRows.toDF("qid", "qe", "probe_cell")
-    val probedCells = queryRows.map(_._3).distinct.sorted
-    // serving-path read of only the probed cell directories (StoredIndex
-    // scaladoc); the isin stays as the plan's explicit partition filter
     val cands = StoredIndex.readProbed(s, s"$outDir/corpus", "cell",
-        probedCells, IvfStoreSchema)
-      .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
+        queryRows.map(_._3).distinct.sorted, IvfStoreSchema)
       .select(col("vec_id").as("cid"), col("embedding").as("ce"),
         col("cell").as("probe_cell"))
-    probedTopK(queries, cands, k)
+    topK(queries, cands, Seq("probe_cell"), k)
   }
 }

@@ -20,7 +20,8 @@ import org.apache.spark.sql.types.StructType
   * those paths with the store's `basePath`: the partition column still
   * materializes from the directory names, and only the probed directories
   * are scanned. Probed values the store never wrote (empty buckets) drop
-  * out of the same listing.
+  * out of the same listing. The read applies its own `partCol IN probed`
+  * filter, so the plan states the prune explicitly and callers add none.
   *
   * The explicit `dataSchema` is the store's layout contract (stated at
   * each writer); passing it skips footer-based schema inference and
@@ -78,7 +79,9 @@ private[graft] object StoredIndex {
   /** Read only the `partCol=v` directories of `base` for the probed
     * `values` (deduplicated — a repeated value must not scan its
     * directory twice), as a DataFrame with `dataSchema` (which INCLUDES
-    * the partition column). One non-recursive listing of the root
+    * the partition column), filtered by `partCol IN probed` in the
+    * caller's order — the partition filter the plan pushes over the
+    * already-restricted paths. One non-recursive listing of the root
     * answers every existence question: probed-but-unwritten buckets drop
     * silently (an empty bucket is a normal serving outcome), while a
     * missing root, a root keyed on another column and an unpartitioned
@@ -122,7 +125,8 @@ private[graft] object StoredIndex {
     }
     val existing = probed.map(v => s"$partCol=$v").filter(dirs)
       .map(n => new org.apache.hadoop.fs.Path(basePath, n).toString)
-    if (existing.isEmpty) empty
-    else s.read.schema(dataSchema).option("basePath", base).parquet(existing: _*)
+    (if (existing.isEmpty) empty
+    else s.read.schema(dataSchema).option("basePath", base).parquet(existing: _*))
+      .filter(col(partCol).isin(probed: _*))
   }
 }

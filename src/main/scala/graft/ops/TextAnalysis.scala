@@ -181,20 +181,14 @@ object TextAnalysis {
       .select(col("doc_id"),
         regexp_replace(col("text"), lit("\\s+"),
           concat(lit(" "), col("doc_id").cast("string"), lit(" "))).as("text"))
-    // fingerprint set + digest key are pure functions of the (id-
-    // interleaved) text, and the planted copy at doc_id + offset keeps
-    // the ORIGINAL doc's interleaved text — so compute them once per base
-    // document and explode-shift the ids afterwards: identical rows to
-    // fingerprinting the doubled corpus at half the regexp+Winnow work
-    // (the dominant cost of this query)
-    val fps = docs
+    // fingerprints once per base document, then the copies (a copy keeps
+    // its ORIGINAL doc's interleaved text): the regexp+Winnow work is the
+    // dominant cost of this query
+    val fps = Dedup.planted(docs
       .select(col("doc_id"), graft.functions.Winnow(col("text")).as("fp"))
       .filter(size(col("fp")) > 0) // texts shorter than the k-gram never pair
-      .withColumn("key", xxhash64(to_json(struct(col("fp")))))
-      .select(col("doc_id"), col("fp"), col("key"),
-        explode(array(lit(0L), lit(offset))).as("off"))
-      .select((col("doc_id") + col("off")).as("doc_id"),
-        col("fp"), col("key"))
+      .withColumn("key", xxhash64(to_json(struct(col("fp"))))),
+      "doc_id", offset)
     Dedup.pairs(fps, "doc_id", Seq("key"), Seq("fp"))
       .filter(col("a_fp") === col("b_fp"))
       .select(col("a_id"), col("b_id"))

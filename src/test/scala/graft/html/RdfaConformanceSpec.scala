@@ -1,6 +1,6 @@
 package graft.html
 
-import graft.rdf.{Term, Vocab}
+import graft.rdf.Vocab
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Curated W3C RDfa 1.1 conformance sweep (r9 VERDICT item 7): cases

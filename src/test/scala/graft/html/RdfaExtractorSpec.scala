@@ -1,6 +1,6 @@
 package graft.html
 
-import graft.rdf.{Quad, Term, Vocab}
+import graft.rdf.{Term, Vocab}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden cases for the RDFa walk (FIXTURES.md §3; reference

@@ -191,7 +191,7 @@ class ExtensionsSpec extends SparkSpec {
     }
     def r4(v: Double) =
       BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val parent = scala.collection.mutable.Map(emb.map(e => e._1 -> e._1): _*)
+    val parent = scala.collection.mutable.Map(emb.toSeq.map(e => e._1 -> e._1): _*)
     def find(x: Long): Long =
       if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
     var nPairs = 0

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.Prop.forAll
 

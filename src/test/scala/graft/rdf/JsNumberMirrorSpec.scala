@@ -7,7 +7,6 @@ import scala.sys.process._
 
 import graft.SparkSpec
 import graft.ops.Bindings
-import org.apache.spark.sql.functions._
 
 /** Differential conformance corpus for the two JS numeric mirrors: the
   * `Number(value)` validity gate behind xsd:integer validation/repair

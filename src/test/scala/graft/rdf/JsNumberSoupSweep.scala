@@ -3,7 +3,6 @@ package graft.rdf
 import scala.sys.process._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Dev harness: multi-seed differential sweep of the `Number` /
   * `parseInt` mirrors against node — `sbt "Test/runMain

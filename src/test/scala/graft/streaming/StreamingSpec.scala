@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.pipeline.{ExtractPipeline, TaskStore}
+import graft.pipeline.TaskStore
 import graft.rdf.Vocab
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
