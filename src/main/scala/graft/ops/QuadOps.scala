@@ -162,23 +162,18 @@ object QuadOps {
     * register per-page valid files + containers → success, as one set
     * union and one status transition. The step is the production
     * operator ([[graft.pipeline.ImportPipeline.registerSuccess]], the
-    * orchestrator's own registration tail) over
-    * [[graft.pipeline.TaskStore.inputPages]]; manifest sizes are a
-    * deterministic stand-in (page-URI byte length) since no HTML is read
-    * here, and the in-plan file-name regex agrees with `basename` on
-    * these `share://page-…` URIs. */
+    * orchestrator's own registration tail) over the pages of
+    * [[graft.pipeline.TaskStore.inputPages]], collected as the
+    * orchestrator collects them; manifest sizes are a deterministic
+    * stand-in (page-URI byte length) since no HTML is read here. */
   def lifecycleFinalState(s: SparkSession, d: String): DataFrame = {
-    import graft.pipeline.{ImportPipeline, TaskStore}
+    import graft.pipeline.{FileRegistry, ImportPipeline, TaskStore}
     val q0 = lifecycleTaskQuads(s, d)
-    val manifest = TaskStore.inputPages(q0, LcTask).select(
-      lit(LcTask).as("task"),
-      lit(LcGraph).as("graph"),
-      concat(regexp_replace(element_at(split(col("page"), "/"), -1),
-        "\\.[^.]*$", ""), lit("-valid.ttl")).as("file_name"),
-      octet_length(col("page")).cast("long").as("size"),
-      col("page").as("derived_from"),
-      lit(true).as("valid"))
-    ImportPipeline.registerSuccess(q0, manifest, LcTask, LcGraph, LcT2)
+    val files = TaskStore.inputPages(q0, LcTask).collect().map(_.getString(0)).toSeq
+      .map(p => (FileRegistry.ResultFile(LcTask, LcGraph,
+        s"${ImportPipeline.basename(p)}-valid.ttl",
+        p.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong, p), true))
+    ImportPipeline.registerSuccess(q0, files, LcTask, LcGraph, LcT2)
   }
 
   /** Lifecycle oracle query 1 — the entity rows: after the task's

@@ -8,15 +8,17 @@ import org.apache.spark.sql.functions._
   * (lib/file-helpers.js:103-147, lib/pipeline-import.js:180-218). As in
   * the reference, one template per written result file: [[metadata]] and
   * [[containers]] are plain functions of one manifest row, and
-  * [[registration]] applies both to every row of the manifest in one
-  * typed `flatMap`.
+  * [[registration]] applies both to every row of a task's manifest on
+  * the driver, where the manifest already is.
   *
-  * Input: a manifest DataFrame with one row per written result file
-  * (`task`, `graph`, `file_name`, `size`, `derived_from`, and for
-  * [[registration]] a boolean `valid`), none of them null. Output: the
-  * metadata quads to insert into the store. URIs are content-derived
-  * (sha1 of task+file name) rather than uuid-minted — deterministic and
-  * idempotent under re-runs (same deviation as ExtractPipeline G2).
+  * Input: a manifest with one row per written result file (`task`,
+  * `graph`, `file_name`, `size`, `derived_from`, and for [[registration]]
+  * whether the file is valid), none of them null — as [[ResultFile]]s,
+  * or as a DataFrame of those columns for the per-generator frames.
+  * Output: the metadata quads to insert into the store. URIs are
+  * content-derived (sha1 of task+file name) rather than uuid-minted —
+  * deterministic and idempotent under re-runs (same deviation as
+  * ExtractPipeline G2).
   */
 object FileRegistry {
 
@@ -112,10 +114,12 @@ object FileRegistry {
   }
 
   /** Every file's [[metadata]] and [[containers]]: the quads one
-    * finished task inserts. Not de-duplicated — the store's set union
-    * ([[TaskStore.insertData]]) is the one `distinct`. */
-  def registration(files: DataFrame, nowIso: String): DataFrame =
-    mint(files, col("valid"))((f, v) => metadata(f, nowIso) ++ containers(f, v))
+    * finished task inserts, minted on the driver from its manifest (one
+    * row per written file and whether it is valid). Not de-duplicated:
+    * the store's set union ([[TaskStore.insertData]]) de-duplicates
+    * them on the driver before they meet the state. */
+  def registration(files: Seq[(ResultFile, Boolean)], nowIso: String): Seq[Quad] =
+    files.flatMap { case (f, v) => metadata(f, nowIso) ++ containers(f, v) }
 
   /** [[metadata]] of every row of a five-column manifest. */
   def fileMetadataQuads(manifest: DataFrame, nowIso: String): DataFrame =

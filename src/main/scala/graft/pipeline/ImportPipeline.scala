@@ -8,10 +8,17 @@ import org.apache.spark.sql.functions._
 /** The end-to-end task orchestrator — the reference's `run(deltaEntry)`
   * (lib/pipeline-import.js:28-117) composed from the layer operators:
   *
-  *   loadExtractionTask → inputPages → extract/validate/repair →
+  *   task read → its pages → extract/validate/repair →
   *   write TTL (+ debug TTLs) + externalized HTML → register file
   *   metadata + containers → success; any failure after task load →
   *   error record + failed (T5).
+  *
+  * No job of a task shuffles. The task and its pages are two point reads
+  * of the state, collected ([[TaskStore.readTask]], [[TaskStore.pagesIn]]);
+  * the registration is minted on the driver from the collected manifest;
+  * and the new state is the old one with the task's inserts anti-joined
+  * away and appended ([[TaskStore.insertData]]) and its status rows
+  * swapped: a narrow plan over the state's files.
   *
   * The reference marks the task busy first (T3, lib/pipeline-import.js:33).
   * Here the state is swapped once per task, so a busy status would never
@@ -31,11 +38,11 @@ import org.apache.spark.sql.functions._
   *   - URIs/uuids content-derived instead of uuid()-minted → idempotent
   *     re-runs (the reference re-mints on every run).
   *
-  * Scale note on the driver-side manifest: the page list and per-page
-  * byte sizes are collected to the driver. That is the task-METADATA
-  * cardinality (one row per page and partition — the reference holds the
-  * page set in a JS `Set`, lib/pipeline-import.js:127), not the triple
-  * cardinality; the extracted quads themselves never leave executors.
+  * Scale note on the driver-side manifest: the page list, per-page byte
+  * sizes and the registration minted from them live on the driver. That
+  * is the task-METADATA cardinality (one row per page and partition — the
+  * reference holds the page set in a JS `Set`, lib/pipeline-import.js:127),
+  * not the triple cardinality; the extracted quads never leave executors.
   * The tagged quads are the one persisted frame: the TTL sink, the HTML
   * sink and the size collect all read it, and the extraction before it is
   * one narrow pass per page ([[ExtractPipeline.run]]), so each page is
@@ -54,7 +61,7 @@ object ImportPipeline {
     * ("a/b/" → "b"), a leading-dot base keeps its dot (".env" → ".env" —
     * the extension starts at the last dot only when it isn't char 0),
     * and ".." is special-cased whole ("..." → ".."). */
-  private[pipeline] def basename(uri: String): String = {
+  private[graft] def basename(uri: String): String = {
     val noSlash = uri.reverse.dropWhile(_ == '/').reverse
     val base = noSlash.substring(noSlash.lastIndexOf('/') + 1)
     val dot = base.lastIndexOf('.')
@@ -69,7 +76,7 @@ object ImportPipeline {
     * marks the valid partition's files, the rest are debug files. */
   private def manifest(tagged: DataFrame, pages: Seq[String],
       parts: Seq[(String, Column, Column)], taskUri: String,
-      graph: String): DataFrame = {
+      graph: String): Seq[(FileRegistry.ResultFile, Boolean)] = {
     import tagged.sparkSession.implicits._
     val lineSizes = parts.map { case (_, member, line) =>
       when(member, octet_length(line) + 1).otherwise(0).cast("long") }
@@ -88,17 +95,17 @@ object ImportPipeline {
       }
       .collect()
       .groupMapReduce(_._1)(_._2)((a, b) => a.zip(b).map(p => p._1 + p._2))
-    (for (p <- pages; ((part, _, _), i) <- parts.zipWithIndex)
-      yield (taskUri, graph, s"${basename(p)}-$part.ttl",
-        sizes.get(p).fold(0L)(_(i)), p, part == "valid"))
-      .toDF("task", "graph", "file_name", "size", "derived_from", "valid")
+    for (p <- pages; ((part, _, _), i) <- parts.zipWithIndex)
+      yield (FileRegistry.ResultFile(taskUri, graph, s"${basename(p)}-$part.ttl",
+        sizes.get(p).fold(0L)(_(i)), p), part == "valid")
   }
 
   /** A finished task's state change (lib/pipeline-import.js:75-109):
     * its files' registration ([[FileRegistry.registration]]) joins
     * `quads` as one set union ([[TaskStore.insertData]]), then the status
     * becomes success. */
-  private[graft] def registerSuccess(quads: DataFrame, files: DataFrame,
+  private[graft] def registerSuccess(quads: DataFrame,
+      files: Seq[(FileRegistry.ResultFile, Boolean)],
       taskUri: String, graph: String, nowIso: String): DataFrame =
     TaskStore.transitionStatus(TaskStore.insertData(quads,
       FileRegistry.registration(files, nowIso)), taskUri, Vocab.statusSuccess,
@@ -116,17 +123,16 @@ object ImportPipeline {
       pagesDir: String, outDir: String, nowIso: String,
       writeDebug: Boolean = false): ImportResult = {
     // S4/J2/P7 task load; empty ⇔ reference's `if (!task) return`
-    val task = TaskStore.loadExtractionTask(quads, taskUri).collect()
+    val (task, containers) = TaskStore.readTask(quads, taskUri)
     if (task.isEmpty)
       return ImportResult(quads, "not_a_task", 0L, None)
-    val graph = Option(task.head.getAs[String]("task_graph"))
+    val graph = Option(task.get.getAs[String]("task_graph"))
       .getOrElse("http://mu.semte.ch/graphs/harvesting")
 
     try {
       // J1/D1 page enumeration (count-then-paginate is obsolete under
       // Spark, SURVEY O1 — the task's page set is metadata-sized)
-      val pages = TaskStore.inputPages(quads, taskUri)
-        .as[String](org.apache.spark.sql.Encoders.STRING).collect().toSeq
+      val pages = TaskStore.pagesIn(quads, containers)
 
       // S2/S3 read of this task's pages only: the url filter prunes the
       // shared directory's other files at listing, before any is opened

@@ -13,12 +13,15 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *      each micro-batch dispatching [[ImportPipeline.runImportPipeline]]
   *      per scheduled task URI (T1, app.js:28-45).
   *
-  * Task/metadata state lives as a parquet quad table at `stateDir`,
+  * Task/metadata state lives as a plain parquet quad table at `stateDir`,
   * read-modify-replaced per task via a temp-dir + rename swap (the moral
   * equivalent of the reference's DELETE/INSERT round-trips to Virtuoso):
   * one swap per task, so no state copy outlives the task that made it.
   * This is the task-STATE table — metadata-sized; the extracted triples
-  * go to the TTL sinks, never through here.
+  * go to the TTL sinks, never through here. A task reads it with two
+  * point reads and rewrites it in one narrow pass (a set union with the
+  * task's inserts, [[ImportPipeline]]), so none of a task's jobs
+  * shuffles; [[writeState]] keeps its file count bounded by its size.
   * Tasks within a batch run sequentially like the reference's event
   * loop; each task's pages extract in parallel inside the pipeline.
   */
@@ -69,7 +72,12 @@ object ImportService {
     * `hdfs:` provide. Object stores such as `s3a:` rename a directory by
     * copying and deleting its files one by one, so a crash mid-rename
     * can leave a partial table under either name: they are not supported
-    * as `stateDir`. */
+    * as `stateDir`.
+    *
+    * The write is narrow: `newState` is coalesced to one file per
+    * `spark.sql.files.maxPartitionBytes` of its estimated size (at least
+    * one), so the file count follows the state's size, not the number of
+    * tasks that wrote it. */
   def writeState(newState: DataFrame, stateDir: String): Unit = {
     val spark = newState.sparkSession
     val fs = new org.apache.hadoop.fs.Path(stateDir)
@@ -77,7 +85,10 @@ object ImportService {
     val target = new org.apache.hadoop.fs.Path(stateDir)
     val tmp = new org.apache.hadoop.fs.Path(stateDir + "-tmp-" + System.nanoTime())
     val backup = new org.apache.hadoop.fs.Path(stateDir + "-prev")
-    newState.write.parquet(tmp.toString)
+    val bytes = newState.queryExecution.optimizedPlan.stats.sizeInBytes
+    val perFile = spark.sessionState.conf.filesMaxPartitionBytes
+    val files = ((bytes + perFile - 1) / perFile).max(1).min(Int.MaxValue).toInt
+    newState.coalesce(files).write.parquet(tmp.toString)
     fs.delete(backup, true) // drop the previous generation's backup
     if (fs.exists(target) && !fs.rename(target, backup))
       throw new java.io.IOException(s"state swap failed: $target -> $backup")
@@ -109,14 +120,15 @@ object ImportService {
     writeState(TaskStore.failBusyTasks(
       readState(spark, stateDir), clock()), stateDir)
     DeltaSource.run(spark, deltaDir, checkpointDir) { tasks =>
-      // per-batch task list is delta-sized (the reference holds it in an
-      // array, app.js:30); tasks run sequentially like its event loop,
-      // each one read → pipeline → swap, so every task starts from the
-      // swapped state of the one before. A crash after task k's swap
-      // replays the whole batch (checkpointed foreachBatch), re-running
-      // tasks 1..k against state that already holds their results: each
-      // registers as a set union, so under a fixed clock it appends nothing.
-      tasks.collect().toSeq.sorted.foreach { taskUri =>
+      // the batch's task list is delta-sized, on the driver (the
+      // reference holds it in an array, app.js:30); tasks run sequentially
+      // like its event loop, each one read → pipeline → swap, so every task
+      // starts from the swapped state of the one before. A crash after task
+      // k's swap replays the whole batch (checkpointed foreachBatch),
+      // re-running tasks 1..k against state that already holds their
+      // results: each registers as a set union, so under a fixed clock it
+      // appends nothing.
+      tasks.foreach { taskUri =>
         val result = ImportPipeline.runImportPipeline(
           spark, readState(spark, stateDir), taskUri, pagesDir,
           s"$outDir/${taskDirName(taskUri)}", clock(), writeDebug)

@@ -1,8 +1,11 @@
 package graft.pipeline
 
 import graft.rdf.Vocab
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Task lifecycle over a quad table — the reference's SPARQL task layer
   * (lib/task.js) as DataFrame operators.
@@ -11,46 +14,91 @@ import org.apache.spark.sql.functions._
   * with string columns (object IRIs and literal lexical forms share `obj`;
   * task-layer values are all IRIs/strings/timestamps, lib/utils.js:15-21).
   * Every task shares one graph, so no partitioning of the table prunes a
-  * per-task operation: each one below filters the whole table.
+  * per-task operation.
+  *
+  * A task's reads are the reference's bound-subject lookups
+  * (lib/task.js:80-108, lib/pipeline-import.js:131-139): point reads that
+  * filter the table and collect the handful of matching rows, then pivot
+  * or de-duplicate them on the driver, so none of them shuffles.
   *
   * Updates follow the reference's DELETE+INSERT WHERE shape (K6,
   * lib/task.js:158-187) as read-rewrite transformations: the returned
-  * DataFrame is the new state of the table — the caller owns the write
-  * (partition overwrite, or a MERGE on a table format that supports it).
+  * DataFrame is the new state of the table — the caller owns the write.
+  * Every update maps a state that is a set to a set, and the ones a task
+  * makes ([[transitionStatus]], [[appendError]], [[insertData]]) are
+  * narrow: none of them re-aggregates the table.
   */
 object TaskStore {
+
+  /** The star's columns, in order, and the predicate each one pivots. */
+  private val TaskProps = Seq("type" -> Vocab.rdfType, "job" -> Vocab.dctIsPartOf,
+    "uuid" -> Vocab.muUuid, "created" -> Vocab.dctCreated,
+    "modified" -> Vocab.dctModified, "status" -> Vocab.admsStatus,
+    "index" -> Vocab.taskIndex, "operation" -> Vocab.taskOperation,
+    "error" -> Vocab.taskError)
+
+  /** [[loadTasks]]' columns: `task`, the [[TaskProps]], `task_graph`. */
+  private val TaskSchema = StructType(
+    ("task" +: TaskProps.map(_._1) :+ "task_graph").map(StructField(_, StringType)))
 
   /** S4/J2 star lookup (lib/task.js:80-108): one row per task with its
     * properties pivoted into columns; OPTIONAL error → nullable column
     * (left-outer semantics fall out of the conditional aggregation). */
   def loadTasks(quads: DataFrame): DataFrame = {
-    def prop(p: String) = max(when(col("predicate") === p, col("obj")))
+    val aggs = TaskProps.map { case (c, p) =>
+      max(when(col("predicate") === p, col("obj"))).as(c)
+    } :+ max(col("graph")).as("task_graph")
     quads
-      .filter(col("predicate").isin(Vocab.rdfType, Vocab.dctIsPartOf,
-        Vocab.muUuid, Vocab.dctCreated, Vocab.dctModified, Vocab.admsStatus,
-        Vocab.taskIndex, Vocab.taskOperation, Vocab.taskError))
+      .filter(col("predicate").isin(TaskProps.map(_._2): _*))
       .groupBy(col("subject").as("task"))
-      .agg(
-        prop(Vocab.rdfType).as("type"),
-        prop(Vocab.dctIsPartOf).as("job"),
-        prop(Vocab.muUuid).as("uuid"),
-        prop(Vocab.dctCreated).as("created"),
-        prop(Vocab.dctModified).as("modified"),
-        prop(Vocab.admsStatus).as("status"),
-        prop(Vocab.taskIndex).as("index"),
-        prop(Vocab.taskOperation).as("operation"),
-        prop(Vocab.taskError).as("error"),
-        max(col("graph")).as("task_graph"))
+      .agg(aggs.head, aggs.tail: _*)
       .filter(col("type") === Vocab.taskType)
   }
+
+  /** The service's task read: one point read (`subject = taskUri`,
+    * collected). Returns [[loadExtractionTask]]'s row, pivoted on the
+    * driver with [[loadTasks]]' semantics (the max per property and,
+    * over the property rows, of the graph; Spark's string order), and
+    * the task's input containers, distinct and sorted. The row is empty
+    * unless the subject is a task of a watched operation. */
+  private[pipeline] def readTask(quads: DataFrame,
+      taskUri: String): (Option[Row], Seq[String]) = {
+    import quads.sparkSession.implicits._
+    val rows = quads.filter(col("subject") === taskUri)
+      .select("predicate", "obj", "graph").as[(String, String, String)].collect()
+    def maxOf(xs: Iterable[String]) = xs.filter(_ != null)
+      .maxByOption(UTF8String.fromString).orNull
+    val props = rows.filter(r => TaskProps.exists(_._2 == r._1))
+    val values = TaskProps.map { case (_, p) => maxOf(props.collect { case (`p`, o, _) => o }) }
+    val byName = TaskProps.map(_._1).zip(values).toMap
+    val task = Option.when(byName("type") == Vocab.taskType &&
+        Seq(Vocab.opExtracting, Vocab.opImporting).contains(byName("operation")))(
+      new GenericRowWithSchema((taskUri +: values :+ maxOf(props.map(_._3))).toArray,
+        TaskSchema))
+    val containers = rows.collect { case (Vocab.taskInputContainer, c, _) if c != null => c }
+    (task, containers.distinct.sorted.toSeq)
+  }
+
+  /** The second point read: the pages the containers hold
+    * (`task:hasFile`), collected, distinct and sorted. No containers,
+    * no read. */
+  private[pipeline] def pagesIn(quads: DataFrame, containers: Seq[String]): Seq[String] =
+    if (containers.isEmpty) Nil
+    else {
+      import quads.sparkSession.implicits._
+      quads.filter(col("predicate") === Vocab.taskHasFile &&
+          col("subject").isin(containers: _*) && col("obj").isNotNull)
+        .select("obj").as[String].collect().distinct.sorted.toSeq
+    }
 
   /** S4 point lookup with the P7 operation guard
     * (lib/task.js:83-99: VALUES ?operation + bound subject). Returns zero
     * or one row — the reference yields null for non-task subjects
-    * (lib/pipeline-import.js:29-30). */
-  def loadExtractionTask(quads: DataFrame, taskUri: String): DataFrame =
-    loadTasks(quads.filter(col("subject") === taskUri))
-      .filter(col("operation").isin(Vocab.opExtracting, Vocab.opImporting))
+    * (lib/pipeline-import.js:29-30). A local frame of [[readTask]]'s row. */
+  def loadExtractionTask(quads: DataFrame, taskUri: String): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    quads.sparkSession.createDataFrame(readTask(quads, taskUri)._1.toSeq.asJava, TaskSchema)
+  }
 
   /** S9 `nie:url` metadata lookup (lib/file-helpers.js:40-63,
     * `getFileMetadata`): DISTINCT ?url for a bound remote-file subject
@@ -64,17 +112,11 @@ object TaskStore {
       .distinct()
 
   /** J1 2-hop chain (lib/pipeline-import.js:131-139):
-    * task →inputContainer ?c →hasFile ?page, DISTINCT pages. The task
-    * side is a handful of rows → broadcast; only the hasFile edge set
-    * shuffles. */
+    * task →inputContainer ?c →hasFile ?page, DISTINCT pages, as a local
+    * frame of [[readTask]]'s containers' [[pagesIn]]. */
   def inputPages(quads: DataFrame, taskUri: String): DataFrame = {
-    val containers = quads.filter(col("subject") === taskUri &&
-      col("predicate") === Vocab.taskInputContainer)
-      .select(col("obj").as("container"))
-    val files = quads.filter(col("predicate") === Vocab.taskHasFile)
-      .select(col("subject").as("container"), col("obj").as("page"))
-    files.join(broadcast(containers), "container")
-      .select(col("page")).distinct()
+    import quads.sparkSession.implicits._
+    pagesIn(quads, readTask(quads, taskUri)._2).toDF("page")
   }
 
   /** K6 status transition (lib/task.js:158-187): DELETE the task's
@@ -97,7 +139,6 @@ object TaskStore {
       (taskUri, Vocab.admsStatus, newStatus, g),
       (taskUri, Vocab.dctModified, nowIso, g)))
       .toDF("subject", "predicate", "obj", "graph")
-      .coalesce(1) // the two rows add one file, not two, to a written state
     kept.unionByName(inserted)
   }
 
@@ -126,19 +167,26 @@ object TaskStore {
     * mints a uuid — same determinism deviation as the file sink). */
   def appendError(quads: DataFrame, taskUri: String, message: String,
       graph: String): DataFrame = {
-    import quads.sparkSession.implicits._
     val e = "http://redpencil.data.gift/id/jobs/error/" +
       graft.rdf.sha1Hex(s"$taskUri $message")
     insertData(quads, Seq(
       (e, Vocab.rdfType, Vocab.oslcError, graph),
       (e, Vocab.oslcMessage, message, graph),
-      (taskUri, Vocab.taskError, e, graph)).toDF("subject", "predicate", "obj", "graph"))
+      (taskUri, Vocab.taskError, e, graph)))
   }
 
   /** INSERT DATA (lib/pipeline-import.js:180-218) into a triplestore has
-    * set semantics: `rows` join `quads` as one set union, so a quad already
-    * present (a replay, a re-run re-minting the same content-addressed
-    * entity or error) is not appended again, and duplicates collapse. */
-  private[pipeline] def insertData(quads: DataFrame, rows: DataFrame): DataFrame =
-    quads.unionByName(rows).distinct()
+    * set semantics: `rows`, de-duplicated on the driver, replace their
+    * copies in `quads` (a null-safe anti-join against their broadcast),
+    * so a quad already present (a replay, a re-run re-minting the same
+    * content-addressed entity or error) is not appended again. Over a
+    * `quads` that is a set — every state the service writes is one —
+    * this is `distinct(quads ∪ rows)`, without re-aggregating the table. */
+  private[pipeline] def insertData(quads: DataFrame,
+      rows: Seq[FileRegistry.Quad]): DataFrame = {
+    import quads.sparkSession.implicits._
+    val inserts = rows.distinct.toDF("subject", "predicate", "obj", "graph")
+    val present = inserts.columns.map(c => quads(c) <=> inserts(c)).reduce(_ && _)
+    quads.join(broadcast(inserts), present, "left_anti").unionByName(inserts)
+  }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.rdf.Vocab
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -60,10 +60,12 @@ object DeltaSource {
       .select(col("t.subject.value").as("task"))
 
   /** Streaming front-end over a directory of delta JSON files (one body
-    * per line). Checkpointed; each micro-batch hands distinct scheduled
-    * task URIs to `dispatch` — the pipeline driver (T1). */
+    * per line). Checkpointed; each micro-batch hands its distinct
+    * scheduled task URIs, sorted, to `dispatch` — the pipeline driver
+    * (T1). The list is delta-sized, so it is collected and de-duplicated
+    * on the driver rather than through a shuffle. */
   def run(spark: SparkSession, inputDir: String, checkpointDir: String)
-      (dispatch: Dataset[String] => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      (dispatch: Seq[String] => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     import spark.implicits._
     val lines = spark.readStream
       .schema(StructType(Seq(StructField("value", StringType))))
@@ -72,7 +74,7 @@ object DeltaSource {
     scheduledTasks(lines).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        dispatch(batch.select("task").distinct().as[String])
+        dispatch(batch.select("task").as[String].collect().distinct.sorted.toSeq)
       }
       .start()
   }

@@ -54,7 +54,11 @@ class FileRegistryDiffSpec extends SparkSpec {
   }
 
   test("registration is the three-way union's set") {
-    same(FileRegistry.registration(files, Now).distinct(),
+    val manifest = files.select(struct(col("task"), col("graph"), col("file_name"),
+        col("size"), col("derived_from")), col("valid"))
+      .as[(FileRegistry.ResultFile, Boolean)].collect().toSeq
+    same(FileRegistry.registration(manifest, Now).toDF("subject", "predicate", "obj", "graph")
+        .distinct(),
       FileRegistryColumnReference.registration(files, Now).distinct())
   }
 }

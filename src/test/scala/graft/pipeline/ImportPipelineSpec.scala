@@ -121,25 +121,34 @@ class ImportPipelineSpec extends SparkSpec {
   }
 
   test("a success state is one set union and one status transition") {
-    // the state's change is one insert set (the registration, through one
-    // distinct: a partial + a final HashAggregate) and one status
-    // transition (its two new rows: a local frame, no Generate), whatever
-    // the debug setting
+    // the state's change is one insert set (the registration, a local
+    // frame anti-joined against the state and appended to it) and one
+    // status transition (its two new rows: a local frame, no Generate),
+    // whatever the debug setting; like the failure state's, its plan is
+    // narrow: no shuffle and no aggregate over the state
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val pagesDir = writePages()
+    def plan(result: ImportPipeline.ImportResult) =
+      result.quads.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+    def narrow(p: org.apache.spark.sql.execution.SparkPlan) =
+      p.collect { case n: ShuffleExchangeExec => n; case n: BaseAggregateExec => n }.isEmpty &&
+        p.collect { case n if n.nodeName == "Generate" => n }.isEmpty
     val shapes = Seq(false, true).map { debug =>
       val result = ImportPipeline.runImportPipeline(spark, taskQuads, T, pagesDir,
         Files.createTempDirectory("import-out").toString, Now, writeDebug = debug)
       assert(result.status == "success", result)
-      val plan = result.quads.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
-        case p => p
-      }
-      def count(name: String) = plan.collect { case n if n.nodeName == name => n }.size
-      assert(count("HashAggregate") == 2 && count("Generate") == 0,
-        s"writeDebug=$debug:\n$plan")
-      plan.collect { case n => n.nodeName }
+      assert(narrow(plan(result)), s"writeDebug=$debug:\n${plan(result)}")
+      plan(result).collect { case n => n.nodeName }
     }
     assert(shapes(0) == shapes(1), shapes)
+    val failed = ImportPipeline.runImportPipeline(spark, taskQuads, T,
+      "/nonexistent/pages/dir", Files.createTempDirectory("import-out").toString, Now)
+    assert(failed.status == "failed", failed)
+    assert(narrow(plan(failed)), plan(failed))
   }
 
   test("re-running a task is idempotent: no duplicated metadata quads") {

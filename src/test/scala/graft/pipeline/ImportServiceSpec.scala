@@ -13,6 +13,7 @@ class ImportServiceSpec extends SparkSpec {
 
   private val T1 = "http://t/1"
   private val T2 = "http://t/2"
+  private val T3 = "http://t/3"
 
   private val page =
     """<html prefix="eli: http://data.europa.eu/eli/ontology#"><body>
@@ -163,15 +164,11 @@ class ImportServiceSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("a second identical service task compiles no classes") {
-    // a task of the same shape as the one before it reuses every
-    // generated class from the JVM-wide codegen cache, which
-    // graft.Sessions sizes to hold every plan the suite runs, so what
-    // earlier suites compiled cannot evict it (CodegenMetrics counts
-    // compilations)
-    val T3 = "http://t/3"
-    val root = Files.createTempDirectory("svc-codegen").toString
-    val stateDir = s"$root/state"
+  /** A fresh root holding `initialState` plus a second scheduled task T3
+    * with its own page, and both pages: (root, stateDir, deltaDir,
+    * pagesDir). */
+  private def twoTaskRoot(name: String): (String, String, String, String) = {
+    val root = Files.createTempDirectory(name).toString
     val deltaDir = s"$root/deltas"; Files.createDirectories(Paths.get(deltaDir))
     val pagesDir = s"$root/pages"; Files.createDirectories(Paths.get(pagesDir))
     initialState.union(Seq(
@@ -183,9 +180,19 @@ class ImportServiceSpec extends SparkSpec {
         ("http://c/in3", Vocab.taskHasFile, "share://page-3.html"))
       .toDF("subject", "predicate", "obj")
       .withColumn("graph", lit("http://g/tasks")))
-      .write.parquet(stateDir)
+      .write.parquet(s"$root/state")
     Files.writeString(Paths.get(s"$pagesDir/page-1.html"), page)
     Files.writeString(Paths.get(s"$pagesDir/page-3.html"), page)
+    (root, s"$root/state", deltaDir, pagesDir)
+  }
+
+  test("a second identical service task compiles no classes") {
+    // a task of the same shape as the one before it reuses every
+    // generated class from the JVM-wide codegen cache, which
+    // graft.Sessions sizes to hold every plan the suite runs, so what
+    // earlier suites compiled cannot evict it (CodegenMetrics counts
+    // compilations)
+    val (root, stateDir, deltaDir, pagesDir) = twoTaskRoot("svc-codegen")
     def compiled = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
     val q = ImportService.start(spark, deltaDir, s"$root/ckpt", stateDir,
@@ -232,5 +239,121 @@ class ImportServiceSpec extends SparkSpec {
     assert(together.distinct == together)
     assert(together.count(_.startsWith(T2 + "\u0001" + Vocab.admsStatus)) == 1)
     assert(persisted == 0)
+  }
+
+  test("a warm service task writes no shuffle bytes") {
+    // every job of a task is narrow: the two point reads, the extraction
+    // and its sinks, the manifest, the state write; the delta's task list
+    // is de-duplicated on the driver
+    val (root, stateDir, deltaDir, pagesDir) = twoTaskRoot("svc-shuffle")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffled = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      import org.apache.spark.scheduler._
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => shuffled.addAndGet(
+          m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead))
+    }
+    val q = ImportService.start(spark, deltaDir, s"$root/ckpt", stateDir,
+      pagesDir, s"$root/out", clock = () => "2026-03-01T00:00:00Z")
+    try {
+      Files.writeString(Paths.get(s"$deltaDir/d1.json"), deltaBody(T1))
+      q.processAllAvailable()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        Files.writeString(Paths.get(s"$deltaDir/d2.json"), deltaBody(T3))
+        q.processAllAvailable()
+      } finally {
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    } finally q.stop()
+    assert(jobs.get > 0)
+    assert(shuffled.get == 0L, s"${shuffled.get} shuffle bytes over ${jobs.get} jobs")
+    assert(ImportService.readState(spark, stateDir).filter(col("subject") === T3 &&
+      col("predicate") === Vocab.admsStatus).select("obj").as[String].collect().toSeq ==
+      Seq(Vocab.statusSuccess))
+  }
+
+  test("the state's file count stays bounded over one-task batches") {
+    // each swap rewrites the state coalesced to one file per
+    // maxPartitionBytes of it, so the task count adds no files. A plain
+    // union writes one file per partition of its inputs: the state scan's
+    // (Spark packs small files into about one partition per core) and the
+    // inserts' (a local frame: one per row, up to one per core)
+    val (root, stateDir, deltaDir, pagesDir) = twoTaskRoot("svc-files")
+    def parts = new java.io.File(stateDir).listFiles().filter(_.getName.startsWith("part-"))
+    val q = ImportService.start(spark, deltaDir, s"$root/ckpt", stateDir,
+      pagesDir, s"$root/out", clock = () => "2026-03-01T00:00:00Z")
+    val counts = try (1 to 10).map { i =>
+      Files.writeString(Paths.get(s"$deltaDir/d$i.json"),
+        deltaBody(if (i % 2 == 0) T1 else T3))
+      q.processAllAvailable()
+      parts.length
+    } finally q.stop()
+    assert(counts.forall(_ <= counts.head), counts)
+    val perFile = spark.sessionState.conf.filesMaxPartitionBytes
+    assert(counts.last <= math.max(1L, (parts.map(_.length).sum + perFile - 1) / perFile), counts)
+    val state = ImportService.readState(spark, stateDir)
+    assert(state.distinct().count() == state.count())
+  }
+
+  test("every crash point of a task's state write recovers and replays") {
+    // the state behind the fault-injecting filesystem: for every k, the
+    // k-th create/rename/delete of one task's run + swap fails — alone,
+    // or with every mutation after it (a crash). Recovery must leave the
+    // old or the new state, with no temp dir; replaying the task must
+    // reach the clean run's state
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.ffs.impl", classOf[graft.ops.FaultFileSystem].getName)
+    val root = Files.createTempDirectory("svc-faults").toString
+    val pagesDir = s"$root/pages"; Files.createDirectories(Paths.get(pagesDir))
+    Files.writeString(Paths.get(s"$pagesDir/page-1.html"), page)
+    val base = initialState.collect().toSeq
+    var run = 0
+    /** A fresh state dir holding `initialState`, behind the faults. */
+    def freshState(): String = {
+      run += 1
+      spark.createDataFrame(java.util.List.of(base: _*), initialState.schema)
+        .coalesce(1).write.parquet(s"$root/r$run/state")
+      s"ffs:$root/r$run/state"
+    }
+    def task(stateDir: String): Unit = {
+      val r = ImportPipeline.runImportPipeline(spark,
+        ImportService.readState(spark, stateDir), T1, pagesDir,
+        s"$root/r$run/out-${System.nanoTime()}", "2026-03-01T00:00:00Z")
+      assert(r.status == "success", r)
+      ImportService.writeState(r.quads, stateDir)
+    }
+    def rows(stateDir: String) = ImportService.readState(spark, stateDir).collect()
+      .map(_.mkString("\u0001")).toSeq.sorted
+    val before = base.map(_.mkString("\u0001")).sorted
+    val clean = { val d = freshState(); task(d); rows(d) }
+    assert(clean.distinct == clean && clean != before)
+    for (crash <- Seq(true, false)) {
+      var k = 0L
+      var fired = true
+      while (fired) {
+        k += 1
+        val stateDir = freshState()
+        graft.ops.FaultFs.arm(k, crash)
+        val outcome = scala.util.Try(task(stateDir))
+        fired = graft.ops.FaultFs.disarm() >= k
+        assert(outcome.isFailure == fired || !crash, s"k=$k crash=$crash: $outcome")
+        ImportService.recoverState(spark, stateDir)
+        val recovered = rows(stateDir)
+        assert(recovered == before || recovered == clean, s"k=$k crash=$crash")
+        val parent = new java.io.File(s"$root/r$run")
+        def temps = parent.list().filter(_.contains("-tmp-")).toSeq
+        assert(temps.isEmpty, s"k=$k crash=$crash: $temps")
+        task(stateDir)
+        assert(rows(stateDir) == clean, s"k=$k crash=$crash")
+        assert(temps.isEmpty, s"k=$k crash=$crash: $temps")
+      }
+      // the write's mutations: Spark's commit protocol and the swap
+      assert(k > 5, s"only ${k - 1} mutations (crash=$crash)")
+    }
   }
 }

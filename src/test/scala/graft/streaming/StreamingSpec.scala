@@ -68,19 +68,33 @@ class StreamingSpec extends SparkSpec {
     assert(TaskStore.fileUrl(quads, "http://remote/404").count() == 0)
   }
 
-  test("streaming delta source dispatches distinct scheduled tasks (T1)") {
+  /** The task lists `DeltaSource.run` dispatches for `bodies`, one
+    * delta file each, each processed before the next is written. */
+  private def dispatched(bodies: String*): Seq[Seq[String]] = {
     val in = Files.createTempDirectory("delta-in").toString
     val ckpt = Files.createTempDirectory("delta-ckpt").toString
-    val seen = scala.collection.mutable.Set[String]()
-    val q = DeltaSource.run(spark, in, ckpt) { batch =>
-      seen.synchronized { seen ++= batch.collect() }
-    }
-    Files.writeString(java.nio.file.Paths.get(s"$in/d1.json"), deltaBody)
-    q.processAllAvailable()
-    q.stop()
-    assert(seen == Set(
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val q = DeltaSource.run(spark, in, ckpt) { tasks => seen.add(tasks) }
+    try bodies.zipWithIndex.foreach { case (b, i) =>
+      Files.writeString(java.nio.file.Paths.get(s"$in/d$i.json"), b)
+      q.processAllAvailable()
+    } finally q.stop()
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.filter(_.nonEmpty)
+  }
+
+  test("streaming delta source dispatches distinct scheduled tasks (T1)") {
+    assert(dispatched(deltaBody) == Seq(Seq(
       "http://redpencil.data.gift/id/task/T1",
-      "http://redpencil.data.gift/id/task/T2"))
+      "http://redpencil.data.gift/id/task/T2")))
+  }
+
+  test("a delta naming one task twice dispatches it once") {
+    // T1 scheduled twice: in two changesets of the body, and in two lines
+    // of the delta file, one micro-batch
+    val twice = deltaBody.replace("task/T2", "task/T1")
+    assert(dispatched(twice + "\n" + twice) ==
+      Seq(Seq("http://redpencil.data.gift/id/task/T1")))
   }
 
   test("watermarked windowed aggregation over an event stream") {
