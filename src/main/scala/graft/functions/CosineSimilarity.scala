@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, NaNvl, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, NullType}
@@ -13,11 +13,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, N
   * double-array caller keeps full precision, the accumulation is always
   * double).
   *
-  * A native Catalyst expression (with codegen) rather than a UDF or a
-  * `zip_with`/`aggregate` composition: the builtin higher-order-function
-  * route allocates a lambda frame per element, while this compiles to one
-  * static call on the unsafe array data — the difference is the whole
-  * game when scoring billions of candidate pairs in an ANN sweep.
+  * A `StaticInvoke` of the [[CosineSimilarity.compute]] kernel rather than
+  * a UDF or a `zip_with`/`aggregate` composition: the builtin
+  * higher-order-function route allocates a lambda frame per element,
+  * while this compiles to one static call on the unsafe array data — the
+  * difference is the whole game when scoring billions of candidate pairs
+  * in an ANN sweep.
   *
   * Accumulates in double precision, sequentially, as
   * `dot / (sqrt(na) * sqrt(nb))` — bitwise-aligned with the DuckDB oracle
@@ -26,9 +27,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, N
   * literal argument (NullType is accepted at analysis, SQL-style), and
   * for arrays containing a null element (detected only when the input
   * type declares `containsNull` — the check is compiled out otherwise).
+  * The kernel signals "no result" with NaN, which Spark's own `NaNvl`
+  * around the call turns into SQL null.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with RuntimeReplaceable {
 
   private def isAccepted(t: DataType): Boolean = t match {
     case ArrayType(FloatType | DoubleType, _) => true
@@ -54,31 +57,15 @@ case class CosineSimilarity(left: Expression, right: Expression)
   }
 
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "cosine_similarity"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val out = CosineSimilarity.compute(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      elemIsDouble(left), elemIsDouble(right),
-      mayHaveNullElems(left), mayHaveNullElems(right))
-    if (out.isNaN) null else java.lang.Double.valueOf(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      // explicit casts: with a NullType child the generated variable is
-      // Object-typed; its branch is dead (constant-null child) but must
-      // still compile
-      s"""
-         |${ev.value} = graft.functions.CosineSimilarity.compute(
-         |  (org.apache.spark.sql.catalyst.util.ArrayData) $a,
-         |  (org.apache.spark.sql.catalyst.util.ArrayData) $b,
-         |  ${elemIsDouble(left)}, ${elemIsDouble(right)},
-         |  ${mayHaveNullElems(left)}, ${mayHaveNullElems(right)});
-         |if (Double.isNaN(${ev.value})) { ${ev.isNull} = true; }
-       """.stripMargin
-    })
+  override lazy val replacement: Expression =
+    // a NULL literal argument has no array class to call the kernel with
+    if (left.dataType == NullType || right.dataType == NullType) Literal(null, DoubleType)
+    else NaNvl(StaticInvoke(CosineSimilarity.getClass, DoubleType, "compute",
+      Seq(left, right, Literal(elemIsDouble(left)), Literal(elemIsDouble(right)),
+        Literal(mayHaveNullElems(left)), Literal(mayHaveNullElems(right)))),
+      Literal(null, DoubleType))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
@@ -86,9 +73,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Hot loop shared by interpreted and generated code paths; the
+  /** The kernel both interpreted and generated code call; the
     * element-width and element-nullability flags are plan-time constants
-    * (inlined as literals in codegen, so the JIT drops the dead
+    * (literal arguments of the call, so the JIT drops the dead
     * branches — a `containsNull=false` input pays nothing). NaN signals
     * "no result" (empty, length mismatch, zero-norm vector, or a null
     * element — unsafe array getters would otherwise misread a null slot

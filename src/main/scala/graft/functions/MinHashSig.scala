@@ -1,8 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal, RuntimeReplaceable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -30,28 +30,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * `WHERE len(t) >= n`).
   */
 case class MinHashSig(child: Expression, k: Int, n: Int, seed: Long)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with RuntimeReplaceable with ImplicitCastInputTypes {
 
   require(k >= 1, s"signature length must be >= 1, got $k")
   require(n >= 1, s"shingle width must be >= 1, got $n")
 
-  override def inputTypes =
-    Seq(StringType)
-
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "minhash_sig"
 
-  override def nullSafeEval(input: Any): Any =
-    MinHashSig.compute(input.asInstanceOf[UTF8String], k, n, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.functions.MinHashSig.compute($c, $k, $n, ${seed}L);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin
-    })
+  override lazy val replacement: Expression = StaticInvoke(MinHashSig.getClass,
+    dataType, "compute", Seq(child, Literal(k), Literal(n), Literal(seed)))
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
     copy(child = newChild)

@@ -1,8 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal, RuntimeReplaceable, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -26,21 +26,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * drops the row identically).
   */
 case class ShingleHashes(child: Expression, n: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with RuntimeReplaceable with ImplicitCastInputTypes {
 
-  override def inputTypes =
-    Seq(StringType)
-
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "shingle_hashes"
 
-  override def nullSafeEval(input: Any): Any =
-    ShingleHashes.compute(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ShingleHashes.compute($c, $n)")
+  override lazy val replacement: Expression = StaticInvoke(ShingleHashes.getClass,
+    dataType, "compute", Seq(child, Literal(n)))
 
   override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
     copy(child = newChild)

@@ -2,15 +2,15 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
-/** Random-hyperplane sign signature (Charikar, STOC'02) as a native
-  * codegen'd expression: bit p of the result long is
-  * `sign(<embedding, plane_{p + planeOffset}>)`. Hyperplane component h
+/** Random-hyperplane sign signature (Charikar, STOC'02), a call of the
+  * [[SignSignature.compute]] kernel through Spark's `StaticInvoke`: bit p
+  * of the result long is `sign(<embedding, plane_{p + planeOffset}>)`. Hyperplane component h
   * of plane p is a deterministic splitmix64-mixed value in [-0.5, 0.5)
   * derived from (p, h) alone — stable across runs, partitions, and
   * executors with no RNG state to ship; `planeOffset` selects a disjoint
@@ -23,10 +23,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * once per (nPlanes, planeOffset, dims) per executor and cached; the
   * hot loop is a flat fused multiply-add over a primitive array).
   *
-  * Null handling: a null array yields null (UnaryExpression default); a
+  * Null handling: a null array yields null (the call propagates null); a
   * null ELEMENT yields a null signature (the dot against a missing
   * component is undefined — mirrors SQL aggregate-over-null semantics
-  * rather than silently reading garbage).
+  * rather than silently reading garbage). The kernel returns a primitive
+  * long, so it signals a null signature with [[SignSignature.NullSentinel]];
+  * the expression calls [[SignSignature.computeOrNull]], where the
+  * sentinel becomes null.
   *
   * `expectedDims`: an index has ONE dimensionality — when configured
   * (≥ 1), a row whose embedding has any other length gets a null
@@ -38,7 +41,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * adaptive behavior for exploratory use. */
 case class SignSignature(child: Expression, nPlanes: Int, planeOffset: Int,
     expectedDims: Int = -1)
-    extends UnaryExpression {
+    extends UnaryExpression with RuntimeReplaceable {
 
   require(nPlanes >= 1 && nPlanes <= 64,
     s"one sign-signature word holds at most 64 planes, got $nPlanes")
@@ -62,24 +65,11 @@ case class SignSignature(child: Expression, nPlanes: Int, planeOffset: Int,
   }
 
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
   override def prettyName: String = "sign_signature"
 
-  override def nullSafeEval(input: Any): Any = {
-    val out = SignSignature.compute(input.asInstanceOf[ArrayData],
-      nPlanes, planeOffset, elemIsDouble, expectedDims)
-    if (out == SignSignature.NullSentinel) null else java.lang.Long.valueOf(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.functions.SignSignature.compute(
-         |  $c, $nPlanes, $planeOffset, $elemIsDouble, $expectedDims);
-         |if (${ev.value} == graft.functions.SignSignature.NullSentinel())
-         |  { ${ev.isNull} = true; }
-       """.stripMargin
-    })
+  override lazy val replacement: Expression =
+    StaticInvoke(SignSignature.getClass, LongType, "computeOrNull", Seq(child,
+      Literal(nPlanes), Literal(planeOffset), Literal(elemIsDouble), Literal(expectedDims)))
 
   override protected def withNewChildInternal(newChild: Expression): SignSignature =
     copy(child = newChild)
@@ -179,6 +169,14 @@ object SignSignature {
       p += 1
     }
     if (sig == NullSentinel) NullSentinel + 1 else sig
+  }
+
+  /** [[compute]] with its sentinel as null, for the expression (one
+    * kernel call per evaluation; [[SimHash64.computeOrNull]] says why). */
+  def computeOrNull(a: ArrayData, nPlanes: Int, off: Int, isDouble: Boolean,
+      expectedDims: Int): java.lang.Long = {
+    val sig = compute(a, nPlanes, off, isDouble, expectedDims)
+    if (sig == NullSentinel) null else sig
   }
 
   /** `sign_signature(embedding, nPlanes, planeOffset)` as a Column;

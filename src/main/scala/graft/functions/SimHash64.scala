@@ -1,14 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** 64-bit SimHash document fingerprint (Charikar 2002) as a native
-  * codegen'd Catalyst expression.
+/** 64-bit SimHash document fingerprint (Charikar 2002): a call of the
+  * [[SimHash64.compute]] kernel through Spark's `StaticInvoke`, so the
+  * interpreted and the generated code make the same static call.
   *
   * Tokenizes on ASCII whitespace and hashes each token to the first 8
   * bytes (big-endian) of its MD5 — equivalently the first 16 hex chars of
@@ -22,30 +23,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * at least one full band — pigeonhole) and equi-joining on band values:
   * dedup at 100 TB is then a plain shuffle join on (band_id, band_value),
   * never a cross join.
+  *
+  * The kernel returns a primitive long with a "no tokens" sentinel; the
+  * expression calls [[SimHash64.computeOrNull]], where the sentinel
+  * becomes null.
   */
 case class SimHash64(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with RuntimeReplaceable with ImplicitCastInputTypes {
 
-  override def inputTypes =
-    Seq(org.apache.spark.sql.types.StringType)
-
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
   override def prettyName: String = "simhash64"
 
-  override def nullSafeEval(input: Any): Any = {
-    val out = SimHash64.compute(input.asInstanceOf[UTF8String])
-    if (out == SimHash64.NullSentinel) null else java.lang.Long.valueOf(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.functions.SimHash64.compute($c);
-         |if (${ev.value} == graft.functions.SimHash64.NullSentinel())
-         |  { ${ev.isNull} = true; }
-       """.stripMargin
-    })
+  override lazy val replacement: Expression =
+    StaticInvoke(SimHash64.getClass, LongType, "computeOrNull", Seq(child))
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
@@ -113,6 +104,16 @@ object SimHash64 {
       b += 1
     }
     if (out == NullSentinel) NullSentinel + 1 else out
+  }
+
+  /** [[compute]] with its sentinel as null, for the expression. Mapping
+    * it inside the call (not with Spark's `NullIf` around it) keeps one
+    * kernel call per evaluation: the optimizer copies the expression into
+    * the `isnotnull` filters it infers, and `NullIf`'s shared value does
+    * not survive that copy, so the filter would run the kernel twice. */
+  def computeOrNull(text: UTF8String): java.lang.Long = {
+    val fp = compute(text)
+    if (fp == NullSentinel) null else fp
   }
 
   /** RE2's `\s` class — `[\t\n\f\r ]`, NO vertical tab. The parity

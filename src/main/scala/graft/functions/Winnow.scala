@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal, RuntimeReplaceable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Winnowing document fingerprint (Schleimer, Wilkerson, Aiken —
@@ -23,21 +23,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * never a cross join.
   */
 case class Winnow(child: Expression, k: Int, window: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with RuntimeReplaceable with ImplicitCastInputTypes {
 
-  override def inputTypes =
-    Seq(org.apache.spark.sql.types.StringType)
-
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "winnow_fingerprint"
 
-  override def nullSafeEval(input: Any): Any =
-    Winnow.compute(input.asInstanceOf[UTF8String], k, window)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Winnow.compute($c, $k, $window)")
+  override lazy val replacement: Expression = StaticInvoke(Winnow.getClass,
+    dataType, "compute", Seq(child, Literal(k), Literal(window)))
 
   override protected def withNewChildInternal(newChild: Expression): Winnow =
     copy(child = newChild)

@@ -95,7 +95,7 @@ object Similarity {
   private[ops] val CentroidsSchema = "cell INT, centroid ARRAY<DOUBLE>"
 
   /** Sign-signature frame shared by the LSH paths: signature bit p =
-    * sign(<embedding, plane_{p+planeOffset}>) via the native codegen'd
+    * sign(<embedding, plane_{p+planeOffset}>) via the
     * [[graft.functions.SignSignature]] expression (deterministic seeded
     * hyperplanes, weight tables cached per executor). One word holds at
     * most 64 planes — `1L << p` wraps mod 64, so wider signatures

@@ -107,7 +107,7 @@ object TextAnalysis {
       md5(trim(regexp_replace(lower(col("text")), "\\s+", " "))).as("fp"))
       .orderBy(col("doc_id"))
 
-  /** Rolling-hash winnowing fingerprints (custom codegen'd expression):
+  /** Rolling-hash winnowing fingerprints (the Winnow kernel, one static call):
     * per-document selected-hash count plus a full-content digest of the
     * selected set — the substring-overlap detector that md5/SimHash can't
     * provide. The digest is md5 over the canonical rendering (ascending

@@ -66,7 +66,9 @@ object ImportService {
     * before the new one takes its place, never deleted while it is the
     * only copy, and [[recoverState]] (run by `start`) restores the
     * backup if a crash landed between the renames and sweeps stranded
-    * temp dirs.
+    * temp dirs. A rename into place that fails or throws puts the backup
+    * back before the error propagates, so the running service keeps a
+    * table at `stateDir`.
     *
     * The protocol needs an atomic directory rename, which `file:` and
     * `hdfs:` provide. Object stores such as `s3a:` rename a directory by
@@ -92,11 +94,12 @@ object ImportService {
     fs.delete(backup, true) // drop the previous generation's backup
     if (fs.exists(target) && !fs.rename(target, backup))
       throw new java.io.IOException(s"state swap failed: $target -> $backup")
-    if (!fs.rename(tmp, target)) {
-      // restore the old state rather than leaving no table at all
-      fs.rename(backup, target)
-      throw new java.io.IOException(s"state swap failed: $tmp -> $target")
-    }
+    // restore the old state rather than leaving no table at all, whether
+    // the rename reports failure or throws
+    def restore(e: Throwable): Nothing = { fs.rename(backup, target); throw e }
+    val swapped =
+      try fs.rename(tmp, target) catch { case scala.util.control.NonFatal(e) => restore(e) }
+    if (!swapped) restore(new java.io.IOException(s"state swap failed: $tmp -> $target"))
     fs.delete(backup, true)
   }
 

@@ -37,46 +37,37 @@ object TaskStore {
     "index" -> Vocab.taskIndex, "operation" -> Vocab.taskOperation,
     "error" -> Vocab.taskError)
 
-  /** [[loadTasks]]' columns: `task`, the [[TaskProps]], `task_graph`. */
+  /** [[pivot]]'s columns: `task`, the [[TaskProps]], `task_graph`. */
   private val TaskSchema = StructType(
     ("task" +: TaskProps.map(_._1) :+ "task_graph").map(StructField(_, StringType)))
 
-  /** S4/J2 star lookup (lib/task.js:80-108): one row per task with its
-    * properties pivoted into columns; OPTIONAL error → nullable column
-    * (left-outer semantics fall out of the conditional aggregation). */
-  def loadTasks(quads: DataFrame): DataFrame = {
-    val aggs = TaskProps.map { case (c, p) =>
-      max(when(col("predicate") === p, col("obj"))).as(c)
-    } :+ max(col("graph")).as("task_graph")
-    quads
-      .filter(col("predicate").isin(TaskProps.map(_._2): _*))
-      .groupBy(col("subject").as("task"))
-      .agg(aggs.head, aggs.tail: _*)
-      .filter(col("type") === Vocab.taskType)
-  }
-
-  /** The service's task read: one point read (`subject = taskUri`,
-    * collected). Returns [[loadExtractionTask]]'s row, pivoted on the
-    * driver with [[loadTasks]]' semantics (the max per property and,
-    * over the property rows, of the graph; Spark's string order), and
-    * the task's input containers, distinct and sorted. The row is empty
-    * unless the subject is a task of a watched operation. */
-  private[pipeline] def readTask(quads: DataFrame,
-      taskUri: String): (Option[Row], Seq[String]) = {
-    import quads.sparkSession.implicits._
-    val rows = quads.filter(col("subject") === taskUri)
-      .select("predicate", "obj", "graph").as[(String, String, String)].collect()
+  /** S4/J2 star lookup (lib/task.js:80-108) over one subject's collected
+    * `(predicate, obj, graph)` rows: its [[TaskProps]] pivoted into a row,
+    * each the max of its values and `task_graph` the max graph over the
+    * property rows, in Spark's string order; OPTIONAL error → null. Empty
+    * unless the subject is a task of a watched operation (P7). */
+  private def pivot(subject: String, rows: Seq[(String, String, String)]): Option[Row] = {
     def maxOf(xs: Iterable[String]) = xs.filter(_ != null)
       .maxByOption(UTF8String.fromString).orNull
     val props = rows.filter(r => TaskProps.exists(_._2 == r._1))
     val values = TaskProps.map { case (_, p) => maxOf(props.collect { case (`p`, o, _) => o }) }
     val byName = TaskProps.map(_._1).zip(values).toMap
-    val task = Option.when(byName("type") == Vocab.taskType &&
+    Option.when(byName("type") == Vocab.taskType &&
         Seq(Vocab.opExtracting, Vocab.opImporting).contains(byName("operation")))(
-      new GenericRowWithSchema((taskUri +: values :+ maxOf(props.map(_._3))).toArray,
+      new GenericRowWithSchema((subject +: values :+ maxOf(props.map(_._3))).toArray,
         TaskSchema))
+  }
+
+  /** The service's task read: one point read (`subject = taskUri`,
+    * collected). Returns [[loadExtractionTask]]'s row ([[pivot]]) and
+    * the task's input containers, distinct and sorted. */
+  private[pipeline] def readTask(quads: DataFrame,
+      taskUri: String): (Option[Row], Seq[String]) = {
+    import quads.sparkSession.implicits._
+    val rows = quads.filter(col("subject") === taskUri)
+      .select("predicate", "obj", "graph").as[(String, String, String)].collect().toSeq
     val containers = rows.collect { case (Vocab.taskInputContainer, c, _) if c != null => c }
-    (task, containers.distinct.sorted.toSeq)
+    (pivot(taskUri, rows), containers.distinct.sorted)
   }
 
   /** The second point read: the pages the containers hold
@@ -143,12 +134,24 @@ object TaskStore {
   }
 
   /** K7 startup recovery (lib/task.js:24-63): every busy task of the
-    * watched operations → failed, set-based in one pass. */
+    * watched operations → failed, set-based in one pass. The busy tasks
+    * come from two collected point reads, the subjects with a busy status
+    * row and then their property rows, pivoted on the driver ([[pivot]]). */
   def failBusyTasks(quads: DataFrame, nowIso: String): DataFrame = {
-    val busy = loadTasks(quads)
-      .filter(col("status") === Vocab.statusBusy &&
-        col("operation").isin(Vocab.opExtracting, Vocab.opImporting))
-      .select(col("task"), col("task_graph"))
+    import quads.sparkSession.implicits._
+    val subjects = quads.filter(col("predicate") === Vocab.admsStatus &&
+        col("obj") === Vocab.statusBusy)
+      .select("subject").as[String].collect().distinct.toSeq
+    val props = if (subjects.isEmpty) Nil
+      else quads.filter(col("subject").isin(subjects: _*) &&
+          col("predicate").isin(TaskProps.map(_._2): _*))
+        .select("subject", "predicate", "obj", "graph")
+        .as[(String, String, String, String)].collect().toSeq
+    val busy = props.groupBy(_._1).toSeq
+      .flatMap { case (s, rows) => pivot(s, rows.map(r => (r._2, r._3, r._4))) }
+      .filter(_.getAs[String]("status") == Vocab.statusBusy)
+      .map(r => (r.getAs[String]("task"), r.getAs[String]("task_graph")))
+      .toDF("task", "task_graph")
     val kept = quads.join(broadcast(busy),
       quads("subject") === busy("task") &&
         quads("predicate").isin(Vocab.admsStatus, Vocab.dctModified),

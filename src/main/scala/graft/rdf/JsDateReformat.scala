@@ -4,8 +4,8 @@ import java.time._
 import java.util.Locale
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -58,26 +58,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * after the zone, and separator-edge forms are all parsed the way
   * node parses them, pinned by corpus rows.
   *
-  * Codegen: [[JsDateReformat.reformat]] is a pure static function, so
-  * `doGenCode` emits a one-line static call (same shape as
-  * [[JsUrlParseable]]) and the expression stays inside whole-stage
-  * codegen instead of falling back to interpreted eval.
+  * Evaluation: [[JsDateReformat.reformat]] is a pure static function,
+  * called through Spark's `StaticInvoke` (same shape as
+  * [[JsUrlParseable]]), so interpreted and generated code make the same
+  * call and the expression stays inside whole-stage codegen. Invalid
+  * Date is the kernel's own null return: the call's result is null.
   */
 case class JsDateReformat(child: Expression, withTime: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with RuntimeReplaceable {
 
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
   override def prettyName: String =
     if (withTime) "js_datetime_reformat" else "js_date_reformat"
 
-  override def nullSafeEval(input: Any): Any =
-    JsDateReformat.reformat(input.asInstanceOf[UTF8String], withTime)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.rdf.JsDateReformat.reformat($c, $withTime);
-      ${ev.isNull} = ${ev.value} == null;""")
+  override lazy val replacement: Expression = StaticInvoke(JsDateReformat.getClass,
+    StringType, "reformat", Seq(child, Literal(withTime)))
 
   override protected def withNewChildInternal(newChild: Expression): JsDateReformat =
     copy(child = newChild)
@@ -87,7 +82,7 @@ object JsDateReformat {
   def date(c: Column): Column = toColumn(JsDateReformat(toExpr(c), withTime = false))
   def dateTime(c: Column): Column = toColumn(JsDateReformat(toExpr(c), withTime = true))
 
-  /** Static entry for both interpreted eval and generated code: parse as
+  /** The kernel both interpreted and generated code call: parse as
     * JS `new Date` would, format with the reference's field logic, null
     * for Invalid Date. */
   def reformat(input: UTF8String, withTime: Boolean): UTF8String =

@@ -3,13 +3,14 @@ package graft.rdf
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** JS `new URL(url)` parseability as ONE codegen'd expression node.
+/** JS `new URL(url)` parseability as ONE expression node: a `StaticInvoke`
+  * of [[JsUrlMirror.isParseable]].
   *
   * The reference validates a WKT literal's CRS URL by constructing
   * `new URL(crs)` and treating a throw as invalid
@@ -30,18 +31,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * (callers wrap in `coalesce(_, false)` exactly as before).
   */
 case class JsUrlParseable(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with RuntimeReplaceable with ImplicitCastInputTypes {
 
   override def inputTypes = Seq(StringType)
   override def dataType: DataType = BooleanType
   override def prettyName: String = "js_url_parseable"
 
-  override def nullSafeEval(input: Any): Any =
-    JsUrlMirror.isParseable(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.rdf.JsUrlMirror.isParseable($c);")
+  override lazy val replacement: Expression = StaticInvoke(JsUrlMirror.getClass,
+    BooleanType, "isParseable", Seq(child), returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): JsUrlParseable =
     copy(child = newChild)

@@ -2,9 +2,9 @@ package graft.rdf
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** N-Triples line ⇄ structured quad.
@@ -19,8 +19,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Serialization is one codegen'd [[TermKernelExpr]] node per call (the
   * rendering and ECHAR escaping live in [[TermKernel.serializeTerm]]);
-  * parsing is a hand-rolled single-pass scanner in a Catalyst expression
-  * (no regex backtracking, one JVM call per line).
+  * parsing is a hand-rolled single-pass scanner ([[parseRow]]) called
+  * through Spark's `StaticInvoke` (no regex backtracking, one JVM call
+  * per line).
   */
 object NTriples {
 
@@ -50,6 +51,18 @@ object NTriples {
   def parseLine(line: String): Option[Quad] = {
     val p = new LineParser(line)
     p.parse()
+  }
+
+  /** [[parseLine]] as the quad struct's internal row; null if malformed. */
+  def parseRow(line: UTF8String): InternalRow = {
+    def termRow(t: Term): InternalRow = InternalRow(
+      UTF8String.fromString(t.termType), UTF8String.fromString(t.value),
+      UTF8String.fromString(t.datatype), UTF8String.fromString(t.lang))
+    parseLine(line.toString) match {
+      case Some(q) => InternalRow(termRow(q.subject), termRow(q.predicate),
+        termRow(q.obj), UTF8String.fromString(q.graph))
+      case None => null
+    }
   }
 
   private final class LineParser(s: String) {
@@ -161,28 +174,14 @@ object NTriples {
 
 /** `parse_ntriple(line)` → quad struct (null on malformed input). */
 case class ParseNTriple(child: Expression)
-    extends UnaryExpression with CodegenFallback
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
+    extends UnaryExpression with RuntimeReplaceable with ImplicitCastInputTypes {
 
-  override def inputTypes =
-    Seq(org.apache.spark.sql.types.StringType)
-
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = Quad.schema
-  override def nullable: Boolean = true
   override def prettyName: String = "parse_ntriple"
 
-  private def termRow(t: Term): InternalRow = InternalRow(
-    UTF8String.fromString(t.termType), UTF8String.fromString(t.value),
-    if (t.datatype == null) null else UTF8String.fromString(t.datatype),
-    if (t.lang == null) null else UTF8String.fromString(t.lang))
-
-  override def nullSafeEval(input: Any): Any =
-    NTriples.parseLine(input.asInstanceOf[UTF8String].toString) match {
-      case Some(q) => InternalRow(termRow(q.subject), termRow(q.predicate),
-        termRow(q.obj),
-        if (q.graph == null) null else UTF8String.fromString(q.graph))
-      case None => null
-    }
+  override lazy val replacement: Expression =
+    StaticInvoke(NTriples.getClass, dataType, "parseRow", Seq(child))
 
   override protected def withNewChildInternal(newChild: Expression): ParseNTriple =
     copy(child = newChild)

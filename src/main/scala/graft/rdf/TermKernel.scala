@@ -7,9 +7,8 @@ import java.util.regex.Pattern
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodeGenerator, CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * provenance lives on [[Validation]] and [[Repair]]; the differential
   * spec pins the parity against the former trees row by row.
   *
-  * [[TermKernelExpr]] exposes each function as one codegen'd node, so a
+  * [[TermKernelExpr]] exposes each function as one static call, so a
   * verdict→fixed→ttl projection is a handful of static calls instead of
   * thousands of expression nodes (whose generated Java outgrew the JVM's
   * 64 KB method limit, forcing the stage out of whole-stage codegen).
@@ -260,17 +259,19 @@ object TermKernel {
       serializeTerm(o), Dot)
 }
 
-/** A [[TermKernel]] function as one Catalyst expression node. Children are
-  * term structs (fields `termType, value, datatype, lang`, all strings),
-  * except `fixQuad`'s trailing graph string; null children are passed as
-  * null. Both the interpreted path and the generated code make the same
-  * static call. */
+/** A [[TermKernel]] function as one Catalyst expression node: a
+  * `StaticInvoke` of the function, so the interpreted path and the
+  * generated code make the same static call. Children are term structs
+  * (fields `termType, value, datatype, lang`, all strings), except
+  * `fixQuad`'s trailing graph string; null children are passed as null.
+  * The kernels return SQL's unknown and "no result" as a null reference
+  * (a null `java.lang.Boolean`, row or string), which the call maps to
+  * SQL null; only `verdict` never returns null. */
 case class TermKernelExpr(op: TermKernelExpr.Op, children: Seq[Expression])
-    extends Expression {
+    extends Expression with RuntimeReplaceable {
   import TermKernelExpr._
 
   override def dataType: DataType = op.dataType
-  override def nullable: Boolean = op ne Verdict
   override def prettyName: String = op.name
   override def flatArguments: Iterator[Any] = children.iterator
 
@@ -290,46 +291,26 @@ case class TermKernelExpr(op: TermKernelExpr.Op, children: Seq[Expression])
       (if (op eq FixQuad) " and a graph string" else ""))
   }
 
-  override def eval(input: InternalRow): Any = op.apply(children.map(_.eval(input)))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val args = children.map(_.genCode(ctx))
-    val result = ctx.freshName("kernel")
-    val call = args.map(a => s"${a.isNull} ? null : ${a.value}").mkString(", ")
-    ev.copy(code = Block.blocksToBlock(args.map(_.code)) + code"""
-      ${CodeGenerator.boxedType(dataType)} $result = graft.rdf.TermKernel.${op.name}($call);
-      boolean ${ev.isNull} = $result == null;
-      ${CodeGenerator.javaType(dataType)} ${ev.value} =
-        ${ev.isNull} ? ${CodeGenerator.defaultValue(dataType)} : $result;""")
-  }
+  override lazy val replacement: Expression = StaticInvoke(TermKernel.getClass,
+    dataType, op.name, children, propagateNull = false, returnNullable = op ne Verdict)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): TermKernelExpr = copy(children = newChildren)
 }
 
 object TermKernelExpr {
-  /** A kernel function: its name on [[TermKernel]], result type, arity,
-    * and the same call for the interpreted path. */
-  sealed abstract class Op(val name: String, val dataType: DataType, val arity: Int,
-      val apply: Seq[Any] => Any) extends Serializable
-  private def row(a: Any): InternalRow = a.asInstanceOf[InternalRow]
+  /** A kernel function: its name on [[TermKernel]], result type and arity. */
+  sealed abstract class Op(val name: String, val dataType: DataType, val arity: Int)
+      extends Serializable
 
-  case object IsValidTerm extends Op("isValidTerm", BooleanType, 1,
-    a => TermKernel.isValidTerm(row(a(0))))
-  case object IsTermFixable extends Op("isTermFixable", BooleanType, 1,
-    a => TermKernel.isTermFixable(row(a(0))))
-  case object FixTerm extends Op("fixTerm", Term.schema, 1,
-    a => TermKernel.fixTerm(row(a(0))))
-  case object SerializeTerm extends Op("serializeTerm", StringType, 1,
-    a => TermKernel.serializeTerm(row(a(0))))
-  case object IsQuadFixable extends Op("isQuadFixable", BooleanType, 3,
-    a => TermKernel.isQuadFixable(row(a(0)), row(a(1)), row(a(2))))
-  case object Verdict extends Op("verdict", StringType, 3,
-    a => TermKernel.verdict(row(a(0)), row(a(1)), row(a(2))))
-  case object ToNTriple extends Op("toNTriple", StringType, 3,
-    a => TermKernel.toNTriple(row(a(0)), row(a(1)), row(a(2))))
-  case object FixQuad extends Op("fixQuad", Quad.schema, 4,
-    a => TermKernel.fixQuad(row(a(0)), row(a(1)), row(a(2)), a(3).asInstanceOf[UTF8String]))
+  case object IsValidTerm extends Op("isValidTerm", BooleanType, 1)
+  case object IsTermFixable extends Op("isTermFixable", BooleanType, 1)
+  case object FixTerm extends Op("fixTerm", Term.schema, 1)
+  case object SerializeTerm extends Op("serializeTerm", StringType, 1)
+  case object IsQuadFixable extends Op("isQuadFixable", BooleanType, 3)
+  case object Verdict extends Op("verdict", StringType, 3)
+  case object ToNTriple extends Op("toNTriple", StringType, 3)
+  case object FixQuad extends Op("fixQuad", Quad.schema, 4)
 
   def call(op: Op, args: Column*): Column = toColumn(TermKernelExpr(op, args.map(toExpr)))
 

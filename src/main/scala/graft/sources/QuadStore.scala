@@ -15,7 +15,11 @@ object QuadStore {
     * lines and `#` comments yield no row (P6), malformed lines are
     * surfaced (`parse_ok = false`, raw line kept) rather than dropped,
     * so ingest errors are observable. Embarrassingly parallel —
-    * `maxPartitionBytes` splits big files, no shuffle. */
+    * `maxPartitionBytes` splits big files, no shuffle.
+    *
+    * It stays a product surface although no service path calls it: it is
+    * the documented G5 read-back of the TTL sinks (README's module list
+    * names it), the one way a consumer reads the output as quads. */
   def readTtl(spark: SparkSession, dir: String): DataFrame = {
     import graft.rdf.NTriples
     spark.read.text(dir)

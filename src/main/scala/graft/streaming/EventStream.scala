@@ -42,41 +42,4 @@ object EventStream {
       .agg(count(lit(1)).as("n_events"))
       .select(col("session_window.start").as("session_start"),
         col("user_id"), col("n_events"))
-
-  /** Streaming exact dedup on a key within the watermark horizon —
-    * the at-ingest dedup stage of a streaming training-data pipeline.
-    * `dropDuplicatesWithinWatermark` keeps per-key state only until the
-    * watermark passes the first sighting (bounded state, unlike plain
-    * `dropDuplicates` whose state grows forever); duplicates arriving
-    * within the horizon are dropped, later re-occurrences pass. */
-  def dedupWithinWatermark(events: DataFrame, keyCols: Seq[String],
-      horizon: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", horizon)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  /** Streaming twin of `ops.Dedup.incrementalDedup`: the ingest-side
-    * novelty gate of a streaming corpus pipeline. The prior corpus is
-    * distilled into a Bloom filter evaluated as a STATELESS codegen'd
-    * predicate per micro-batch (no streaming state at all); rows that
-    * fail the bloom are certainly novel (no false negatives), rows that
-    * pass are exact-verified with a stream-static left-anti join against
-    * the prior text table, so bloom false positives cost one lookup,
-    * never a wrongly-dropped document. Emits only genuinely new docs.
-    *
-    * At scale the anti-join's static side is the prior corpus keyed by
-    * TEXT (exactness needs the bodies) — only the ~fpp fraction of
-    * stream rows ever reaches it, which is the point of the bloom
-    * stage; a corpus too large for that join should instead use the
-    * candidate-pair shape of `ops.Dedup.incrementalDedup`, where text
-    * is fetched per candidate id and never bulk-shuffled. */
-  def noveltyFilter(newDocs: DataFrame, prior: DataFrame,
-      bloomBytes: Array[Byte]): DataFrame = {
-    val mightDup = graft.functions.BloomSupport.mightContain(
-      bloomBytes, xxhash64(col("text")))
-    val certainlyNew = newDocs.filter(!mightDup)
-    val verifiedNew = newDocs.filter(mightDup)
-      .join(prior.select(col("text")), Seq("text"), "left_anti")
-    certainlyNew.unionByName(verifiedNew)
-  }
 }

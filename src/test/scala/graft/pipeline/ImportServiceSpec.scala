@@ -300,6 +300,35 @@ class ImportServiceSpec extends SparkSpec {
     assert(state.distinct().count() == state.count())
   }
 
+  test("a swap rename that throws puts the old state back before it fails") {
+    // writeState's last two mutations are the rename of the new table into
+    // place and the backup's delete. When that rename throws, stateDir
+    // must hold the old rows again with no recoverState call
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.ffs.impl", classOf[graft.ops.FaultFileSystem].getName)
+    val root = Files.createTempDirectory("svc-swap-throws").toString
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.mkString("\u0001")).toSeq.sorted
+    /** Swap a state holding `initialState` for itself plus one quad,
+      * failing the `failAt`-th mutation: (stateDir, mutations seen,
+      * outcome). */
+    def swap(run: String, failAt: Long) = {
+      initialState.coalesce(1).write.parquet(s"$root/$run/state")
+      val stateDir = s"ffs:$root/$run/state"
+      val next = ImportService.readState(spark, stateDir).union(Seq(
+        ("http://s", "http://p", "o", "http://g")).toDF("subject", "predicate", "obj", "graph"))
+      graft.ops.FaultFs.arm(failAt, crash = false)
+      val outcome = scala.util.Try(ImportService.writeState(next, stateDir))
+      (stateDir, graft.ops.FaultFs.disarm(), outcome)
+    }
+    val (_, n, clean) = swap("count", Long.MaxValue)
+    assert(clean.isSuccess, clean)
+    val (stateDir, _, failed) = swap("fail", n - 1)
+    val err = failed.failed.get.getMessage
+    assert(err.contains("rename") && err.contains("-tmp-"), err)
+    assert(rows(ImportService.readState(spark, stateDir)) == rows(initialState))
+  }
+
   test("every crash point of a task's state write recovers and replays") {
     // the state behind the fault-injecting filesystem: for every k, the
     // k-th create/rename/delete of one task's run + swap fails — alone,

@@ -168,49 +168,6 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch)
   }
 
-  test("streaming novelty filter drops prior-corpus re-arrivals, passes new docs") {
-    val prior = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
-      .toDF("doc_id", "text")
-    // the bloom deliberately contains one fingerprint whose text is NOT
-    // in the prior table ("false positive text") — a guaranteed bloom
-    // false positive that must survive via the exact-verify anti-join
-    val bytes = graft.functions.BloomSupport.toBytes(
-      prior.select(col("text"))
-        .union(Seq("false positive text").toDF("text"))
-        .select(xxhash64(col("text")).as("fp"))
-        .stat.bloomFilter("fp", 1000, 0.03))
-    val in = Files.createTempDirectory("novel-in").toString
-    Files.writeString(java.nio.file.Paths.get(s"$in/batch.json"),
-      Seq("""{"new_id":10,"text":"alpha beta gamma"}""", // verbatim re-arrival
-        """{"new_id":11,"text":"totally new text"}""",
-        """{"new_id":12,"text":"delta epsilon zeta"}""", // re-arrival
-        """{"new_id":13,"text":"another new one"}""",
-        """{"new_id":14,"text":"false positive text"}""" // passes bloom, novel
-      ).mkString("\n"))
-    val stream = spark.readStream.schema("new_id LONG, text STRING").json(in)
-    val q = EventStream.noveltyFilter(stream, prior, bytes)
-      .writeStream.format("memory").queryName("novel").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val out = spark.table("novel").select("new_id").as[Long].collect().sorted
-    assert(out.toSeq == Seq(11L, 13L, 14L), out.toSeq)
-  }
-
-  test("streaming dedup within watermark drops in-horizon duplicates") {
-    val in = Files.createTempDirectory("dedup-in").toString
-    Files.writeString(java.nio.file.Paths.get(s"$in/events.csv"),
-      Seq("2024-01-01T00:10:00,1,click,1.0",
-        "2024-01-01T00:15:00,1,click,2.0",  // dup key within horizon
-        "2024-01-01T00:20:00,2,view,3.0").mkString("\n"))
-    val schema = "ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
-    val stream = spark.readStream.schema(schema).csv(in)
-    val q = EventStream.dedupWithinWatermark(stream, Seq("user_id", "event_type"))
-      .writeStream.format("memory").queryName("dedup").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val rows = spark.table("dedup").select("user_id", "event_type")
-      .as[(Long, String)].collect().sorted
-    assert(rows.toSeq == Seq((1L, "click"), (2L, "view")), rows.toSeq)
-  }
-
   // ------------------------------------------------------ task lifecycle
 
   private def taskQuads = Seq(
@@ -266,6 +223,19 @@ class StreamingSpec extends SparkSpec {
       .select("subject", "obj").as[(String, String)].collect().toMap
     assert(statuses("http://t/1") == Vocab.statusFailed)
     assert(statuses("http://t/2") == Vocab.statusBusy) // unwatched operation
+  }
+
+  test("startup recovery leaves a busy subject that is not a task untouched") {
+    val quads = taskQuads.union(Seq(
+        ("http://t/3", Vocab.admsStatus, Vocab.statusBusy),
+        ("http://t/3", Vocab.taskOperation, Vocab.opExtracting))
+      .toDF("subject", "predicate", "obj").withColumn("graph", lit(null).cast("string")))
+    val recovered = TaskStore.failBusyTasks(quads, "2026-02-01T00:00:00Z")
+    val statuses = recovered.filter(col("predicate") === Vocab.admsStatus)
+      .select("subject", "obj").as[(String, String)].collect().toMap
+    assert(statuses("http://t/1") == Vocab.statusFailed)
+    assert(statuses("http://t/3") == Vocab.statusBusy) // rdf:type is not a task
+    assert(recovered.filter(col("subject") === "http://t/3").count() == 3)
   }
 
   test("error record minting (K5)") {
