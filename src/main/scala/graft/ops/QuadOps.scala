@@ -159,8 +159,8 @@ object QuadOps {
 
   /** The orchestrator's pure-relational lifecycle on one task
     * (lib/pipeline-import.js:28-117 minus extraction): scheduled →
-    * register per-page valid files + containers → success, as one set
-    * union and one status transition. The step is the production
+    * register per-page valid files + containers → success, as one status
+    * transition that inserts the registration. The step is the production
     * operator ([[graft.pipeline.ImportPipeline.registerSuccess]], the
     * orchestrator's own registration tail) over the pages of
     * [[graft.pipeline.TaskStore.inputPages]], collected as the

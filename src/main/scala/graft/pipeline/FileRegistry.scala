@@ -116,7 +116,7 @@ object FileRegistry {
   /** Every file's [[metadata]] and [[containers]]: the quads one
     * finished task inserts, minted on the driver from its manifest (one
     * row per written file and whether it is valid). Not de-duplicated:
-    * the store's set union ([[TaskStore.insertData]]) de-duplicates
+    * the store's state change ([[TaskStore.update]]) de-duplicates
     * them on the driver before they meet the state. */
   def registration(files: Seq[(ResultFile, Boolean)], nowIso: String): Seq[Quad] =
     files.flatMap { case (f, v) => metadata(f, nowIso) ++ containers(f, v) }

@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions._
   * No job of a task shuffles. The task and its pages are two point reads
   * of the state, collected ([[TaskStore.readTask]], [[TaskStore.pagesIn]]);
   * the registration is minted on the driver from the collected manifest;
-  * and the new state is the old one with the task's inserts anti-joined
-  * away and appended ([[TaskStore.insertData]]) and its status rows
-  * swapped: a narrow plan over the state's files.
+  * and the new state is one [[TaskStore.transitionStatus]]: the task's
+  * status rows retracted and its inserts (the registration on success,
+  * the error record on failure) anti-joined away and appended, one
+  * [[TaskStore.update]] — a narrow plan over the state's files.
   *
   * The reference marks the task busy first (T3, lib/pipeline-import.js:33).
   * Here the state is swapped once per task, so a busy status would never
@@ -101,15 +102,14 @@ object ImportPipeline {
   }
 
   /** A finished task's state change (lib/pipeline-import.js:75-109):
-    * its files' registration ([[FileRegistry.registration]]) joins
-    * `quads` as one set union ([[TaskStore.insertData]]), then the status
-    * becomes success. */
+    * the status becomes success and its files' registration
+    * ([[FileRegistry.registration]]) joins `quads` as a set, in one
+    * [[TaskStore.transitionStatus]]. */
   private[graft] def registerSuccess(quads: DataFrame,
       files: Seq[(FileRegistry.ResultFile, Boolean)],
       taskUri: String, graph: String, nowIso: String): DataFrame =
-    TaskStore.transitionStatus(TaskStore.insertData(quads,
-      FileRegistry.registration(files, nowIso)), taskUri, Vocab.statusSuccess,
-      nowIso, Some(graph))
+    TaskStore.transitionStatus(quads, taskUri, Vocab.statusSuccess, nowIso,
+      Some(graph), insert = FileRegistry.registration(files, nowIso))
 
   /** Run the import pipeline for one scheduled task (lib/pipeline-import
     * .js:28-117). `quads` is the current metadata store; `pagesDir` holds
@@ -154,9 +154,8 @@ object ImportPipeline {
       case scala.util.control.NonFatal(e) =>
         // T5 (lib/pipeline-import.js:110-116): error record + failed
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        val failed = TaskStore.transitionStatus(
-          TaskStore.appendError(quads, taskUri, msg, graph),
-          taskUri, Vocab.statusFailed, nowIso, Some(graph))
+        val failed = TaskStore.transitionStatus(quads, taskUri, Vocab.statusFailed,
+          nowIso, Some(graph), insert = TaskStore.errorRecord(taskUri, msg, graph))
         ImportResult(failed, "failed", 0L, Some(msg))
     }
   }

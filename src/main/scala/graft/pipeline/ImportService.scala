@@ -19,9 +19,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * one swap per task, so no state copy outlives the task that made it.
   * This is the task-STATE table — metadata-sized; the extracted triples
   * go to the TTL sinks, never through here. A task reads it with two
-  * point reads and rewrites it in one narrow pass (a set union with the
-  * task's inserts, [[ImportPipeline]]), so none of a task's jobs
-  * shuffles; [[writeState]] keeps its file count bounded by its size.
+  * point reads and rewrites it in one narrow pass (one
+  * [[TaskStore.update]]: its status pairs retracted, its inserts
+  * appended), so none of a task's jobs shuffles; startup recovery is one
+  * more update. [[writeState]] keeps its file count bounded by its size.
   * Tasks within a batch run sequentially like the reference's event
   * loop; each task's pages extract in parallel inside the pipeline.
   */
@@ -129,8 +130,8 @@ object ImportService {
       // starts from the swapped state of the one before. A crash after task
       // k's swap replays the whole batch (checkpointed foreachBatch),
       // re-running tasks 1..k against state that already holds their
-      // results: each registers as a set union, so under a fixed clock it
-      // appends nothing.
+      // results: each inserts as a set (TaskStore.update), so under a
+      // fixed clock it appends nothing.
       tasks.foreach { taskUri =>
         val result = ImportPipeline.runImportPipeline(
           spark, readState(spark, stateDir), taskUri, pagesDir,

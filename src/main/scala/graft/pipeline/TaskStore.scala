@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.pipeline.FileRegistry.Quad
 import graft.rdf.Vocab
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
@@ -21,12 +22,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * filter the table and collect the handful of matching rows, then pivot
   * or de-duplicate them on the driver, so none of them shuffles.
   *
-  * Updates follow the reference's DELETE+INSERT WHERE shape (K6,
-  * lib/task.js:158-187) as read-rewrite transformations: the returned
-  * DataFrame is the new state of the table — the caller owns the write.
-  * Every update maps a state that is a set to a set, and the ones a task
-  * makes ([[transitionStatus]], [[appendError]], [[insertData]]) are
-  * narrow: none of them re-aggregates the table.
+  * Every state change is one [[update]]: the reference's DELETE/INSERT
+  * WHERE (K6/K7) and INSERT DATA as one read-rewrite transformation. The
+  * returned DataFrame is the new state of the table — the caller owns
+  * the write. It maps a set to a set in one broadcast anti-join and one
+  * append, without re-aggregating the table; [[transitionStatus]] and
+  * [[failBusyTasks]] each make exactly one.
   */
 object TaskStore {
 
@@ -111,32 +112,27 @@ object TaskStore {
   }
 
   /** K6 status transition (lib/task.js:158-187): DELETE the task's
-    * status+modified triples, INSERT the new ones. Pure rewrite — returns
-    * the updated table. The inserted triples inherit the task's named
-    * graph (`GRAPH ?g` in the reference update), so graph-partitioned
-    * stores stay partition-pure. The two new rows are a local frame, as
-    * [[appendError]] builds its record. Callers that already hold the
-    * task's graph (the orchestrator loads it with the task) pass
+    * status+modified triples, INSERT the new ones plus the rest of the
+    * task's change (`insert`: its registration or its [[errorRecord]]), as
+    * one [[update]] that returns the new table. The status rows inherit
+    * the task's named graph (`GRAPH ?g` in the reference update). Callers
+    * that already hold it (the orchestrator loads it with the task) pass
     * `knownGraph`; otherwise one driver-side point read looks it up, and
-    * a task with no rows in `quads` gets no new rows. */
+    * a task with no rows in `quads` gets no status rows. */
   def transitionStatus(quads: DataFrame, taskUri: String, newStatus: String,
-      nowIso: String, knownGraph: Option[String] = None): DataFrame = {
+      nowIso: String, knownGraph: Option[String] = None,
+      insert: Seq[Quad] = Nil): DataFrame = {
     import quads.sparkSession.implicits._
-    val kept = quads.filter(!(col("subject") === taskUri &&
-      col("predicate").isin(Vocab.admsStatus, Vocab.dctModified)))
     val graph = knownGraph.orElse(quads.filter(col("subject") === taskUri)
       .select(col("graph")).as[String].head(1).headOption)
-    val inserted = graph.toSeq.flatMap(g => Seq(
-      (taskUri, Vocab.admsStatus, newStatus, g),
-      (taskUri, Vocab.dctModified, nowIso, g)))
-      .toDF("subject", "predicate", "obj", "graph")
-    kept.unionByName(inserted)
+    update(quads, statusPairs(taskUri),
+      insert ++ graph.toSeq.flatMap(statusRows(taskUri, newStatus, nowIso, _)))
   }
 
   /** K7 startup recovery (lib/task.js:24-63): every busy task of the
-    * watched operations → failed, set-based in one pass. The busy tasks
-    * come from two collected point reads, the subjects with a busy status
-    * row and then their property rows, pivoted on the driver ([[pivot]]). */
+    * watched operations → failed, in one [[update]]. The busy tasks come
+    * from two collected point reads, the subjects with a busy status row
+    * and then their property rows, pivoted on the driver ([[pivot]]). */
   def failBusyTasks(quads: DataFrame, nowIso: String): DataFrame = {
     import quads.sparkSession.implicits._
     val subjects = quads.filter(col("predicate") === Vocab.admsStatus &&
@@ -151,45 +147,46 @@ object TaskStore {
       .flatMap { case (s, rows) => pivot(s, rows.map(r => (r._2, r._3, r._4))) }
       .filter(_.getAs[String]("status") == Vocab.statusBusy)
       .map(r => (r.getAs[String]("task"), r.getAs[String]("task_graph")))
-      .toDF("task", "task_graph")
-    val kept = quads.join(broadcast(busy),
-      quads("subject") === busy("task") &&
-        quads("predicate").isin(Vocab.admsStatus, Vocab.dctModified),
-      "left_anti")
-    val inserted = busy.select(col("task").as("subject"),
-      lit(Vocab.admsStatus).as("predicate"),
-      lit(Vocab.statusFailed).as("obj"), col("task_graph").as("graph"))
-      .unionByName(busy.select(col("task").as("subject"),
-        lit(Vocab.dctModified).as("predicate"),
-        lit(nowIso).as("obj"), col("task_graph").as("graph")))
-    kept.unionByName(inserted)
+    update(quads, busy.flatMap(b => statusPairs(b._1)),
+      busy.flatMap { case (t, g) => statusRows(t, Vocab.statusFailed, nowIso, g) })
   }
 
-  /** K5 error record (lib/task.js:189-206): mint an oslc:Error + link in
-    * the task's `graph`. The error URI is content-addressed (reference
-    * mints a uuid — same determinism deviation as the file sink). */
-  def appendError(quads: DataFrame, taskUri: String, message: String,
-      graph: String): DataFrame = {
+  /** K5 error record (lib/task.js:189-206): an oslc:Error + link in the
+    * task's `graph`, for a failed state to insert. The error URI is
+    * content-addressed (reference mints a uuid — same determinism
+    * deviation as the file sink). */
+  def errorRecord(taskUri: String, message: String, graph: String): Seq[Quad] = {
     val e = "http://redpencil.data.gift/id/jobs/error/" +
       graft.rdf.sha1Hex(s"$taskUri $message")
-    insertData(quads, Seq(
-      (e, Vocab.rdfType, Vocab.oslcError, graph),
+    Seq((e, Vocab.rdfType, Vocab.oslcError, graph),
       (e, Vocab.oslcMessage, message, graph),
-      (taskUri, Vocab.taskError, e, graph)))
+      (taskUri, Vocab.taskError, e, graph))
   }
 
-  /** INSERT DATA (lib/pipeline-import.js:180-218) into a triplestore has
-    * set semantics: `rows`, de-duplicated on the driver, replace their
-    * copies in `quads` (a null-safe anti-join against their broadcast),
-    * so a quad already present (a replay, a re-run re-minting the same
-    * content-addressed entity or error) is not appended again. Over a
-    * `quads` that is a set — every state the service writes is one —
-    * this is `distinct(quads ∪ rows)`, without re-aggregating the table. */
-  private[pipeline] def insertData(quads: DataFrame,
-      rows: Seq[FileRegistry.Quad]): DataFrame = {
+  /** A status change: the (subject, predicate) pairs it deletes, the rows it inserts. */
+  private def statusPairs(task: String) = Seq(task -> Vocab.admsStatus, task -> Vocab.dctModified)
+  private def statusRows(task: String, status: String, nowIso: String, graph: String): Seq[Quad] =
+    Seq((task, Vocab.admsStatus, status, graph), (task, Vocab.dctModified, nowIso, graph))
+
+  /** The one state change — DELETE/INSERT WHERE (K6/K7) and INSERT DATA
+    * (lib/pipeline-import.js:180-218): every row whose (subject, predicate)
+    * is a `retract` pair goes, whatever its object and graph, and
+    * `insert`, de-duplicated on the driver, replaces its own copies, so a
+    * replay appends nothing. Both are rows of one broadcast key table (a
+    * retract pair's has `whole` set) under one null-safe anti-join. Over a
+    * `quads` that is a set, the result is the set
+    * `(quads − retracted rows) ∪ distinct(insert)`. */
+  private[pipeline] def update(quads: DataFrame, retract: Seq[(String, String)],
+      insert: Seq[Quad]): DataFrame = {
     import quads.sparkSession.implicits._
-    val inserts = rows.distinct.toDF("subject", "predicate", "obj", "graph")
-    val present = inserts.columns.map(c => quads(c) <=> inserts(c)).reduce(_ && _)
-    quads.join(broadcast(inserts), present, "left_anti").unionByName(inserts)
+    val inserts = insert.distinct
+    val keys = (retract.distinct.map { case (s, p) => (s, p, null: String, null: String, true) } ++
+        inserts.map { case (s, p, o, g) => (s, p, o, g, false) })
+      .toDF("subject", "predicate", "obj", "graph", "whole")
+    val gone = quads("subject") <=> keys("subject") &&
+      quads("predicate") <=> keys("predicate") &&
+      (keys("whole") || quads("obj") <=> keys("obj") && quads("graph") <=> keys("graph"))
+    quads.join(broadcast(keys), gone, "left_anti")
+      .unionByName(inserts.toDF("subject", "predicate", "obj", "graph"))
   }
 }

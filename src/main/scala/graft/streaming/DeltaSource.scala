@@ -47,16 +47,14 @@ object DeltaSource {
     else deltas
 
   /** P1 (lib/delta.js:9-17) over a DataFrame with a `body` JSON-string
-    * column: explode changesets → explode inserts → filter predicate/
-    * object → project subject values. */
-  def scheduledTasks(deltas: DataFrame,
-      predicate: String = Vocab.admsStatus,
-      obj: String = Vocab.statusScheduled): DataFrame =
+    * column: explode changesets → explode inserts → keep the
+    * `adms:status` = scheduled triples → project subject values. */
+  def scheduledTasks(deltas: DataFrame): DataFrame =
     contentTypeGuard(deltas)
       .select(explode(from_json(col("body"), deltaSchema)).as("cs"))
       .select(explode(col("cs.inserts")).as("t"))
-      .filter(col("t.predicate.value") === predicate &&
-        col("t.object.value") === obj)
+      .filter(col("t.predicate.value") === Vocab.admsStatus &&
+        col("t.object.value") === Vocab.statusScheduled)
       .select(col("t.subject.value").as("task"))
 
   /** Streaming front-end over a directory of delta JSON files (one body

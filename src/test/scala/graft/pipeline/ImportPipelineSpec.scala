@@ -121,34 +121,58 @@ class ImportPipelineSpec extends SparkSpec {
   }
 
   test("a success state is one set union and one status transition") {
-    // the state's change is one insert set (the registration, a local
-    // frame anti-joined against the state and appended to it) and one
-    // status transition (its two new rows: a local frame, no Generate),
-    // whatever the debug setting; like the failure state's, its plan is
-    // narrow: no shuffle and no aggregate over the state
+    // every state change is one TaskStore.update: over a parquet state (a
+    // local frame would let Spark fold a filter into the relation), the
+    // success state (whatever the debug setting), the failure state and
+    // the startup state each plan one broadcast left-anti join of the scan
+    // against the key table and one Union with the inserts, and no Filter,
+    // shuffle, aggregate or Generate
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
     val pagesDir = writePages()
-    def plan(result: ImportPipeline.ImportResult) =
-      result.quads.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+    val stateDir = Files.createTempDirectory("state").toString + "/state"
+    taskQuads.unionByName(Seq(("http://t/9", Vocab.rdfType, Vocab.taskType),
+        ("http://t/9", Vocab.admsStatus, Vocab.statusBusy),
+        ("http://t/9", Vocab.taskOperation, Vocab.opImporting))
+      .toDF("subject", "predicate", "obj").withColumn("graph", lit("http://g/tasks")))
+      .write.parquet(stateDir)
+    val state = ImportService.readState(spark, stateDir)
+    def shape(what: String, newState: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val p: SparkPlan = newState.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
         case p => p
       }
-    def narrow(p: org.apache.spark.sql.execution.SparkPlan) =
-      p.collect { case n: ShuffleExchangeExec => n; case n: BaseAggregateExec => n }.isEmpty &&
-        p.collect { case n if n.nodeName == "Generate" => n }.isEmpty
+      val joins = p.collect { case j: BaseJoinExec => j }
+      assert(joins.size == 1 && (joins.head match {
+        case b: BroadcastHashJoinExec => b.joinType == LeftAnti
+        case _ => false
+      }), s"$what:\n$p")
+      assert(p.collect { case u: UnionExec => u }.size == 1, s"$what:\n$p")
+      assert(p.collect { case f: FilterExec => f }.isEmpty, s"$what:\n$p")
+      assert(p.collect { case n: ShuffleExchangeExec => n; case n: BaseAggregateExec => n;
+        case n if n.nodeName == "Generate" => n }.isEmpty, s"$what:\n$p")
+      p.collect { case n => n.nodeName }
+    }
     val shapes = Seq(false, true).map { debug =>
-      val result = ImportPipeline.runImportPipeline(spark, taskQuads, T, pagesDir,
+      val result = ImportPipeline.runImportPipeline(spark, state, T, pagesDir,
         Files.createTempDirectory("import-out").toString, Now, writeDebug = debug)
       assert(result.status == "success", result)
-      assert(narrow(plan(result)), s"writeDebug=$debug:\n${plan(result)}")
-      plan(result).collect { case n => n.nodeName }
+      shape(s"success, writeDebug=$debug", result.quads)
     }
     assert(shapes(0) == shapes(1), shapes)
-    val failed = ImportPipeline.runImportPipeline(spark, taskQuads, T,
+    val failed = ImportPipeline.runImportPipeline(spark, state, T,
       "/nonexistent/pages/dir", Files.createTempDirectory("import-out").toString, Now)
     assert(failed.status == "failed", failed)
-    assert(narrow(plan(failed)), plan(failed))
+    shape("failure", failed.quads)
+    val recovered = TaskStore.failBusyTasks(state, Now)
+    assert(recovered.filter(col("subject") === "http://t/9" &&
+      col("predicate") === Vocab.admsStatus).select("obj").as[String].collect().toSeq ==
+      Seq(Vocab.statusFailed))
+    shape("startup", recovered)
   }
 
   test("re-running a task is idempotent: no duplicated metadata quads") {

@@ -239,7 +239,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("error record minting (K5)") {
-    val withErr = TaskStore.appendError(taskQuads, "http://t/1", "boom", null)
+    val withErr = TaskStore.transitionStatus(taskQuads, "http://t/1", Vocab.statusFailed,
+      "2026-02-01T00:00:00Z", insert = TaskStore.errorRecord("http://t/1", "boom", null))
     val err = withErr.filter(col("predicate") === Vocab.oslcMessage).collect()
     assert(err.length == 1 && err.head.getAs[String]("obj") == "boom")
     val link = withErr.filter(col("subject") === "http://t/1" &&
