@@ -196,8 +196,7 @@ object Bench {
           a.startsWith("-agentpath"))
     val cmd = Seq(javaBin) ++ jvmArgs ++
       Seq("-cp", sys.props("java.class.path"), "graft.Bench")
-    val tmp = new java.io.File(graft.Scaffold.cleanupOnExit(java.nio.file
-      .Files.createTempDirectory("graft-adjudicate").toString))
+    val tmp = new java.io.File(graft.Scaffold.tempDir("graft-adjudicate"))
     val pb = new ProcessBuilder(cmd.asJava)
     pb.directory(tmp)
     pb.environment().put("SPARK_GRAFT_BENCH_ONLY", queries.mkString(","))

@@ -1,10 +1,34 @@
 package graft
 
-/** Shared scaffolding for per-JVM derived stores (staged stream splits,
-  * at-rest index copies): source content fingerprints for cache keys and
-  * an exit-time cleanup registry. One implementation each, so no two
-  * callers' rules drift apart. */
+/** Shared scaffolding for per-JVM derived state (table schemas, trained
+  * centroids, at-rest index copies, staged stream splits): one
+  * fingerprint-keyed cache ([[Derived]]), source content fingerprints,
+  * and temp directories removed at JVM exit. One implementation each, so
+  * no two callers' rules drift apart.
+  *
+  * The cache rule, stated once: a derived value is keyed by its source
+  * path, the source's [[fingerprint]] taken on every lookup, and the
+  * caller's own key. An in-place rewrite of the source changes the
+  * fingerprint, so the next lookup derives afresh and never serves a
+  * value of the old content. Only metadata and scaffolding are cached
+  * this way, never query results: every run still computes from its
+  * inputs. */
 private[graft] object Scaffold {
+
+  /** Values derived from a source path, one per (source, fingerprint,
+    * key) per JVM. A `TrieMap`, not `ConcurrentHashMap.computeIfAbsent`:
+    * a derivation may look up another derived value (a stored-index
+    * write reads its table through [[graft.ops.Tables.table]]), and a
+    * recursive `computeIfAbsent` on one map throws. Racing threads may
+    * both derive; one value wins, and a loser's [[tempDir]] is already
+    * registered for cleanup. */
+  final class Derived[K, V] {
+    private val values =
+      scala.collection.concurrent.TrieMap.empty[(String, String, K), V]
+
+    def apply(src: String, key: K)(derive: => V): V =
+      values.getOrElseUpdate((src, fingerprint(src), key), derive)
+  }
 
   /** Content fingerprint of a parquet file or directory: file count plus
     * sorted part names with lengths, mtimes, and a head/tail byte probe.
@@ -54,6 +78,10 @@ private[graft] object Scaffold {
     * dir IMMEDIATELY after creating it — before any racy cache insert —
     * so a thread that loses a cache race still gets its orphan cleaned. */
   def cleanupOnExit(dir: String): String = { cleanupDirs.add(dir); dir }
+
+  /** A new temp directory, already registered for JVM-exit removal. */
+  def tempDir(prefix: String): String =
+    cleanupOnExit(java.nio.file.Files.createTempDirectory(prefix).toString)
 
   def deleteRecursively(f: java.io.File): Unit = {
     val kids = f.listFiles(); if (kids != null) kids.foreach(deleteRecursively)

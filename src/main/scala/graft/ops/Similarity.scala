@@ -377,25 +377,17 @@ object Similarity {
     kmeans.fit(emb).clusterCenters.map(_.toArray)
   }
 
-  /** Trained-centroid cache keyed by (data dir, content fingerprint,
-    * params): the oracle-SQL builder and the query path must see
-    * BITWISE-identical centroids in one JVM (train once, serialize the
-    * same doubles into the literals the production assignment scores
-    * against). The fingerprint (part lengths + mtimes — the
-    * StreamDrive.stagedCache rule) keys out in-place rewrites: a corpus
-    * regenerated at the same path must retrain, not silently serve
-    * centroids of the old data. */
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(String, String, Int), Array[Array[Double]]]
+  /** Trained centroids, once per embeddings content and `nCells`
+    * ([[graft.Scaffold.Derived]]): the oracle-SQL builder and the query
+    * path must see BITWISE-identical centroids in one JVM (train once,
+    * serialize the same doubles into the literals the production
+    * assignment scores against). */
+  private val centroids = new graft.Scaffold.Derived[Int, Array[Array[Double]]]
 
   private[ops] def trainedCentroids(s: SparkSession, d: String,
       nCells: Int): Array[Array[Double]] =
-    centroidCache.getOrElseUpdate(
-      (d, graft.Scaffold.fingerprint(s"$d/embeddings.parquet"), nCells),
-      kmeansCentroids(
-        Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-        nCells))
+    centroids(s"$d/embeddings.parquet", nCells)(kmeansCentroids(
+      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")), nCells))
 
   /** Centroids as a tiny (cell, cent_e) frame, 0-based cell ids. */
   private def centroidFrame(s: SparkSession,

@@ -30,25 +30,19 @@ import org.apache.spark.sql.types.StructType
 private[graft] object StoredIndex {
 
   /** Per-JVM at-rest index cache for the *_stored correctness queries:
-    * one write per (kind, source dir, content fingerprint of `src`),
-    * probes re-run per invocation — so the hash-checked correctness gate
-    * exercises the full write→prune→probe path without paying the write
-    * per bench pass. Keyed like the trained-centroid cache: an in-place corpus
-    * rewrite re-writes the index. */
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), String]
+    * one write per (kind, source dir) and content of `src`
+    * ([[graft.Scaffold.Derived]]), probes re-run per invocation — so the
+    * hash-checked correctness gate exercises the full write→prune→probe
+    * path without paying the write per bench pass. */
+  private val stores = new graft.Scaffold.Derived[(String, String), String]
 
   def cached(kind: String, d: String, src: String)(
       write: String => Unit): String =
-    cache.getOrElseUpdate((kind, d, graft.Scaffold.fingerprint(src)), {
-      // registered for exit cleanup BEFORE the cache insert: TrieMap may
-      // evaluate racing thunks more than once, and a losing thread's dir
-      // must still be removed (Scaffold tracks dirs, not cache winners)
-      val dir = graft.Scaffold.cleanupOnExit(java.nio.file.Files
-        .createTempDirectory(s"graft-$kind-store").toString)
+    stores(src, (kind, d)) {
+      val dir = graft.Scaffold.tempDir(s"graft-$kind-store")
       write(dir)
       dir
-    })
+    }
 
   /** Write `df` as a store at `path`, one `partCol=v` directory per
     * value. The keyed exchange puts every row of a value in one write

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * filters in `PushedFilters` and a minimal `ReadSchema` at the scan. */
 object Tables {
 
-  /** Per-JVM parquet schema cache keyed on (path, content fingerprint).
+  /** Schemas inferred once per table content ([[graft.Scaffold.Derived]]).
     * Every `spark.read.parquet(path)` call launches a footer-read
     * schema-inference JOB at plan time — repeated for every table
     * reference in every query construction (measured: five ~30-50 ms
@@ -20,21 +20,12 @@ object Tables {
     * [[eventMicros]] adapt to whatever encoding it shipped — only its
     * REPETITION is elided: the first read of a given table content
     * infers; later constructions pass that schema explicitly and skip
-    * the job. Keying on [[graft.Scaffold.fingerprint]] (the same rule
-    * the *_stored caches use) keeps the freshness contract: an in-place
-    * rewrite changes the fingerprint and re-infers, so a schema change
-    * can never be served stale. The fingerprint is driver-side file
-    * metadata (one listing + two 16-byte probes per part — no job), and
-    * this caches table METADATA only, never rows or results: every run
-    * still computes from the parquet inputs. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+    * the job. */
+  private val schemas = new graft.Scaffold.Derived[Unit, StructType]
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val key = path + "#" + graft.Scaffold.fingerprint(path)
-    val schema = schemaCache.computeIfAbsent(key,
-      _ => spark.read.parquet(path).schema)
+    val schema = schemas(path, ())(spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 

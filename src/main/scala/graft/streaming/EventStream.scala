@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming twins of the batch event operators (SURVEY §2.10 extension:
-  * watermarked windowed aggregation + session windows). Input: a
+  * watermarked windowed aggregation; sessions are [[SessionStateOps]]). Input: a
   * streaming DataFrame with `ts: timestamp`, `user_id`, `event_type`,
   * `value`. The same column pipeline serves both `readStream` (with
   * watermark-bounded state) and batch DataFrames. */
@@ -32,14 +32,4 @@ object EventStream {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
-
-  /** Gap-based session windows (30 min) via the built-in session_window —
-    * the streaming analogue of Sessionize.sessions. */
-  def sessionCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("session_start"),
-        col("user_id"), col("n_events"))
 }

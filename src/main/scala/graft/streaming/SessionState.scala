@@ -3,16 +3,12 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Custom-state sessionization via `flatMapGroupsWithState` — the
-  * arbitrary-stateful-streaming variant of [[EventStream.sessionCounts]]
-  * for session logic `session_window` can't express (per-session
-  * attribute accumulation, early emission, custom expiry).
+/** Custom-state sessionization via `flatMapGroupsWithState` — session
+  * logic `session_window` can't express (per-session attribute
+  * accumulation, early emission, custom expiry).
   *
   * State per user: the open session (start/end/count). An event beyond
-  * the gap closes and emits the previous session; processing-time timeout
-  * flushes idle users. The same function body also runs in batch mode
-  * (state never spans groups there), which is how the deterministic spec
-  * exercises it.
+  * the gap closes and emits the previous session.
   */
 object SessionStateOps {
 
@@ -25,8 +21,8 @@ object SessionStateOps {
 
   /** The single source of session semantics: fold a batch of events into
     * (closed sessions, still-open session), shared verbatim by the
-    * streaming state update and the batch group pass so the gap/merge
-    * rules can't drift apart. */
+    * streaming state update and any batch group pass (ScaleDesignSpec's)
+    * so the gap/merge rules can't drift apart. */
   def fold(userId: Long, events: Iterable[Ev], initial: Option[OpenSession])
       : (Seq[SessionOut], Option[OpenSession]) = {
     val closed = collection.mutable.ArrayBuffer[SessionOut]()
@@ -45,45 +41,22 @@ object SessionStateOps {
     (closed.toSeq, open)
   }
 
-  def updateUser(withTimeout: Boolean)(userId: Long, events: Iterator[Ev],
+  def updateUser(userId: Long, events: Iterator[Ev],
       state: GroupState[OpenSession]): Iterator[SessionOut] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.map(s =>
-        SessionOut(userId, s.start, s.end, s.n)).iterator
-      state.remove()
-      return out
-    }
     val (closed, open) = fold(userId, events.toSeq, state.getOption)
     open.foreach(state.update)
-    if (withTimeout && state.exists) state.setTimeoutDuration("1 hour")
     closed.iterator
   }
 
   /** Streaming entry: append-mode sessions per user with custom state.
-    *
-    * `flushIdle = true` enables the processing-time timeout that emits
-    * sessions of idle users — for long-running production streams only:
-    * with a timeout registered, the engine keeps scheduling micro-batches
-    * to fire timers, so `processAllAvailable()` never quiesces (observed:
-    * thousands of empty epochs). Finite drives/tests leave it off.
-    *
-    * In batch execution the final open session is flushed eagerly (no
-    * next batch will ever close it). */
-  def sessionize(spark: SparkSession, events: Dataset[Ev],
-      isStreaming: Boolean, flushIdle: Boolean = false): Dataset[SessionOut] = {
+    * No timeout: with a processing-time timeout registered, the engine
+    * keeps scheduling micro-batches to fire timers, so a finite drive's
+    * `processAllAvailable()` never quiesces (observed: thousands of empty
+    * epochs). A user's last session is closed by a later event. */
+  def sessionize(spark: SparkSession,
+      events: Dataset[Ev]): Dataset[SessionOut] = {
     import spark.implicits._
-    if (isStreaming) {
-      val timeout =
-        if (flushIdle) GroupStateTimeout.ProcessingTimeTimeout
-        else GroupStateTimeout.NoTimeout
-      events.groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append, timeout)(updateUser(flushIdle))
-    } else
-      // batch: one logical group pass; emit closed + the final open
-      // session (no next batch will ever close it)
-      events.groupByKey(_.user_id).flatMapGroups { (uid, evs) =>
-        val (closed, open) = fold(uid, evs.toSeq, None)
-        (closed ++ open.map(s => SessionOut(uid, s.start, s.end, s.n))).iterator
-      }
+    events.groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(updateUser)
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Batch≡stream equivalence drives for the CORRECTNESS gate: each entry
   * runs the PRODUCTION streaming pipeline ([[EventStream]] /
@@ -34,13 +35,13 @@ import org.apache.spark.sql.functions._
   */
 object StreamDrive {
 
-  /** Staged split directories, one sorted write per (input, shape,
-    * content fingerprint) per JVM — Verify runs each drive once but Bench
-    * replays them per pass. The fingerprint (source part-file lengths +
-    * mtimes) keys out in-place rewrites: a test that regenerates the
-    * parquet at the same path must not silently replay a stale staging. */
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Staged split directories, one sorted write per (input, shape) and
+    * input content per JVM ([[graft.Scaffold.Derived]]) — Verify runs each
+    * drive once but Bench replays them per pass. */
+  private val staged = new graft.Scaffold.Derived[String, String]
+
+  /** Time-range files the drive input is split into. */
+  private val nFiles = 3
 
   /** Give the staged part files strictly increasing modification times in
     * lexicographic name order (range order for `repartitionByRange`
@@ -64,9 +65,9 @@ object StreamDrive {
     }
   }
 
-  /** Stage `input` as `nFiles` parquet files holding ascending `orderCol`
-    * ranges, mod-times increasing with the ranges. Replayed with
-    * `maxFilesPerTrigger=1` this is a faithful in-order stream: each
+  /** Stage `input` as [[nFiles]] parquet files holding ascending
+    * `orderCol` ranges, mod-times increasing with the ranges. Replayed
+    * with `maxFilesPerTrigger=1` this is a faithful in-order stream: each
     * micro-batch's rows are at-or-after everything already processed, so
     * no row ever falls behind the watermark of a previous batch and the
     * per-user event order the session fold assumes (a stream delivers a
@@ -74,22 +75,37 @@ object StreamDrive {
     * time range — not round-robin — is what makes the multi-batch drive
     * semantically equivalent to the single-batch one; it is drive
     * scaffolding (one bounded sorted write of the drive input), not a
-    * production operator. `extraFiles` lets a drive append files (the
-    * session sentinels) BEFORE the mod-time stamping, so one copy of the
-    * staging/caching/ordering logic serves every drive. */
-  private def stageSplit(srcPath: String, shape: String, input: => DataFrame,
-      orderCol: String, nFiles: Int = 3,
-      extraFiles: String => Unit = _ => ()): String =
-    stagedCache.computeIfAbsent(
-      s"$srcPath#$shape#${graft.Scaffold.fingerprint(srcPath)}", _ => {
-        val dir = graft.Scaffold.cleanupOnExit(
-          Files.createTempDirectory("graft-stream-split").toString)
-        input.repartitionByRange(nFiles, col(orderCol))
-          .write.mode("overwrite").parquet(dir)
-        extraFiles(dir)
-        stampAscending(dir)
-        dir
-      })
+    * production operator. `extras` are a drive's own files (name, frame),
+    * written after the split and BEFORE the mod-time stamping, so they
+    * arrive last, in name order. */
+  private def stage(src: String, shape: String, input: => DataFrame,
+      orderCol: String)(extras: => Seq[(String, DataFrame)]): String =
+    staged(src, shape) {
+      val dir = graft.Scaffold.tempDir("graft-stream-split")
+      input.repartitionByRange(nFiles, col(orderCol))
+        .write.mode("overwrite").parquet(dir)
+      extras.foreach { case (name, frame) => writeExtra(frame, dir, name) }
+      stampAscending(dir)
+      dir
+    }
+
+  /** Write `frame` as the single file `name` in `dir`. Only the part file
+    * moves in; its write directory (with the `_SUCCESS` marker) is
+    * deleted at once, so a staging leaves nothing behind but its split —
+    * exit cleanup is the exception path. */
+  private def writeExtra(frame: DataFrame, dir: String, name: String): Unit = {
+    val tmp = graft.Scaffold.tempDir("graft-stream-extra")
+    frame.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(_.getName.startsWith("part-")).get
+    Files.move(part.toPath, Paths.get(dir, name))
+    graft.Scaffold.deleteRecursively(new java.io.File(tmp))
+  }
+
+  /** Replay a staged directory one file per micro-batch. */
+  private def replay(s: SparkSession, dir: String,
+      schema: StructType): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
 
   /** Per-batch input-row counts (non-empty micro-batches only) of the
     * most recent drive, set by every drive call — the spec hook proving
@@ -109,20 +125,28 @@ object StreamDrive {
     * drive-backed queries. */
   @volatile var lastDriveTriggerMs: Seq[Long] = Nil
 
-  /** `ts` arrives as long nanoseconds OR a timestamp column (the source
-    * owns its schema — [[graft.ops.Tables.timestampOf]]); the streaming
-    * operators take real timestamps — one stateless projection upstream
-    * of the watermark. Input staged as 3 time-range files replayed one
-    * per micro-batch. */
-  private def eventStream(s: SparkSession, d: String): DataFrame = {
+  /** The events parquet staged under `shape` with the drive's `extras`
+    * and replayed, `ts` as a timestamp. `ts` arrives as long nanoseconds
+    * OR a timestamp column (the source owns its schema —
+    * [[graft.ops.Tables.timestampOf]]); the streaming operators take real
+    * timestamps — one stateless projection upstream of the watermark.
+    * `extras` receives the events table. */
+  private def eventStream(s: SparkSession, d: String, shape: String = "events")(
+      extras: DataFrame => Seq[(String, DataFrame)] = _ => Nil): DataFrame = {
     val events = graft.ops.Tables.table(s, d, "events") // schema-cached
     val schema = events.schema
-    val staged = stageSplit(s"$d/events.parquet", "events", events, "ts")
-    s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(staged)
+    val dir = stage(s"$d/events.parquet", shape, events, "ts")(extras(events))
+    replay(s, dir, schema)
       .select(graft.ops.Tables.timestampOf(s, schema("ts").dataType).as("ts"),
         col("user_id"), col("event_type"), col("value"))
   }
+
+  /** Hourly windows in the integer-bucket schema of the batch twin
+    * (`Sessionize.hourlyWindows`). */
+  private def hourBuckets(windows: DataFrame): DataFrame =
+    windows.select(expr("unix_micros(window_start) div 3600000000").as("hour_bucket"),
+        col("event_type"), col("n"), round(col("sum_value"), 2).as("sum_value"))
+      .orderBy(col("hour_bucket"), col("event_type"))
 
   /** Run `df` into a memory sink until the staged input is drained,
     * record the drive's progress, and return `shape` of the drained rows. */
@@ -165,12 +189,8 @@ object StreamDrive {
     * makes the oracle pin the state-store merge: most windows receive
     * rows from more than one micro-batch. */
   def hourlyFromFiles(s: SparkSession, d: String): DataFrame =
-    drain(s, EventStream.hourlyCounts(eventStream(s, d)),
-        "graft_stream_hourly", "complete") {
-      _.select(expr("unix_micros(window_start) div 3600000000").as("hour_bucket"),
-          col("event_type"), col("n"), round(col("sum_value"), 2).as("sum_value"))
-        .orderBy(col("hour_bucket"), col("event_type"))
-    }
+    drain(s, EventStream.hourlyCounts(eventStream(s, d)()),
+      "graft_stream_hourly", "complete")(hourBuckets)
 
   /** Streaming [[EventStream.slidingCounts]] over the events parquet,
     * reshaped to the integer-bucket schema of the batch twin
@@ -180,7 +200,7 @@ object StreamDrive {
     * the first slide after the epoch, which the batch formulation (and
     * the oracle) exclude. */
   def slidingFromFiles(s: SparkSession, d: String): DataFrame =
-    drain(s, EventStream.slidingCounts(eventStream(s, d)),
+    drain(s, EventStream.slidingCounts(eventStream(s, d)()),
         "graft_stream_sliding", "complete") {
       _.select(expr("unix_micros(window_start)").as("window_start_us"),
           col("event_type"), col("n"), round(col("sum_value"), 2).as("sum_value"))
@@ -221,24 +241,15 @@ object StreamDrive {
     val raw = graft.ops.Tables.table(s, d, "events") // schema-cached
     val batch = raw.filter(col("user_id").isNotNull)
       .select(col("user_id"), graft.ops.Tables.eventMicros(raw).as("us"))
-    val staged = stageSplit(s"$d/events.parquet", s"sessions-$gapUs", batch, "us",
-      extraFiles = dir => {
-        // sentinels are data-derived (one tiny aggregate of the batch
-        // table), staged as the LAST file so every user's real events are
-        // already in state before the closer arrives
-        val sentTmp = Files.createTempDirectory("graft-sentinel").toString
-        batch.groupBy(col("user_id"))
-          .agg((max(col("us")) + gapUs + 1L).as("us"))
-          .coalesce(1).write.mode("overwrite").parquet(sentTmp)
-        val sentPart = new java.io.File(sentTmp).listFiles()
-          .find(_.getName.startsWith("part-")).get
-        Files.move(sentPart.toPath,
-          Paths.get(dir, "part-zz-sentinels.parquet"))
-      })
-    val evs = s.readStream.schema("user_id LONG, us LONG")
-      .option("maxFilesPerTrigger", "1").parquet(staged)
+    // sentinels are data-derived (one tiny aggregate of the batch table),
+    // staged as the LAST file so every user's real events are already in
+    // state before the closer arrives
+    val dir = stage(s"$d/events.parquet", s"sessions-$gapUs", batch, "us")(Seq(
+      "part-zz-sentinels.parquet" -> batch.groupBy(col("user_id"))
+        .agg((max(col("us")) + gapUs + 1L).as("us"))))
+    val evs = replay(s, dir, StructType.fromDDL("user_id LONG, us LONG"))
       .as[SessionStateOps.Ev]
-    val sessions = SessionStateOps.sessionize(s, evs, isStreaming = true)
+    val sessions = SessionStateOps.sessionize(s, evs)
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("start_us"))
     drain(s, sessions.toDF(), "graft_stream_sessions", "append") {
       _.withColumn("sess_id", row_number().over(byUser).cast("long"))
@@ -283,66 +294,41 @@ object StreamDrive {
     * operators' own resolution — a nanosecond-remainder edge row would
     * otherwise sit on different sides of the cut). */
   def hourlyLateFromFiles(s: SparkSession, d: String): DataFrame = {
-    val src = s"$d/events.parquet"
-    val evTable = graft.ops.Tables.table(s, d, "events") // schema-cached
-    val schema = evTable.schema
     val hourUs = 3600L * 1000000L
-    val staged = stageSplit(src, "late-hourly", evTable, "ts",
-      extraFiles = dir => {
-        val raw = graft.ops.Tables.table(s, d, "events")
-        val us = graft.ops.Tables.eventMicros(raw)
-        val r = raw.agg(min(us), max(us)).head()
-        val (minUs, maxUs) = (r.getLong(0), r.getLong(1))
-        // The oracle derives "stale" from the FIRST corpus hour and
-        // "allowed-late" from the LAST; both are only meaningful against
-        // the 2h watermark cut when the corpus spans enough hours that
-        // the two filters cannot overlap and every first-hour window end
-        // falls below max(ts) − 2h. A regenerated smaller corpus must
-        // fail fast here, not as an undiagnosable hash mismatch.
-        require(maxUs - minUs >= 4 * hourUs,
-          s"x_stream_late needs an events corpus spanning >= 4h " +
-            s"(got ${(maxUs - minUs) / 3600e6} h); the first-hour 'stale' " +
-            "batch and last-hour 'late' batch would otherwise overlap the " +
-            "watermark cut and the batch oracle no longer models eviction")
-        def writeExtra(frame: DataFrame, name: String): Unit = {
-          // registered for exit cleanup BEFORE use (only the part file is
-          // moved out; the dir with its _SUCCESS marker would otherwise
-          // leak per drive invocation), and removed eagerly after the
-          // move — exit cleanup is the exception path.
-          val tmp = graft.Scaffold.cleanupOnExit(
-            Files.createTempDirectory("graft-late").toString)
-          frame.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(_.getName.startsWith("part-")).get
-          Files.move(part.toPath, Paths.get(dir, name))
-          graft.Scaffold.deleteRecursively(new java.io.File(tmp))
-        }
-        writeExtra(
-          raw.filter(us < minUs + hourUs)
-            .unionAll(raw.filter(us >= maxUs - hourUs)),
-          "part-zz-a-late.parquet")
-        // the sentinel row must carry `ts` in the SOURCE's own encoding —
-        // it is appended to the staged corpus and read back under the
-        // corpus schema
-        def sentinel(sentUs: Long): DataFrame = raw.limit(1).select(
-          schema.fieldNames.toSeq.map {
-            case "ts" => graft.ops.Tables
-              .tsLiteralOf(s, sentUs, schema("ts").dataType).as("ts")
-            case "event_type" => lit("graft_sentinel").as("event_type")
-            case c => col(c)
-          }: _*)
-        writeExtra(sentinel(maxUs + 3 * hourUs + 1), "part-zz-b-flush1.parquet")
-        writeExtra(sentinel(maxUs + 6 * hourUs + 1), "part-zz-c-flush2.parquet")
-      })
-    val events = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-      .select(graft.ops.Tables.timestampOf(s, schema("ts").dataType).as("ts"),
-        col("user_id"), col("event_type"), col("value"))
+    val events = eventStream(s, d, "late-hourly") { raw =>
+      val schema = raw.schema
+      val us = graft.ops.Tables.eventMicros(raw)
+      val r = raw.agg(min(us), max(us)).head()
+      val (minUs, maxUs) = (r.getLong(0), r.getLong(1))
+      // The oracle derives "stale" from the FIRST corpus hour and
+      // "allowed-late" from the LAST; both are only meaningful against
+      // the 2h watermark cut when the corpus spans enough hours that
+      // the two filters cannot overlap and every first-hour window end
+      // falls below max(ts) − 2h. A regenerated smaller corpus must
+      // fail fast here, not as an undiagnosable hash mismatch.
+      require(maxUs - minUs >= 4 * hourUs,
+        s"x_stream_late needs an events corpus spanning >= 4h " +
+          s"(got ${(maxUs - minUs) / 3600e6} h); the first-hour 'stale' " +
+          "batch and last-hour 'late' batch would otherwise overlap the " +
+          "watermark cut and the batch oracle no longer models eviction")
+      // the sentinel row must carry `ts` in the SOURCE's own encoding —
+      // it is appended to the staged corpus and read back under the
+      // corpus schema
+      def sentinel(sentUs: Long): DataFrame = raw.limit(1).select(
+        schema.fieldNames.toSeq.map {
+          case "ts" => graft.ops.Tables
+            .tsLiteralOf(s, sentUs, schema("ts").dataType).as("ts")
+          case "event_type" => lit("graft_sentinel").as("event_type")
+          case c => col(c)
+        }: _*)
+      Seq(
+        "part-zz-a-late.parquet" ->
+          raw.filter(us < minUs + hourUs).unionAll(raw.filter(us >= maxUs - hourUs)),
+        "part-zz-b-flush1.parquet" -> sentinel(maxUs + 3 * hourUs + 1),
+        "part-zz-c-flush2.parquet" -> sentinel(maxUs + 6 * hourUs + 1))
+    }
     drain(s, EventStream.hourlyCounts(events), "graft_stream_hourly_late", "append") {
-      _.filter(col("event_type") =!= "graft_sentinel")
-        .select(expr("unix_micros(window_start) div 3600000000").as("hour_bucket"),
-          col("event_type"), col("n"), round(col("sum_value"), 2).as("sum_value"))
-        .orderBy(col("hour_bucket"), col("event_type"))
+      df => hourBuckets(df.filter(col("event_type") =!= "graft_sentinel"))
     }
   }
 
@@ -361,10 +347,8 @@ object StreamDrive {
   def dedupFromFiles(s: SparkSession, d: String): DataFrame = {
     val docsRaw = graft.ops.Tables.table(s, d, "documents") // schema-cached
     val schema = docsRaw.schema
-    val staged = stageSplit(s"$d/documents.parquet", "docs",
-      docsRaw, "doc_id")
-    val docs = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged)
+    val dir = stage(s"$d/documents.parquet", "docs", docsRaw, "doc_id")(Nil)
+    val docs = replay(s, dir, schema)
       .select(md5(col("text")).as("digest"), col("doc_id"))
     drain(s, docs.groupBy(col("digest"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies")),

@@ -140,7 +140,12 @@ class ScaleDesignSpec extends SparkSpec {
     val evs = raw
       .select(col("user_id"), Tables.eventMicros(raw).as("us"))
       .as[SessionStateOps.Ev]
-    val viaState = SessionStateOps.sessionize(spark, evs, isStreaming = false)
+    // batch group pass: emit closed + the final open session (no next
+    // batch will ever close it)
+    val viaState = evs.groupByKey(_.user_id).flatMapGroups { (uid, es) =>
+      val (closed, open) = SessionStateOps.fold(uid, es.toSeq, None)
+      (closed ++ open.map(o => SessionStateOps.SessionOut(uid, o.start, o.end, o.n))).iterator
+    }
       .select(col("user_id"), col("start_us"), col("n_events"))
       .as[(Long, Long, Long)].collect().toSet
     val viaWindow = graft.ops.Sessionize.sessions(spark, sf)

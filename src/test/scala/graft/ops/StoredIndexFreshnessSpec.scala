@@ -78,4 +78,56 @@ class StoredIndexFreshnessSpec extends graft.SparkSpec {
       s"$name: the mutation did not change the answer; the freshness " +
         "assertion above is vacuous — strengthen the mutation")
   }
+
+  // The other fingerprint-keyed derived values (graft.Scaffold.Derived):
+  // the streaming drives' staged splits and the trained IVF centroids.
+  // After an in-place rewrite each must answer as its batch twin over the
+  // rewritten table does.
+
+  private def freshDir(): String = graft.Scaffold.cleanupOnExit(
+    Files.createTempDirectory("graft-fresh").toString)
+
+  test("x_stream_hourly restages on in-place events rewrite") {
+    val dir = freshDir()
+    writeTable("events", dir)
+    val original =
+      graft.streaming.StreamDrive.hourlyFromFiles(spark, dir).collect().toSeq
+    writeTable("events", dir, _.filter(col("user_id") % 2 === 0))
+    val afterRewrite =
+      graft.streaming.StreamDrive.hourlyFromFiles(spark, dir).collect().toSeq
+    assert(afterRewrite === Sessionize.hourlyWindows(spark, dir).collect().toSeq,
+      "the drive replayed a stale staged split")
+    assert(original !== afterRewrite, "the rewrite did not change the answer")
+  }
+
+  test("x_stream_dedup restages on in-place documents rewrite") {
+    import spark.implicits._
+    def groups(df: DataFrame) = df.select("digest", "keep_id", "n_copies")
+      .as[(String, Long, Long)].collect().toSet
+    val dir = freshDir()
+    writeTable("documents", dir)
+    val original = groups(graft.streaming.StreamDrive.dedupFromFiles(spark, dir))
+    mutate(dir)
+    val afterRewrite =
+      groups(graft.streaming.StreamDrive.dedupFromFiles(spark, dir))
+    assert(afterRewrite === groups(Dedup.exact(spark, dir)),
+      "the drive replayed a stale staged split")
+    assert(original !== afterRewrite, "the rewrite did not change the answer")
+  }
+
+  test("ivfTopK retrains its centroids on in-place embeddings rewrite") {
+    val dir = freshDir()
+    writeTable("embeddings", dir)
+    Similarity.ivfTopK(spark, dir).collect()
+    val oldCentroids = Similarity.trainedCentroids(spark, dir, 16)
+    mutate(dir)
+    val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+    def topK(centroids: Array[Array[Double]]) =
+      Similarity.ivfTopKOf(spark, emb, centroids, 8, 5, 4).collect().toSeq
+    val fresh = topK(Similarity.kmeansCentroids(emb, 16))
+    assert(Similarity.ivfTopK(spark, dir).collect().toSeq === fresh,
+      "ivfTopK probed with centroids trained on the old embeddings")
+    assert(topK(oldCentroids) !== fresh,
+      "the old centroids answer as fresh ones do; the check above is vacuous")
+  }
 }

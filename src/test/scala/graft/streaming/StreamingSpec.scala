@@ -295,6 +295,23 @@ class StreamingSpec extends SparkSpec {
     assert(first.nonEmpty && first == second)
   }
 
+  test("staging a drive leaves no temp directory behind but its staged split") {
+    // a fresh copy of the events: its fingerprint misses the staged-split
+    // cache, so both drives stage (and write their extra files) here
+    val dir = graft.Scaffold.cleanupOnExit(
+      Files.createTempDirectory("stage-leak").toString)
+    spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+      .write.parquet(s"$dir/events.parquet")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftDirs = tmp.list().filter(_.startsWith("graft-")).toSet
+    val before = graftDirs
+    StreamDrive.sessionsFromFiles(spark, dir).count()
+    StreamDrive.hourlyLateFromFiles(spark, dir).count()
+    val added = graftDirs -- before
+    assert(added.size == 2 && added.forall(_.startsWith("graft-stream-split")),
+      s"a staging left more than its split behind: $added")
+  }
+
   test("a held drive result keeps its rows after the drive runs on another corpus") {
     // the drive re-registers its memory-sink view for every corpus; a
     // frame returned earlier keeps its own sink's rows
